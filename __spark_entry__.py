@@ -67,9 +67,17 @@ def _spread(df: DataFrame) -> DataFrame:
     if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
         return df  # A/B kill-switch
     spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    # Spark's own parse of the session value, so "128m" reads as bytes
+    bound = spark._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
+    # Lower bound: the round-robin exchange costs a fixed ~0.1-0.15s
+    # round trip; below a few MB of compressed input the serialized
+    # compute is cheaper than that (A/B at sf0.1: doc_token_count
+    # 0.42 s base vs 0.58 s spread), so small inputs stay put.
+    spread_min = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN", str(2 << 20)))
     try:
         files = df.inputFiles()
-        cores = spark.sparkContext.defaultParallelism
         if len(files) >= cores:
             return df
         from urllib.parse import unquote, urlparse
@@ -78,18 +86,10 @@ def _spread(df: DataFrame) -> DataFrame:
             p = unquote(urlparse(f).path) if "://" in f or \
                 f.startswith("file:") else f
             total += os.path.getsize(p)
-        bound = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                   str(128 << 20)))
-        # Lower bound: the round-robin exchange costs a fixed ~0.1-0.15s
-        # round trip; below a few MB of compressed input the serialized
-        # compute is cheaper than that (A/B at sf0.1: doc_token_count
-        # 0.42 s base vs 0.58 s spread), so small inputs stay put.
-        spread_min = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN",
-                                        str(2 << 20)))
-        if spread_min <= total <= cores * bound:
-            return df.repartition(cores)
     except Exception:
-        pass
+        return df  # not a file scan, or files not sizable locally
+    if spread_min <= total <= cores * bound:
+        return df.repartition(cores)
     return df
 
 
@@ -104,23 +104,11 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # already added in this context
 
 
-# --------------------------------------------------------------------------
-# flagship
-# --------------------------------------------------------------------------
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: derive tokenized transcripts from sf0.001 documents,
-    run the full pipeline plan, return per-(sink, severity) aggregates."""
+def _synth_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """tokenized_logs rows synthesized from the ``documents`` ids
+    (datagen.gen_doc, seed 42), with the package shipped to workers."""
     _ship_package(spark)
-    from console_log_parser_spark import datagen
-    from console_log_parser_spark.operators import aggregate as agg_ops
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    from console_log_parser_spark.operators.route import route_stage
-
-    sf_dir = "/root/testdata/sf0.001"
+    from console_log_parser_spark.operators.parse import synth_tokens_stage
     ids = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id_num"))
     # distribute the synth+parse compute: ids are 8 bytes/row, the
@@ -128,11 +116,19 @@ def entry(spark: SparkSession) -> DataFrame:
     # (single row group), so without this exchange the whole synthesis
     # serializes on one core
     ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
-    routes = spark.createDataFrame(datagen.route_metadata_rows())
-    parsed = parse_stage(logs)
-    routed = route_stage(apply_suppress_filter(enrich_stage(parsed, routes)))
-    return agg_ops.severity_histogram(routed).orderBy("sink", "severity")
+    return synth_tokens_stage(ids)
+
+
+# --------------------------------------------------------------------------
+# flagship
+# --------------------------------------------------------------------------
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: derive tokenized transcripts from sf0.001 documents,
+    run the full pipeline plan, return per-(sink, severity) aggregates."""
+    from console_log_parser_spark.operators import aggregate as agg_ops
+    return agg_ops.severity_histogram(
+        _routed(spark, "/root/testdata/sf0.001")).orderBy("sink", "severity")
 
 
 # --------------------------------------------------------------------------
@@ -1084,24 +1080,10 @@ def media_thumbnails(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def _routed(spark, sf_dir):
-    _ship_package(spark)
     from console_log_parser_spark import datagen
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    from console_log_parser_spark.operators.route import route_stage
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
-    routes = spark.createDataFrame(datagen.route_metadata_rows())
-    parsed = parse_stage(logs)
-    return route_stage(apply_suppress_filter(enrich_stage(parsed, routes)))
+    from console_log_parser_spark.plans.pipeline import build_routed
+    return build_routed(_synth_logs(spark, sf_dir),
+                        spark.createDataFrame(datagen.route_metadata_rows()))
 
 
 def html_render_stats(spark, sf_dir):
@@ -1109,18 +1091,9 @@ def html_render_stats(spark, sf_dir):
     (SGR->span fold inside one Arrow stage), aggregate per sink.
     Rows-only: the span semantics are pinned by tests/test_html_sink.py
     against the reference's convert_csi behavior."""
-    _ship_package(spark)
     from console_log_parser_spark import datagen
-    from console_log_parser_spark.operators.parse import synth_tokens_stage
     from console_log_parser_spark.sinks import html as html_sink
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+    logs = _synth_logs(spark, sf_dir)
     routes = spark.createDataFrame(datagen.route_metadata_rows())
     with_sink = logs.join(
         F.broadcast(routes.select("source", "sink", "title")),
@@ -1173,18 +1146,9 @@ def pipeline_typed_events(spark, sf_dir):
     (array<struct<kind,param,final,pos>>, vtparser.py:644-694 dispatch
     stream) + the F2 device-status discard filter applied to it:
     per (kind, final) total events and events surviving the filter."""
-    _ship_package(spark)
     from console_log_parser_spark.operators.parse import (
-        device_status_discard, parse_stage, synth_tokens_stage,
-        typed_events_extractor)
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+        device_status_discard, parse_stage, typed_events_extractor)
+    logs = _synth_logs(spark, sf_dir)
     parsed = parse_stage(logs, extractors=(typed_events_extractor(),))
     total = (parsed.select(F.explode("events").alias("e"))
              .groupBy(F.col("e.kind").alias("kind"),
@@ -1204,20 +1168,11 @@ def pipeline_chapters(spark, sf_dir):
     """J1 full form: per-command chapter headings via broadcast join
     on (source, cmd_no) (terminal2html.py:399-402), suppressed
     commands numbered but heading-free."""
-    _ship_package(spark)
     from console_log_parser_spark import datagen
     from console_log_parser_spark.operators.enrich import (
         chapter_headings, enrich_stage)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+    from console_log_parser_spark.operators.parse import parse_stage
+    logs = _synth_logs(spark, sf_dir)
     routes = spark.createDataFrame(datagen.route_metadata_rows())
     chapters = spark.createDataFrame(datagen.chapter_rows())
     enriched = enrich_stage(parse_stage(logs), routes)
@@ -1479,21 +1434,12 @@ def pipeline_os_commands(spark, sf_dir):
     exact count_distinct + lexicographic min/max. At 10^12 rows the
     identical plan swaps countDistinct for approx_count_distinct; the
     exact form is kept so the DuckDB oracle agrees bit-for-bit."""
-    _ship_package(spark)
     from console_log_parser_spark import datagen
     from console_log_parser_spark.operators.enrich import enrich_stage
     from console_log_parser_spark.operators.extract_sets import (
         dcs_strings_extractor, os_commands_extractor)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+    from console_log_parser_spark.operators.parse import parse_stage
+    logs = _synth_logs(spark, sf_dir)
     routes = spark.createDataFrame(datagen.route_metadata_rows())
     parsed = parse_stage(logs, extractors=(
         os_commands_extractor(), dcs_strings_extractor()))

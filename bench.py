@@ -124,35 +124,13 @@ def build_pipeline(spark, sf_dir, tokens_path=None):
     shuffle->aggregate execution."""
     from console_log_parser_spark import datagen
     from console_log_parser_spark.operators import aggregate as agg_ops
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import parse_stage
-    from console_log_parser_spark.operators.route import route_stage
+    from console_log_parser_spark.plans.pipeline import build_routed
 
     tokens_path = tokens_path or ensure_tokens_table(spark, sf_dir)
-    logs = spark.read.parquet(tokens_path)
-    routes = spark.createDataFrame(datagen.route_metadata_rows())
-    parsed = parse_stage(logs)
-    routed = route_stage(apply_suppress_filter(enrich_stage(parsed, routes)))
+    routed = build_routed(
+        spark.read.parquet(tokens_path),
+        spark.createDataFrame(datagen.route_metadata_rows()))
     return agg_ops.severity_histogram(routed), routed
-
-
-def pipeline_job(spark, sf_dir, tokens_path=None):
-    """Full pipeline; returns (n_docs, n_tokens) from observed metrics.
-
-    One-shot form (plan built + executed + metrics observed in a single
-    call) — used by tests and ad-hoc runs; the bench loop uses
-    build_pipeline() once + per-run execution instead."""
-    from pyspark.sql import Observation
-
-    aggs, routed = build_pipeline(spark, sf_dir, tokens_path)
-    obs = Observation("bench")
-    routed = routed.observe(obs, F.count(F.lit(1)).alias("rows"),
-                            F.sum("n_tok").alias("tokens"))
-    from console_log_parser_spark.operators import aggregate as agg_ops
-    _noop(agg_ops.severity_histogram(routed))
-    m = dict(obs.get)
-    return int(m["rows"]), int(m["tokens"])
 
 
 def _med(xs):
@@ -333,7 +311,7 @@ def marginal_pipeline_bench(spark, sf_dir, cpus):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) \
         if "sf" in sf_dir else 0.0
     spark = get_spark(app="bench", master=f"local[{cpus}]",

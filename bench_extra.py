@@ -39,7 +39,7 @@ def timed(spark, label, df, n_warm=2, n_timed=3):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = get_spark(app="bench_extra", master=f"local[{cpus}]",
                       shuffle_partitions=max(int(cpus), 8))
 

@@ -15,11 +15,16 @@ transcripts, designed for 10^12-sequence scale:
 - ``datagen``           deterministic synthetic tokenized-transcript tables
 - ``operators.parse``   Arrow-vectorized parse stage (mapInArrow)
 - ``operators.enrich``  broadcast source->route lookup join
-- ``operators.route``   salted repartition + per-sink fan-out writes
+- ``operators.route``   routed-column projection + the sink-partitioned
+                        fan-out write (no exchange)
 - ``operators.aggregate`` per-sink aggregates (counts, token sums,
                         severity and escape-sequence histograms)
-- ``plans.pipeline``    end-to-end DAG assembly
-- ``plans.checkpoint``  micro-batch lineage manifests + resume
+- ``sources.catalog``   tokenized-table reader and routed-table writer
+                        (Iceberg, else partitioned Parquet)
+- ``plans.pipeline``    ``build_routed``: the one parse -> enrich ->
+                        route chain every caller builds on
+- ``plans.checkpoint``  ``run_with_checkpoints``: the one runner —
+                        micro-batch writes, lineage manifests, resume
 """
 
 __version__ = "0.1.0"

@@ -20,7 +20,7 @@ Everything is a pure function of (doc_index, seed): generation order
 and partitioning cannot change content, so any scale can be re-derived
 and resumed deterministically. ``source`` is Zipf-skewed (s=1.2) over
 ``n_sources`` ids so a few heavy hitters dominate — this exercises the
-salted-repartition / AQE skew path of the router.
+skew paths of the router, joins and aggregates.
 """
 from __future__ import annotations
 

@@ -459,7 +459,22 @@ _PARAM_DIGITS_RE = re.compile(r"\d*")
 # repeat. No eviction: the hot lines (bare prompts, common commands)
 # recur from the start, so the first 65536 distinct lines cover them;
 # on corpora with no repetition the cost is one dict probe per line.
+# Lines longer than _MEMO_MAX_LINE chars are never stored, so a corpus
+# of long unique lines cannot grow the keys past 64 Mi chars per worker
+# (the longest datagen line is under 200 chars).
 _LINE_MEMO: dict[str, tuple[str, int]] = {}
+_MEMO_MAX_ENTRIES = 65536
+_MEMO_MAX_LINE = 1024
+
+
+def _memo(raw_line: str, at_eod: bool,
+          r: tuple[str, int]) -> tuple[str, int]:
+    """Store a mid-document line's replay result if it fits the memo's
+    bounds; return it either way."""
+    if (not at_eod and len(raw_line) <= _MEMO_MAX_LINE
+            and len(_LINE_MEMO) < _MEMO_MAX_ENTRIES):
+        _LINE_MEMO[raw_line] = r
+    return r
 
 
 def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
@@ -499,10 +514,7 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
             stripped = "".join(segs)
             body = stripped[:-1] if stripped.endswith("\r") else stripped
             if _C0_RESIDUE_RE.search(body) is None:
-                r = (body, 0)
-                if not at_eod and len(_LINE_MEMO) < 65536:
-                    _LINE_MEMO[raw_line] = r
-                return r
+                return _memo(raw_line, at_eod, (body, 0))
         lb = LineBuilder()
         for j, g in enumerate(matches):
             s = segs[j]
@@ -515,19 +527,13 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
         tail = segs[len(matches)]
         if tail:
             lb.text(tail)
-        r = (lb.result(), lb.warnings)
-        if not at_eod and len(_LINE_MEMO) < 65536:
-            _LINE_MEMO[raw_line] = r
-        return r
+        return _memo(raw_line, at_eod, (lb.result(), lb.warnings))
     # C1 bytes present (rare): regex-scan path
     if _EDIT_CSI_RE.search(raw_line) is None:
         stripped = pat.sub("", raw_line)
         body = stripped[:-1] if stripped.endswith("\r") else stripped
         if _C0_RESIDUE_RE.search(body) is None:
-            r = (body, 0)
-            if not at_eod and len(_LINE_MEMO) < 65536:
-                _LINE_MEMO[raw_line] = r
-            return r
+            return _memo(raw_line, at_eod, (body, 0))
     lb = LineBuilder()
     last = 0
     for m in pat.finditer(raw_line):
@@ -541,10 +547,7 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
         last = m.end()
     if last < len(raw_line):
         lb.text(raw_line[last:])
-    r = (lb.result(), lb.warnings)
-    if not at_eod and len(_LINE_MEMO) < 65536:
-        _LINE_MEMO[raw_line] = r
-    return r
+    return _memo(raw_line, at_eod, (lb.result(), lb.warnings))
 
 
 def build_line(raw_line: str) -> str:

@@ -5,7 +5,7 @@ come from md5 hex prefixes (same bytes in any engine, no dependence on
 Spark's xxhash seed or Python's randomized str hash), and permutations
 use fixed (a, b) constants modulo a 31-bit prime, so results are
 reproducible across runs, partitionings and resume — a requirement the
-salted router shares (BASELINE.json:14).
+checkpointed batch split shares (BASELINE.json:14).
 
 Scale design: every operator is expressed as explode -> hash ->
 groupBy/join on the *hash* (never on raw text), so the shuffle keys

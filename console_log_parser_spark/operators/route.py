@@ -1,23 +1,20 @@
-"""Router / fan-out stage: salted repartition + per-sink writes.
+"""Router / fan-out stage: routed-column projection + per-sink writes.
 
 The reference fans one input file out to one sink (main.py:132-139,
-per-file loop). At 10^12 rows the equivalent is a single shuffled
-write partitioned by sink, with the Zipf-heavy sources salted so no
-reducer owns a whole heavy hitter:
+per-file loop). Here routing is a projection — the enrich join already
+decided each row's route and sink — and the fan-out is ONE write,
+hive-partitioned by sink, so no per-sink loop re-runs the parse.
 
-  repartition(N, sink, pmod(xxhash64(doc_id), S))
-
-The salt is derived from doc_id — deterministic (BASELINE.json:14
-resume requirement: a re-run must route identically; rand() would
-break lineage manifests). AQE skew-join/partition-coalescing stays on
-as the runtime backstop.
+No exchange is keyed on sink: a write task emits one file per sink it
+sees, so a Zipf-heavy source has no reducer to pin. AQE
+skew-join/partition-coalescing stays on for the joins and aggregates
+downstream.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-DEFAULT_SALT_BUCKETS = 16
+from ..sources.catalog import write_routed
 
 ROUTED_COLUMNS = [
     "doc_id", "source", "route", "sink", "matched", "n_tok",
@@ -29,46 +26,17 @@ ROUTED_COLUMNS = [
 ]
 
 
-def salted(df: DataFrame, num_partitions: int | None = None,
-           salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)).alias("_salt")
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("sink"), salt)
-    return df.repartition(F.col("sink"), salt)
-
-
-def route_stage(enriched: DataFrame,
-                num_partitions: int | None = None,
-                salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Project the routed columns; the salted exchange moved into
-    write_fanout (guide: remove shuffles outright). Routing decides
-    WHERE rows go; only the fan-out WRITE needs them physically moved.
-    An aggregate over the routed frame (the flagship severity
-    histogram) now partial-aggregates map-side straight out of the
-    parse stage instead of first paying a full-width exchange of every
-    routed row — one Exchange fewer in every aggregate-over-routed
-    plan, identical results (aggregation is partition-insensitive).
-    Callers that need the physical placement pass through salted()/
-    write_fanout, which salts exactly as before."""
-    routed = enriched.select(*ROUTED_COLUMNS)
-    if num_partitions:
-        return salted(routed, num_partitions, salt_buckets)
-    return routed
+def route_stage(enriched: DataFrame) -> DataFrame:
+    """Project the routed columns. Routing decides WHERE rows go; an
+    aggregate over the routed frame (the flagship severity histogram)
+    partial-aggregates map-side straight out of the parse stage."""
+    return enriched.select(*ROUTED_COLUMNS)
 
 
 def write_fanout(routed: DataFrame, out_dir: str,
-                 mode: str = "append",
-                 num_partitions: int | None = None,
-                 salt_buckets: int = DEFAULT_SALT_BUCKETS) -> None:
-    """One shuffled parent -> one write, hive-partitioned by sink.
-
-    The salted exchange lives HERE (not in route_stage): the write is
-    the only consumer that needs rows physically moved, and salting by
-    pmod(xxhash64(doc_id), S) keeps any Zipf-heavy sink from pinning a
-    whole reducer. Per-sink directories materialize under
-    ``out_dir/routed/sink=...``; a reader of one sink prunes to its
-    partition. This is the recompute-free fan-out (SURVEY.md §4:
-    per-sink write loops must not re-run the parse)."""
-    (salted(routed, num_partitions, salt_buckets)
-     .write.mode(mode).partitionBy("sink")
-     .parquet(f"{out_dir}/routed"))
+                 mode: str = "append") -> None:
+    """Write the routed table under ``out_dir/routed/sink=...``; a
+    reader of one sink prunes to its partition. This is the
+    recompute-free fan-out (SURVEY.md §4: per-sink write loops must not
+    re-run the parse)."""
+    write_routed(routed, f"{out_dir}/routed", mode=mode)

@@ -4,7 +4,7 @@ A 100 TB curation pipeline needs to (a) downsample a corpus to a
 target budget and (b) mix strata (languages, sources, quality tiers)
 at configured proportions — and it must do both DETERMINISTICALLY so a
 resumed or re-run job selects byte-identical rows (the same resume
-requirement the salted router has, BASELINE.json:14; ``rand()``-based
+requirement the checkpointed batch split has, BASELINE.json:14; ``rand()``-based
 ``DataFrame.sample`` re-draws per run and per task retry).
 
 Mechanism: a portable md5 bucket in basis points,

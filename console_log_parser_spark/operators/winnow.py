@@ -109,7 +109,13 @@ def winnow_candidate_pairs(docs: DataFrame, k: int = 3, w: int = 4,
     text, not a copy signal — the same hot-key prune as the PPJoin
     hot-shingle rule in dedup.py), so every surviving bucket expands
     to at most max_df*(max_df-1)/2 pairs map-side. The pair
-    aggregation exchanges two longs per candidate."""
+    aggregation exchanges two longs per candidate.
+
+    Eager: the call runs one count job and returns the pair frame
+    PERSISTED (the fingerprint arrays it was built from are already
+    released). The caller owns that cache and must ``unpersist()`` the
+    returned frame when done with it; a long-lived session that calls
+    this repeatedly otherwise accumulates cached pair frames."""
     # persist the fingerprint arrays BEFORE the explode: Generate
     # re-evaluates its generator expression per OUTPUT row, and the
     # winnowing expression nests the gram-hash transform inside the

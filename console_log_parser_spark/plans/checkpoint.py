@@ -27,7 +27,8 @@ import shutil
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.route import write_fanout
+from ..operators import aggregate as agg_ops
+from ..sources.catalog import read_tokens, write_routed
 from .pipeline import PipelineConfig, build_routed
 
 
@@ -63,14 +64,28 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
 
     max_batches limits how many *uncommitted* batches run this call —
     used by the kill/resume test to simulate a dead driver.
+    Raises ValueError, before writing anything, when a committed
+    manifest was cut for a different ``n_batches``: its batch holds a
+    different slice of the input, so mixing layouts would drop or
+    duplicate rows.
     Returns {"ran": [...], "skipped": [...], "rows": int, "tokens": int}.
     """
     committed = read_manifests(cfg.out_dir)
+    stale = sorted(b for b, m in committed.items()
+                   if m["n_batches"] != n_batches)
+    if stale:
+        raise ValueError(
+            f"{cfg.out_dir}: batches {stale} were committed with "
+            f"n_batches={committed[stale[0]]['n_batches']}, this run asks "
+            f"for {n_batches}; resume with the same count or use a fresh "
+            f"out_dir")
     ran, skipped = [], []
     total_rows = sum(m["rows"] for m in committed.values())
     total_tokens = sum(m["tokens"] for m in committed.values())
 
-    logs = spark.read.parquet(f"{cfg.in_dir}/tokenized_logs.parquet")
+    logs = read_tokens(spark, cfg.tokens_table
+                       or f"{cfg.in_dir}/tokenized_logs.parquet")
+    routes = spark.read.parquet(f"{cfg.in_dir}/route_metadata.parquet")
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
 
     for b in range(n_batches):
@@ -83,13 +98,12 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
         if os.path.isdir(batch_dir):  # uncommitted partial write
             shutil.rmtree(batch_dir)
 
-        batch_logs = logs.filter(bucket == b)
-        routed = build_routed(spark, cfg, logs=batch_logs)
+        routed = build_routed(logs.filter(bucket == b), routes)
         obs = Observation(f"batch_{b}")
         routed = routed.observe(
             obs, F.count(F.lit(1)).alias("rows"),
             F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tokens"))
-        routed.write.mode("overwrite").partitionBy("sink").parquet(batch_dir)
+        write_routed(routed, batch_dir, mode="overwrite")
         metrics = dict(obs.get)
         _commit_manifest(cfg.out_dir, b, {
             "batch_id": b,
@@ -107,7 +121,6 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
               "rows": total_rows, "tokens": total_tokens,
               "complete": len(ran) + len(skipped) == n_batches}
     if result["complete"]:
-        from ..operators import aggregate as agg_ops
         routed_back = spark.read.parquet(f"{cfg.out_dir}/routed")
         agg_ops.write_aggregates(routed_back, cfg.out_dir)
     return result

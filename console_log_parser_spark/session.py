@@ -75,13 +75,26 @@ def _tune_allocator_env() -> None:
         os.environ.setdefault(k, v)
 
 
+def _default_driver_mem() -> str:
+    """min(24g, 40% of MemTotal): the heap is pre-touched (see below),
+    so asking for more than the host can commit kills the JVM at
+    start. 24g where /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 << 10, int(kb * 0.4) >> 10)}m"
+
+
 def get_spark(app: str = "console_log_parser_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     _tune_allocator_env()
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}]"
     # local[N] pins task maxFailures to 1 (spark.task.maxFailures is
     # IGNORED in local mode; only the local[N,F] master form sets it),
     # so a single python-worker death — e.g. an OOM during a
@@ -94,6 +107,8 @@ def get_spark(app: str = "console_log_parser_spark",
     m = _re.fullmatch(r"local\[(\d+|\*)\]", master)
     if m:
         master = f"local[{m.group(1)},2]"
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or \
+        _default_driver_mem()
     sp = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS))
     b = (
@@ -105,8 +120,7 @@ def get_spark(app: str = "console_log_parser_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         # Xms=Xmx + pre-touch: a fixed, pre-faulted heap. Without it
         # the heap grows/uncommits under the bursty parse allocation
         # pattern and the commit/zero churn shows up as kernel time
@@ -114,8 +128,7 @@ def get_spark(app: str = "console_log_parser_spark",
         # tuning above, JVM side). Standard long-running-executor
         # practice on real clusters.
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '24g')} "
-                "-XX:+AlwaysPreTouch")
+                f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # ship the package to python workers (spark-submit --py-files

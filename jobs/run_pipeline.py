@@ -6,14 +6,17 @@ The script only uses the SparkSession given to it by spark-submit (no
 master/conf opinions beyond AQE defaults), reads the tokenized-log
 table, runs the micro-batch checkpointed pipeline, and prints one JSON
 line of observed metrics. Re-running after a kill resumes from the
-lineage manifests (plans/checkpoint.py).
+lineage manifests (plans/checkpoint.py); a resume must pass the same
+``--batches`` as the run it continues, or it is refused.
 
 Usage:
-    python -m console_log_parser_spark.tools ...   # (not needed)
     spark-submit --master local[8] \
         --py-files /tmp/console_log_parser_spark.zip \
         jobs/run_pipeline.py --in-dir DATA --out-dir OUT \
-        [--batches 8] [--salt-buckets 16]
+        [--batches 8] [--tokens-table TABLE] [--max-batches N]
+
+``--in-dir`` holds ``route_metadata.parquet`` and, unless
+``--tokens-table`` names another table, ``tokenized_logs.parquet``.
 """
 from __future__ import annotations
 
@@ -28,11 +31,11 @@ def main() -> None:
     ap.add_argument("--in-dir", required=True)
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--batches", type=int, default=8)
-    ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--tokens-table", default=None,
-                    help="Iceberg identifier for the tokenized corpus "
+                    help="tokenized corpus: an Iceberg identifier "
                          "(catalog.db.table; needs the runtime jar + "
-                         "catalog conf); default: parquet in --in-dir")
+                         "catalog conf) or a parquet path; default: "
+                         "parquet in --in-dir")
     ap.add_argument("--max-batches", type=int, default=None,
                     help="stop after N uncommitted batches (kill test)")
     args = ap.parse_args()
@@ -50,7 +53,6 @@ def main() -> None:
     from console_log_parser_spark.plans.pipeline import PipelineConfig
 
     cfg = PipelineConfig(in_dir=args.in_dir, out_dir=args.out_dir,
-                         salt_buckets=args.salt_buckets,
                          tokens_table=args.tokens_table)
     result = run_with_checkpoints(spark, cfg, n_batches=args.batches,
                                   max_batches=args.max_batches)

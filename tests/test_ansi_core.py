@@ -168,6 +168,23 @@ def test_multiparam_edit_csi_no_valueerror():
     assert warns == 1
 
 
+@pytest.mark.parametrize("body", ["plain text ", "ab\x1b[2Dcd "])
+def test_line_memo_skips_long_lines(monkeypatch, body):
+    # the memo is bounded in bytes: a 4 KB unique mid-document line
+    # (fast strip path and editing-replay path alike) is not stored,
+    # a short repeated line still is
+    monkeypatch.setattr(ansi, "_LINE_MEMO", {})
+    long_line = "".join(f"{body}{i:05d}" for i in range(4096 // len(body)))
+    assert len(long_line) >= 4096
+    expected = ansi.build_line_counted(long_line, at_eod=True)
+    assert ansi.build_line_counted(long_line, at_eod=False) == expected
+    assert long_line not in ansi._LINE_MEMO
+    short = f"$ {body}"
+    first = ansi.build_line_counted(short, at_eod=False)
+    assert ansi._LINE_MEMO[short] == first
+    assert ansi.build_line_counted(short, at_eod=False) == first
+
+
 def test_invalid_codepoint_tokens_decode_to_replacement():
     # invalid-UTF-32 boundary at the Arrow decode (operators/parse.py
     # decode_token_lists, errors="replace"): surrogates and

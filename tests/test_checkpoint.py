@@ -1,12 +1,21 @@
 """Kill/resume: a killed run resumes without recomputing committed
 micro-batches and converges to the same result (BASELINE.md resume
 row)."""
+import importlib.util
 import json
 import os
+import sys
+
+import pytest
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from console_log_parser_spark.plans.checkpoint import (
     read_manifests, run_with_checkpoints)
 from console_log_parser_spark.plans.pipeline import PipelineConfig
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+N_SUBSET = 100
 
 
 def test_kill_resume_no_recompute(spark, small_dataset, tmp_path):
@@ -56,3 +65,68 @@ def test_checkpoint_totals_match_plain_run(spark, small_dataset, tmp_path):
     assert r["complete"] and r["rows"] == 300
     summ = spark.read.parquet(f"{out}/agg_sink_summary")
     assert summ.groupBy().sum("n_rows").collect()[0][0] == 300
+
+
+@pytest.fixture(scope="module")
+def subset_tokens(spark, small_dataset, tmp_path_factory):
+    """A parquet copy of the first N_SUBSET docs, outside in_dir."""
+    path = str(tmp_path_factory.mktemp("elsewhere") / "tokens.parquet")
+    (spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
+     .filter(F.col("doc_id") < f"doc_{N_SUBSET:08d}")
+     .write.parquet(path))
+    return path
+
+
+def _doc_ids(spark, out):
+    return {r["doc_id"] for r in
+            spark.read.parquet(f"{out}/routed").select("doc_id").collect()}
+
+
+def test_tokens_table_is_the_table_read(spark, small_dataset, subset_tokens,
+                                        tmp_path):
+    out = str(tmp_path / "ckpt")
+    cfg = PipelineConfig(in_dir=small_dataset, out_dir=out,
+                         tokens_table=subset_tokens)
+    r = run_with_checkpoints(spark, cfg, n_batches=2)
+    assert r["complete"] and r["rows"] == N_SUBSET
+    assert _doc_ids(spark, out) == {
+        f"doc_{i:08d}" for i in range(N_SUBSET)}
+
+
+def test_job_cli_honours_tokens_table(spark, small_dataset, subset_tokens,
+                                      tmp_path, monkeypatch, capsys):
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline_job", os.path.join(ROOT, "jobs", "run_pipeline.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    out = str(tmp_path / "ckpt")
+    # the job stops its session on exit; keep the shared test session
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setattr(sys, "argv", [
+        "run_pipeline.py", "--in-dir", small_dataset, "--out-dir", out,
+        "--batches", "2", "--tokens-table", subset_tokens])
+    job.main()
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["complete"] and report["rows"] == N_SUBSET
+    assert len(_doc_ids(spark, out)) == N_SUBSET
+
+
+def _snapshot(root):
+    return {os.path.relpath(os.path.join(d, f), root):
+            os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(root) for f in fs}
+
+
+def test_resume_with_other_n_batches_is_refused(spark, small_dataset,
+                                                tmp_path):
+    out = str(tmp_path / "ckpt")
+    cfg = PipelineConfig(in_dir=small_dataset, out_dir=out)
+    run_with_checkpoints(spark, cfg, n_batches=4, max_batches=1)
+    # an uncommitted partial batch a same-layout resume would clear
+    os.makedirs(f"{out}/routed/batch=1/sink=sink_0")
+    with open(f"{out}/routed/batch=1/sink=sink_0/garbage.parquet", "w") as f:
+        f.write("partial")
+    before = _snapshot(out)
+    with pytest.raises(ValueError, match="n_batches"):
+        run_with_checkpoints(spark, cfg, n_batches=3)
+    assert _snapshot(out) == before

@@ -1,10 +1,8 @@
 """Canonical-survivor dedup and duplicate-cluster connected components
-(checked against a pure-Python union-find), plus the salted-router
-balance property."""
+(checked against a pure-Python union-find)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_dedup_keep_first(spark):
@@ -62,23 +60,3 @@ def test_duplicate_clusters_on_minhash_pairs(spark):
     got = {r["doc_id"]: r["label"]
            for r in dedup.duplicate_clusters(pdf).collect()}
     assert got == _union_find_labels(pairs_rows)
-
-
-def test_salted_router_balances_zipf_sources(spark, small_dataset):
-    """The Zipf-heavy source must not own whole reducer partitions:
-    with the deterministic doc_id salt, the largest routed partition
-    stays within a small factor of the mean."""
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import parse_stage
-    from console_log_parser_spark.operators.route import route_stage
-    logs = spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
-    routes = spark.read.parquet(f"{small_dataset}/route_metadata.parquet")
-    routed = route_stage(
-        apply_suppress_filter(enrich_stage(parse_stage(logs), routes)),
-        num_partitions=8)
-    sizes = (routed.groupBy(F.spark_partition_id().alias("pid"))
-             .count().collect())
-    counts = [r["count"] for r in sizes]
-    assert len(counts) > 1
-    assert max(counts) <= 3 * (sum(counts) / len(counts)), counts

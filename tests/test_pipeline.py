@@ -1,6 +1,7 @@
 """End-to-end pipeline vs pure-Python oracle: routed-row equality,
 per-sink aggregate-count equality, severity histograms
-(BASELINE.json:6)."""
+(BASELINE.json:6). The output under test is a multi-batch
+run_with_checkpoints run — the path jobs/run_pipeline.py ships."""
 from collections import Counter, defaultdict
 
 import pytest
@@ -9,18 +10,22 @@ from pyspark.sql import functions as F
 from console_log_parser_spark import datagen, oracle
 from console_log_parser_spark.operators.enrich import (
     DEAD_LETTER_ROUTE, DEAD_LETTER_SINK)
+from console_log_parser_spark.plans.checkpoint import (
+    read_manifests, run_with_checkpoints)
 from console_log_parser_spark.plans.pipeline import (
-    PipelineConfig, run_pipeline)
+    PipelineConfig, build_routed)
 
 N_DOCS = 300
+N_BATCHES = 3
 
 
 @pytest.fixture(scope="module")
 def pipeline_out(spark, small_dataset, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("pipe_out"))
     cfg = PipelineConfig(in_dir=small_dataset, out_dir=out)
-    metrics = run_pipeline(spark, cfg)
-    return out, metrics
+    result = run_with_checkpoints(spark, cfg, n_batches=N_BATCHES)
+    assert result["complete"] and result["ran"] == list(range(N_BATCHES))
+    return out, result
 
 
 @pytest.fixture(scope="module")
@@ -44,9 +49,14 @@ def expected():
 
 
 def test_observed_metrics(pipeline_out, expected):
-    _, metrics = pipeline_out
+    out, metrics = pipeline_out
+    n_tok = sum(d["n_tok"] for d in expected.values())
     assert metrics["rows"] == N_DOCS
-    assert metrics["tokens"] == sum(d["n_tok"] for d in expected.values())
+    assert metrics["tokens"] == n_tok
+    manifests = read_manifests(out).values()
+    assert len(manifests) == N_BATCHES
+    assert sum(m["rows"] for m in manifests) == N_DOCS
+    assert sum(m["tokens"] for m in manifests) == n_tok
 
 
 def test_routed_row_equality(spark, pipeline_out, expected):
@@ -110,9 +120,9 @@ def test_dead_letter_routing(spark, pipeline_out, expected):
 
 
 def test_broadcast_join_in_plan(spark, small_dataset):
-    from console_log_parser_spark.plans.pipeline import build_routed
-    cfg = PipelineConfig(in_dir=small_dataset, out_dir="/tmp/unused")
-    plan = build_routed(spark, cfg)._jdf.queryExecution() \
+    logs = spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
+    routes = spark.read.parquet(f"{small_dataset}/route_metadata.parquet")
+    plan = build_routed(logs, routes)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan

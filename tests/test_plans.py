@@ -30,15 +30,10 @@ def _formatted(df) -> str:
 
 @pytest.fixture(scope="module")
 def routed_plan(spark, small_dataset):
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import parse_stage
-    from console_log_parser_spark.operators.route import route_stage
+    from console_log_parser_spark.plans.pipeline import build_routed
     logs = spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
     routes = spark.read.parquet(f"{small_dataset}/route_metadata.parquet")
-    parsed = parse_stage(logs.select("doc_id", "tokens", "n_tok", "source"))
-    return _formatted(
-        route_stage(apply_suppress_filter(enrich_stage(parsed, routes))))
+    return _formatted(build_routed(logs, routes))
 
 
 def test_parse_stage_is_one_arrow_node(routed_plan):

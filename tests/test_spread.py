@@ -63,3 +63,24 @@ def test_kill_switch(spark, monkeypatch, tmp_path_factory):
     monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
     out = em._spread(spark.read.parquet(p))
     assert "RoundRobinPartitioning" not in _plan(out)
+
+
+def test_suffixed_max_partition_bytes_still_spreads(spark, tmp_path_factory):
+    # Spark accepts byte strings like "128m" for maxPartitionBytes; the
+    # gate must read them as bytes, not give up on the spread
+    p = str(tmp_path_factory.mktemp("suffix") / "t.parquet")
+    from pyspark.sql import functions as F
+    (spark.range(60000)
+     .withColumn("payload", F.md5(F.col("id").cast("string")))
+     .coalesce(1).write.parquet(p))
+    if sum(os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
+           if f.endswith(".parquet")) < (2 << 20):
+        pytest.skip("test table compressed below the spread threshold")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        out = em._spread(spark.read.parquet(p))
+    finally:
+        spark.conf.set(key, old)
+    assert "RoundRobinPartitioning" in _plan(out)

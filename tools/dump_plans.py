@@ -24,8 +24,8 @@ SHOWN = [
      "bench query times this same build_pipeline DAG): pruned 4-column "
      "parquet scan -> ONE MapInArrow parse stage (whole-batch UTF-32 "
      "decode + compiled-regex classification, operators/parse.py) -> "
-     "broadcast route-dimension join -> deterministic salted exchange "
-     "-> partial+final hash aggregation per sink."),
+     "broadcast route-dimension join -> partial+final hash "
+     "aggregation per sink."),
     ("doc_simhash_pairs",
      "SimHash near-dup (costliest single bench query): map-side md5 + "
      "32 packed conditional sums -> ONE exchange of 33 longs per doc "
@@ -35,8 +35,8 @@ SHOWN = [
      "actual near-dup pairs (two ids + a tinyint-sized int)."),
     ("pipeline_severity_hist",
      "Flagship parse->enrich->route->aggregate. One MapInArrow parse "
-     "stage fused over the scan; broadcast enrich join; salted "
-     "exchange; partial+final hash aggregation."),
+     "stage fused over the scan; broadcast enrich join; "
+     "partial+final hash aggregation."),
     ("q3_shipping_priority",
      "TPC-H-style 3-way join: filters pushed into all three parquet "
      "scans, broadcast joins, whole-stage codegen."),
@@ -266,7 +266,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01"):
         "The EXACT DataFrame the bench times (BENCH_r*.json headline "
         "and the scaling harness's levels): pruned parquet scan of the "
         "tokenized table -> ONE MapInArrow parse stage -> broadcast "
-        "route join -> suppress filter -> salted route exchange -> "
+        "route join -> suppress filter -> "
         "partial+final severity-histogram aggregation. No "
         "BatchEvalPython, no extra exchanges.\n\n"
         f"```\n{buf.getvalue()}```\n")
