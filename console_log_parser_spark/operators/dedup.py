@@ -133,8 +133,8 @@ def minhash_dedup_pairs(df: DataFrame, k: int = 3, n_perm: int = 8,
     # the band frame is consumed by BOTH sides of the bucket self-join,
     # and an aliased self-join gets no ReusedExchange — without this
     # persist the signature aggregation + band explode compute twice
-    # (the same doubled-subtree shape the r4 simhash fix removed; this
-    # is the r5 VERDICT #3 prescription). ~n_bands small rows/doc:
+    # (the same doubled-subtree shape the r4 simhash fix removed).
+    # ~n_bands small rows/doc:
     # spillable MEMORY_AND_DISK, released below with the shingles.
     bands = minhash_bands(df, k, n_perm, n_bands, id_col, text_col,
                           _shingles=sh).persist()

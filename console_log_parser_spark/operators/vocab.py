@@ -295,7 +295,7 @@ def vocab_growth(docs: DataFrame,
     # total stream length is a plain sum over per-doc counts — taking
     # max(w_end) instead would duplicate the whole prefix-sum subtree
     # (range exchange + windows) into this 1-row branch, a second full
-    # pass over the corpus at scale (caught in the PLANS.md dump)
+    # pass over the corpus at scale (visible in the physical plan)
     total = sized.agg(F.sum("n_w").cast("long").alias("n_total"))
     stacked = ", ".join(f"{cp}L, v{cp}" for cp in checkpoints)
     return (row.crossJoin(F.broadcast(total))

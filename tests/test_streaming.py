@@ -20,7 +20,9 @@ def _wait(q, timeout=120):
 @pytest.fixture(scope="module")
 def events_split_dir(spark, tmp_path_factory):
     """events from the driver table, re-written as 4 time-ordered files
-    so file-per-trigger streaming yields 4 ordered micro-batches."""
+    so file-per-trigger streaming yields 4 ordered micro-batches. The
+    directory is named events.parquet, so its parent reads as an sf
+    directory for the batch queries in __spark_entry__."""
     sf_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(sf_dir):
         pytest.skip("driver testdata not present")
@@ -35,7 +37,7 @@ def events_split_dir(spark, tmp_path_factory):
             (spark.createDataFrame(chunk, ev.schema).coalesce(1)
              .write.mode("overwrite").parquet(str(d / f"part_{i}")))
     # flatten: move each part's parquet file up so the dir is one source
-    src = str(d / "flat")
+    src = str(d / "flat" / "events.parquet")
     os.makedirs(src)
     import glob
     import shutil
@@ -121,18 +123,10 @@ def test_stateful_sessionize_matches_batch_lag(spark, events_split_dir,
     final = {r["user_id"]: (r["n_sessions"], r["n_events"])
              for r in updates.orderBy("n_events").collect()}
 
-    ev = spark.read.parquet(events_split_dir)
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    import __spark_entry__ as em
+    batch = em.events_sessionize(spark, os.path.dirname(events_split_dir))
     want = {r["user_id"]: (r["n_sessions"], r["n_events"])
-            for r in (ev.withColumn(
-                "new_session",
-                F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-                .groupBy("user_id")
-                .agg(F.sum("new_session").alias("n_sessions"),
-                     F.count("*").alias("n_events"))
-                .collect())}
+            for r in batch.collect()}
     assert final == want
 
 

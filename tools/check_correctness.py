@@ -51,7 +51,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01"):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"parquet_scan('{sf_dir}/{t}.parquet')")
-    spark = get_spark(app="check", master="local[8]", shuffle_partitions=16)
+    spark = get_spark(app="check", shuffle_partitions=16)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     results = {}

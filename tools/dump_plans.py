@@ -1,9 +1,12 @@
-"""Dump `.explain("formatted")` physical plans of the headline queries
-to PLANS.md — the plan-shape evidence behind tests/test_plans.py:
+"""Print `.explain("formatted")` physical plans of the headline queries
+as markdown on stdout — the plan-shape evidence behind
+tests/test_plans.py:
 filters reach the parquet scan (PushedFilters), the enrich join is a
 BroadcastHashJoin, the parse stage is exactly one MapInArrow (no
 per-row BatchEvalPython anywhere), and relational queries run inside
 WholeStageCodegen spans.
+
+Usage: python tools/dump_plans.py [sf_dir] > plans.md
 """
 from __future__ import annotations
 
@@ -232,8 +235,7 @@ SHOWN = [
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01"):
-    spark = get_spark(app="plans", master="local[8]",
-                      shuffle_partitions=16)
+    spark = get_spark(app="plans", shuffle_partitions=16)
     qs = em.queries()
     out = ["# PLANS — physical-plan evidence (auto-generated by "
            "tools/dump_plans.py)\n"]
@@ -263,16 +265,14 @@ def main(sf_dir: str = "/root/testdata/sf0.01"):
         aggs.explain("formatted")
     out.append(
         "\n## pipeline_parse_route_aggregate (bench.build_pipeline)\n\n"
-        "The EXACT DataFrame the bench times (BENCH_r*.json headline "
-        "and the scaling harness's levels): pruned parquet scan of the "
+        "The EXACT DataFrame the bench times (BENCH_r*.json "
+        "headline): pruned parquet scan of the "
         "tokenized table -> ONE MapInArrow parse stage -> broadcast "
         "route join -> suppress filter -> "
         "partial+final severity-histogram aggregation. No "
         "BatchEvalPython, no extra exchanges.\n\n"
         f"```\n{buf.getvalue()}```\n")
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("".join(out))
-    print("wrote PLANS.md")
+    print("".join(out))
     spark.stop()
 
 

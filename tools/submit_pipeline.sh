@@ -2,13 +2,16 @@
 # Package the library and run the pipeline exactly as the north rule
 # deploys it: spark-submit --py-files at a chosen parallelism.
 #
-#   tools/submit_pipeline.sh <in_dir> <out_dir> [cores=8] [batches=8]
+#   tools/submit_pipeline.sh <in_dir> <out_dir> [cores=nproc] [batches=8]
+#
+# The driver heap defaults to get_spark's size, min(24g, 40% of
+# MemTotal); SPARK_GRAFT_DRIVER_MEM overrides it.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 IN_DIR=${1:?in_dir}
 OUT_DIR=${2:?out_dir}
-CORES=${3:-8}
+CORES=${3:-$(nproc)}
 BATCHES=${4:-8}
 
 ZIP=$(python - <<'EOF'
@@ -22,7 +25,9 @@ EOF
 export MALLOC_MMAP_THRESHOLD_=${MALLOC_MMAP_THRESHOLD_:-536870912}
 export MALLOC_TRIM_THRESHOLD_=${MALLOC_TRIM_THRESHOLD_:-536870912}
 
-MEM="${SPARK_GRAFT_DRIVER_MEM:-8g}"
+MEM="${SPARK_GRAFT_DRIVER_MEM:-$(python -c \
+    'from console_log_parser_spark.session import _default_driver_mem
+print(_default_driver_mem())')}"
 exec spark-submit \
     --master "local[$CORES]" \
     --driver-memory "$MEM" \
