@@ -4,7 +4,9 @@ BASELINE.json:6 — row counts, n_tok sums, severity histograms, escape-
 sequence histograms).
 
 All aggregations are built-in hash aggregates with map-side partial
-combine; nothing here touches Python at runtime.
+combine; nothing here touches Python at runtime. No table is globally
+sorted: a global ``orderBy`` costs a range-sampling job per table, and
+every reader keys or sorts the rows itself.
 """
 from __future__ import annotations
 
@@ -42,7 +44,7 @@ def severity_histogram(routed: DataFrame) -> DataFrame:
 
 
 def seq_histogram(routed: DataFrame) -> DataFrame:
-    """(sink, escape-sequence key) -> count, count-desc per sink.
+    """(sink, escape-sequence key) -> count.
 
     The per-doc seq_hist maps are partial aggregates already (computed
     inside the parse stage); this explodes and merges them — a two-level
@@ -52,8 +54,7 @@ def seq_histogram(routed: DataFrame) -> DataFrame:
     exploded = routed.select(
         "sink", F.explode("seq_hist").alias("seq_key", "cnt"))
     return (exploded.groupBy("sink", "seq_key")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy("sink", F.desc("n"), "seq_key"))
+            .agg(F.sum("cnt").alias("n")))
 
 
 def source_rollup(routed: DataFrame) -> DataFrame:
@@ -61,8 +62,7 @@ def source_rollup(routed: DataFrame) -> DataFrame:
     totals in one pass."""
     return (routed.rollup("route", "source")
             .agg(F.count("*").alias("n_rows"),
-                 F.sum("n_tok").alias("sum_n_tok"))
-            .orderBy("route", "source"))
+                 F.sum("n_tok").alias("sum_n_tok")))
 
 
 def top_commands(routed: DataFrame, k: int = 20) -> DataFrame:

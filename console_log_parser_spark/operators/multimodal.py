@@ -31,7 +31,7 @@ recomputation instead (SQL cannot express the byte stream cheaply).
 At 100 TB scale: payloads ride the same partitioning as their doc_id
 keys; stages are batch-local (no shuffle); Arrow batch size bounds
 executor memory (payload bytes per batch <= maxRecordsPerBatch *
-max payload).
+max payload; ``session.get_spark`` caps maxRecordsPerBatch at 256).
 """
 from __future__ import annotations
 

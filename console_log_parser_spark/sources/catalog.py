@@ -55,7 +55,10 @@ def read_tokens(spark: SparkSession, location: str) -> DataFrame:
 
 def write_routed(routed: DataFrame, location: str,
                  mode: str = "append") -> None:
-    """Fan-out write of the routed table, partitioned by sink.
+    """Fan-out write of the routed table, partitioned by sink — by
+    ``batch, sink`` when the frame carries the checkpoint runner's
+    ``batch`` column, with dynamic partition overwrite so a Parquet
+    overwrite replaces only the batches present in the frame.
 
     Iceberg identifier -> ``writeTo`` with hidden partitioning (the
     v2 path gives atomic commits + snapshot history, which is what
@@ -63,6 +66,7 @@ def write_routed(routed: DataFrame, location: str,
     -> hive-style ``partitionBy`` directories.
     """
     spark = routed.sparkSession
+    parts = [c for c in ("batch", "sink") if c in routed.columns]
     if "/" not in location and iceberg_available(spark):
         writer = routed.writeTo(location).using("iceberg")
         if mode == "append":
@@ -76,8 +80,12 @@ def write_routed(routed: DataFrame, location: str,
             if spark.catalog.tableExists(location):
                 writer.append()
             else:
-                writer.partitionedBy(routed.sink).createOrReplace()
+                writer.partitionedBy(
+                    *(routed[c] for c in parts)).createOrReplace()
         else:
             writer.createOrReplace()
         return
-    routed.write.mode(mode).partitionBy("sink").parquet(location)
+    writer = routed.write.mode(mode).partitionBy(*parts)
+    if "batch" in parts:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.parquet(location)

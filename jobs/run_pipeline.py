@@ -37,7 +37,9 @@ def main() -> None:
                          "catalog conf) or a parquet path; default: "
                          "parquet in --in-dir")
     ap.add_argument("--max-batches", type=int, default=None,
-                    help="stop after N uncommitted batches (kill test)")
+                    help="run at most N uncommitted batches this call; "
+                         "they are written in one job, so N bounds what "
+                         "a kill loses")
     args = ap.parse_args()
 
     spark = (SparkSession.builder

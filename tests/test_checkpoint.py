@@ -6,6 +6,7 @@ import json
 import os
 import sys
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -16,6 +17,12 @@ from console_log_parser_spark.plans.pipeline import PipelineConfig
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_SUBSET = 100
+
+
+def _snapshot(root):
+    return {os.path.relpath(os.path.join(d, f), root):
+            os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(root) for f in fs}
 
 
 def test_kill_resume_no_recompute(spark, small_dataset, tmp_path):
@@ -29,10 +36,18 @@ def test_kill_resume_no_recompute(spark, small_dataset, tmp_path):
     assert set(manifests) == {0, 1}
     mtimes = {b: os.path.getmtime(
         f"{out}/_manifests/batch_{b:05d}.json") for b in (0, 1)}
+    committed_files = {b: _snapshot(f"{out}/routed/batch={b}")
+                       for b in (0, 1)}
+    assert all(committed_files.values())
 
     # simulate a partial uncommitted write of batch 2
     os.makedirs(f"{out}/routed/batch=2/sink=sink_0", exist_ok=True)
     with open(f"{out}/routed/batch=2/sink=sink_0/garbage.parquet", "w") as f:
+        f.write("partial")
+    # ... and the staging dir a killed dynamic-overwrite write leaves
+    staging = f"{out}/routed/.spark-staging-killed/batch=3/sink=sink_0"
+    os.makedirs(staging)
+    with open(f"{staging}/part.parquet", "w") as f:
         f.write("partial")
 
     # phase 2: resume
@@ -44,6 +59,11 @@ def test_kill_resume_no_recompute(spark, small_dataset, tmp_path):
     for b in (0, 1):
         assert os.path.getmtime(
             f"{out}/_manifests/batch_{b:05d}.json") == mtimes[b]
+        # ... and so are the committed batches' routed files
+        assert _snapshot(f"{out}/routed/batch={b}") == committed_files[b]
+    assert not os.path.exists(
+        f"{out}/routed/batch=2/sink=sink_0/garbage.parquet")
+    assert not os.path.exists(f"{out}/routed/.spark-staging-killed")
 
     # converges to the full-pipeline result
     routed = spark.read.parquet(f"{out}/routed")
@@ -111,12 +131,6 @@ def test_job_cli_honours_tokens_table(spark, small_dataset, subset_tokens,
     assert len(_doc_ids(spark, out)) == N_SUBSET
 
 
-def _snapshot(root):
-    return {os.path.relpath(os.path.join(d, f), root):
-            os.stat(os.path.join(d, f)).st_mtime_ns
-            for d, _, fs in os.walk(root) for f in fs}
-
-
 def test_resume_with_other_n_batches_is_refused(spark, small_dataset,
                                                 tmp_path):
     out = str(tmp_path / "ckpt")
@@ -130,3 +144,63 @@ def test_resume_with_other_n_batches_is_refused(spark, small_dataset,
     with pytest.raises(ValueError, match="n_batches"):
         run_with_checkpoints(spark, cfg, n_batches=3)
     assert _snapshot(out) == before
+
+
+def test_manifest_counts_match_routed_table(spark, small_dataset, tmp_path):
+    """Each manifest's rows/tokens, taken from the write's conditional
+    sums, equal that batch's rows in the routed table it committed."""
+    out = str(tmp_path / "ckpt")
+    cfg = PipelineConfig(in_dir=small_dataset, out_dir=out)
+    run_with_checkpoints(spark, cfg, n_batches=4, max_batches=2)
+    run_with_checkpoints(spark, cfg, n_batches=4)
+    got = {b: (m["rows"], m["tokens"])
+           for b, m in read_manifests(out).items()}
+    routed = spark.read.parquet(f"{out}/routed")
+    want = {r["batch"]: (r["rows"], r["tokens"]) for r in
+            routed.groupBy("batch").agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.sum("n_tok").alias("tokens")).collect()}
+    assert got == want and set(got) == {0, 1, 2, 3}
+    assert sum(rows for rows, _ in got.values()) == 300
+
+
+def _jobs_of_call(spark, cfg, group, **kw):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run_with_checkpoints(spark, cfg, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_routed_write_is_one_job_per_call(spark, small_dataset, tmp_path):
+    """The uncommitted batches of a call are written in one job: a
+    call running three batches runs as many Spark jobs as a call
+    running one."""
+    one = _jobs_of_call(
+        spark, PipelineConfig(in_dir=small_dataset,
+                              out_dir=str(tmp_path / "one")),
+        "ckpt_one_batch", n_batches=4, max_batches=1)
+    three = _jobs_of_call(
+        spark, PipelineConfig(in_dir=small_dataset,
+                              out_dir=str(tmp_path / "three")),
+        "ckpt_three_batches", n_batches=4, max_batches=3)
+    assert one > 0 and three == one
+    assert set(read_manifests(str(tmp_path / "three"))) == {0, 1, 2}
+
+
+def test_arrow_batches_capped_at_256_records(spark):
+    """The session caps Arrow batches at 256 records: a Python worker's
+    RSS follows its largest batch, and the checkpointed runner hands
+    one task the whole input."""
+    def sizes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"n": pa.array([b.num_rows], pa.int64())})
+
+    df = spark.range(0, 1000, 1, numPartitions=1).mapInArrow(sizes,
+                                                             "n long")
+    got = [r["n"] for r in df.collect()]
+    assert sum(got) == 1000 and max(got) <= 256
