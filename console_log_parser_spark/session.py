@@ -10,8 +10,8 @@ follows the largest batch it decodes and parses, not the task's size.
 The checkpointed runner's one write per call sends its whole input
 through one Python task: at 2048 records per batch the Python
 processes' RSS rose 10% over the old one-job-per-batch loop (2000
-docs, 4 cores), at 256 it rose 2%. The flagship's fell from ~427 to
-~343 MB, and its throughput did not drop.
+docs, 4 cores), at 256 it rose 2%. The flagship's fell from ~428 to
+~345 MB, and its throughput did not drop.
 """
 from __future__ import annotations
 
