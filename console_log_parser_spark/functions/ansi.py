@@ -59,47 +59,9 @@ ANSI_RE = re.compile(
 # The same grammar wrapped in ONE capture group: re.split() with it
 # returns [seg0, match0, seg1, match1, ..., segN] — both the stripped
 # segments and the match strings from a single C-level pass, with no
-# per-match Match objects (classify_and_strip's per-doc hot loop).
+# per-match Match objects (classify_and_strip's path for text with C1
+# bytes; C1-free text takes the ESC-led split below).
 ANSI_SPLIT_RE = re.compile("(" + ANSI_RE.pattern + ")", re.DOTALL)
-
-# Any C1 byte (0x80-0x9f): the one-charset probe that decides whether
-# the ESC-jump scanner below is exact (see _scan_sequences).
-_C1_ANY_RE = re.compile("[\x80-\x9f]")
-
-
-def _scan_sequences(text: str, pat) -> tuple[list, list]:
-    """(segments, matches) — exactly ``pat.finditer(text)`` PROVIDED
-    ``text`` contains no C1 byte (callers check ``_C1_ANY_RE`` first).
-
-    Every branch of the grammar then begins with ESC, so instead of
-    attempting the 9-way alternation at every character position (the
-    regex engine's scan loop runs at ~12 MB/s on this grammar), jump
-    ESC-to-ESC with ``str.find`` (memchr speed) and run one ANCHORED
-    ``pat.match`` per candidate — cost proportional to the number of
-    escapes, not the document length. A dangling ESC that matches no
-    branch is skipped, exactly as the scanning loop would skip it.
-
-    ``segments`` has len(matches)+1 entries; segments[j] is the text
-    between match j-1 and match j (the adjacency test for app-mode
-    spans is segments[j] == "").
-    """
-    segs: list = []
-    matches: list = []
-    find = text.find
-    match = pat.match
-    last = 0
-    i = find("\x1b")
-    while i != -1:
-        m = match(text, i)
-        if m is None:
-            i = find("\x1b", i + 1)
-            continue
-        segs.append(text[last:i])
-        matches.append(m.group())
-        last = m.end()
-        i = find("\x1b", last)
-    segs.append(text[last:])
-    return segs, matches
 
 # Complete sequences only (no truncated-at-EOD branches): the per-line
 # replay grammar for every line except the document's last — a
@@ -107,6 +69,57 @@ def _scan_sequences(text: str, pat) -> tuple[list, list]:
 # as data by the FSM), not dropped as EOD-truncated.
 ANSI_COMPLETE_RE = re.compile(
     "|".join([_CSI, _OSC, _DCS, _ESC2, _C1]), re.DOTALL)
+
+# Any C1 byte (0x80-0x9f): the one-charset probe that decides whether
+# the ESC-led split below is exact (see _scan_sequences).
+_C1_ANY_RE = re.compile("[\x80-\x9f]")
+
+# The ESC-led branches of each grammar, in the same order, with the C1
+# introducers and terminators left out and the shared ESC factored in
+# front. On C1-free text no C1 alternative can match, so these match
+# exactly what the full grammars do there; the literal ESC prefix lets
+# sre skip between escapes instead of trying the alternation at every
+# character.
+_CSI_E = r"\[[0-?]*[ -/]*[@-~]"
+_OSC_E = r"\][^\x07\x1b]*(?:\x07|\x1b\\)"
+_DCS_E = r"[PX^_][^\x1b]*\x1b\\"
+_EOD_CSI_E = r"\[[0-?]*[ -/]*\Z"
+_EOD_OSC_E = r"\][^\x07]*\Z"
+_EOD_DCS_E = r"[PX^_].*\Z"
+_ESC2_E = r"[ -/]*[0-~]"
+_EOD_ESC_E = r"[ -/]*\Z"
+
+
+def _esc_split_re(*branches: str) -> re.Pattern:
+    return re.compile(r"(\x1b(?:" + "|".join(branches) + "))", re.DOTALL)
+
+
+_ESC_SPLIT = {
+    ANSI_RE: _esc_split_re(_CSI_E, _OSC_E, _DCS_E, _EOD_CSI_E, _EOD_OSC_E,
+                           _EOD_DCS_E, _ESC2_E, _EOD_ESC_E),
+    ANSI_COMPLETE_RE: _esc_split_re(_CSI_E, _OSC_E, _DCS_E, _ESC2_E),
+}
+
+
+def _scan_sequences(text: str, pat) -> tuple[list, list]:
+    """(segments, matches) — exactly ``pat.finditer(text)`` for ``pat``
+    ANSI_RE or ANSI_COMPLETE_RE, PROVIDED ``text`` contains no C1 byte
+    (callers check ``_C1_ANY_RE`` first).
+
+    One ``re.split`` with the grammar's ESC-led twin returns both lists
+    from a single C call: no Python loop, no Match objects. The full
+    grammar's split tries the alternation at every character and runs
+    at ~10 M chars/s on datagen transcripts; the ESC-led twin skips to
+    the next ESC first and runs at ~110 M chars/s. A dangling ESC that
+    matches no branch stays in its segment, as with ``finditer``.
+
+    ``segments`` has len(matches)+1 entries; segments[j] is the text
+    between match j-1 and match j (the adjacency test for app-mode
+    spans is segments[j] == "").
+    """
+    parts = _ESC_SPLIT[pat].split(text)
+    return parts[0::2], parts[1::2]
+
 
 # CSI parts, mirroring the reference's (private, params, intermediate,
 # final) record assembly (vtparser.py:644-683).
@@ -122,7 +135,12 @@ _INTERM_RE = re.compile(r"[ -/]")
 # Severity + ISO-timestamp capture (the grok stage of the generalized
 # pipeline; analog of the reference's regex feature layer,
 # terminalparser.py:27-31).
-SEVERITY_RE = re.compile(r"\b(DEBUG|INFO|WARN|ERROR)\b")
+# The word boundary before each level sits after its first letter
+# (``D(?<!\wD)`` is ``\bD``), so every branch starts with a literal and
+# sre skips ahead on the charset {D, I, W, E} instead of testing \b at
+# every position; it matches exactly what ``\b(DEBUG|...|ERROR)\b`` does.
+SEVERITY_RE = re.compile(
+    r"(D(?<!\wD)EBUG|I(?<!\wI)NFO|W(?<!\wW)ARN|E(?<!\wE)RROR)\b")
 TS_RE = re.compile(r"\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(?:\.\d+)?")
 # error accounting (SURVEY.md §4: one bad row must not kill a 10^12-row
 # job — malformed input becomes a COLUMN, not an exception): a lone ESC
@@ -216,7 +234,7 @@ def classify(text: str) -> tuple[Counter, int, int, int, int, int, int]:
 def classify_and_strip(
         text: str, want_strip: bool = True
 ) -> tuple[str, Counter, tuple[int, int, int, int, int, int, int, int]]:
-    """ONE finditer pass over the document producing the escape-stripped
+    """ONE split pass over the document producing the escape-stripped
     text, the event histogram and the counters
     ``(n_csi, n_osc, n_esc, n_dcs, n_sgr, n_c1, n_app_mode, n_devstat)``
     (a separate ``ANSI_RE.sub`` pass costs ~25% of parse time at scale).
@@ -240,22 +258,16 @@ def classify_and_strip(
     n_csi = n_osc = n_esc = n_dcs = n_sgr = n_c1 = 0
     n_app_mode = n_devstat = 0
     if _C1_ANY_RE.search(text) is None:
-        # ESC-jump scan: memchr between escapes + anchored matches
+        # one ESC-led split: segments and matches from one C call
         segs, matches = _scan_sequences(text, ANSI_RE)
-        if not matches:  # no escapes at all: zero-copy
-            stripped = text if want_strip else ""
-            return stripped, hist, (0, 0, 0, 0, 0, 0, 0, 0)
-        stripped = "".join(segs) if want_strip else ""
     else:
-        # C1 bytes present (rare): fall back to the one-pass regex
+        # C1 bytes present (rare): fall back to the full grammar's
         # split, whose alternation handles C1-introduced sequences
         parts = ANSI_SPLIT_RE.split(text)
-        if len(parts) == 1:  # no escapes at all: zero-copy
-            stripped = text if want_strip else ""
-            return stripped, hist, (0, 0, 0, 0, 0, 0, 0, 0)
-        matches = parts[1::2]
-        segs = parts[0::2]
-        stripped = "".join(segs) if want_strip else ""
+        segs, matches = parts[0::2], parts[1::2]
+    if not matches:  # no escapes at all: zero-copy
+        return (text if want_strip else ""), hist, (0, 0, 0, 0, 0, 0, 0, 0)
+    stripped = "".join(segs) if want_strip else ""
     # Histogram + counters from the DISTINCT match strings (escape
     # vocab is tiny — ~20 distinct over ~50 matches per doc): Counter()
     # does the per-match counting at C speed, the Python loop runs per
@@ -496,7 +508,7 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
             return hit
     pat = ANSI_RE if at_eod else ANSI_COMPLETE_RE
     if _C1_ANY_RE.search(raw_line) is None:
-        # One ESC-jump scan yields both the fast-path strip and the
+        # One ESC-led split yields both the fast-path strip and the
         # slow-path walk inputs; no alternation scan of the line.
         segs, matches = _scan_sequences(raw_line, pat)
         # Fast path: no complete editing CSI (a match starting with

@@ -10,12 +10,20 @@ list offsets, and all classification is compiled-regex
 (BASELINE.json:15); the only Python-level loop is per-document over the
 regex match objects, and the editing replay touches only prompt lines.
 
+No pandas in the workers: the input is read with ``np.frombuffer`` over
+the Arrow buffers and every output column is assembled from numpy/bytes
+buffers (``pa.Array.from_buffers``, ``ListArray``/``MapArray.from_arrays``).
+``pa.array`` and ``to_numpy`` import pandas on first use, which costs
+each Python worker ~30-40 MB of RSS and ~0.45 s at its first batch; only
+the opt-in :class:`Extractor` columns still go through ``pa.array``.
+
 The plan shows a single ``MapInArrow`` node fused between the parquet
 scan and downstream exchanges — verified by tests/test_plans.py.
 """
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import pairwise
 
 import numpy as np
 import pyarrow as pa
@@ -76,31 +84,73 @@ def decode_token_lists(col: pa.Array) -> tuple[list[str], np.ndarray]:
     """list<int32> Arrow column -> per-row Python strings.
 
     One vectorized decode for the whole batch: the child values buffer is
-    reinterpreted as UTF-32LE and sliced by list offsets.
+    reinterpreted as UTF-32LE and sliced by list offsets. Both buffers
+    are read in place (``np.frombuffer`` at the arrays' own offsets, so
+    a sliced column decodes only its rows); ``to_numpy`` would import
+    pandas into the worker.
     """
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
-    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    values = col.values.to_numpy(zero_copy_only=False)
-    # view (not astype): int32 -> uint32 is a reinterpret, and str()
-    # decodes straight from the buffer — zero intermediate copies of
-    # the ~4 KiB/doc token payload (astype+tobytes copied it twice)
-    big = str(memoryview(values.view("<u4")), "utf-32-le", "replace")
-    docs = [big[offsets[i]:offsets[i + 1]] for i in range(len(col))]
+    n = len(col)
+    if n == 0:  # a producer may omit the offsets of an empty list array
+        return [], np.zeros(1, np.int32)
+    offsets = np.frombuffer(col.buffers()[1], np.int32, n + 1,
+                            col.offset * 4)
+    vals = col.values
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    big = ""
+    if hi > lo:
+        # view as <u4: int32 -> uint32 is a reinterpret, and str()
+        # decodes straight from the buffer, with no copy of the payload
+        values = np.frombuffer(vals.buffers()[1], "<u4", hi - lo,
+                               (vals.offset + lo) * 4)
+        big = str(memoryview(values), "utf-32-le", "replace")
+    docs = [big[a:b] for a, b in pairwise((offsets - lo).tolist())]
     return docs, offsets
+
+
+# --- Arrow columns built from buffers (no pandas; see module docstring) --
+
+def _int32_array(values: np.ndarray) -> pa.Array:
+    """int32 column over ``values`` (no nulls)."""
+    values = np.ascontiguousarray(values, np.int32)
+    return pa.Array.from_buffers(pa.int32(), len(values),
+                                 [None, pa.py_buffer(values)])
+
+
+def _offsets(lengths) -> np.ndarray:
+    """int32 list/string offsets from per-row lengths."""
+    out = np.zeros(len(lengths) + 1, np.int64)
+    np.cumsum(lengths, out=out[1:])
+    if out[-1] > np.iinfo(np.int32).max:
+        raise OverflowError("Arrow batch exceeds int32 offsets")
+    return out.astype(np.int32)
+
+
+def _string_array(strings: list[str | None]) -> pa.Array:
+    """UTF-8 string column; ``None`` entries become nulls."""
+    n = len(strings)
+    valid = np.fromiter((s is not None for s in strings), np.bool_, n)
+    n_null = n - int(np.count_nonzero(valid))
+    enc = [s.encode() if s is not None else b"" for s in strings]
+    bitmap = (pa.py_buffer(np.packbits(valid, bitorder="little"))
+              if n_null else None)
+    lens = np.fromiter(map(len, enc), np.int64, n)
+    return pa.Array.from_buffers(
+        pa.string(), n,
+        [bitmap, pa.py_buffer(_offsets(lens)), pa.py_buffer(b"".join(enc))],
+        n_null)
 
 
 def encode_string_lists(strings: list[str]) -> pa.ListArray:
     """Per-row strings -> one list<int32> Arrow column (UTF-32 reinterpret,
     single allocation)."""
-    lens = np.fromiter((len(s) for s in strings), dtype=np.int64,
-                       count=len(strings))
-    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-    joined = "".join(strings)
-    values = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4").astype(
-        np.int32)
-    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
-                                    pa.array(values, pa.int32()))
+    lens = np.fromiter(map(len, strings), np.int64, len(strings))
+    values = "".join(strings).encode("utf-32-le")
+    return pa.ListArray.from_arrays(
+        _int32_array(_offsets(lens)),
+        pa.Array.from_buffers(pa.int32(), len(values) // 4,
+                              [None, pa.py_buffer(values)]))
 
 
 class Extractor:
@@ -116,6 +166,11 @@ class Extractor:
     ``parsed`` the engine's column dict (ansi.parse_doc). ``ddl`` is
     the Spark type (e.g. ``"int"``, ``"array<string>"``), ``pa_type``
     the matching pyarrow type.
+
+    Extractor values are arbitrary Python objects, so their column is
+    built with ``pa.array``, which imports pandas into the worker (the
+    built-in columns avoid it); the cost is paid only when extractors
+    are passed.
     """
 
     __slots__ = ("name", "ddl", "pa_type", "fn")
@@ -133,24 +188,39 @@ def parse_batch(batch: pa.RecordBatch,
     n = len(docs)
     parsed = [ansi.parse_doc(d) for d in docs]
 
-    i32 = lambda key: pa.array([p[key] for p in parsed], pa.int32())  # noqa: E731
+    def i32(key: str) -> pa.Array:
+        return _int32_array(
+            np.fromiter((p[key] for p in parsed), np.int32, n))
+
+    def lens(key: str) -> np.ndarray:
+        return np.fromiter((len(p[key]) for p in parsed), np.int32, n)
+
+    stripped = [p["stripped"] for p in parsed]
+    seq_hist = pa.MapArray.from_arrays(
+        _int32_array(_offsets(lens("seq_hist"))),
+        _string_array([k for p in parsed for k in p["seq_hist"]]),
+        _int32_array(np.fromiter(
+            (v for p in parsed for v in p["seq_hist"].values()), np.int32)))
+    n_cmd = lens("cmd_lines")
+    cmd_lines = pa.ListArray.from_arrays(
+        _int32_array(_offsets(n_cmd)),
+        _string_array([c for p in parsed for c in p["cmd_lines"]]))
     arrays = [
         batch.column("doc_id"),
         batch.column("source"),
         batch.column("n_tok").cast(pa.int32()),
-        pa.array([p["stripped"] for p in parsed], pa.string()),
-        pa.array([len(p["stripped"]) for p in parsed], pa.int32()),
+        _string_array(stripped),
+        _int32_array(np.fromiter(map(len, stripped), np.int32, n)),
         i32("n_events"), i32("n_csi"), i32("n_osc"), i32("n_esc"),
         i32("n_dcs"), i32("n_sgr"), i32("n_c1"),
-        pa.array([list(p["seq_hist"].items()) for p in parsed],
-                 pa.map_(pa.string(), pa.int32())),
-        pa.array([p["severity"] for p in parsed], pa.string()),
+        seq_hist,
+        _string_array([p["severity"] for p in parsed]),
         i32("n_debug"), i32("n_info"), i32("n_warn"), i32("n_error"),
-        pa.array([p["ts_min"] for p in parsed], pa.string()),
-        pa.array([p["ts_max"] for p in parsed], pa.string()),
+        _string_array([p["ts_min"] for p in parsed]),
+        _string_array([p["ts_max"] for p in parsed]),
         i32("prompt_count"),
-        pa.array([p["cmd_lines"] for p in parsed], pa.list_(pa.string())),
-        pa.array([len(p["cmd_lines"]) for p in parsed], pa.int32()),
+        cmd_lines,
+        _int32_array(n_cmd),
         i32("n_vim"),
         i32("n_unparsed"),
         i32("n_app_mode"),
@@ -165,7 +235,6 @@ def parse_batch(batch: pa.RecordBatch,
                 [ex.fn(d, p) for d, p in zip(docs, parsed)], ex.pa_type))
             fields.append(pa.field(ex.name, ex.pa_type))
         schema = pa.schema(fields)
-    assert n == len(arrays[0])
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
@@ -256,6 +325,29 @@ def parse_stage(df: DataFrame, extractors: tuple = ()) -> DataFrame:
 
 # --- generate-from-ids stage (entry-point path over driver tables) -----
 
+_SYNTH_SCHEMA = pa.schema([
+    ("doc_id", pa.string()),
+    ("tokens", pa.list_(pa.int32())),
+    ("n_tok", pa.int32()),
+    ("source", pa.string()),
+])
+
+
+def synth_batch(batch: pa.RecordBatch, seed: int = 42) -> pa.RecordBatch:
+    """(doc_id_num bigint) batch -> tokenized_logs batch (datagen.gen_doc
+    per id)."""
+    from .. import datagen
+
+    ids = batch.column("doc_id_num").to_pylist()
+    texts = [datagen.gen_doc(i, seed)[0] for i in ids]
+    return pa.RecordBatch.from_arrays(
+        [_string_array([f"doc_{i:08d}" for i in ids]),
+         encode_string_lists(texts),
+         _int32_array(np.fromiter(map(len, texts), np.int32, len(texts))),
+         _string_array([datagen.doc_source(i, seed) for i in ids])],
+        schema=_SYNTH_SCHEMA)
+
+
 def synth_tokens_stage(df: DataFrame, seed: int = 42) -> DataFrame:
     """(doc_id_num bigint) -> tokenized_logs rows, synthesizing each
     transcript deterministically from its numeric id (datagen.gen_doc).
@@ -264,27 +356,9 @@ def synth_tokens_stage(df: DataFrame, seed: int = 42) -> DataFrame:
     while the transcript content stays a pure function of (id, seed) —
     no external data, reproducible at any scale.
     """
-    from .. import datagen
-
-    out_schema = pa.schema([
-        ("doc_id", pa.string()),
-        ("tokens", pa.list_(pa.int32())),
-        ("n_tok", pa.int32()),
-        ("source", pa.string()),
-    ])
-
     def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            ids = batch.column("doc_id_num").to_pylist()
-            texts = [datagen.gen_doc(i, seed)[0] for i in ids]
-            toks = encode_string_lists(texts)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([f"doc_{i:08d}" for i in ids], pa.string()),
-                 toks,
-                 pa.array([len(t) for t in texts], pa.int32()),
-                 pa.array([datagen.doc_source(i, seed) for i in ids],
-                          pa.string())],
-                schema=out_schema)
+            yield synth_batch(batch, seed)
 
     return df.mapInArrow(
         gen, "doc_id string, tokens array<int>, n_tok int, source string")

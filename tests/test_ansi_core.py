@@ -1,6 +1,8 @@
 """Engine (vectorized regex, functions/ansi.py) vs oracle (char-at-a-time
 FSM, oracle.py) vs generator intent (datagen.py) — the per-doc
 correctness core."""
+import re
+
 import pytest
 
 from console_log_parser_spark import datagen, oracle
@@ -205,3 +207,69 @@ def test_invalid_codepoint_tokens_decode_to_replacement():
     o = oracle.oracle_parse_doc(docs[0])
     for k in KEYS:
         assert e[k] == o[k], k
+
+
+# --- ESC-led split and literal-led severity scan ---------------------------
+
+def _finditer_scan(text, pat):
+    segs, matches, last = [], [], 0
+    for m in pat.finditer(text):
+        segs.append(text[last:m.start()])
+        matches.append(m.group())
+        last = m.end()
+    segs.append(text[last:])
+    return segs, matches
+
+
+_C1_FREE_EDGES = [
+    "",
+    "no escapes at all\n",
+    "esc at end of document \x1b",
+    "esc esc \x1b\x1b[31mx",
+    "\x1b\x1b",
+    "esc del \x1b\x7f after",
+    "osc with esc \x1b]0;ti\x1btle\x07 after\n",
+    "osc st inside \x1b]2;a\x1b\\b\x1b]0;c",
+    "dcs with esc \x1bPq#0\x1bx\x1b\\ after",
+    "truncated csi mid-line \x1b[12\nnext \x1b[3",
+    "truncated csi \x1b[1;2 \x1b[0m ok",
+    "truncated osc mid-line \x1b]0;title\nnext line\n",
+    "esc interm \x1b(B \x1b( \x1b",
+    "eod dcs \x1bPq#0;2",
+    "\x1b[31m\x1b[0m\x1b=\x1b>",
+]
+
+
+@pytest.mark.parametrize("pat", [ansi.ANSI_RE, ansi.ANSI_COMPLETE_RE],
+                         ids=["full", "complete"])
+@pytest.mark.parametrize("text", _C1_FREE_EDGES)
+def test_scan_sequences_equals_finditer(pat, text):
+    assert ansi._C1_ANY_RE.search(text) is None
+    assert ansi._scan_sequences(text, pat) == _finditer_scan(text, pat)
+
+
+@pytest.mark.parametrize("pat", [ansi.ANSI_RE, ansi.ANSI_COMPLETE_RE],
+                         ids=["full", "complete"])
+def test_scan_sequences_equals_finditer_on_synthetic(pat):
+    for i in range(200):
+        text, _ = datagen.gen_doc(i)
+        if ansi._C1_ANY_RE.search(text) is not None:
+            continue
+        assert ansi._scan_sequences(text, pat) == _finditer_scan(text, pat)
+        for line in text.split("\n"):
+            assert (ansi._scan_sequences(line, pat)
+                    == _finditer_scan(line, pat))
+
+
+_WORD_BOUNDED_SEVERITY = re.compile(r"\b(DEBUG|INFO|WARN|ERROR)\b")
+
+
+@pytest.mark.parametrize("text", [
+    "xINFO", "INFO_", "_WARN", "éERROR", "1DEBUG", "INFO.", "INFO",
+    "ERROR at the start and the end WARN", "WARNING INFOS DEBUGGER",
+    "INFOINFO", "ERROR-WARN/INFO:DEBUG", "ÉERROR ßINFO", "a\nDEBUG\n",
+    " EERROR DDEBUG WWARN IINFO ", "",
+])
+def test_severity_re_equals_word_bounded_pattern(text):
+    assert (ansi.SEVERITY_RE.findall(text)
+            == _WORD_BOUNDED_SEVERITY.findall(text))
