@@ -52,8 +52,6 @@ def _spread(df: DataFrame) -> DataFrame:
     table has thousands of files, the gate is false, and the plan is
     unchanged — no shuffle is ever added to a healthy scan.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df  # A/B kill-switch
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     # Spark's own parse of the session value, so "128m" reads as bytes
@@ -63,7 +61,7 @@ def _spread(df: DataFrame) -> DataFrame:
     # round trip; below a few MB of compressed input the serialized
     # compute is cheaper than that (A/B at sf0.1: doc_token_count
     # 0.42 s base vs 0.58 s spread), so small inputs stay put.
-    spread_min = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN", str(2 << 20)))
+    spread_min = 2 << 20
     try:
         files = df.inputFiles()
         if len(files) >= cores:
@@ -514,14 +512,16 @@ def events_hop_renumber(spark, sf_dir):
                  F.sum("renumbered").alias("sum_renumbered")))
 
 
-_STREAM_SEQ = [0]
-
-
-def stream_sessionize(spark, sf_dir):
-    """Structured Streaming applyInPandasWithState sessionizer driven
-    over a 2-file stream (2 micro-batches with carried state); the final
-    per-user counters must equal the batch lag() sessionizer, which is
-    exactly what the SQL oracle computes."""
+def _drain_events_stream(spark: SparkSession, sf_dir: str,
+                         op: Callable[[DataFrame], DataFrame],
+                         output_mode: str = "update",
+                         redeliver: bool = False) -> DataFrame:
+    """Stream the events table through ``op`` (streaming/jobs.py
+    run_to_memory) as two time-ordered micro-batches, cut at the median
+    ``ts``, and return the memory sink's rows. With ``redeliver`` each
+    batch file is delivered twice, as an at-least-once source would.
+    The staged files and the checkpoint are removed after the drain;
+    the memory sink already holds the rows."""
     import glob
     import shutil
     import tempfile
@@ -529,32 +529,43 @@ def stream_sessionize(spark, sf_dir):
     _ship_package(spark)
     from console_log_parser_spark.streaming import jobs
 
-    d = tempfile.mkdtemp(prefix="stream_sess_")
-    src = f"{d}/src"
-    os.makedirs(src)
-    ev = _t(spark, sf_dir, "events").orderBy("ts", "event_id")
-    # split at the median event time -> two time-ordered micro-batches
-    cut = ev.selectExpr("percentile_approx(ts, 0.5) p").first()["p"]
-    first = ev.filter(F.col("ts") <= cut)
-    second = ev.filter(F.col("ts") > cut)
-    for i, part in enumerate((first, second)):
-        pdir = f"{d}/p{i}"
-        part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
-            shutil.copy(f, f"{src}/{i:02d}_{j}.parquet")
+    d = tempfile.mkdtemp(prefix=f"stream_{op.__name__}_")
+    try:
+        src = f"{d}/src"
+        os.makedirs(src)
+        ev = _t(spark, sf_dir, "events").orderBy("ts", "event_id")
+        cut = ev.selectExpr("percentile_approx(ts, 0.5) p").first()["p"]
+        copies = 2 if redeliver else 1
+        for i, part in enumerate((ev.filter(F.col("ts") <= cut),
+                                  ev.filter(F.col("ts") > cut))):
+            pdir = f"{d}/p{i}"
+            part.coalesce(1).write.mode("overwrite").parquet(pdir)
+            for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
+                for k in range(copies):
+                    shutil.copy(f, f"{src}/{copies * i + k:02d}_{j}.parquet")
+        # mkdtemp's name is unique and a valid identifier
+        qname = os.path.basename(d)
+        q = jobs.run_to_memory(spark, src, f"{d}/ckpt", qname, op,
+                               output_mode)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(
+                "streaming drain exceeded 300s — a partial memory "
+                "sink must fail loudly, not hash-mismatch quietly")
+        return spark.sql(f"SELECT * FROM {qname}")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
-    _STREAM_SEQ[0] += 1
-    qname = f"stream_sess_{_STREAM_SEQ[0]}"
-    q = jobs.run_stateful_sessionize(spark, src, f"{d}/ckpt", qname,
-                                     max_files_per_trigger=1)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming drain exceeded 300s — a partial memory "
-            "sink must fail loudly, not hash-mismatch quietly")
+
+def stream_sessionize(spark, sf_dir):
+    """Structured Streaming applyInPandasWithState sessionizer driven
+    over a 2-file stream (2 micro-batches with carried state); the final
+    per-user counters must equal the batch lag() sessionizer, which is
+    exactly what the SQL oracle computes."""
+    from console_log_parser_spark.streaming import jobs
     # update-mode memory sink: one row per (user, batch); the counters
     # are monotone, so max == final state
-    return (spark.sql(f"SELECT * FROM {qname}")
+    return (_drain_events_stream(spark, sf_dir, jobs.stateful_sessionize)
             .groupBy("user_id")
             .agg(F.max("n_sessions").alias("n_sessions"),
                  F.max("n_events").alias("n_events")))
@@ -567,35 +578,8 @@ def stream_funnel(spark, sf_dir):
     must equal the batch funnel (operators/funnel.py), which is what
     the SQL oracle computes. Stage times are set-once, so max over
     the update-mode sink rows == final state."""
-    import glob
-    import shutil
-    import tempfile
-
-    _ship_package(spark)
     from console_log_parser_spark.streaming import jobs
-
-    d = tempfile.mkdtemp(prefix="stream_funnel_")
-    src = f"{d}/src"
-    os.makedirs(src)
-    ev = _t(spark, sf_dir, "events").orderBy("ts", "event_id")
-    cut = ev.selectExpr("percentile_approx(ts, 0.5) p").first()["p"]
-    for i, part in enumerate((ev.filter(F.col("ts") <= cut),
-                              ev.filter(F.col("ts") > cut))):
-        pdir = f"{d}/p{i}"
-        part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
-            shutil.copy(f, f"{src}/{i:02d}_{j}.parquet")
-
-    _STREAM_SEQ[0] += 1
-    qname = f"stream_funnel_{_STREAM_SEQ[0]}"
-    q = jobs.run_stateful_funnel(spark, src, f"{d}/ckpt", qname,
-                                 max_files_per_trigger=1)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming drain exceeded 300s — a partial memory "
-            "sink must fail loudly, not hash-mismatch quietly")
-    return (spark.sql(f"SELECT * FROM {qname}")
+    return (_drain_events_stream(spark, sf_dir, jobs.stateful_funnel)
             .groupBy("user_id")
             .agg(F.max("t1_us").alias("t1_us"),
                  F.max("t2_us").alias("t2_us"),
@@ -612,35 +596,8 @@ def stream_transitions(spark, sf_dir):
     batch operator (operators/transitions.py) — which is exactly what
     the SQL oracle computes. A stateful streaming query with a FULL
     value-hash oracle, not a rows-only check."""
-    import glob
-    import shutil
-    import tempfile
-
-    _ship_package(spark)
     from console_log_parser_spark.streaming import jobs
-
-    d = tempfile.mkdtemp(prefix="stream_trans_")
-    src = f"{d}/src"
-    os.makedirs(src)
-    ev = _t(spark, sf_dir, "events").orderBy("ts", "event_id")
-    cut = ev.selectExpr("percentile_approx(ts, 0.5) p").first()["p"]
-    for i, part in enumerate((ev.filter(F.col("ts") <= cut),
-                              ev.filter(F.col("ts") > cut))):
-        pdir = f"{d}/p{i}"
-        part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
-            shutil.copy(f, f"{src}/{i:02d}_{j}.parquet")
-
-    _STREAM_SEQ[0] += 1
-    qname = f"stream_transitions_{_STREAM_SEQ[0]}"
-    q = jobs.run_stateful_transitions(spark, src, f"{d}/ckpt", qname,
-                                      max_files_per_trigger=1)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming drain exceeded 300s — a partial memory "
-            "sink must fail loudly, not hash-mismatch quietly")
-    return (spark.sql(f"SELECT * FROM {qname}")
+    return (_drain_events_stream(spark, sf_dir, jobs.stateful_transitions)
             .groupBy("prev_type", "next_type")
             .agg(F.sum("n").cast("long").alias("n_trans"),
                  F.countDistinct("user_id").cast("long")
@@ -666,44 +623,15 @@ def doc_pack_sequences(spark, sf_dir):
 
 def stream_dedup_exact(spark, sf_dir):
     """Streaming exact dedup under at-least-once redelivery
-    (streaming/jobs.py run_dedup_exact): the two time-ordered halves of
+    (streaming/jobs.py dedup_exact): the two time-ordered halves of
     the events table are each delivered TWICE (four micro-batches,
     simulating a source that re-sends acked batches);
     dropDuplicatesWithinWatermark on event_id must leave exactly the
     original rows, so per-type counts over the sink equal the plain
     batch table — which is what the SQL oracle computes."""
-    import glob
-    import shutil
-    import tempfile
-
-    _ship_package(spark)
     from console_log_parser_spark.streaming import jobs
-
-    d = tempfile.mkdtemp(prefix="stream_dedup_")
-    src = f"{d}/src"
-    os.makedirs(src)
-    ev = _t(spark, sf_dir, "events").orderBy("ts", "event_id")
-    cut = ev.selectExpr("percentile_approx(ts, 0.5) p").first()["p"]
-    first = ev.filter(F.col("ts") <= cut)
-    second = ev.filter(F.col("ts") > cut)
-    for i, part in enumerate((first, second)):
-        pdir = f"{d}/p{i}"
-        part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
-            # the batch, then its redelivery, as separate stream files
-            shutil.copy(f, f"{src}/{2 * i:02d}_{j}.parquet")
-            shutil.copy(f, f"{src}/{2 * i + 1:02d}_{j}_redelivered.parquet")
-
-    _STREAM_SEQ[0] += 1
-    qname = f"stream_dedup_{_STREAM_SEQ[0]}"
-    q = jobs.run_dedup_exact(spark, src, f"{d}/ckpt", qname,
-                             max_files_per_trigger=1)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming drain exceeded 300s — a partial memory "
-            "sink must fail loudly, not hash-mismatch quietly")
-    return (spark.sql(f"SELECT * FROM {qname}")
+    return (_drain_events_stream(spark, sf_dir, jobs.dedup_exact,
+                                 output_mode="append", redeliver=True)
             .groupBy("event_type")
             .agg(F.count("*").alias("n_events"),
                  F.countDistinct("event_id").alias("n_distinct"))
@@ -1956,6 +1884,61 @@ _TRANSITIONS_ORACLE = """
     GROUP BY 1, 2 ORDER BY 1, 2
 """
 
+# per-user session counts with a 30 min gap: the batch lag()
+# sessionizer and its streaming twin compute the same rows
+_SESSIONIZE_ORACLE = """
+    SELECT user_id,
+           CAST(sum(new_session) AS BIGINT) AS n_sessions,
+           count(*) AS n_events
+    FROM (SELECT user_id,
+                 CASE WHEN prev_ts IS NULL
+                        OR epoch_us(ts) - epoch_us(prev_ts)
+                           > 1800000000
+                      THEN 1 ELSE 0 END AS new_session
+          FROM (SELECT user_id, ts,
+                       lag(ts) OVER (PARTITION BY user_id
+                           ORDER BY ts, event_id) AS prev_ts
+                FROM events))
+    GROUP BY user_id
+"""
+
+# users with support > 1/140 (integer cross-multiplication); the
+# streaming MG + exact recount must equal the batch set
+_HEAVY_HITTERS_ORACLE = """
+    WITH c AS (
+        SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
+        FROM events GROUP BY user_id
+    ),
+    n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM events)
+    SELECT user_id, cnt FROM c, n WHERE cnt * 140 > total
+"""
+
+# strict-sequence funnel stage times per user: stage k = min stage-k
+# ts strictly after stage k-1 (events_funnel aggregates them per
+# cohort, stream_funnel returns them per user)
+_FUNNEL_CTES = """
+    WITH ev AS (
+        SELECT user_id, ts, event_type FROM events
+        WHERE event_type IN ('view', 'click', 'purchase')
+    ),
+    w1 AS (
+        SELECT *, min(CASE WHEN event_type = 'view' THEN ts
+                      END) OVER (PARTITION BY user_id) AS t1
+        FROM ev
+    ),
+    w2 AS (
+        SELECT *, min(CASE WHEN event_type = 'click'
+                            AND ts > t1 THEN ts
+                      END) OVER (PARTITION BY user_id) AS t2
+        FROM w1
+    ),
+    w3 AS (
+        SELECT *, min(CASE WHEN event_type = 'purchase'
+                            AND ts > t2 THEN ts
+                      END) OVER (PARTITION BY user_id) AS t3
+        FROM w2
+    )"""
+
 VOCAB_GROWTH_CPS = (4, 8, 16, 32, 64, 96, 128, 256, 1024, 32768)
 
 
@@ -2166,41 +2149,12 @@ def stream_heavy_hitters(spark, sf_dir):
     the job docstring), and a batch broadcast semi-join recount makes
     the answer EXACT, hash-equal to the batch operator's SQL oracle
     (support > 1/140, integer cross-multiplication)."""
-    import glob
-    import shutil
-    import tempfile
-
-    _ship_package(spark)
     from console_log_parser_spark.streaming import jobs
-
-    d = tempfile.mkdtemp(prefix="stream_hh_")
-    src = f"{d}/src"
-    os.makedirs(src)
-    ev = _t(spark, sf_dir, "events").orderBy("ts", "event_id")
-    cut = ev.selectExpr("percentile_approx(ts, 0.5) p").first()["p"]
-    for i, part in enumerate((ev.filter(F.col("ts") <= cut),
-                              ev.filter(F.col("ts") > cut))):
-        pdir = f"{d}/p{i}"
-        part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
-            shutil.copy(f, f"{src}/{i:02d}_{j}.parquet")
-
-    _STREAM_SEQ[0] += 1
-    qname = f"stream_hh_{_STREAM_SEQ[0]}"
-    q = jobs.run_stateful_heavy_hitters(spark, src, f"{d}/ckpt", qname,
-                                        max_files_per_trigger=1)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming drain exceeded 300s — a partial memory "
-            "sink must fail loudly, not hash-mismatch quietly")
-    sink = spark.sql(f"SELECT * FROM {qname}")
+    sink = _drain_events_stream(spark, sf_dir, jobs.stateful_heavy_hitters)
     # finalize (last emission -> keep bound -> exact recount) lives in
     # jobs.heavy_hitters_finalize so the driver query and the batch-
-    # equivalence test pin ONE implementation (r5 review finding)
-    return jobs.heavy_hitters_finalize(sink, _t(spark, sf_dir,
-                                                "events"))
-
+    # equivalence test pin ONE implementation
+    return jobs.heavy_hitters_finalize(sink, _t(spark, sf_dir, "events"))
 
 
 def _bpe_fertility_oracle(n_merges: int) -> str:
@@ -3178,21 +3132,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                   FROM events)
             GROUP BY event_type
         """,
-        "events_sessionize": """
-            SELECT user_id,
-                   CAST(sum(new_session) AS BIGINT) AS n_sessions,
-                   count(*) AS n_events
-            FROM (SELECT user_id,
-                         CASE WHEN prev_ts IS NULL
-                                OR epoch_us(ts) - epoch_us(prev_ts)
-                                   > 1800000000
-                              THEN 1 ELSE 0 END AS new_session
-                  FROM (SELECT user_id, ts,
-                               lag(ts) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_ts
-                        FROM events))
-            GROUP BY user_id
-        """,
+        "events_sessionize": _SESSIONIZE_ORACLE,
         "events_retime_quantize": """
             SELECT CASE WHEN dt < 60000000 THEN 'lt_1m'
                         WHEN dt < 300000000 THEN 'lt_5m'
@@ -3357,21 +3297,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             WHERE cmd_no IN (3, 10, 25)
             GROUP BY cmd_no
         """,
-        "stream_sessionize": """
-            SELECT user_id,
-                   CAST(sum(new_session) AS BIGINT) AS n_sessions,
-                   count(*) AS n_events
-            FROM (SELECT user_id,
-                         CASE WHEN prev_ts IS NULL
-                                OR epoch_us(ts) - epoch_us(prev_ts)
-                                   > 1800000000
-                              THEN 1 ELSE 0 END AS new_session
-                  FROM (SELECT user_id, ts,
-                               lag(ts) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_ts
-                        FROM events))
-            GROUP BY user_id
-        """,
+        "stream_sessionize": _SESSIONIZE_ORACLE,
         "doc_dedup_exact": """
             SELECT source, count(*) AS n_docs,
                    count(DISTINCT md5(text)) AS n_distinct,
@@ -3937,31 +3863,10 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             GROUP BY h.event_type ORDER BY h.event_type
         """,
         # streaming funnel twin: the carried-state stream result must
-        # equal the batch funnel — identical CTE chain to
-        # events_funnel but per user, stage times as epoch
-        # microseconds (tz-free NTZ arithmetic in both engines)
-        "stream_funnel": """
-            WITH ev AS (
-                SELECT user_id, ts, event_type FROM events
-                WHERE event_type IN ('view', 'click', 'purchase')
-            ),
-            w1 AS (
-                SELECT *, min(CASE WHEN event_type = 'view' THEN ts
-                              END) OVER (PARTITION BY user_id) AS t1
-                FROM ev
-            ),
-            w2 AS (
-                SELECT *, min(CASE WHEN event_type = 'click'
-                                    AND ts > t1 THEN ts
-                              END) OVER (PARTITION BY user_id) AS t2
-                FROM w1
-            ),
-            w3 AS (
-                SELECT *, min(CASE WHEN event_type = 'purchase'
-                                    AND ts > t2 THEN ts
-                              END) OVER (PARTITION BY user_id) AS t3
-                FROM w2
-            )
+        # equal the batch funnel — events_funnel's CTE chain per user,
+        # stage times as epoch microseconds (tz-free NTZ arithmetic in
+        # both engines)
+        "stream_funnel": _FUNNEL_CTES + """
             SELECT CAST(user_id AS BIGINT) AS user_id,
                    CAST(max(epoch_us(t1)) AS BIGINT) AS t1_us,
                    CAST(max(epoch_us(t2)) AS BIGINT) AS t2_us,
@@ -4033,32 +3938,10 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             FROM freqs WHERE df_docs > 390
             ORDER BY term
         """,
-        # strict-sequence funnel: stage k = min stage-k ts strictly
-        # after stage k-1; identical window CASE chain in both
-        # engines; hop sums are epoch-microsecond differences
+        # strict-sequence funnel: identical window CASE chain in
+        # both engines; hop sums are epoch-microsecond differences
         # (tz-invariant — never truncate-then-subtract seconds)
-        "events_funnel": """
-            WITH ev AS (
-                SELECT user_id, ts, event_type FROM events
-                WHERE event_type IN ('view', 'click', 'purchase')
-            ),
-            w1 AS (
-                SELECT *, min(CASE WHEN event_type = 'view' THEN ts
-                              END) OVER (PARTITION BY user_id) AS t1
-                FROM ev
-            ),
-            w2 AS (
-                SELECT *, min(CASE WHEN event_type = 'click'
-                                    AND ts > t1 THEN ts
-                              END) OVER (PARTITION BY user_id) AS t2
-                FROM w1
-            ),
-            w3 AS (
-                SELECT *, min(CASE WHEN event_type = 'purchase'
-                                    AND ts > t2 THEN ts
-                              END) OVER (PARTITION BY user_id) AS t3
-                FROM w2
-            ),
+        "events_funnel": _FUNNEL_CTES + """,
             u AS (
                 SELECT user_id, max(t1) AS t1, max(t2) AS t2,
                        max(t3) AS t3
@@ -4335,14 +4218,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
                             FILTER (WHERE rn = 1), '') AS kept_text
             FROM flagged GROUP BY doc_id ORDER BY doc_id
         """,
-        "events_heavy_hitters": """
-            WITH c AS (
-                SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-                FROM events GROUP BY user_id
-            ),
-            n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM events)
-            SELECT user_id, cnt FROM c, n WHERE cnt * 140 > total
-        """,
+        "events_heavy_hitters": _HEAVY_HITTERS_ORACLE,
         "doc_bpe_pairs": """
             WITH words AS (
                 SELECT unnest(string_split(text, ' ')) AS w
@@ -4797,14 +4673,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             FROM wins GROUP BY 1, 2 ORDER BY 1, 2
         """,
         # streaming MG + exact recount == the batch heavy-hitter set
-        "stream_heavy_hitters": """
-            WITH c AS (
-                SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-                FROM events GROUP BY user_id
-            ),
-            n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM events)
-            SELECT user_id, cnt FROM c, n WHERE cnt * 140 > total
-        """,
+        "stream_heavy_hitters": _HEAVY_HITTERS_ORACLE,
         "doc_decontaminate": """
             WITH words AS (
                 SELECT doc_id, string_split(text, ' ') AS w

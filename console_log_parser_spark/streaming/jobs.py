@@ -4,12 +4,12 @@ The reference's streaming-shaped pieces map here:
 
 - the throttled replay sink (terminalreplay.py:19-162, a rate-paced
   emitter) and the asciinema frame stream (asciinema2html.py:281-308)
-  generalize to a *streaming* parse->enrich->route pipeline:
-  ``readStream`` over the tokenized-log table, the SAME mapInArrow
-  parse stage as batch (one code path, two execution modes), a
-  stream-static broadcast enrich join, and a partitioned-by-sink
-  ``writeStream`` with exactly-once checkpointing — the streaming twin
-  of plans/checkpoint.py's batch manifests.
+  generalize to a *streaming* parse->enrich->route pipeline: the batch
+  builder ``plans.pipeline.build_routed`` over a ``readStream`` of the
+  tokenized-log table (one plan, two execution modes; the enrich join
+  becomes stream-static), into a partitioned-by-sink ``writeStream``
+  with exactly-once checkpointing — the streaming twin of
+  plans/checkpoint.py's batch manifests.
 - frame-timestamp analytics (asciinema2html.py:226-243) generalize to
   watermarked event-time windowed aggregation (late data bounded by
   the watermark instead of the reference's in-order assumption).
@@ -23,7 +23,7 @@ drain the source then stop; a live deployment flips the trigger only.
 """
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -37,28 +37,31 @@ EVENTS_SCHEMA_DDL = ("event_id long, ts timestamp, user_id long, "
                      "event_type string, value double, props string")
 
 
-def read_tokenized_stream(spark: SparkSession, in_dir: str,
-                          max_files_per_trigger: int | None = None
-                          ) -> DataFrame:
-    r = spark.readStream.schema(TOKENIZED_SCHEMA_DDL)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(in_dir)
+def read_tokenized_stream(spark: SparkSession, in_dir: str) -> DataFrame:
+    return spark.readStream.schema(TOKENIZED_SCHEMA_DDL).parquet(in_dir)
+
+
+def read_events_stream(spark: SparkSession, in_dir: str) -> DataFrame:
+    """The events file stream, one file per micro-batch: the stateful
+    operators' arrival contract is one time-ordered file per batch, and
+    an append-mode window only emits once a LATER batch moves the
+    watermark past its end."""
+    return (spark.readStream.schema(EVENTS_SCHEMA_DDL)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir))
 
 
 def stream_pipeline(spark: SparkSession, in_dir: str, out_dir: str,
-                    checkpoint_dir: str, routes: DataFrame,
-                    max_files_per_trigger: int | None = None):
-    """Streaming parse -> enrich -> route with exactly-once sink.
+                    checkpoint_dir: str, routes: DataFrame):
+    """Streaming parse -> enrich -> route with exactly-once sink: the
+    batch ``build_routed`` plan over ``readStream``, so the streamed
+    table has exactly the batch routed schema.
 
     Returns the started StreamingQuery (AvailableNow trigger: drains
     everything currently in ``in_dir`` and stops)."""
-    from ..operators.enrich import apply_suppress_filter, enrich_stage
-    from ..operators.parse import parse_stage
+    from ..plans.pipeline import build_routed
 
-    logs = read_tokenized_stream(spark, in_dir, max_files_per_trigger)
-    parsed = parse_stage(logs)           # same stage object as batch
-    routed = apply_suppress_filter(enrich_stage(parsed, routes))
+    routed = build_routed(read_tokenized_stream(spark, in_dir), routes)
     # (no salted repartition here: streaming micro-batches are already
     # bounded; the partitionBy(sink) write gives the fan-out)
     return (routed.writeStream
@@ -70,13 +73,28 @@ def stream_pipeline(spark: SparkSession, in_dir: str, out_dir: str,
             .start())
 
 
-def windowed_severity_counts(events: DataFrame,
-                             window_len: str = "1 hour",
-                             watermark: str = "2 hours") -> DataFrame:
-    """Event-time windowed histogram with a late-data watermark —
-    the streaming analog of the per-sink severity histogram."""
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window_len).alias("win"),
+def run_to_memory(spark: SparkSession, in_dir: str, checkpoint_dir: str,
+                  query_name: str,
+                  op: Callable[[DataFrame], DataFrame],
+                  output_mode: str = "update"):
+    """Drive ``op`` (a ``stateful_*`` operator or ``dedup_exact``) over
+    the events file stream into the memory sink ``query_name``; returns
+    the started query."""
+    return (op(read_events_stream(spark, in_dir)).writeStream
+            .format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
+
+
+def windowed_severity_counts(events: DataFrame) -> DataFrame:
+    """Event-time windowed histogram (1 h windows, 2 h late-data
+    watermark) — the streaming analog of the per-sink severity
+    histogram."""
+    return (events.withWatermark("ts", "2 hours")
+            .groupBy(F.window("ts", "1 hour").alias("win"),
                      F.col("event_type"))
             .agg(F.count("*").alias("n"),
                  F.round(F.sum("value"), 2).alias("sum_value"))
@@ -137,23 +155,6 @@ def stateful_sessionize(events: DataFrame) -> DataFrame:
                 stateStructType=SESSION_STATE_DDL,
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def run_stateful_sessionize(spark: SparkSession, in_dir: str,
-                            checkpoint_dir: str, query_name: str,
-                            max_files_per_trigger: int = 1):
-    """Drive the stateful sessionizer over a file stream into a memory
-    sink (update mode); returns the started query."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA_DDL)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_dir))
-    out = stateful_sessionize(events)
-    return (out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
 
 
 FUNNEL_STATE_DDL = "t1_us long, t2_us long, t3_us long"
@@ -220,62 +221,28 @@ def stateful_funnel(events: DataFrame) -> DataFrame:
                 timeoutConf=GroupStateTimeout.NoTimeout))
 
 
-def run_stateful_funnel(spark: SparkSession, in_dir: str,
-                        checkpoint_dir: str, query_name: str,
-                        max_files_per_trigger: int = 1):
-    """Drive the stateful funnel over a file stream into a memory sink
-    (update mode); returns the started query."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA_DDL)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_dir))
-    out = stateful_funnel(events)
-    return (out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def run_dedup_exact(spark: SparkSession, in_dir: str,
-                    checkpoint_dir: str, query_name: str,
-                    watermark: str = "2 days",
-                    key_cols: tuple = ("event_id",),
-                    max_files_per_trigger: int = 1):
+def dedup_exact(events: DataFrame) -> DataFrame:
     """Streaming exact dedup for at-least-once sources
-    (``dropDuplicatesWithinWatermark``): a redelivered event — same key
-    arriving again in a later micro-batch — is dropped as long as it
-    arrives within the watermark delay of the first copy, so the sink
-    sees each key once. The watermark is the STATE BOUND: keys older
-    than it are evicted, which is what makes the operator runnable
-    forever at 10^12-event scale (state is O(keys per watermark
-    window), not O(stream)); the delay is chosen from the source's
-    redelivery horizon, not from data volume. Emits surviving rows in
-    append mode to a memory sink."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA_DDL)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_dir))
-    deduped = (events.withWatermark("ts", watermark)
-               .dropDuplicatesWithinWatermark(list(key_cols)))
-    return (deduped.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    (``dropDuplicatesWithinWatermark`` on ``event_id``): a redelivered
+    event — same key arriving again in a later micro-batch — is dropped
+    as long as it arrives within the watermark delay of the first copy,
+    so the sink sees each key once. The watermark is the STATE BOUND:
+    keys older than it are evicted, which is what makes the operator
+    runnable forever at 10^12-event scale (state is O(keys per
+    watermark window), not O(stream)); the 2-day delay is chosen from
+    the source's redelivery horizon, not from data volume. Run it in
+    append mode."""
+    return (events.withWatermark("ts", "2 days")
+            .dropDuplicatesWithinWatermark(["event_id"]))
 
 
 def run_windowed_severity(spark: SparkSession, in_dir: str, out_dir: str,
-                          checkpoint_dir: str,
-                          max_files_per_trigger: int = 1):
+                          checkpoint_dir: str):
     """Append-mode emission requires the watermark to pass a window's
     end, which only happens on a *later* micro-batch — so the source is
     read file-by-file; with a finite backfill the trailing windows
     (inside the watermark of max event time) stay unemitted by design."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA_DDL)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_dir))
-    agg = windowed_severity_counts(events)
+    agg = windowed_severity_counts(read_events_stream(spark, in_dir))
     return (agg.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", checkpoint_dir)
@@ -349,22 +316,6 @@ def stateful_transitions(events: DataFrame) -> DataFrame:
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout))
 
-
-def run_stateful_transitions(spark: SparkSession, in_dir: str,
-                             checkpoint_dir: str, query_name: str,
-                             max_files_per_trigger: int = 1):
-    """Drive the stateful transition counter over a file stream into a
-    memory sink (update mode); returns the started query."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA_DDL)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_dir))
-    out = stateful_transitions(events)
-    return (out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
 
 # ------------------------------------------------------------------
 # Streaming heavy hitters: sharded Misra-Gries state + exact recount
@@ -459,23 +410,3 @@ def heavy_hitters_finalize(sink: DataFrame,
             .filter(F.col("cnt") * HH_K > F.col("total"))
             .select("user_id", "cnt")
             .orderBy("user_id"))
-
-
-def run_stateful_heavy_hitters(spark: SparkSession, in_dir: str,
-                               checkpoint_dir: str, query_name: str,
-                               max_files_per_trigger: int = 1):
-    """Drive the sharded MG summaries over a file stream into a memory
-    sink (update mode); returns the started query. The exact-recount
-    phase runs as a BATCH join once the stream drains (the candidates
-    are a bounded frame; recounting is the same second phase the batch
-    operator uses)."""
-    events = (spark.readStream.schema(EVENTS_SCHEMA_DDL)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_dir))
-    out = stateful_heavy_hitters(events)
-    return (out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())

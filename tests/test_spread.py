@@ -54,17 +54,6 @@ def test_midsize_single_file_spreads_and_preserves_rows(
     assert base == spread
 
 
-def test_kill_switch(spark, monkeypatch, tmp_path_factory):
-    p = str(tmp_path_factory.mktemp("ks") / "t.parquet")
-    from pyspark.sql import functions as F
-    (spark.range(60000)
-     .withColumn("payload", F.md5(F.col("id").cast("string")))
-     .coalesce(1).write.parquet(p))
-    monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
-    out = em._spread(spark.read.parquet(p))
-    assert "RoundRobinPartitioning" not in _plan(out)
-
-
 def test_suffixed_max_partition_bytes_still_spreads(spark, tmp_path_factory):
     # Spark accepts byte strings like "128m" for maxPartitionBytes; the
     # gate must read them as bytes, not give up on the spread

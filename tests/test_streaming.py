@@ -19,18 +19,18 @@ def _wait(q, timeout=120):
 
 @pytest.fixture(scope="module")
 def events_split_dir(spark, tmp_path_factory):
-    """events from the driver table, re-written as 4 time-ordered files
-    so file-per-trigger streaming yields 4 ordered micro-batches. The
-    directory is named events.parquet, so its parent reads as an sf
-    directory for the batch queries in __spark_entry__."""
+    """events from the driver table, re-written as 4 files ordered by
+    (ts, event_id) so file-per-trigger streaming yields 4 ordered
+    micro-batches. The directory is named events.parquet, so its parent
+    reads as an sf directory for the batch queries in __spark_entry__."""
     sf_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(sf_dir):
         pytest.skip("driver testdata not present")
     d = tmp_path_factory.mktemp("events_stream")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").orderBy("ts")
-    n = ev.count()
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
+        .orderBy("ts", "event_id")
     rows = ev.collect()
-    q = (n + 3) // 4
+    q = (len(rows) + 3) // 4
     for i in range(4):
         chunk = rows[i * q:(i + 1) * q]
         if chunk:
@@ -50,9 +50,7 @@ def events_split_dir(spark, tmp_path_factory):
 
 def test_stream_pipeline_matches_batch(spark, small_dataset,
                                        tmp_path_factory):
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import parse_stage
+    from console_log_parser_spark.plans.pipeline import build_routed
     from console_log_parser_spark.streaming import jobs
 
     out = str(tmp_path_factory.mktemp("stream_out"))
@@ -72,7 +70,9 @@ def test_stream_pipeline_matches_batch(spark, small_dataset,
 
     got = spark.read.parquet(f"{out}/routed")
     logs = spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
-    want = apply_suppress_filter(enrich_stage(parse_stage(logs), routes))
+    want = build_routed(logs, routes)
+    # the streaming twin writes exactly the batch routed schema
+    assert set(got.columns) == set(want.columns)
 
     cols = ["doc_id", "sink", "severity", "n_stripped", "n_events",
             "prompt_count", "n_cmd_routed"]
@@ -113,9 +113,8 @@ def test_stateful_sessionize_matches_batch_lag(spark, events_split_dir,
                                                tmp_path_factory):
     from console_log_parser_spark.streaming import jobs
     ckpt = str(tmp_path_factory.mktemp("sess_ckpt"))
-    q = jobs.run_stateful_sessionize(
-        spark, events_split_dir, ckpt, query_name="sess_test",
-        max_files_per_trigger=1)
+    q = jobs.run_to_memory(spark, events_split_dir, ckpt, "sess_test",
+                           jobs.stateful_sessionize)
     _wait(q)
     updates = spark.sql("SELECT * FROM sess_test")
     # memory sink in update mode accumulates one row per (user, batch);
@@ -148,8 +147,9 @@ def test_stream_dedup_exact_survives_redelivery(spark, events_split_dir,
         base = os.path.basename(f)
         shutil.copy(f, os.path.join(src, base))
         shutil.copy(f, os.path.join(src, base + ".redelivered.parquet"))
-    q = jobs.run_dedup_exact(spark, src, str(tmp_path / "ckpt"),
-                             "t_stream_dedup", max_files_per_trigger=1)
+    q = jobs.run_to_memory(spark, src, str(tmp_path / "ckpt"),
+                           "t_stream_dedup", jobs.dedup_exact,
+                           output_mode="append")
     q.awaitTermination(300)
     got = {r["event_type"]: (r["n"], r["nd"]) for r in
            spark.sql("SELECT * FROM t_stream_dedup")
@@ -173,9 +173,8 @@ def test_stateful_funnel_matches_batch(spark, events_split_dir,
     from console_log_parser_spark.operators.funnel import funnel_times
     from console_log_parser_spark.streaming import jobs
     ckpt = str(tmp_path_factory.mktemp("funnel_ckpt"))
-    q = jobs.run_stateful_funnel(
-        spark, events_split_dir, ckpt, query_name="funnel_test",
-        max_files_per_trigger=1)
+    q = jobs.run_to_memory(spark, events_split_dir, ckpt, "funnel_test",
+                           jobs.stateful_funnel)
     _wait(q)
     # stage times are set-once -> max over update rows == final state
     final = {r["user_id"]: (r["t1_us"], r["t2_us"], r["t3_us"])
@@ -199,40 +198,19 @@ def test_stateful_funnel_matches_batch(spark, events_split_dir,
     assert any(t[2] is not None for t in final.values())
 
 
-def test_stateful_transitions_match_batch(spark, tmp_path_factory):
+def test_stateful_transitions_match_batch(spark, events_split_dir,
+                                          tmp_path_factory):
     """The carried-last-event streaming transition counter over 4
     time-ordered micro-batches must equal the batch operator —
     including the transitions that only exist across batch
     boundaries."""
-    import glob
-    import shutil
-
     from console_log_parser_spark.operators.transitions import (
         transition_counts)
     from console_log_parser_spark.streaming import jobs
 
-    sf_dir = "/root/testdata/sf0.001"
-    d = tmp_path_factory.mktemp("trans_stream")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .orderBy("ts", "event_id")
-    rows = ev.collect()
-    q4 = (len(rows) + 3) // 4
-    src = str(d / "flat")
-    os.makedirs(src)
-    for i in range(4):
-        chunk = rows[i * q4:(i + 1) * q4]
-        if not chunk:
-            continue
-        pdir = str(d / f"part_{i}")
-        (spark.createDataFrame(chunk, ev.schema).coalesce(1)
-         .write.mode("overwrite").parquet(pdir))
-        for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
-            shutil.copy(f, os.path.join(src, f"{i:02d}_{j}.parquet"))
-
     ckpt = str(tmp_path_factory.mktemp("trans_ckpt"))
-    sq = jobs.run_stateful_transitions(
-        spark, src, ckpt, query_name="trans_test",
-        max_files_per_trigger=1)
+    sq = jobs.run_to_memory(spark, events_split_dir, ckpt, "trans_test",
+                            jobs.stateful_transitions)
     _wait(sq)
     got = {(r["prev_type"], r["next_type"]): (r["n_trans"], r["n_users"])
            for r in (spark.sql("SELECT * FROM trans_test")
@@ -240,16 +218,16 @@ def test_stateful_transitions_match_batch(spark, tmp_path_factory):
                      .agg(F.sum("n").alias("n_trans"),
                           F.countDistinct("user_id").alias("n_users"))
                      .collect())}
+    ev = spark.read.parquet(events_split_dir)
     want = {(r["prev_type"], r["next_type"]): (r["n_trans"], r["n_users"])
-            for r in transition_counts(
-                spark.read.parquet(f"{sf_dir}/events.parquet"))
-            .collect()}
+            for r in transition_counts(ev).collect()}
     assert got == want
     # exact stream-total identity: every user contributes
     # (n_events - 1) transitions, so the matrix total is N - U —
     # which only holds if every cross-batch boundary was counted
-    n_users = len({r["user_id"] for r in rows})
-    assert sum(v[0] for v in got.values()) == len(rows) - n_users
+    n_users = ev.select("user_id").distinct().count()
+    assert sum(v[0] for v in got.values()) == ev.count() - n_users
+
 
 def test_stateful_heavy_hitters_match_batch(spark, events_split_dir,
                                             tmp_path_factory):
@@ -260,9 +238,8 @@ def test_stateful_heavy_hitters_match_batch(spark, events_split_dir,
     from console_log_parser_spark.streaming import jobs
 
     ckpt = str(tmp_path_factory.mktemp("hh_ckpt"))
-    sq = jobs.run_stateful_heavy_hitters(
-        spark, events_split_dir, ckpt, query_name="hh_test",
-        max_files_per_trigger=1)
+    sq = jobs.run_to_memory(spark, events_split_dir, ckpt, "hh_test",
+                            jobs.stateful_heavy_hitters)
     _wait(sq, 300)
     sink = spark.sql("SELECT * FROM hh_test")
     # bounded state: no emission carries more than width counters
