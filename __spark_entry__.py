@@ -4,10 +4,12 @@
                     pipeline over transcripts derived from sf0.001.
 ``queries()``     — one entry per implemented operator (SURVEY.md §2 +
                     the training-data-pipeline extensions).
-``oracle_sql()``  — DuckDB-equivalent SQL per query (omitted only for
-                    ops whose core is the vectorized transcript parser,
-                    which SQL cannot express; those are pinned by
-                    pytest against the pure-Python oracle instead).
+``oracle_sql()``  — DuckDB-equivalent SQL for every query; queries
+                    over the transcript parser, which SQL cannot
+                    express, get literal-VALUES oracles computed by
+                    the pure-Python parse/render oracles.
+                    ``tests/test_oracle_gate.py`` checks each query
+                    against its oracle at sf0.01.
 
 Numeric discipline for oracle comparability: aggregates over doubles
 are rounded (sums to 2dp, scores to 3-4dp); thresholds/predicates use
@@ -520,8 +522,9 @@ def _drain_events_stream(spark: SparkSession, sf_dir: str,
     run_to_memory) as two time-ordered micro-batches, cut at the median
     ``ts``, and return the memory sink's rows. With ``redeliver`` each
     batch file is delivered twice, as an at-least-once source would.
-    The staged files and the checkpoint are removed after the drain;
-    the memory sink already holds the rows."""
+    The sink's rows are already driver-resident, so they are returned
+    as a local frame; the staged files, the checkpoint and the sink's
+    temp view are removed after the drain."""
     import glob
     import shutil
     import tempfile
@@ -530,6 +533,8 @@ def _drain_events_stream(spark: SparkSession, sf_dir: str,
     from console_log_parser_spark.streaming import jobs
 
     d = tempfile.mkdtemp(prefix=f"stream_{op.__name__}_")
+    # mkdtemp's name is unique and a valid identifier
+    qname = os.path.basename(d)
     try:
         src = f"{d}/src"
         os.makedirs(src)
@@ -543,8 +548,6 @@ def _drain_events_stream(spark: SparkSession, sf_dir: str,
             for j, f in enumerate(sorted(glob.glob(f"{pdir}/*.parquet"))):
                 for k in range(copies):
                     shutil.copy(f, f"{src}/{copies * i + k:02d}_{j}.parquet")
-        # mkdtemp's name is unique and a valid identifier
-        qname = os.path.basename(d)
         q = jobs.run_to_memory(spark, src, f"{d}/ckpt", qname, op,
                                output_mode)
         if not q.awaitTermination(300):
@@ -552,8 +555,10 @@ def _drain_events_stream(spark: SparkSession, sf_dir: str,
             raise TimeoutError(
                 "streaming drain exceeded 300s — a partial memory "
                 "sink must fail loudly, not hash-mismatch quietly")
-        return spark.sql(f"SELECT * FROM {qname}")
+        sink = spark.table(qname)
+        return spark.createDataFrame(sink.collect(), sink.schema)
     finally:
+        spark.catalog.dropTempView(qname)
         shutil.rmtree(d, ignore_errors=True)
 
 
@@ -994,9 +999,9 @@ def media_thumbnails(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# pipeline operators over synthesized transcripts (rows-only checks:
-# the vectorized ANSI parser is not SQL-expressible; pinned by pytest
-# against the pure-Python oracle instead)
+# pipeline operators over synthesized transcripts (the vectorized ANSI
+# parser is not SQL-expressible: their oracles are literal VALUES from
+# oracle_pipeline / oracle_html)
 # --------------------------------------------------------------------------
 
 def _routed(spark, sf_dir):
@@ -2219,9 +2224,8 @@ _CLUSTER_PROFILE_FINAL = """
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Dict ORDER is part of the driver contract and is fixed (see the
-    # module docstring). The groups below are kept in that order.
+    # module docstring).
     return {
-        # --- 1-16: the 16 round-5 operators ---
         "doc_bloom_decontaminate": doc_bloom_decontaminate,
         "doc_dsir_scores": doc_dsir_scores,
         "doc_semdedup": doc_semdedup,
@@ -2238,10 +2242,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dedup_survivorship": doc_dedup_survivorship,
         "doc_char_diversity": doc_char_diversity,
         "doc_ngram_novelty": doc_ngram_novelty,
-        # --- 17-42: queries whose physical plan changed in round 6
-        # (parse scanner + Arrow-boundary schema, routing exchange
-        # moved to the writer, _spread/ids-spread redistribution);
-        # results are oracle-identical ---
         "pipeline_severity_hist": pipeline_severity_hist,
         "pipeline_sink_summary": pipeline_sink_summary,
         "pipeline_top_commands": pipeline_top_commands,
@@ -2268,7 +2268,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_simhash_pairs": doc_simhash_pairs,
         "doc_ngram_jaccard": doc_ngram_jaccard,
         "doc_dedup_clusters": doc_dedup_clusters,
-        # --- 43-50: round-4 operators ---
         "doc_winnow_sketch": doc_winnow_sketch,
         "embedding_kmeans": embedding_kmeans,
         "doc_winnow_pairs": doc_winnow_pairs,
@@ -2277,7 +2276,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_transitions": stream_transitions,
         "doc_word_freq_spectrum": doc_word_freq_spectrum,
         "events_user_trigrams": events_user_trigrams,
-        # --- 51-110: the remaining operators ---
         "doc_cluster_profile": doc_cluster_profile,
         "q14_promo_effect": q14_promo_effect,
         "doc_incremental_dedup": doc_incremental_dedup,
@@ -2705,11 +2703,9 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
     """DuckDB oracle per query. ``sf_dir`` selects the dataset the
     literal-VALUES oracles (pipeline_*/html_*) are generated for; the
     driver's contract pins correctness runs at sf0.01, so that is the
-    default, overridable positionally or via SPARK_GRAFT_ORACLE_SF_DIR
-    for local runs at other scales (ADVICE r1: never compare a query
-    at SF x against an oracle generated for SF y)."""
-    sf = sf_dir or os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
-                                  "/root/testdata/sf0.01")
+    default; a query at SF x must be compared against the oracles
+    generated for SF x."""
+    sf = sf_dir or "/root/testdata/sf0.01"
     from console_log_parser_spark import oracle_html, oracle_pipeline
     from console_log_parser_spark.operators import multimodal, similarity
     return {

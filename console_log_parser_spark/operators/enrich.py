@@ -9,15 +9,11 @@ at scale one unknown source must not kill the job).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEAD_LETTER_ROUTE = "route_dead_letter"
 DEAD_LETTER_SINK = "sink_dead_letter"
-
-
-def load_route_metadata(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def enrich_stage(parsed: DataFrame, routes: DataFrame) -> DataFrame:

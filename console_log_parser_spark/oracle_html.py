@@ -49,12 +49,6 @@ class _RenderStream(OracleParser):
             self.items.append(("m", ev.par))
 
 
-def _kind_of(params0: int) -> str:
-    if 30 <= params0 <= 37 or 90 <= params0 <= 97:
-        return "fg"
-    return "bg"
-
-
 def render_page_oracle(text: str, title: str,
                        palette: str = "dark") -> tuple[int, int, int]:
     """-> (n_spans, n_warnings, html_len) for one transcript page."""
