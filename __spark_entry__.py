@@ -1014,7 +1014,8 @@ def _routed(spark, sf_dir):
 def html_render_stats(spark, sf_dir):
     """S6/S7 HTML sink over synthesized transcripts: render pages
     (SGR->span fold inside one Arrow stage), aggregate per sink.
-    Rows-only: the span semantics are pinned by tests/test_html_sink.py
+    Checked by value against ``oracle_html``, a second implementation
+    of the span semantics; tests/test_html_sink.py pins those semantics
     against the reference's convert_csi behavior."""
     from console_log_parser_spark import datagen
     from console_log_parser_spark.sinks import html as html_sink

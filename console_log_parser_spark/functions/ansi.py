@@ -141,7 +141,14 @@ _INTERM_RE = re.compile(r"[ -/]")
 # every position; it matches exactly what ``\b(DEBUG|...|ERROR)\b`` does.
 SEVERITY_RE = re.compile(
     r"(D(?<!\wD)EBUG|I(?<!\wI)NFO|W(?<!\wW)ARN|E(?<!\wE)RROR)\b")
-TS_RE = re.compile(r"\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(?:\.\d+)?")
+# ISO timestamps, ``\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(?:\.\d+)?``.
+# Led by digits, that pattern is tried at every digit of the text;
+# every match has a '-' at its fifth character, so this twin starts on
+# that literal and checks the year behind it (``-(?<=\d{4}-)`` is
+# ``\d{4}-``). sre then skips from '-' to '-'. ``find_timestamps`` turns
+# its matches back into the full pattern's ``findall`` list.
+_TS_DASH_RE = re.compile(
+    r"-(?<=\d{4}-)\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(?:\.\d+)?")
 # error accounting (SURVEY.md §4: one bad row must not kill a 10^12-row
 # job — malformed input becomes a COLUMN, not an exception): a lone ESC
 # surviving the strip = an escape the grammar could not parse; U+FFFD =
@@ -567,6 +574,28 @@ def build_line(raw_line: str) -> str:
     return build_line_counted(raw_line)[0]
 
 
+def find_timestamps(text: str) -> list[str]:
+    """``re.findall`` of the ISO timestamp pattern, by the '-'-led scan.
+
+    A dash-led match at ``d`` is the full pattern's match at ``d - 4``
+    with the same end. No '-' inside a match can lead another one (its
+    second '-' has the first one 3 characters back, where a year digit
+    would have to be), so the scan meets every place a match can start.
+    What it can meet that ``findall`` would not is a match starting
+    inside the previous one's year-to-end span (``...:0020-01-01 ...``,
+    ``.12345-01-01 ...``); ``findall`` resumes after the previous
+    match, so those are dropped here too.
+    """
+    out = []
+    end = 0
+    for m in _TS_DASH_RE.finditer(text):
+        start = m.start() - 4
+        if start >= end:
+            end = m.end()
+            out.append(text[start:end])
+    return out
+
+
 def parse_doc(text: str) -> dict:
     """Full parse of one decoded transcript -> column dict.
 
@@ -582,7 +611,7 @@ def parse_doc(text: str) -> dict:
         if sev_counts.get(s):
             severity = s
             break
-    tss = TS_RE.findall(stripped)
+    tss = find_timestamps(stripped)
 
     # vim spans (line-indexed): lines between a start marker and the next
     # end marker (inclusive) are vim content -> excluded from cmd replay.

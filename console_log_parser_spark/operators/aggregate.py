@@ -7,9 +7,22 @@ All aggregations are built-in hash aggregates with map-side partial
 combine; nothing here touches Python at runtime. No table is globally
 sorted: a global ``orderBy`` costs a range-sampling job per table, and
 every reader keys or sorts the rows itself.
+
+``write_aggregates`` submits its five table writes at the same time,
+one thread each. Each write is mostly fixed latency, not work: on a
+4-core host a table over a 1.4 MB routed table took 0.4-0.65 s and a
+1-row parquet write 0.2-0.3 s, partly because without a native Hadoop
+library every directory and file a write creates forks a ``chmod``
+(SCALE.md §6.1). The writes are independent, so their latencies
+overlap; the plans, the files and the number of Spark jobs are those
+of five writes one after another.
 """
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -78,13 +91,33 @@ def top_commands(routed: DataFrame, k: int = 20) -> DataFrame:
 
 def write_aggregates(routed: DataFrame, out_dir: str,
                      mode: str = "overwrite") -> dict[str, DataFrame]:
-    aggs = {
-        "sink_summary": sink_summary(routed),
-        "severity_histogram": severity_histogram(routed),
-        "seq_histogram": seq_histogram(routed),
-        "source_rollup": source_rollup(routed),
-        "top_commands": top_commands(routed),
+    """Write the five tables over ``routed`` to ``out_dir/agg_<name>``,
+    concurrently, and return their frames by name.
+
+    Each thread builds its table's frame as well as writing it: Spark
+    analyzes a frame as it is built, which took 0.3-0.6 s of driver
+    time for the five, and that overlaps too. Each thread target is
+    wrapped here, in the caller's thread, because the wrapper captures
+    the local properties it runs the target under when it is created:
+    the jobs run under the caller's job group. Every write is awaited;
+    the first failing one (in table order) is raised once all five
+    have ended."""
+    tables = {
+        "sink_summary": sink_summary,
+        "severity_histogram": severity_histogram,
+        "seq_histogram": seq_histogram,
+        "source_rollup": source_rollup,
+        "top_commands": top_commands,
     }
-    for name, df in aggs.items():
+
+    def write(name: str,
+              table: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        df = table(routed)
         df.write.mode(mode).parquet(f"{out_dir}/agg_{name}")
-    return aggs
+        return df
+
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = {name: pool.submit(
+            inheritable_thread_target(routed.sparkSession)(write),
+            name, table) for name, table in tables.items()}
+        return {name: f.result() for name, f in futures.items()}

@@ -1,6 +1,7 @@
 """Engine (vectorized regex, functions/ansi.py) vs oracle (char-at-a-time
 FSM, oracle.py) vs generator intent (datagen.py) — the per-doc
 correctness core."""
+import random
 import re
 
 import pytest
@@ -273,3 +274,67 @@ _WORD_BOUNDED_SEVERITY = re.compile(r"\b(DEBUG|INFO|WARN|ERROR)\b")
 def test_severity_re_equals_word_bounded_pattern(text):
     assert (ansi.SEVERITY_RE.findall(text)
             == _WORD_BOUNDED_SEVERITY.findall(text))
+
+
+# the timestamp pattern find_timestamps must reproduce, as findall
+_ISO_TS = re.compile(r"\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(?:\.\d+)?")
+
+
+@pytest.mark.parametrize("text", [
+    "",
+    "2024-01-01 10:00:00",
+    "2024-01-01T10:00:00.123456",
+    "at the end 2024-01-01 10:00:00.5",
+    "2024-01-01t10:00:00 2024-01-01_10:00:00 2024-01-0110:00:00",
+    "2024-01-01 10:00:00. 2024-01-01 10:00:00.5.6 2024-01-01 10:00:00.",
+    "2024-01-01 10:00:002024-01-02T11:00:00",
+    "2024-01-01 10:00:00 2024-01-02T11:00:00",
+    "2024-01-01 10:00:0020-01-01 10:00:00",
+    "2024-01-01 10:00:00.12345-01-01 10:00:00",
+    "2024-01-01 10:00:00.1234-01-01 10:00:00",
+    "12024-01-01 10:00:00 -01-01 10:00:00 024-01-01 10:00:00",
+    "2024-01-01-01 10:00:00 2024--01-01 10:00:00",
+    "２０２４-０１-０１T１０:００:００",
+    "٢٠٢٤-01-01 10:00:00.١٢",
+    "²024-01-01 10:00:00 2³24-01-01 10:00:00",
+    "9999-99-99 99:99:99\n0000-00-00T00:00:00",
+])
+def test_find_timestamps_equals_findall(text):
+    assert ansi.find_timestamps(text) == _ISO_TS.findall(text)
+
+
+def _timestamp_soup(rng):
+    """Timestamps (ASCII and Arabic-Indic digits, with and without a
+    fraction), mutated ones, slices of them and filler, run together:
+    about half the texts match, and 1 in 20 holds a match that starts
+    inside another."""
+    def digits(n):
+        return "".join(rng.choice("0123456789\u0663") for _ in range(n))
+
+    def piece():
+        ts = (f"{digits(4)}-{digits(2)}-{digits(2)}{rng.choice('T ')}"
+              f"{digits(2)}:{digits(2)}:{digits(2)}")
+        if rng.random() < 0.4:
+            ts += "." + digits(rng.randrange(4))
+        kind = rng.randrange(4)
+        if kind == 1:
+            i = rng.randrange(len(ts))
+            ts = ts[:i] + rng.choice("0-: T.x") + ts[i + 1:]
+        elif kind == 2:
+            i, j = sorted(rng.randrange(len(ts) + 1) for _ in range(2))
+            ts = ts[i:j]
+        elif kind == 3:
+            ts = rng.choice(["", " ", "x", "-", "0", "12"])
+        return ts
+
+    return "".join(piece() for _ in range(rng.randrange(5)))
+
+
+def test_find_timestamps_equals_findall_on_random_and_synthetic():
+    rng = random.Random(7)
+    for _ in range(20000):
+        text = _timestamp_soup(rng)
+        assert ansi.find_timestamps(text) == _ISO_TS.findall(text), text
+    for i in range(200):
+        stripped = ansi.classify_and_strip(datagen.gen_doc(i)[0])[0]
+        assert ansi.find_timestamps(stripped) == _ISO_TS.findall(stripped)

@@ -204,3 +204,47 @@ def test_arrow_batches_capped_at_256_records(spark):
                                                              "n long")
     got = [r["n"] for r in df.collect()]
     assert sum(got) == 1000 and max(got) <= 256
+
+
+# One full run_with_checkpoints call over the 300-doc fixture, measured
+# before its aggregate tables were written concurrently: the Spark jobs
+# it ran (routed write, read-back, five aggregate tables) and each
+# batch's manifest (rows, tokens).
+FULL_CALL_JOBS = 17
+FIXTURE_BATCHES_4 = {0: (90, 140251), 1: (76, 121115), 2: (73, 117953),
+                     3: (61, 87740)}
+# ... and over its first 3 docs in 8 batches, five of which get no row
+FIRST_3_BATCHES_8 = {0: (0, 0), 1: (1, 2669), 2: (0, 0), 3: (0, 0),
+                     4: (1, 2520), 5: (0, 0), 6: (1, 3196), 7: (0, 0)}
+
+
+def _manifest_counts(out):
+    return {b: (m["rows"], m["tokens"])
+            for b, m in read_manifests(out).items()}
+
+
+def test_full_call_job_count_and_manifests(spark, small_dataset, tmp_path):
+    """A full call runs no more Spark jobs than it did with serial
+    aggregate writes, and commits the same per-batch counts."""
+    out = str(tmp_path / "ckpt")
+    jobs = _jobs_of_call(spark, PipelineConfig(in_dir=small_dataset,
+                                               out_dir=out),
+                         "ckpt_full_call", n_batches=4)
+    assert 0 < jobs <= FULL_CALL_JOBS
+    assert _manifest_counts(out) == FIXTURE_BATCHES_4
+
+
+def test_empty_batches_commit_zero_counts(spark, small_dataset, tmp_path):
+    """A batch that receives no row commits rows 0 and tokens 0, not
+    null: the observed sums are coalesced."""
+    tokens = str(tmp_path / "first3.parquet")
+    (spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
+     .filter(F.col("doc_id") < "doc_00000003").write.parquet(tokens))
+    out = str(tmp_path / "ckpt")
+    r = run_with_checkpoints(
+        spark, PipelineConfig(in_dir=small_dataset, out_dir=out,
+                              tokens_table=tokens), n_batches=8)
+    assert r["complete"] and (r["rows"], r["tokens"]) == (3, 8385)
+    got = _manifest_counts(out)
+    assert got == FIRST_3_BATCHES_8
+    assert all(type(v) is int for counts in got.values() for v in counts)
