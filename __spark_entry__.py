@@ -31,8 +31,14 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from console_log_parser_spark.session import (  # noqa: E402
+    max_partition_bytes, ship_package)
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read a driver table, with the package shipped to the workers
+    (every query reads its tables here)."""
+    ship_package(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -56,9 +62,7 @@ def _spread(df: DataFrame) -> DataFrame:
     """
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    # Spark's own parse of the session value, so "128m" reads as bytes
-    bound = spark._jsparkSession.sessionState().conf() \
-        .filesMaxPartitionBytes()
+    bound = max_partition_bytes(spark)
     # Lower bound: the round-robin exchange costs a fixed ~0.1-0.15s
     # round trip; below a few MB of compressed input the serialized
     # compute is cheaper than that (A/B at sf0.1: doc_token_count
@@ -81,21 +85,9 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _ship_package(spark: SparkSession) -> None:
-    """Make the package importable on python workers regardless of cwd
-    (the spark-submit --py-files equivalent for a driver-created
-    session)."""
-    from console_log_parser_spark.session import package_zip
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added in this context
-
-
 def _synth_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tokenized_logs rows synthesized from the ``documents`` ids
-    (datagen.gen_doc, seed 42), with the package shipped to workers."""
-    _ship_package(spark)
+    (datagen.gen_doc, seed 42)."""
     from console_log_parser_spark.operators.parse import synth_tokens_stage
     ids = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id_num"))
@@ -294,7 +286,6 @@ def events_asof_interleave(spark, sf_dir):
     and count the hops (side switches) — union + range-partitioned lag
     (operators/windows.py) instead of a dual-cursor merge; no
     single-partition global sort."""
-    _ship_package(spark)
     from console_log_parser_spark.operators.windows import (
         range_partitioned_lag)
     ev = _t(spark, sf_dir, "events")
@@ -418,7 +409,6 @@ def cast_poster_base64(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def _cast_lines(spark, sf_dir):
-    _ship_package(spark)
     from console_log_parser_spark.sources import asciinema
     # ids are 8 bytes/row off a one-row-group scan; spread them so the
     # per-frame explode + format_string synthesis runs on every core
@@ -495,7 +485,6 @@ def events_hop_renumber(spark, sf_dir):
     commands at or before it. Commands = per-user time-ordered events;
     suppressed = 'error' events; hop targets = command numbers
     {3, 10, 25} of every user (broadcast dimension)."""
-    _ship_package(spark)
     from console_log_parser_spark.operators.enrich import (
         hop_target_renumber)
     ev = _t(spark, sf_dir, "events")
@@ -529,7 +518,6 @@ def _drain_events_stream(spark: SparkSession, sf_dir: str,
     import shutil
     import tempfile
 
-    _ship_package(spark)
     from console_log_parser_spark.streaming import jobs
 
     d = tempfile.mkdtemp(prefix=f"stream_{op.__name__}_")
@@ -717,7 +705,6 @@ def doc_ngram_jaccard(spark, sf_dir):
     recall with hot shingles self-pruned out of the candidate join —
     no unbounded shingle self-join. The oracle stays the exact
     all-pairs SQL, so the hash match is the completeness proof."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return dedup.ngram_jaccard_pairs_prefix(docs)
@@ -773,7 +760,6 @@ def doc_repetition(spark, sf_dir):
 def doc_dedup_keep_first(spark, sf_dir):
     """Exact dedup with canonical survivor (min doc_id per md5(text));
     per-source surviving counts."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source",
                                                  "text")
@@ -787,7 +773,6 @@ def doc_dedup_clusters(spark, sf_dir):
     """Connected components over the MinHash near-dup pair graph:
     (doc_id, cluster-min label) per clustered doc — iterative min-label
     propagation; the DuckDB oracle recomputes it with a recursive CTE."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     pairs = dedup.minhash_dedup_pairs(docs)
@@ -811,7 +796,6 @@ def doc_minhash_dedup(spark, sf_dir):
     """MinHash(8 perms) + LSH(4 bands) candidate pairs verified by exact
     shingle Jaccard >= 1/2 (operators/dedup.py). Portable md5-based
     hashing lets DuckDB reproduce it exactly."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return dedup.minhash_dedup_pairs(docs)
@@ -819,7 +803,6 @@ def doc_minhash_dedup(spark, sf_dir):
 
 def doc_minhash_signatures(spark, sf_dir):
     """Raw MinHash signatures (first 4 components exposed as columns)."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     sigs = dedup.minhash_signatures(docs)
@@ -840,7 +823,6 @@ def doc_simhash_pairs(spark, sf_dir):
     block), which is exactly what the oracle SQL computes — the two
     agree by construction, and the hamming<=3 regime is the
     production dedup setting."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return dedup.simhash_pairs(docs, max_hamming=16)
@@ -880,7 +862,6 @@ def ann_lsh_top10(spark, sf_dir):
     """Scale-path ANN: random-hyperplane LSH (4 tables x 8 bits over
     integer-quantized embeddings) prunes the corpus to same-bucket
     candidates, then exact cosine re-ranks — operators/similarity.py."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import similarity
     emb = _t(spark, sf_dir, "embeddings")
     cand = similarity.ann_lsh_candidates(emb, query_vec_id=0)
@@ -902,7 +883,6 @@ def ann_ivf_top10(spark, sf_dir):
     the collect is bounded at any corpus size), integer-exact cell
     assignment, nprobe=2 probe, exact cosine re-rank —
     operators/similarity.py."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import similarity
     emb = _t(spark, sf_dir, "embeddings")
     cand = similarity.ann_ivf_candidates(emb, query_vec_id=0)
@@ -922,7 +902,6 @@ def ann_matmul_top10(spark, sf_dir):
     """Exact top-k via one numpy matmul per Arrow batch with partial
     per-partition top-k (the 100-TB brute-force baseline); result is
     identical to ann_bruteforce_top10."""
-    _ship_package(spark)
     import numpy as np
 
     from console_log_parser_spark.operators import similarity
@@ -944,7 +923,6 @@ def embedding_neardup(spark, sf_dir):
     EXACT all-pairs SQL: the hash match proves the (L=32, B=4) config
     has total recall at this threshold on this corpus (also asserted
     by tests/test_similarity.py at sf0.001 and sf0.01)."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import similarity
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.neardup_lsh_pairs(emb, threshold=0.45,
@@ -956,7 +934,6 @@ def embedding_neardup(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def _media(spark, sf_dir):
-    _ship_package(spark)
     from console_log_parser_spark.operators import multimodal
     ids = _t(spark, sf_dir, "documents").select("doc_id")
     return multimodal.synth_media_stage(ids)
@@ -2413,7 +2390,6 @@ def ann_ivfpq_top10(spark, sf_dir):
     nprobe * n/K vectors' 4-byte codes instead of the corpus's raw
     floats — the IVF-PQ index structure of Jegou et al. expressed as
     two composable DataFrame operators."""
-    _ship_package(spark)
     from console_log_parser_spark.operators import similarity
     from console_log_parser_spark.operators.pq import ann_pq_topk
     emb = _t(spark, sf_dir, "embeddings")
@@ -2454,7 +2430,6 @@ def embedding_knn_join(spark, sf_dir):
     keys), exact-cosine rank per query (4dp round, ties -> lowest
     neighbor id). Per-query candidates are bounded by bucket sizes;
     production raises b_bits ~ log2(n) to keep them O(1)."""
-    _ship_package(spark)
     from console_log_parser_spark.operators.similarity import (
         knn_join_lsh)
     return knn_join_lsh(_t(spark, sf_dir, "embeddings"), k=3)

@@ -1,5 +1,5 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on a
+``session.get_spark`` session; prints ONE JSON line.
 
 The flagship measurement is the parse->enrich->route->aggregate
 pipeline over deterministically synthesized tokenized transcripts
@@ -126,11 +126,10 @@ def build_pipeline(spark, sf_dir, tokens_path=None):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) \
         if "sf" in sf_dir else 0.0
-    spark = get_spark(app="bench", master=f"local[{cpus}]",
-                      shuffle_partitions=max(int(cpus), 8))
+    spark = get_spark(app="bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     timings: dict[str, float] = {}
 
@@ -150,7 +149,7 @@ def main():
     tbl_bytes = sum(
         os.path.getsize(os.path.join(tokens_path, f))
         for f in os.listdir(tokens_path) if f.endswith(".parquet"))
-    split = min(max(tbl_bytes // (int(cpus) * 3), 1 << 20), 128 << 20)
+    split = min(max(tbl_bytes // (cpus * 3), 1 << 20), 128 << 20)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
 
     # Build the pipeline plan ONCE and count the (run-invariant) routed
@@ -235,7 +234,7 @@ def main():
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "pipeline": {
             "n_docs": n_docs,
             "n_tokens": n_tokens,

@@ -19,8 +19,8 @@ transcripts, designed for 10^12-sequence scale:
                         fan-out write (no exchange)
 - ``operators.aggregate`` per-sink aggregates (counts, token sums,
                         severity and escape-sequence histograms)
-- ``sources.catalog``   tokenized-table reader and routed-table writer
-                        (Iceberg, else partitioned Parquet)
+- ``sources.catalog``   tokenized-table reader (Iceberg, else Parquet)
+                        and partitioned-Parquet routed-table writer
 - ``plans.pipeline``    ``build_routed``: the one parse -> enrich ->
                         route chain every caller builds on
 - ``plans.checkpoint``  ``run_with_checkpoints``: the one runner —

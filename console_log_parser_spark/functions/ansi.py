@@ -155,9 +155,6 @@ _TS_DASH_RE = re.compile(
 # an invalid code point replaced during token decode.
 UNPARSED_RE = re.compile("[\x1b\ufffd]")
 
-SEVERITY_ORDER = {"DEBUG": 0, "INFO": 1, "WARN": 2, "ERROR": 3}
-SEVERITIES = ("DEBUG", "INFO", "WARN", "ERROR")
-
 # Prompt on a *reconstructed* (post-replay) line; generalization of the
 # reference's RE_PROMPT (terminalparser.py:28).
 PROMPT_RE = re.compile(

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import max_partition_bytes
+
 # UnsafeRow layout constants for the fixed-width in-memory bound:
 # every field occupies one 8-byte word, preceded by one 8-byte null
 # bitset word per 64 fields. Variable-width types (strings, arrays,
@@ -105,8 +107,7 @@ def range_partitioned_lag(df: DataFrame, order_cols: list[str],
         try:
             stats = df._jdf.queryExecution().optimizedPlan().stats()
             est = int(stats.sizeInBytes())
-            bound = int(spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", str(128 << 20)))
+            bound = max_partition_bytes(spark)
             if stats.rowCount().isDefined():
                 # rowCount-backed stats (Range, LocalRelation,
                 # materialized cache, CBO): the row count is free. For

@@ -1,17 +1,20 @@
-"""Tokenized-sequence table I/O: Iceberg first, partitioned Parquet
-fallback.
+"""Tokenized-sequence table I/O: the tokens table is read from Iceberg
+when the runtime is there, else from Parquet; the routed table is
+written as partitioned Parquet.
 
 The production deployment (BASELINE.json input_hint / SCALE.md §1)
 reads the 10^12-sequence corpus from an Iceberg table — partition
 pruning, hidden partitioning on ``bucket(source)``, snapshot isolation
 for resume, and schema evolution come from the table format, not from
-this engine. The sandbox ships no Iceberg runtime jar, so every entry
-point here probes for the DataSourceV2 provider and falls back to
-plain partitioned Parquet with identical dataframe semantics; the
-rest of the pipeline is format-agnostic (it sees a DataFrame either
-way — that is the point of keeping the scan declarative).
+this engine. The sandbox ships no Iceberg runtime jar, so
+``read_tokens`` probes for the DataSourceV2 provider and falls back to
+plain Parquet with identical dataframe semantics; the rest of the
+pipeline is format-agnostic (it sees a DataFrame either way — that is
+the point of keeping the scan declarative). Both writers of the routed
+table (the checkpoint runner and ``route.write_fanout``) pass a
+filesystem path, so ``write_routed`` writes Parquet only.
 
-To enable Iceberg on a real cluster, submit with::
+To read the tokens table from Iceberg on a real cluster, submit with::
 
     spark-submit \
       --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<v> \
@@ -19,7 +22,7 @@ To enable Iceberg on a real cluster, submit with::
       --conf spark.sql.catalog.logs.type=hadoop \
       --conf spark.sql.catalog.logs.warehouse=<warehouse-uri> ...
 
-and address tables as ``logs.db.tokenized_logs``.
+and pass ``--tokens-table logs.db.tokenized_logs``.
 """
 from __future__ import annotations
 
@@ -55,36 +58,13 @@ def read_tokens(spark: SparkSession, location: str) -> DataFrame:
 
 def write_routed(routed: DataFrame, location: str,
                  mode: str = "append") -> None:
-    """Fan-out write of the routed table, partitioned by sink — by
-    ``batch, sink`` when the frame carries the checkpoint runner's
-    ``batch`` column, with dynamic partition overwrite so a Parquet
-    overwrite replaces only the batches present in the frame.
-
-    Iceberg identifier -> ``writeTo`` with hidden partitioning (the
-    v2 path gives atomic commits + snapshot history, which is what
-    the checkpoint manifests coordinate with at scale); Parquet path
-    -> hive-style ``partitionBy`` directories.
+    """Fan-out write of the routed table to a Parquet directory as
+    hive-style ``partitionBy`` directories: by ``batch, sink`` when the
+    frame carries the checkpoint runner's ``batch`` column, with dynamic
+    partition overwrite so an overwrite replaces only the batches
+    present in the frame, else by ``sink``.
     """
-    spark = routed.sparkSession
     parts = [c for c in ("batch", "sink") if c in routed.columns]
-    if "/" not in location and iceberg_available(spark):
-        writer = routed.writeTo(location).using("iceberg")
-        if mode == "append":
-            # Gate the create-fallback on table EXISTENCE, not on
-            # append raising: an append can fail for many reasons
-            # (commit conflict, schema mismatch, transient I/O) and
-            # falling back to createOrReplace() on any of them would
-            # silently REPLACE — i.e. destroy — the existing table.
-            # The checkpoint/resume story depends on append-only
-            # semantics, so real append failures must propagate.
-            if spark.catalog.tableExists(location):
-                writer.append()
-            else:
-                writer.partitionedBy(
-                    *(routed[c] for c in parts)).createOrReplace()
-        else:
-            writer.createOrReplace()
-        return
     writer = routed.write.mode(mode).partitionBy(*parts)
     if "batch" in parts:
         writer = writer.option("partitionOverwriteMode", "dynamic")

@@ -2,15 +2,16 @@
 aggregate pipeline (the north rule's deployment shape: ``spark-submit
 --py-files <package.zip> jobs/run_pipeline.py``).
 
-The script only uses the SparkSession given to it by spark-submit (no
-master/conf opinions beyond AQE defaults), reads the tokenized-log
-table, runs the micro-batch checkpointed pipeline, and prints one JSON
-line of observed metrics. Re-running after a kill resumes from the
-lineage manifests (plans/checkpoint.py); a resume must pass the same
-``--batches`` as the run it continues, or it is refused.
+The script takes the master and the memory from spark-submit and
+applies the program's runtime settings (``session.RUNTIME_CONF``:
+shuffle width, UTC, the 256-record Arrow cap) to its session. It reads
+the tokenized-log table, runs the micro-batch checkpointed pipeline,
+and prints one JSON line of observed metrics. Re-running after a kill
+resumes from the lineage manifests (plans/checkpoint.py); a resume
+must pass the same ``--batches`` as the run it continues, or is refused.
 
 Usage:
-    spark-submit --master local[8] \
+    spark-submit --master local[8,2] \
         --py-files /tmp/console_log_parser_spark.zip \
         jobs/run_pipeline.py --in-dir DATA --out-dir OUT \
         [--batches 8] [--tokens-table TABLE] [--max-batches N]
@@ -42,17 +43,16 @@ def main() -> None:
                          "a kill loses")
     args = ap.parse_args()
 
-    spark = (SparkSession.builder
-             .appName("console_log_parser_spark.pipeline")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-
     from console_log_parser_spark.plans.checkpoint import (
         run_with_checkpoints)
     from console_log_parser_spark.plans.pipeline import PipelineConfig
+    from console_log_parser_spark.session import RUNTIME_CONF
+
+    spark = (SparkSession.builder
+             .appName("console_log_parser_spark.pipeline")
+             .config(map=RUNTIME_CONF)
+             .getOrCreate())
+    spark.sparkContext.setLogLevel("WARN")
 
     cfg = PipelineConfig(in_dir=args.in_dir, out_dir=args.out_dir,
                          tokens_table=args.tokens_table)

@@ -6,17 +6,11 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def pytest_addoption(parser):
-    parser.addoption(
-        "--run-iceberg", action="store_true", default=False,
-        help="run Iceberg-jar integration tests (needs the runtime jar "
-             "and a configured spark.sql.catalog.*)")
-
-
 @pytest.fixture(scope="session")
 def spark():
     from console_log_parser_spark.session import get_spark
-    s = get_spark(app="tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark(app="tests", master="local[4]",
+                  extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
 
 

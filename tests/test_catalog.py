@@ -38,39 +38,3 @@ def test_parquet_fallback_roundtrip(spark, small_dataset, tmp_path):
 def test_identifier_without_jar_raises(spark):
     with pytest.raises(Exception):
         catalog.read_tokens(spark, "logs.db.tokenized_logs").count()
-
-
-@pytest.mark.skipif(
-    "not config.getoption('--run-iceberg', default=False)",
-    reason="requires the Iceberg runtime jar + a catalog conf "
-           "(spark.sql.catalog.*); the sandbox ships neither — run "
-           "with --run-iceberg on a cluster image that does")
-def test_iceberg_write_contract_append_then_exists(spark, small_dataset):
-    """Contract of write_routed's v2 path (sources/catalog.py):
-
-    1. first write against a fresh identifier -> table is CREATED
-       (partitioned by sink) because tableExists() is false;
-    2. second write with mode="append" -> rows are APPENDED, never
-       replaced (row count doubles);
-    3. an append failure must PROPAGATE — the create-fallback is gated
-       on existence only, so a schema-mismatched append raises instead
-       of silently replacing the table.
-    """
-    assert catalog.iceberg_available(spark), (
-        "--run-iceberg passed but no Iceberg SparkCatalog in this JVM")
-    logs = catalog.read_tokens(
-        spark, f"{small_dataset}/tokenized_logs.parquet")
-    routed = logs.withColumn(
-        "sink", F.concat(F.lit("sink_"),
-                         (F.col("n_tok") % 2).cast("string")))
-    ident = "logs.db.test_write_contract"
-    n = routed.count()
-    catalog.write_routed(routed, ident, mode="append")   # creates
-    assert spark.table(ident).count() == n
-    catalog.write_routed(routed, ident, mode="append")   # appends
-    assert spark.table(ident).count() == 2 * n
-    bad = routed.withColumn("extra_col", F.lit(1))
-    with pytest.raises(Exception):
-        catalog.write_routed(bad, ident, mode="append")
-    # the failed append must not have replaced the table
-    assert spark.table(ident).count() == 2 * n

@@ -113,22 +113,44 @@ def test_tokens_table_is_the_table_read(spark, small_dataset, subset_tokens,
         f"doc_{i:08d}" for i in range(N_SUBSET)}
 
 
-def test_job_cli_honours_tokens_table(spark, small_dataset, subset_tokens,
-                                      tmp_path, monkeypatch, capsys):
+def _run_job(monkeypatch, *args):
+    """``jobs/run_pipeline.main`` on the shared test session."""
     spec = importlib.util.spec_from_file_location(
         "run_pipeline_job", os.path.join(ROOT, "jobs", "run_pipeline.py"))
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
-    out = str(tmp_path / "ckpt")
     # the job stops its session on exit; keep the shared test session
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
-    monkeypatch.setattr(sys, "argv", [
-        "run_pipeline.py", "--in-dir", small_dataset, "--out-dir", out,
-        "--batches", "2", "--tokens-table", subset_tokens])
+    monkeypatch.setattr(sys, "argv", ["run_pipeline.py", *args])
     job.main()
+
+
+def test_job_cli_honours_tokens_table(spark, small_dataset, subset_tokens,
+                                      tmp_path, monkeypatch, capsys):
+    out = str(tmp_path / "ckpt")
+    _run_job(monkeypatch, "--in-dir", small_dataset, "--out-dir", out,
+             "--batches", "2", "--tokens-table", subset_tokens)
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert report["complete"] and report["rows"] == N_SUBSET
     assert len(_doc_ids(spark, out)) == N_SUBSET
+
+
+def test_job_applies_the_runtime_conf(spark, small_dataset, subset_tokens,
+                                      tmp_path, monkeypatch):
+    """The spark-submit job runs with session.RUNTIME_CONF, whatever the
+    session it is handed was built with (Spark's default Arrow batch is
+    10,000 records)."""
+    from console_log_parser_spark.session import RUNTIME_CONF
+    saved = {k: spark.conf.get(k) for k in RUNTIME_CONF}
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    try:
+        _run_job(monkeypatch, "--in-dir", small_dataset,
+                 "--out-dir", str(tmp_path / "ckpt"), "--batches", "2",
+                 "--tokens-table", subset_tokens)
+        assert {k: spark.conf.get(k) for k in RUNTIME_CONF} == RUNTIME_CONF
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_resume_with_other_n_batches_is_refused(spark, small_dataset,

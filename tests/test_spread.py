@@ -12,14 +12,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as em  # noqa: E402
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from console_log_parser_spark.session import get_spark
-    s = get_spark(app="test_spread", master="local[4]",
-                  shuffle_partitions=4)
-    yield s
-
-
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 

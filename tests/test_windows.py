@@ -182,11 +182,12 @@ def test_unsafe_row_width():
     assert _unsafe_row_width(wide) == 16 + 65 * 8  # 2 bitset words
 
 
-def test_auto_keeps_range_path_when_estimate_exceeds_bound(spark):
-    # shrink the bound so the same tiny input is "large": the
-    # scale-safe range path must be chosen
+def _auto_lag_is_ranged(spark, bound):
+    """Run the auto-width lag over a 200-row input under a session
+    maxPartitionBytes of ``bound``; check its rows and return whether
+    it took the range path."""
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", bound)
     try:
         df = (spark.range(200)
               .select((F.col("id") % 10).alias("ts"),
@@ -194,13 +195,25 @@ def test_auto_keeps_range_path_when_estimate_exceeds_bound(spark):
                       (F.col("id") % 3).alias("v")))
         out = range_partitioned_lag(df, ["ts", "k"], "v", "prev")
         plan = out._jdf.queryExecution().executedPlan().toString().lower()
-        assert "rangepartitioning" in plan
         got = _rows(out, ["ts", "k"], "prev")
         want = _rows(_naive_lag(df, ["ts", "k"], "v", "prev"),
                      ["ts", "k"], "prev")
         assert got == want
+        return "rangepartitioning" in plan
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_auto_keeps_range_path_when_estimate_exceeds_bound(spark):
+    # shrink the bound so the same tiny input is "large": the
+    # scale-safe range path must be chosen
+    assert _auto_lag_is_ranged(spark, "16")
+
+
+def test_auto_narrows_under_a_suffixed_bound(spark):
+    # Spark accepts byte strings like "128m" for maxPartitionBytes; the
+    # gate must read them as bytes, not fall back to the range path
+    assert not _auto_lag_is_ranged(spark, "128m")
 
 
 def test_narrow_path_coalesces_bare_scans_but_not_rich_plans(

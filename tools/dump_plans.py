@@ -235,7 +235,7 @@ SHOWN = [
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01"):
-    spark = get_spark(app="plans", shuffle_partitions=16)
+    spark = get_spark(app="plans")
     qs = em.queries()
     out = ["# PLANS — physical-plan evidence (auto-generated by "
            "tools/dump_plans.py)\n"]

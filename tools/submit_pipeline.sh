@@ -4,8 +4,11 @@
 #
 #   tools/submit_pipeline.sh <in_dir> <out_dir> [cores=nproc] [batches=8]
 #
-# The driver heap defaults to get_spark's size, min(24g, 40% of
-# MemTotal); SPARK_GRAFT_DRIVER_MEM overrides it.
+# Only launch settings are passed here, all from
+# console_log_parser_spark/session.py: the package zip, the allocator
+# environment, get_spark's local[N,2] master and its driver heap
+# (SPARK_GRAFT_DRIVER_MEM overrides it). The job applies
+# session.RUNTIME_CONF (shuffle width, UTC, Arrow batch cap) itself.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -14,24 +17,23 @@ OUT_DIR=${2:?out_dir}
 CORES=${3:-$(nproc)}
 BATCHES=${4:-8}
 
-ZIP=$(python - <<'EOF'
-from console_log_parser_spark.session import package_zip
-print(package_zip())
+LAUNCH=$(python - <<'EOF'
+import os
+import shlex
+
+from console_log_parser_spark import session
+
+for k, v in session.ALLOCATOR_ENV.items():
+    print(f"export {k}={shlex.quote(os.environ.get(k, v))}")
+print(f"ZIP={shlex.quote(session.package_zip())}")
+print(f"MEM={shlex.quote(session.driver_mem())}")
 EOF
 )
+eval "$LAUNCH"
 
-# Same allocator pinning as session.py (large transient Arrow/decode
-# buffers must come off the reused heap, not mmap/munmap cycles).
-export MALLOC_MMAP_THRESHOLD_=${MALLOC_MMAP_THRESHOLD_:-536870912}
-export MALLOC_TRIM_THRESHOLD_=${MALLOC_TRIM_THRESHOLD_:-536870912}
-
-MEM="${SPARK_GRAFT_DRIVER_MEM:-$(python -c \
-    'from console_log_parser_spark.session import _default_driver_mem
-print(_default_driver_mem())')}"
 exec spark-submit \
-    --master "local[$CORES]" \
+    --master "local[$CORES,2]" \
     --driver-memory "$MEM" \
-    --conf spark.sql.shuffle.partitions="$CORES" \
     --conf spark.driver.extraJavaOptions="-Xms$MEM -XX:+AlwaysPreTouch" \
     --conf spark.ui.enabled=false \
     --py-files "$ZIP" \
