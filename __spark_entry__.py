@@ -42,49 +42,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Redistribute a LOW-PARALLELISM scan across the cluster before a
-    per-row-expensive projection (regex extraction, digesting, vector
-    math).
-
-    A parquet row group is the unsplittable unit of scan parallelism:
-    a table written as one file with one row group runs every
-    downstream expression in ONE task no matter how small
-    ``maxPartitionBytes`` is. For such inputs a round-robin exchange of
-    the (small) payload costs far less than the serialized compute it
-    unblocks (measured at sf1.0: doc_token_count 0.75 s -> 0.39 s).
-
-    Scale-adaptive gate, evaluated driver-side with no job: only fires
-    when the scan exposes fewer files than cores AND the total bytes
-    fit in one task-wave (< cores x maxPartitionBytes). At 100 TB every
-    table has thousands of files, the gate is false, and the plan is
-    unchanged — no shuffle is ever added to a healthy scan.
-    """
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    bound = max_partition_bytes(spark)
-    # Lower bound: the round-robin exchange costs a fixed ~0.1-0.15s
-    # round trip; below a few MB of compressed input the serialized
-    # compute is cheaper than that (A/B at sf0.1: doc_token_count
-    # 0.42 s base vs 0.58 s spread), so small inputs stay put.
-    spread_min = 2 << 20
-    try:
-        files = df.inputFiles()
-        if len(files) >= cores:
-            return df
-        from urllib.parse import unquote, urlparse
-        total = 0
-        for f in files:
-            p = unquote(urlparse(f).path) if "://" in f or \
-                f.startswith("file:") else f
-            total += os.path.getsize(p)
-    except Exception:
-        return df  # not a file scan, or files not sizable locally
-    if spread_min <= total <= cores * bound:
-        return df.repartition(cores)
-    return df
-
-
 def _synth_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tokenized_logs rows synthesized from the ``documents`` ids
     (datagen.gen_doc, seed 42)."""
@@ -638,8 +595,6 @@ def stream_dedup_exact(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def doc_dedup_exact(spark, sf_dir):
-    # no _spread: md5+count is cheaper than an exchange of the text
-    # payload (A/B at sf1.0: 0.43 s base vs 0.74 s spread)
     docs = _t(spark, sf_dir, "documents")
     return (docs.groupBy("source")
             .agg(F.count("*").alias("n_docs"),
@@ -649,7 +604,7 @@ def doc_dedup_exact(spark, sf_dir):
 
 
 def doc_fingerprint(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.regexp_replace("text", r"\s+", " ")))
     return (docs.select("doc_id", "source", fp.alias("fingerprint"))
             .groupBy("source")
@@ -658,7 +613,7 @@ def doc_fingerprint(spark, sf_dir):
 
 
 def doc_token_count(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     # count without materializing arrays: whitespace tokens are
     # separators+1 (two C-level scans), BPE-ish tokens via
     # regexp_count — same values as size(split)/size(regexp_extract_all)
@@ -673,7 +628,7 @@ def doc_token_count(spark, sf_dir):
 
 
 def doc_quality(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     n_words = F.size(F.split("text", " "))
     n_punct = F.size(F.expr(r"regexp_extract_all(text, '[^\\w\\s]', 0)"))
     n_stop = F.size(F.expr(
@@ -688,7 +643,7 @@ def doc_quality(spark, sf_dir):
 def doc_lang_id(spark, sf_dir):
     """Marker-word language-ID heuristic; integer-ratio threshold so the
     prediction is engine-portable (4% stopword ratio)."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     n_words = F.size(F.split("text", " "))
     n_stop = F.size(F.expr(
         r"regexp_extract_all(text, '\\b(the|a|and|of|to|in)\\b', 0)"))
@@ -706,7 +661,7 @@ def doc_ngram_jaccard(spark, sf_dir):
     no unbounded shingle self-join. The oracle stays the exact
     all-pairs SQL, so the hash match is the completeness proof."""
     from console_log_parser_spark.operators import dedup
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.ngram_jaccard_pairs_prefix(docs)
 
 
@@ -716,7 +671,7 @@ def doc_quality_filter(spark, sf_dir):
     disagree on a boundary): word-count bounds, mean-word-length
     bounds (via letters = chars minus separating spaces, integer
     cross-multiplied), minimum stopword rate."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     n_words = F.size(F.split("text", " "))
     letters = F.col("n_chars") - n_words + 1
     n_stop = F.size(F.expr(
@@ -738,8 +693,7 @@ def doc_repetition(spark, sf_dir):
     vocabulary-diversity rules): per doc, the most frequent word's
     share and the distinct-word share, both as integer-percent
     (DIV 100 arithmetic — engine-portable); summed per language."""
-    docs = _spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     words = docs.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("w"))
     wc = (words.groupBy("doc_id", "lang", "w")
@@ -774,7 +728,7 @@ def doc_dedup_clusters(spark, sf_dir):
     (doc_id, cluster-min label) per clustered doc — iterative min-label
     propagation; the DuckDB oracle recomputes it with a recursive CTE."""
     from console_log_parser_spark.operators import dedup
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = dedup.minhash_dedup_pairs(docs)
     return dedup.duplicate_clusters(pairs).orderBy("doc_id")
 
@@ -797,14 +751,14 @@ def doc_minhash_dedup(spark, sf_dir):
     shingle Jaccard >= 1/2 (operators/dedup.py). Portable md5-based
     hashing lets DuckDB reproduce it exactly."""
     from console_log_parser_spark.operators import dedup
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.minhash_dedup_pairs(docs)
 
 
 def doc_minhash_signatures(spark, sf_dir):
     """Raw MinHash signatures (first 4 components exposed as columns)."""
     from console_log_parser_spark.operators import dedup
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     sigs = dedup.minhash_signatures(docs)
     return sigs.select(
         "doc_id",
@@ -824,7 +778,7 @@ def doc_simhash_pairs(spark, sf_dir):
     agree by construction, and the hamming<=3 regime is the
     production dedup setting."""
     from console_log_parser_spark.operators import dedup
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.simhash_pairs(docs, max_hamming=16)
 
 
@@ -844,10 +798,9 @@ def _cosine(a, b):
 
 def ann_bruteforce_top10(spark, sf_dir):
     raw = _t(spark, sf_dir, "embeddings")
-    emb = _spread(raw).select(
+    emb = raw.select(
         "vec_id", "label",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"))
-    # query branch reads the raw scan: a 1-row filter needs no spread
     q = raw.filter(F.col("vec_id") == 0).select(
         F.expr("transform(embedding, x -> cast(x as double))").alias("qv"))
     scored = (emb.filter(F.col("vec_id") != 0)
@@ -989,7 +942,7 @@ def _routed(spark, sf_dir):
 
 
 def html_render_stats(spark, sf_dir):
-    """S6/S7 HTML sink over synthesized transcripts: render pages
+    """S6 HTML sink over synthesized transcripts: render pages
     (SGR->span fold inside one Arrow stage), aggregate per sink.
     Checked by value against ``oracle_html``, a second implementation
     of the span semantics; tests/test_html_sink.py pins those semantics
@@ -1148,7 +1101,7 @@ def doc_boilerplate(spark, sf_dir):
 
 def doc_temperature_mix(spark, sf_dir):
     """Temperature-2 dataset mixing (operators/sampling.py
-    temperature_rates/temperature_mix): per-lang keep rates
+    temperature_rates): per-lang keep rates
     proportional to sqrt(n)/n with the rarest language kept whole,
     then the deterministic md5 basis-point filter. sqrt is the only
     float op (IEEE correctly rounded, so cross-engine exact); the
@@ -1309,15 +1262,11 @@ def doc_quality_model(spark, sf_dir):
 
 
 def doc_epoch_shuffle(spark, sf_dir):
-    """Deterministic epoch shuffle (operators/sampling.py epoch_key /
-    epoch_shuffle): the first 20 documents of epoch 1's training order
-    with their global positions. The operator's scale path is a range
-    exchange + per-partition sort (partition order IS the epoch order,
-    no global window); this query pins the KEY's determinism
+    """Deterministic epoch shuffle (operators/sampling.py epoch_key):
+    the first 20 documents of epoch 1's training order with their
+    global positions. This query pins the KEY's determinism
     cross-engine — the row_number here runs over the already-limited
-    20-row frame, a deliberate tiny single-partition window, while
-    tests/test_sampling.py proves the range-partitioned operator output
-    equals this global order."""
+    20-row frame, a deliberate tiny single-partition window."""
     from console_log_parser_spark.operators.sampling import epoch_key
     docs = _t(spark, sf_dir, "documents")
     keyed = docs.select(
@@ -1445,10 +1394,7 @@ def doc_shard_manifest(spark, sf_dir):
     shard-sized sum overflows BIGINT and lands in DuckDB HUGEINT; see
     sinks/shards.py) that any engine can recompute from the same
     bytes. Assignment is map-side; the only exchange is the 16-row
-    partial+final aggregate. The actual partitioned parquet write +
-    read-back attestation + partition pruning are pinned by
-    tests/test_shards.py (side-effecting, so not in the oracle
-    query)."""
+    partial+final aggregate."""
     from console_log_parser_spark.sinks.shards import shard_manifest
     return shard_manifest(_t(spark, sf_dir, "documents"), n_shards=16)
 

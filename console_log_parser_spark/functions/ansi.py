@@ -56,13 +56,6 @@ ANSI_RE = re.compile(
     re.DOTALL,
 )
 
-# The same grammar wrapped in ONE capture group: re.split() with it
-# returns [seg0, match0, seg1, match1, ..., segN] — both the stripped
-# segments and the match strings from a single C-level pass, with no
-# per-match Match objects (classify_and_strip's path for text with C1
-# bytes; C1-free text takes the ESC-led split below).
-ANSI_SPLIT_RE = re.compile("(" + ANSI_RE.pattern + ")", re.DOTALL)
-
 # Complete sequences only (no truncated-at-EOD branches): the per-line
 # replay grammar for every line except the document's last — a
 # sequence cut short by a mid-document "\n" is ABORTED (body re-emitted
@@ -94,30 +87,41 @@ def _esc_split_re(*branches: str) -> re.Pattern:
     return re.compile(r"(\x1b(?:" + "|".join(branches) + "))", re.DOTALL)
 
 
-_ESC_SPLIT = {
-    ANSI_RE: _esc_split_re(_CSI_E, _OSC_E, _DCS_E, _EOD_CSI_E, _EOD_OSC_E,
-                           _EOD_DCS_E, _ESC2_E, _EOD_ESC_E),
-    ANSI_COMPLETE_RE: _esc_split_re(_CSI_E, _OSC_E, _DCS_E, _ESC2_E),
+def _split_re(pat: re.Pattern) -> re.Pattern:
+    return re.compile("(" + pat.pattern + ")", re.DOTALL)
+
+
+# grammar -> (its ESC-led twin, the grammar itself), each wrapped in ONE
+# capture group so re.split() returns [seg0, match0, ..., segN]
+_SPLIT = {
+    ANSI_RE: (_esc_split_re(_CSI_E, _OSC_E, _DCS_E, _EOD_CSI_E, _EOD_OSC_E,
+                            _EOD_DCS_E, _ESC2_E, _EOD_ESC_E),
+              _split_re(ANSI_RE)),
+    ANSI_COMPLETE_RE: (_esc_split_re(_CSI_E, _OSC_E, _DCS_E, _ESC2_E),
+                       _split_re(ANSI_COMPLETE_RE)),
 }
 
 
 def _scan_sequences(text: str, pat) -> tuple[list, list]:
     """(segments, matches) — exactly ``pat.finditer(text)`` for ``pat``
-    ANSI_RE or ANSI_COMPLETE_RE, PROVIDED ``text`` contains no C1 byte
-    (callers check ``_C1_ANY_RE`` first).
+    ANSI_RE or ANSI_COMPLETE_RE.
 
-    One ``re.split`` with the grammar's ESC-led twin returns both lists
-    from a single C call: no Python loop, no Match objects. The full
-    grammar's split tries the alternation at every character and runs
-    at ~10 M chars/s on datagen transcripts; the ESC-led twin skips to
-    the next ESC first and runs at ~110 M chars/s. A dangling ESC that
-    matches no branch stays in its segment, as with ``finditer``.
+    One ``re.split`` returns both lists from a single C call: no Python
+    loop, no Match objects. C1-free text (all of datagen's) is split by
+    the grammar's ESC-led twin: the full grammar's split tries the
+    alternation at every character and runs at ~10 M chars/s on datagen
+    transcripts, the twin skips to the next ESC first and runs at
+    ~110 M chars/s. Text with a C1 byte (rare) is split by the full
+    grammar, whose alternation handles C1-introduced sequences. A
+    dangling ESC that matches no branch stays in its segment, as with
+    ``finditer``.
 
     ``segments`` has len(matches)+1 entries; segments[j] is the text
     between match j-1 and match j (the adjacency test for app-mode
     spans is segments[j] == "").
     """
-    parts = _ESC_SPLIT[pat].split(text)
+    esc_led, full = _SPLIT[pat]
+    parts = (esc_led if _C1_ANY_RE.search(text) is None else full).split(text)
     return parts[0::2], parts[1::2]
 
 
@@ -149,11 +153,6 @@ SEVERITY_RE = re.compile(
 # its matches back into the full pattern's ``findall`` list.
 _TS_DASH_RE = re.compile(
     r"-(?<=\d{4}-)\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(?:\.\d+)?")
-# error accounting (SURVEY.md §4: one bad row must not kill a 10^12-row
-# job — malformed input becomes a COLUMN, not an exception): a lone ESC
-# surviving the strip = an escape the grammar could not parse; U+FFFD =
-# an invalid code point replaced during token decode.
-UNPARSED_RE = re.compile("[\x1b\ufffd]")
 
 # Prompt on a *reconstructed* (post-replay) line; generalization of the
 # reference's RE_PROMPT (terminalparser.py:28).
@@ -178,11 +177,6 @@ VIM_END_MARK = "\x1b[23;0;0t"
 
 _SEQ_KEY_CACHE: dict = {}
 _SENTINEL = object()
-
-
-def strip_ansi(text: str) -> str:
-    """Remove all escape sequences; keep printables and C0 controls."""
-    return ANSI_RE.sub("", text)
 
 
 def seq_key(match_text: str) -> str | None:
@@ -228,16 +222,7 @@ def seq_key(match_text: str) -> str | None:
     return f"C1:{ord(c0):02x}"
 
 
-def classify(text: str) -> tuple[Counter, int, int, int, int, int, int]:
-    """One regex pass -> (seq histogram, n_csi, n_osc, n_esc, n_dcs,
-    n_sgr, n_c1)."""
-    _stripped, hist, counters = classify_and_strip(text, want_strip=False)
-    return (hist, *counters[:6])
-
-
-def classify_and_strip(
-        text: str, want_strip: bool = True
-) -> tuple[str, Counter, tuple[int, int, int, int, int, int, int, int]]:
+def classify_and_strip(text: str) -> tuple[str, Counter, tuple[int, ...]]:
     """ONE split pass over the document producing the escape-stripped
     text, the event histogram and the counters
     ``(n_csi, n_osc, n_esc, n_dcs, n_sgr, n_c1, n_app_mode, n_devstat)``
@@ -261,17 +246,10 @@ def classify_and_strip(
     hist: Counter = Counter()
     n_csi = n_osc = n_esc = n_dcs = n_sgr = n_c1 = 0
     n_app_mode = n_devstat = 0
-    if _C1_ANY_RE.search(text) is None:
-        # one ESC-led split: segments and matches from one C call
-        segs, matches = _scan_sequences(text, ANSI_RE)
-    else:
-        # C1 bytes present (rare): fall back to the full grammar's
-        # split, whose alternation handles C1-introduced sequences
-        parts = ANSI_SPLIT_RE.split(text)
-        segs, matches = parts[0::2], parts[1::2]
+    segs, matches = _scan_sequences(text, ANSI_RE)
     if not matches:  # no escapes at all: zero-copy
-        return (text if want_strip else ""), hist, (0, 0, 0, 0, 0, 0, 0, 0)
-    stripped = "".join(segs) if want_strip else ""
+        return text, hist, (0, 0, 0, 0, 0, 0, 0, 0)
+    stripped = "".join(segs)
     # Histogram + counters from the DISTINCT match strings (escape
     # vocab is tiny — ~20 distinct over ~50 matches per doc): Counter()
     # does the per-match counting at C speed, the Python loop runs per
@@ -437,16 +415,6 @@ class LineBuilder:
         return "".join(self.line)
 
 
-# Editing-CSI hint: CSI whose final is one of the line-editing ops
-# (@ C D G K P X) — the only ESCAPE sequences that make a replay differ
-# from a bare strip. The pattern mirrors _CSI with the final narrowed
-# to the editing set; false POSITIVES only cost the slow path, false
-# negatives are impossible (any editing CSI contains this shape by
-# construction, and OSC/DCS bodies cannot hide one: their body classes
-# exclude ESC, so an embedded `ESC [ .. final` always terminates the
-# containing sequence and is re-matched on its own).
-_EDIT_CSI_RE = re.compile(r"(?:\x1b\[|\x9b)[0-?]*[ -/]*[@CDGKPX]")
-
 # C0 residue on the STRIPPED text (not the raw line — a BEL that
 # terminates an OSC, or a CR inside a DCS body, is consumed by the
 # sequence match and never reaches the builder): everything below
@@ -510,65 +478,39 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
         hit = _LINE_MEMO.get(raw_line)
         if hit is not None:
             return hit
-    pat = ANSI_RE if at_eod else ANSI_COMPLETE_RE
-    if _C1_ANY_RE.search(raw_line) is None:
-        # One ESC-led split yields both the fast-path strip and the
-        # slow-path walk inputs; no alternation scan of the line.
-        segs, matches = _scan_sequences(raw_line, pat)
-        # Fast path: no complete editing CSI (a match starting with
-        # "ESC [" whose last char is an editing final IS one — a
-        # truncated CSI can never end in [@CDGKPX] or it would have
-        # completed) and no C0/dangling-ESC residue on the stripped
-        # text: the bare strip equals the replay. A single trailing CR
-        # is allowed (it only rewinds the cursor; nothing follows).
-        has_edit = False
-        for g in matches:
-            if g[-1] in _EDIT_FINALS and g[1:2] == "[":
-                has_edit = True
-                break
-        if not has_edit:
-            stripped = "".join(segs)
-            body = stripped[:-1] if stripped.endswith("\r") else stripped
-            if _C0_RESIDUE_RE.search(body) is None:
-                return _memo(raw_line, at_eod, (body, 0))
-        lb = LineBuilder()
-        for j, g in enumerate(matches):
-            s = segs[j]
-            if s:
-                lb.text(s)
-            if g[-1] in _EDIT_FINALS:
-                cm = CSI_PARTS_RE.match(g)
-                if cm:
-                    lb.csi(cm.group("par"), cm.group("final"))
-        tail = segs[len(matches)]
-        if tail:
-            lb.text(tail)
-        return _memo(raw_line, at_eod, (lb.result(), lb.warnings))
-    # C1 bytes present (rare): regex-scan path
-    if _EDIT_CSI_RE.search(raw_line) is None:
-        stripped = pat.sub("", raw_line)
+    # One split yields both the fast-path strip and the slow-path walk
+    # inputs.
+    segs, matches = _scan_sequences(
+        raw_line, ANSI_RE if at_eod else ANSI_COMPLETE_RE)
+    # Fast path: no complete editing CSI (a match led by "ESC [" or by
+    # the C1 CSI byte whose last char is an editing final IS one — a
+    # truncated CSI can never end in [@CDGKPX] or it would have
+    # completed) and no C0/dangling-ESC residue on the stripped text:
+    # the bare strip equals the replay. A single trailing CR is allowed
+    # (it only rewinds the cursor; nothing follows).
+    has_edit = False
+    for g in matches:
+        if g[-1] in _EDIT_FINALS and (g[1:2] == "[" or g[0] == "\x9b"):
+            has_edit = True
+            break
+    if not has_edit:
+        stripped = "".join(segs)
         body = stripped[:-1] if stripped.endswith("\r") else stripped
         if _C0_RESIDUE_RE.search(body) is None:
             return _memo(raw_line, at_eod, (body, 0))
     lb = LineBuilder()
-    last = 0
-    for m in pat.finditer(raw_line):
-        if m.start() > last:
-            lb.text(raw_line[last : m.start()])
-        g = m.group(0)
+    for j, g in enumerate(matches):
+        s = segs[j]
+        if s:
+            lb.text(s)
         if g[-1] in _EDIT_FINALS:
             cm = CSI_PARTS_RE.match(g)
             if cm:
                 lb.csi(cm.group("par"), cm.group("final"))
-        last = m.end()
-    if last < len(raw_line):
-        lb.text(raw_line[last:])
+    tail = segs[len(matches)]
+    if tail:
+        lb.text(tail)
     return _memo(raw_line, at_eod, (lb.result(), lb.warnings))
-
-
-def build_line(raw_line: str) -> str:
-    """Reconstruct the visible text of one raw (LF-free) line."""
-    return build_line_counted(raw_line)[0]
 
 
 def find_timestamps(text: str) -> list[str]:
@@ -693,8 +635,11 @@ def parse_doc(text: str) -> dict:
         "prompt_count": prompt_count,
         "cmd_lines": cmd_lines,
         "n_vim": n_vim,
-        # two C-level memchr scans == len(UNPARSED_RE.findall(...)):
-        # the class has exactly these two members
+        # error accounting (SURVEY.md §4: one bad row must not kill a
+        # 10^12-row job — malformed input becomes a COLUMN, not an
+        # exception): a lone ESC surviving the strip is an escape the
+        # grammar could not parse; U+FFFD is an invalid code point
+        # replaced during token decode
         "n_unparsed": stripped.count("\x1b") + stripped.count("�"),
         "n_app_mode": n_app_mode,
         "n_devstat": n_devstat,

@@ -89,9 +89,8 @@ def top_commands(routed: DataFrame, k: int = 20) -> DataFrame:
             .filter(F.col("rank") <= k))
 
 
-def write_aggregates(routed: DataFrame, out_dir: str,
-                     mode: str = "overwrite") -> dict[str, DataFrame]:
-    """Write the five tables over ``routed`` to ``out_dir/agg_<name>``,
+def write_aggregates(routed: DataFrame, out_dir: str) -> dict[str, DataFrame]:
+    """Overwrite the five tables over ``routed`` at ``out_dir/agg_<name>``,
     concurrently, and return their frames by name.
 
     Each thread builds its table's frame as well as writing it: Spark
@@ -113,7 +112,7 @@ def write_aggregates(routed: DataFrame, out_dir: str,
     def write(name: str,
               table: Callable[[DataFrame], DataFrame]) -> DataFrame:
         df = table(routed)
-        df.write.mode(mode).parquet(f"{out_dir}/agg_{name}")
+        df.write.mode("overwrite").parquet(f"{out_dir}/agg_{name}")
         return df
 
     with ThreadPoolExecutor(max_workers=len(tables)) as pool:

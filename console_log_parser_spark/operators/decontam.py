@@ -1,12 +1,12 @@
-"""Benchmark decontamination — flag/drop training documents that share
-a word n-gram with an evaluation ("benchmark") set.
+"""Benchmark decontamination — flag training documents that share a
+word n-gram with an evaluation ("benchmark") set.
 
 A standard step of LLM training-data pipelines that the reference's
 operator inventory has no analog for (it is part of the graft's
 training-data extension surface, like dedup/sampling): any document
 whose text contains an n-gram that also occurs in a held-out benchmark
-must be flagged (for audit) or dropped (for training) so the benchmark
-stays uncontaminated.
+must be flagged, for audit or for the training export to drop, so the
+benchmark stays uncontaminated.
 
 Scale design (100 TB corpus, MB-GB benchmark): the benchmark side is
 exploded to its DISTINCT n-grams — eval sets are a few MB, so this is
@@ -60,12 +60,3 @@ def contamination_counts(docs: DataFrame, benchmark: DataFrame,
             .groupBy(id_col)
             .agg(F.count("*").alias("n_contam")))
 
-
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """The corpus minus every contaminated document (left-anti against
-    the flagged ids); schema unchanged."""
-    hits = contamination_counts(docs, benchmark, n, id_col, text_col) \
-        .select(id_col)
-    return docs.join(hits, id_col, "left_anti")

@@ -34,10 +34,6 @@ PERMS = [
 ]
 
 
-def _words(text_col: str = "text"):
-    return F.split(F.col(text_col), " ")
-
-
 def shingles(df: DataFrame, k: int = 3, id_col: str = "doc_id",
              text_col: str = "text") -> DataFrame:
     """(id, text) -> (id, shingle) distinct k-word shingles.

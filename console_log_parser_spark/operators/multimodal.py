@@ -7,9 +7,9 @@ thumbnail / frame-sample run as ``mapInArrow``/``mapInPandas`` stages
 (Arrow batch transfer, no per-row Python dispatch). The container
 format here is a tiny deterministic one (16-byte header + raw payload)
 so the *decode is real* — header fields are parsed from the actual
-bytes, pixels/samples come off ``np.frombuffer`` — while real-world
-codecs (JPEG/PNG/WAV) are stubbed behind an import-try (the sandbox
-ships no PIL/librosa; see ``decode_with_library``).
+bytes, pixels/samples come off ``np.frombuffer``. Real-world codecs
+(JPEG/PNG/WAV) are not decoded: the media queries read only this
+container.
 
 Container layout (big-endian):
     0:4   magic  b"MM01"
@@ -97,86 +97,6 @@ def decode_header(blob: bytes) -> dict:
         raise ValueError("length mismatch")
     return {"width": w, "height": h, "channels": c, "kind": kind,
             "n_frames": nf, "payload_len": plen}
-
-
-# --- real-codec stub (sandbox has no imaging/audio libraries) ------------
-
-try:  # pragma: no cover - not present in this container
-    from PIL import Image as _PILImage  # type: ignore
-except ImportError:
-    _PILImage = None
-
-
-def decode_ppm(blob: bytes) -> np.ndarray:
-    """Native netpbm decode (P6 RGB / P5 grayscale, maxval <= 255) —
-    a PUBLIC format simple enough to parse without any codec library:
-    ASCII header (magic, whitespace/comment-separated width height
-    maxval, one whitespace) then raw samples. Returns HxWx3 or HxW
-    uint8."""
-    if blob[:2] not in (b"P5", b"P6"):
-        raise ValueError("not a binary netpbm image")
-    # header tokens may be broken by '#' comments running to newline
-    fields: list[int] = []
-    i = 2
-    while len(fields) < 3:
-        while i < len(blob) and blob[i:i + 1].isspace():
-            i += 1
-        if blob[i:i + 1] == b"#":
-            while i < len(blob) and blob[i:i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(blob) and not blob[j:j + 1].isspace():
-            j += 1
-        fields.append(int(blob[i:j]))
-        i = j
-    i += 1  # exactly ONE whitespace byte after maxval, per spec
-    w, h, maxval = fields
-    if maxval > 255:
-        raise ValueError("16-bit netpbm not supported")
-    ch = 3 if blob[:2] == b"P6" else 1
-    need = w * h * ch
-    data = np.frombuffer(blob, np.uint8, count=need, offset=i)
-    return data.reshape((h, w, 3) if ch == 3 else (h, w))
-
-
-def decode_bmp(blob: bytes) -> np.ndarray:
-    """Native BMP decode (BITMAPINFOHEADER, 24-bit uncompressed) —
-    bottom-up BGR rows padded to 4 bytes; returns HxWx3 uint8 RGB."""
-    if blob[:2] != b"BM":
-        raise ValueError("not a BMP")
-    off = struct.unpack("<I", blob[10:14])[0]
-    hsz, w, h = struct.unpack("<Iii", blob[14:26])
-    planes, bpp = struct.unpack("<HH", blob[26:30])
-    comp = struct.unpack("<I", blob[30:34])[0]
-    if hsz < 40 or bpp != 24 or comp != 0:
-        raise ValueError("only 24-bit uncompressed BITMAPINFOHEADER")
-    flip = h > 0
-    h = abs(h)
-    stride = (w * 3 + 3) & ~3
-    rows = np.frombuffer(blob, np.uint8, count=stride * h,
-                         offset=off).reshape(h, stride)
-    img = rows[:, :w * 3].reshape(h, w, 3)[..., ::-1]  # BGR -> RGB
-    return img[::-1] if flip else img
-
-
-def decode_with_library(blob: bytes):
-    """Real-image decode path. netpbm (P5/P6) and 24-bit BMP decode
-    NATIVELY (numpy only — no codec library needed for those public
-    formats); compressed formats (JPEG/PNG/...) still require PIL,
-    which this container does not ship, and stay honestly gated."""
-    if blob[:2] in (b"P5", b"P6"):
-        return decode_ppm(blob)
-    if blob[:2] == b"BM":
-        return decode_bmp(blob)
-    if _PILImage is None:  # pragma: no cover - PIL absent here
-        raise NotImplementedError(
-            "compressed-codec decode (JPEG/PNG/...) requires PIL; "
-            "netpbm/BMP decode natively, and the deterministic "
-            "container format (encode_media/decode_header) covers "
-            "the pipeline tests in this environment")
-    import io  # pragma: no cover
-    return np.asarray(_PILImage.open(io.BytesIO(blob)))
 
 
 # --- Spark stages ---------------------------------------------------------

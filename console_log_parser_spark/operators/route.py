@@ -33,10 +33,9 @@ def route_stage(enriched: DataFrame) -> DataFrame:
     return enriched.select(*ROUTED_COLUMNS)
 
 
-def write_fanout(routed: DataFrame, out_dir: str,
-                 mode: str = "append") -> None:
-    """Write the routed table under ``out_dir/routed/sink=...``; a
+def write_fanout(routed: DataFrame, out_dir: str) -> None:
+    """Append the routed table under ``out_dir/routed/sink=...``; a
     reader of one sink prunes to its partition. This is the
     recompute-free fan-out (SURVEY.md §4: per-sink write loops must not
     re-run the parse)."""
-    write_routed(routed, f"{out_dir}/routed", mode=mode)
+    write_routed(routed, f"{out_dir}/routed")

@@ -47,23 +47,6 @@ def epoch_key(epoch: int, col, salt: str = "shuf42"):
     return F.md5(F.concat(F.lit(f"{salt}:{epoch}:"), col.cast("string")))
 
 
-def epoch_shuffle(df: DataFrame, epoch: int, key_col: str = "doc_id",
-                  salt: str = "shuf42") -> DataFrame:
-    """Global deterministic training order for one epoch: every row
-    gets ``shuffle_key`` = ``epoch_key`` and the frame is
-    range-partitioned + sorted on it, so reading the output partitions
-    in partition order IS the epoch order — a total order with NO
-    global window and no single-task sort. At 10^12 rows this is one
-    range exchange (sampled boundaries) with sorted parquet files per
-    partition; per-row global positions, when needed, are partition
-    offset + local row number (the two-pass prefix-sum pattern of
-    ``packing.pack_sequences``), never a one-partition window."""
-    keyed = df.withColumn("shuffle_key", epoch_key(epoch, F.col(key_col),
-                                                   salt))
-    return (keyed.repartitionByRange("shuffle_key", key_col)
-                 .sortWithinPartitions("shuffle_key", key_col))
-
-
 def temperature_rates(df: DataFrame, strat_col: str = "source",
                       scale: int = 1_000_000) -> DataFrame:
     """Per-stratum keep rates for temperature-2 dataset mixing
@@ -104,19 +87,6 @@ def temperature_rates(df: DataFrame, strat_col: str = "source",
             .select(strat_col, "n_docs", "weight", "rate_bp"))
 
 
-def temperature_mix(df: DataFrame, strat_col: str = "source",
-                    key_col: str = "doc_id", salt: str = "mix42",
-                    scale: int = 1_000_000) -> DataFrame:
-    """Temperature-2 mixing end-to-end: compute the rates from the
-    corpus's own stratum counts, then apply the deterministic md5
-    filter (``weighted_mix``). Deterministic in (salt, key, corpus
-    composition); the second pass over the corpus is the map-side
-    filter — the rates pass is a column-pruned count."""
-    rates = temperature_rates(df, strat_col, scale) \
-        .select(strat_col, "rate_bp")
-    return weighted_mix(df, rates, strat_col, key_col, salt)
-
-
 def split_assign(df: DataFrame,
                  fractions_bp: dict[str, int] | None = None,
                  key_col: str = "doc_id",
@@ -155,17 +125,3 @@ def split_assign(df: DataFrame,
     split = F.lit(last) if expr is None else expr.otherwise(last)
     return df.withColumn("split", split)
 
-
-def weighted_mix(df: DataFrame, rates: DataFrame,
-                 strat_col: str = "source", key_col: str = "doc_id",
-                 salt: str = "mix42") -> DataFrame:
-    """Mix strata at configured rates: ``rates`` is a tiny
-    (strat_col, rate_bp) dimension, broadcast-joined; rows keep when
-    their bucket falls below their stratum's rate. Unlisted strata
-    drop (rate 0) — coalesce the join for an explicit default."""
-    dim = F.broadcast(rates.select(strat_col, "rate_bp"))
-    joined = df.join(dim, strat_col, "left")
-    return (joined
-            .filter(bucket_bp(F.col(key_col), salt)
-                    < F.coalesce(F.col("rate_bp"), F.lit(0)))
-            .drop("rate_bp"))

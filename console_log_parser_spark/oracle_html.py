@@ -7,7 +7,7 @@ the char-at-a-time FSM oracle (oracle.OracleParser, not the engine's
 regex), and the span stack tags every open span with an explicit KIND
 at open time and matches selective closes by kind — where the engine
 classifies lazily with payload regexes at close time. Only the page
-template/palette constants are shared (data, not logic).
+template constant is shared (data, not logic).
 
 Used by oracle_pipeline-style literal-VALUES SQL generation so the
 driver's ``html_render_stats`` check is a full value-hash match.
@@ -19,7 +19,7 @@ from functools import lru_cache
 
 from . import datagen
 from .oracle import OracleParser, _Event
-from .sinks.html import PAGE_TEMPLATE, PALETTES
+from .sinks.html import PAGE_TEMPLATE
 
 _ESCAPES = {"&": "&amp;", ">": "&gt;", "<": "&lt;", '"': "&quot;"}
 _ATTRS = {1: "bold", 4: "underline", 5: "blink", 7: "reverse"}
@@ -49,8 +49,7 @@ class _RenderStream(OracleParser):
             self.items.append(("m", ev.par))
 
 
-def render_page_oracle(text: str, title: str,
-                       palette: str = "dark") -> tuple[int, int, int]:
+def render_page_oracle(text: str, title: str) -> tuple[int, int, int]:
     """-> (n_spans, n_warnings, html_len) for one transcript page."""
     p = _RenderStream()
     p.feed(text)
@@ -151,8 +150,7 @@ def render_page_oracle(text: str, title: str,
     stack.clear()
 
     page = PAGE_TEMPLATE.format(title=_esc(title or "untitled"),
-                                body="".join(body_parts),
-                                **PALETTES[palette])
+                                body="".join(body_parts))
     return n_spans, n_warn, len(page)
 
 

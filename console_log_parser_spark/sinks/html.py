@@ -1,5 +1,5 @@
 """HTML document sink: SGR -> styled-span conversion and per-doc page
-rendering, as an Arrow-vectorized stage + partitioned table write.
+rendering, as an Arrow-vectorized stage.
 
 Clean-room reimplementation of the semantics of the reference's
 ``HtmlDocumentCreator.convert_csi`` (terminal2html.py:255-355) and
@@ -22,8 +22,10 @@ fold over a document's SGR events instead of a stateful file writer:
   (``n_warnings``), not raised — at 10^12 rows one odd sequence must
   not kill the job (the reference raises, terminal2html.py:322).
 
-The sink writes one HTML page per doc partitioned by sink plus an
-index summary table (reference S6/S7: main.py:29-128, 281-287).
+The stage renders one HTML page per doc with the reference's dark
+palette (reference S6: main.py:29-128); the driver's
+``html_render_stats`` query aggregates the page rows per sink. Nothing
+writes the pages to files or builds the reference's S7 index table.
 """
 from __future__ import annotations
 
@@ -179,7 +181,7 @@ PAGE_TEMPLATE = """<!DOCTYPE html>
 <meta charset="utf-8"/>
 <title>{title}</title>
 <style>
-pre {{ white-space: pre-wrap; background: {bg}; color: {fg}; }}
+pre {{ white-space: pre-wrap; background: #101010; color: #e5e5e5; }}
 .f0,.ef0 {{ color: #000000; }} .f1,.ef1 {{ color: #cd0000; }}
 .f2,.ef2 {{ color: #00cd00; }} .f3,.ef3 {{ color: #cdcd00; }}
 .f4,.ef4 {{ color: #0000ee; }} .f5,.ef5 {{ color: #cd00cd; }}
@@ -201,23 +203,17 @@ pre {{ white-space: pre-wrap; background: {bg}; color: {fg}; }}
 </html>
 """
 
-PALETTES = {
-    "dark": {"bg": "#101010", "fg": "#e5e5e5"},
-    "light": {"bg": "#ffffff", "fg": "#101010"},
-}
-
 HTML_SCHEMA_DDL = ("doc_id string, sink string, title string, "
                    "html string, n_spans int, n_warnings int, "
                    "html_len int")
 
 
-def render_html_stage(df: DataFrame, palette: str = "dark") -> DataFrame:
+def render_html_stage(df: DataFrame) -> DataFrame:
     """(doc_id, tokens, sink, title) -> rendered page rows.
 
     Shares the parse stage's vectorized token decode; one Arrow batch
     in, one out."""
     from ..operators.parse import decode_token_lists
-    pal = PALETTES[palette]
 
     def render(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -228,7 +224,7 @@ def render_html_stage(df: DataFrame, palette: str = "dark") -> DataFrame:
                 body, n_spans, n_warn = render_text(text)
                 page = PAGE_TEMPLATE.format(
                     title=escape_html(title or "untitled"),
-                    body=body, **pal)
+                    body=body)
                 pages.append(page)
                 spans.append(n_spans)
                 warns.append(n_warn)
@@ -246,19 +242,3 @@ def render_html_stage(df: DataFrame, palette: str = "dark") -> DataFrame:
     return df.select("doc_id", "tokens", "sink", "title").mapInArrow(
         render, HTML_SCHEMA_DDL)
 
-
-def index_table(pages: DataFrame) -> DataFrame:
-    """S7 index sink: one summary row per page (what the reference's
-    index.html links), aggregated per sink by the caller if desired."""
-    from pyspark.sql import functions as F
-    return pages.select(
-        "sink", "doc_id", "title", "html_len", "n_spans",
-        F.concat(F.col("sink"), F.lit("/"), F.col("doc_id"),
-                 F.lit(".html")).alias("path"))
-
-
-def write_html_sink(pages: DataFrame, out_dir: str,
-                    mode: str = "overwrite") -> None:
-    """Partitioned-by-sink page table + the index table, one pass."""
-    pages.write.mode(mode).partitionBy("sink").parquet(f"{out_dir}/pages")
-    index_table(pages).write.mode(mode).parquet(f"{out_dir}/index")

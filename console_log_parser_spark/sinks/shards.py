@@ -1,11 +1,11 @@
-"""Deterministic shard writer + manifest — the training-data export
-sink.
+"""Deterministic shard assignment + manifest — the training-data export
+sink's plan.
 
 Part of the graft's training-data extension surface (the reference's
 sinks render HTML/index/session dumps; a curation pipeline's terminal
 sink is sharded training files plus a manifest the trainer and any
-auditor can re-derive): the curated corpus is written as ``n_shards``
-parquet partitions whose assignment is a pure function of the row key,
+auditor can re-derive): each document's shard out of ``n_shards`` is a
+pure function of the row key,
 
     shard(id) = int(md5(salt || id)[:8], 16) % n_shards
 
@@ -23,12 +23,10 @@ docs/shard, silently in Spark and loudly in a DuckDB HUGEINT auditor,
 breaking the any-engine-recomputes attestation at exactly the
 100-TB scale it exists for).
 
-Scale design (100 TB): shard assignment is map-side; the write is ONE
-exchange keyed by the shard id (``repartition(n, shard)`` before
-``partitionBy`` — without it every write task emits a file into every
-shard directory, n_tasks*n_shards small files); the manifest is a
-partial+final aggregate over n_shards rows. Readers prune on the
-shard partition column (pinned by ``tests/test_shards.py``).
+Scale design (100 TB): shard assignment is map-side; the manifest is a
+partial+final aggregate over n_shards rows. The driver's
+``doc_shard_manifest`` query runs the manifest; the program writes no
+shard files.
 """
 from __future__ import annotations
 
@@ -73,26 +71,3 @@ def shard_manifest(df: DataFrame, n_shards: int, id_col: str = "doc_id",
                  .cast("long").alias("content_xor"))
             .orderBy("shard"))
 
-
-def write_shards(df: DataFrame, path: str, n_shards: int,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 salt: str = "shard42") -> DataFrame:
-    """Write the corpus as ``n_shards`` parquet partitions and return
-    the manifest RECOMPUTED FROM THE WRITTEN FILES — the manifest
-    attests what is on disk, not what the plan intended to write."""
-    (assign_shards(df, n_shards, id_col, salt)
-     .repartition(n_shards, "shard")
-     .write.mode("overwrite").partitionBy("shard").parquet(path))
-    spark = df.sparkSession
-    # the partition directory column reads back with an inferred type;
-    # pin it to the assignment's long so both manifests compare equal
-    written = (spark.read.parquet(path)
-               .withColumn("shard", F.col("shard").cast("long")))
-    return (written
-            .groupBy("shard")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum(F.size(F.split(F.col(text_col), " ")))
-                 .cast("long").alias("n_words"),
-                 F.bit_xor(content_key(F.col(text_col)))
-                 .cast("long").alias("content_xor"))
-            .orderBy("shard"))

@@ -10,9 +10,6 @@ The reference's streaming-shaped pieces map here:
   becomes stream-static), into a partitioned-by-sink ``writeStream``
   with exactly-once checkpointing — the streaming twin of
   plans/checkpoint.py's batch manifests.
-- frame-timestamp analytics (asciinema2html.py:226-243) generalize to
-  watermarked event-time windowed aggregation (late data bounded by
-  the watermark instead of the reference's in-order assumption).
 - the prompt/vim session state machine (terminalparser.py:18-24, one
   FSM instance carried across lines) generalizes to a custom stateful
   operator via ``applyInPandasWithState``: per-key state carried
@@ -43,9 +40,7 @@ def read_tokenized_stream(spark: SparkSession, in_dir: str) -> DataFrame:
 
 def read_events_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     """The events file stream, one file per micro-batch: the stateful
-    operators' arrival contract is one time-ordered file per batch, and
-    an append-mode window only emits once a LATER batch moves the
-    watermark past its end."""
+    operators' arrival contract is one time-ordered file per batch."""
     return (spark.readStream.schema(EVENTS_SCHEMA_DDL)
             .option("maxFilesPerTrigger", 1)
             .parquet(in_dir))
@@ -87,19 +82,6 @@ def run_to_memory(spark: SparkSession, in_dir: str, checkpoint_dir: str,
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start())
-
-
-def windowed_severity_counts(events: DataFrame) -> DataFrame:
-    """Event-time windowed histogram (1 h windows, 2 h late-data
-    watermark) — the streaming analog of the per-sink severity
-    histogram."""
-    return (events.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("win"),
-                     F.col("event_type"))
-            .agg(F.count("*").alias("n"),
-                 F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(F.col("win.start").alias("win_start"),
-                    "event_type", "n", "sum_value"))
 
 
 SESSION_STATE_DDL = "last_ts_us long, n_sessions long, n_events long"
@@ -234,21 +216,6 @@ def dedup_exact(events: DataFrame) -> DataFrame:
     append mode."""
     return (events.withWatermark("ts", "2 days")
             .dropDuplicatesWithinWatermark(["event_id"]))
-
-
-def run_windowed_severity(spark: SparkSession, in_dir: str, out_dir: str,
-                          checkpoint_dir: str):
-    """Append-mode emission requires the watermark to pass a window's
-    end, which only happens on a *later* micro-batch — so the source is
-    read file-by-file; with a finite backfill the trailing windows
-    (inside the watermark of max event time) stay unemitted by design."""
-    agg = windowed_severity_counts(read_events_stream(spark, in_dir))
-    return (agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
 
 
 TRANS_STATE_DDL = "last_ts_us long, last_event_id long, last_type string"

@@ -61,7 +61,7 @@ def test_edge_cases_engine_eq_oracle(text):
 
 def test_strip_removes_all_escapes():
     text, _ = datagen.gen_doc(7)
-    s = ansi.strip_ansi(text)
+    s = ansi.classify_and_strip(text)[0]
     assert "\x1b" not in s
     assert not any(0x80 <= ord(c) <= 0x9F for c in s)
 
@@ -85,13 +85,14 @@ def test_severity_order_and_counts():
 
 def test_editing_ops_unit():
     # CSI @ insert, C forward, D back, K clear, P delete, X erase
-    assert ansi.build_line("abdef\x1b[3D\x1b[@c\x1b[3C") == "abcdef"
-    assert ansi.build_line("abcZZZ\x1b[3D\x1b[3P") == "abc"
-    assert ansi.build_line("abcdef\x1b[4D\x1b[2X") == "ab  ef"
-    assert ansi.build_line("abcdefxy\x08\x08\x1b[K") == "abcdef"
-    assert ansi.build_line("junk\rgood") == "good"
-    assert ansi.build_line("ab\x1b[5Cz") == "ab     z"
-    assert ansi.build_line("hello\x1b[2G_") == "h_llo"
+    assert (ansi.build_line_counted("abdef\x1b[3D\x1b[@c\x1b[3C")[0]
+            == "abcdef")
+    assert ansi.build_line_counted("abcZZZ\x1b[3D\x1b[3P")[0] == "abc"
+    assert ansi.build_line_counted("abcdef\x1b[4D\x1b[2X")[0] == "ab  ef"
+    assert ansi.build_line_counted("abcdefxy\x08\x08\x1b[K")[0] == "abcdef"
+    assert ansi.build_line_counted("junk\rgood")[0] == "good"
+    assert ansi.build_line_counted("ab\x1b[5Cz")[0] == "ab     z"
+    assert ansi.build_line_counted("hello\x1b[2G_")[0] == "h_llo"
 
 
 # --- P5 / UTF-8 margin tests (SURVEY §7 risk register) --------------------
@@ -124,9 +125,9 @@ def test_p5_gr_and_eod_margins_engine_eq_oracle(text):
 def test_p5_gr_chars_survive_strip_and_replay():
     # GR chars are kept by the strip (they are data, not control) and
     # flow through the LineBuilder replay unchanged
-    s = ansi.strip_ansi("\x1b[31m\xa0caf\xe9\xff\x1b[0m")
+    s = ansi.classify_and_strip("\x1b[31m\xa0caf\xe9\xff\x1b[0m")[0]
     assert s == "\xa0caf\xe9\xff"
-    assert ansi.build_line("x\xa0y\x08z") == "x\xa0z"
+    assert ansi.build_line_counted("x\xa0y\x08z")[0] == "x\xa0z"
 
 
 @pytest.mark.parametrize("text", [
@@ -138,6 +139,8 @@ def test_p5_gr_chars_survive_strip_and_replay():
     "alice@box:~/w$ a\x1b\x7fb\n",
     "alice@box:~/w$ a\x1b\xffb\n",
     "alice@box:~/w$ x\x1b\x9b1Cy\n",
+    # an editing CSI led by the C1 byte must take the replay walk
+    "alice@box:~/w$ abc\x9b2Dx",
     # multi-param / malformed params on editing finals: leading numeric
     # parameter + one warning, never a ValueError (ADVICE r3 low)
     "alice@box:~/w$ ab\x1b[1;5Ccd\n",

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from console_log_parser_spark.operators.decontam import (
-    contamination_counts, decontaminate, word_ngrams)
+    contamination_counts, word_ngrams)
 
 
 @pytest.fixture(scope="module")
@@ -35,13 +35,6 @@ def test_contamination_counts(corpora):
            for r in contamination_counts(docs, bench, n=3).collect()}
     # bench grams: {"z b c","b c d","c d e","d e m"}
     assert got == {1: 2, 3: 1}
-
-
-def test_decontaminate_drops_flagged_only(corpora):
-    docs, bench = corpora
-    kept = sorted(r["doc_id"]
-                  for r in decontaminate(docs, bench, n=3).collect())
-    assert kept == [2, 4, 5]
 
 
 def test_duplicate_gram_in_doc_counted_once(spark):

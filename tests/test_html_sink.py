@@ -4,7 +4,6 @@ sink."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from console_log_parser_spark.sinks import html as hs
 
@@ -90,7 +89,7 @@ def test_non_sgr_sequences_dropped():
     assert out == "abcd"
 
 
-def test_render_stage_and_index(spark, tmp_path):
+def test_render_stage_and_index(spark):
     from console_log_parser_spark.operators.parse import encode_string_lists
     import pyarrow as pa
     texts = ["hello \x1b[32mgreen\x1b[0m world",
@@ -112,11 +111,3 @@ def test_render_stage_and_index(spark, tmp_path):
     assert "&amp; &lt;tag&gt;" in rows["d2"]["html"]
     assert rows["d2"]["title"] is None
     assert "<title>untitled</title>" in rows["d2"]["html"]
-    out = str(tmp_path / "html_out")
-    hs.write_html_sink(pages, out)
-    idx = spark.read.parquet(f"{out}/index")
-    assert idx.count() == 3
-    assert set(r["path"] for r in idx.collect()) == {
-        "sink_a/d0.html", "sink_a/d1.html", "sink_b/d2.html"}
-    back = spark.read.parquet(f"{out}/pages")
-    assert back.filter(F.col("sink") == "sink_a").count() == 2

@@ -1,6 +1,6 @@
 """Multimodal binary-column operators: container round trip, feature
-extraction vs pure recomputation, thumbnail pooling, frame sampling,
-and the real-codec stub gate."""
+extraction vs pure recomputation, thumbnail pooling and frame
+sampling."""
 from __future__ import annotations
 
 import numpy as np
@@ -35,12 +35,6 @@ def test_payload_deterministic():
     assert a.dtype == np.uint8
     # different docs differ
     assert not (a == mm.payload_bytes(43, 100)).all()
-
-
-def test_library_stub_raises():
-    if mm._PILImage is None:
-        with pytest.raises(NotImplementedError):
-            mm.decode_with_library(b"\x89PNG...")
 
 
 @pytest.fixture(scope="module")
@@ -93,42 +87,3 @@ def test_frame_sampling(spark, media_df):
     for doc_id, idxs in by_doc.items():
         nf = 2 + doc_id % 6
         assert sorted(idxs) == list(range(0, nf, 2))
-
-def test_decode_ppm_native_p6_and_p5_with_comment():
-    import numpy as np
-
-    from console_log_parser_spark.operators import multimodal as mm
-    rgb = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    blob = b"P6\n# a comment\n3 2\n255\n" + rgb.tobytes()
-    out = mm.decode_ppm(blob)
-    assert out.shape == (2, 3, 3) and (out == rgb).all()
-    gray = np.arange(6, dtype=np.uint8).reshape(2, 3)
-    blob5 = b"P5 3 2 255 " + gray.tobytes()
-    out5 = mm.decode_ppm(blob5)
-    assert out5.shape == (2, 3) and (out5 == gray).all()
-    # decode_with_library dispatches on the magic without PIL
-    assert (mm.decode_with_library(blob) == rgb).all()
-
-
-def test_decode_bmp_native_24bit_bottom_up():
-    import struct
-
-    import numpy as np
-
-    from console_log_parser_spark.operators import multimodal as mm
-    w, h = 3, 2
-    rgb = np.arange(w * h * 3, dtype=np.uint8).reshape(h, w, 3)
-    stride = (w * 3 + 3) & ~3
-    rows = bytearray()
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = rgb[y][..., ::-1].tobytes()  # BGR
-        rows += row + b"\x00" * (stride - len(row))
-    off = 14 + 40
-    header = (b"BM" + struct.pack("<IHHI", off + len(rows), 0, 0, off)
-              + struct.pack("<Iii", 40, w, h)
-              + struct.pack("<HH", 1, 24)
-              + struct.pack("<IIiiII", 0, len(rows), 2835, 2835, 0, 0))
-    blob = header + bytes(rows)
-    out = mm.decode_bmp(blob)
-    assert out.shape == (h, w, 3) and (out == rgb).all()
-    assert (mm.decode_with_library(blob) == rgb).all()

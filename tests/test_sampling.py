@@ -4,7 +4,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from console_log_parser_spark.operators.sampling import (
-    bucket_bp, deterministic_sample, weighted_mix)
+    bucket_bp, deterministic_sample)
 
 
 def _docs(spark, n=2000):
@@ -28,33 +28,6 @@ def test_sample_deterministic_and_partition_invariant(spark):
     assert set(a) <= c
 
 
-def test_weighted_mix_matches_per_stratum_sampling(spark):
-    df = _docs(spark)
-    rates = spark.createDataFrame(
-        [("0", 1000), ("1", 5000)], "source string, rate_bp int")
-    got = sorted(r["doc_id"] for r in
-                 weighted_mix(df, rates).collect())
-    want = []
-    for src, bp in (("0", 1000), ("1", 5000)):
-        want += [r["doc_id"] for r in deterministic_sample(
-            df.filter(F.col("source") == src), bp).collect()]
-    assert got == sorted(want)
-    # stratum "2" is unlisted -> rate 0 -> fully dropped
-    assert not [d for d in got if int(d[1:]) % 3 == 2]
-
-
-def test_mix_plan_is_map_side_only(spark):
-    # the fact side must not shuffle: broadcast dim + filter only
-    df = _docs(spark)
-    rates = spark.createDataFrame(
-        [("0", 1000)], "source string, rate_bp int")
-    plan = (weighted_mix(df, rates)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastHashJoin" in plan
-    assert "ShuffleExchange" not in plan.replace(
-        "BroadcastExchange", "")
-
-
 def test_bucket_portable_value(spark):
     # pin the md5-prefix bucket against an independently computed value
     import hashlib
@@ -64,35 +37,6 @@ def test_bucket_portable_value(spark):
            .collect()[0])
     exp = int(hashlib.md5(b"mix42d7").hexdigest()[:8], 16) % 10000
     assert row["b"] == exp
-
-
-def test_epoch_shuffle_partition_order_is_global_order(spark):
-    # the scale path's contract: reading the range-partitioned, sorted
-    # output in partition order equals a global orderBy on the key
-    from console_log_parser_spark.operators.sampling import (
-        epoch_key, epoch_shuffle)
-    df = _docs(spark, 500)
-    shuffled = epoch_shuffle(df, epoch=1)
-    by_partition = [r["doc_id"] for r in shuffled.collect()]
-    want = [r["doc_id"] for r in
-            df.withColumn("k", epoch_key(1, F.col("doc_id")))
-              .orderBy("k", "doc_id").collect()]
-    assert by_partition == want
-    # no global single-partition sort in the plan: range exchange only
-    plan = shuffled._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-
-
-def test_epoch_shuffle_deterministic_and_epoch_sensitive(spark):
-    from console_log_parser_spark.operators.sampling import epoch_shuffle
-    df = _docs(spark, 300)
-    e1a = [r["doc_id"] for r in epoch_shuffle(df, 1).collect()]
-    e1b = [r["doc_id"] for r in
-           epoch_shuffle(df.repartition(7), 1).collect()]
-    e2 = [r["doc_id"] for r in epoch_shuffle(df, 2).collect()]
-    assert e1a == e1b          # deterministic under repartition/retry
-    assert e1a != e2           # a new epoch re-permutes
-    assert sorted(e1a) == sorted(e2)  # ... the same rows
 
 
 def _skewed(spark):
@@ -146,18 +90,3 @@ def test_temperature_rates_integer_exact(spark):
     # perfect squares make the sqrt exact: rates are sqrt-proportional
     assert exp["a"][2] == 2500 and exp["b"][2] == 5000
 
-
-def test_temperature_mix_equals_per_stratum_sampling(spark):
-    from console_log_parser_spark.operators.sampling import (
-        deterministic_sample, temperature_mix, temperature_rates)
-    df = _skewed(spark)
-    got = sorted(r["doc_id"] for r in temperature_mix(df).collect())
-    rates = {r["source"]: r["rate_bp"]
-             for r in temperature_rates(df).collect()}
-    want = []
-    for s, bp in rates.items():
-        want += [r["doc_id"] for r in deterministic_sample(
-            df.filter(F.col("source") == s), int(bp)).collect()]
-    assert got == sorted(want)
-    # the rarest stratum survives complete
-    assert len([d for d in got if d.startswith("f")]) == 4

@@ -6,7 +6,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from console_log_parser_spark.sinks.shards import (
-    assign_shards, shard_manifest, write_shards)
+    assign_shards, shard_manifest)
 
 
 def _docs(spark, n=60, parts=7):
@@ -42,24 +42,3 @@ def test_manifest_totals_and_checksum_order_invariance(spark):
                         8).collect()
     assert sorted(map(tuple, m)) == sorted(map(tuple, m2))
 
-
-def test_write_shards_roundtrip_manifest_attests_disk(spark, tmp_path):
-    df = _docs(spark)
-    path = str(tmp_path / "shards")
-    disk = write_shards(df, path, n_shards=8)
-    assert [tuple(r) for r in disk.collect()] == \
-        [tuple(r) for r in shard_manifest(df, 8).collect()]
-    # one file per shard: the pre-write repartition prevents the
-    # n_tasks * n_shards small-file explosion
-    files = [p for p in (tmp_path / "shards").rglob("*.parquet")]
-    assert len(files) == 8
-
-
-def test_reader_prunes_on_shard_partition(spark, tmp_path):
-    path = str(tmp_path / "shards")
-    write_shards(_docs(spark), path, n_shards=8)
-    pruned = spark.read.parquet(path).filter(F.col("shard") == 3)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(shard" in plan
-    got = {r["shard"] for r in pruned.collect()}
-    assert got == {3}
