@@ -31,8 +31,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from console_log_parser_spark.session import (  # noqa: E402
-    max_partition_bytes, ship_package)
+from console_log_parser_spark.session import ship_package  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

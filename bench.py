@@ -191,9 +191,10 @@ def main():
     # amplified tokens table (split sized so the parse scan gets
     # cpus*3 tasks). Leaking that split into the ad-hoc queries below
     # mis-shapes THEIR plans against much smaller inputs — at sf0.1 it
-    # shrank the bound to ~3 MB, flipping range_partitioned_lag's
-    # auto-narrow gate so events_asof_interleave paid a 32-way range
-    # exchange for a 0.8 MB input (r4 bench: 0.93 s vs 0.36 s). Ad-hoc
+    # shrank the bound to ~3 MB, flipping range_partitioned_lag's one
+    # size test (Catalyst's sizeInBytes x 4 against maxPartitionBytes)
+    # so events_asof_interleave paid a 32-way range exchange for a
+    # 0.8 MB input (r4 bench: 0.93 s vs 0.36 s). Ad-hoc
     # queries measure what a user running ONE query on a default
     # session pays, so restore the value the session started with
     # (not a hard-coded Spark default — the user may have configured

@@ -91,20 +91,21 @@ def _split_re(pat: re.Pattern) -> re.Pattern:
     return re.compile("(" + pat.pattern + ")", re.DOTALL)
 
 
-# grammar -> (its ESC-led twin, the grammar itself), each wrapped in ONE
-# capture group so re.split() returns [seg0, match0, ..., segN]
-_SPLIT = {
-    ANSI_RE: (_esc_split_re(_CSI_E, _OSC_E, _DCS_E, _EOD_CSI_E, _EOD_OSC_E,
-                            _EOD_DCS_E, _ESC2_E, _EOD_ESC_E),
-              _split_re(ANSI_RE)),
-    ANSI_COMPLETE_RE: (_esc_split_re(_CSI_E, _OSC_E, _DCS_E, _ESC2_E),
-                       _split_re(ANSI_COMPLETE_RE)),
-}
+# (ESC-led twin, the grammar itself) of ANSI_RE and of ANSI_COMPLETE_RE,
+# each wrapped in ONE capture group so re.split() returns
+# [seg0, match0, ..., segN]. Callers pass the pair itself: a dict keyed
+# by the compiled pattern would hash it on every call.
+_ANSI_SPLIT = (_esc_split_re(_CSI_E, _OSC_E, _DCS_E, _EOD_CSI_E, _EOD_OSC_E,
+                             _EOD_DCS_E, _ESC2_E, _EOD_ESC_E),
+               _split_re(ANSI_RE))
+_ANSI_COMPLETE_SPLIT = (_esc_split_re(_CSI_E, _OSC_E, _DCS_E, _ESC2_E),
+                        _split_re(ANSI_COMPLETE_RE))
 
 
-def _scan_sequences(text: str, pat) -> tuple[list, list]:
+def _scan_sequences(text: str, split: tuple) -> tuple[list, list]:
     """(segments, matches) — exactly ``pat.finditer(text)`` for ``pat``
-    ANSI_RE or ANSI_COMPLETE_RE.
+    ANSI_RE (``split`` = _ANSI_SPLIT) or ANSI_COMPLETE_RE
+    (``split`` = _ANSI_COMPLETE_SPLIT).
 
     One ``re.split`` returns both lists from a single C call: no Python
     loop, no Match objects. C1-free text (all of datagen's) is split by
@@ -120,7 +121,7 @@ def _scan_sequences(text: str, pat) -> tuple[list, list]:
     between match j-1 and match j (the adjacency test for app-mode
     spans is segments[j] == "").
     """
-    esc_led, full = _SPLIT[pat]
+    esc_led, full = split
     parts = (esc_led if _C1_ANY_RE.search(text) is None else full).split(text)
     return parts[0::2], parts[1::2]
 
@@ -246,7 +247,7 @@ def classify_and_strip(text: str) -> tuple[str, Counter, tuple[int, ...]]:
     hist: Counter = Counter()
     n_csi = n_osc = n_esc = n_dcs = n_sgr = n_c1 = 0
     n_app_mode = n_devstat = 0
-    segs, matches = _scan_sequences(text, ANSI_RE)
+    segs, matches = _scan_sequences(text, _ANSI_SPLIT)
     if not matches:  # no escapes at all: zero-copy
         return text, hist, (0, 0, 0, 0, 0, 0, 0, 0)
     stripped = "".join(segs)
@@ -481,7 +482,7 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
     # One split yields both the fast-path strip and the slow-path walk
     # inputs.
     segs, matches = _scan_sequences(
-        raw_line, ANSI_RE if at_eod else ANSI_COMPLETE_RE)
+        raw_line, _ANSI_SPLIT if at_eod else _ANSI_COMPLETE_SPLIT)
     # Fast path: no complete editing CSI (a match led by "ESC [" or by
     # the C1 CSI byte whose last char is an editing final IS one — a
     # truncated CSI can never end in [@CDGKPX] or it would have

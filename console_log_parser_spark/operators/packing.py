@@ -31,14 +31,12 @@ from pyspark.sql import functions as F
 
 
 def global_prefix_sum(df: DataFrame, order_cols: list[str],
-                      value_col: str, out_col: str,
-                      num_partitions: int | None = None) -> DataFrame:
+                      value_col: str, out_col: str) -> DataFrame:
     """INCLUSIVE running sum of ``value_col`` under the global order of
     ``order_cols`` (which must be a unique key tuple), with no
-    single-partition sort. Output schema = input + ``out_col``."""
-    spark = df.sparkSession
-    n = (int(num_partitions) if num_partitions is not None else
-         int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    single-partition sort, over ``spark.sql.shuffle.partitions`` range
+    partitions. Output schema = input + ``out_col``."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ranged = (df.repartitionByRange(n, *order_cols)
               .withColumn("_pid", F.spark_partition_id()))
     in_part = Window.partitionBy("_pid").orderBy(*order_cols)
@@ -72,8 +70,8 @@ def global_prefix_sum(df: DataFrame, order_cols: list[str],
 
 
 def pack_sequences(docs: DataFrame, seq_len: int,
-                   id_col: str = "doc_id", n_tok_col: str = "n_tok",
-                   num_partitions: int | None = None) -> DataFrame:
+                   id_col: str = "doc_id",
+                   n_tok_col: str = "n_tok") -> DataFrame:
     """Per-document packing coordinates under concat-then-chunk:
     ``tok_end`` (exclusive global token offset), ``first_seq`` /
     ``last_seq`` (the fixed ``seq_len``-token windows the document's
@@ -83,7 +81,7 @@ def pack_sequences(docs: DataFrame, seq_len: int,
     keyed = docs.withColumn(
         "_okey", F.md5(F.col(id_col).cast("string")))
     cum = global_prefix_sum(keyed, ["_okey", id_col], n_tok_col,
-                            "tok_end", num_partitions)
+                            "tok_end")
     # all-INTEGER division (DIV), never float floor(); the one negative
     # operand case — an empty doc at global offset 0, where Spark's DIV
     # truncates toward zero but DuckDB's // floors — is pinned by the
@@ -99,8 +97,7 @@ def pack_sequences(docs: DataFrame, seq_len: int,
 
 
 def grouped_rank(df: DataFrame, group_col: str, order_cols: list[str],
-                 out_col: str,
-                 num_partitions: int | None = None) -> DataFrame:
+                 out_col: str) -> DataFrame:
     """PER-GROUP 1-based rank under the order of ``order_cols``
     (a unique key tuple within the group), with neither an
     unpartitioned window nor a single task per group — the
@@ -116,10 +113,10 @@ def grouped_rank(df: DataFrame, group_col: str, order_cols: list[str],
        under range partitioning (each partition holds a contiguous
        group range) — get their exclusive prefix within the group via
        the broadcast triangular join, and broadcast back.
+
+    The width P is ``spark.sql.shuffle.partitions``.
     """
-    spark = df.sparkSession
-    n = (int(num_partitions) if num_partitions is not None else
-         int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ranged = (df.repartitionByRange(n, group_col, *order_cols)
               .withColumn("_pid", F.spark_partition_id()))
     in_part = Window.partitionBy("_pid", group_col).orderBy(*order_cols)
@@ -158,8 +155,7 @@ def grouped_rank(df: DataFrame, group_col: str, order_cols: list[str],
 
 def length_bucket_batches(docs: DataFrame, bucket_width: int = 64,
                           batch_size: int = 32, id_col: str = "doc_id",
-                          n_col: str = "n_tok",
-                          num_partitions: int | None = None) -> DataFrame:
+                          n_col: str = "n_tok") -> DataFrame:
     """Length-bucketed training batches with padding-waste telemetry —
     the dynamic-batching layout that pads each batch only to ITS OWN
     longest member instead of the corpus maximum. Documents are
@@ -179,8 +175,7 @@ def length_bucket_batches(docs: DataFrame, bucket_width: int = 64,
              .withColumn("_okey", F.md5(F.col(id_col).cast("string")))
              .withColumn("bucket", F.expr(
                  f"CAST({n_col} DIV {bucket_width} AS BIGINT)")))
-    ranked = grouped_rank(keyed, "bucket", ["_okey", id_col], "_rn",
-                          num_partitions)
+    ranked = grouped_rank(keyed, "bucket", ["_okey", id_col], "_rn")
     return (ranked
             .withColumn("batch_id", F.expr(
                 f"CAST((_rn - 1) DIV {batch_size} AS BIGINT)"))

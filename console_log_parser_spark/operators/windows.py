@@ -24,44 +24,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..session import max_partition_bytes
 
-# UnsafeRow layout constants for the fixed-width in-memory bound:
-# every field occupies one 8-byte word, preceded by one 8-byte null
-# bitset word per 64 fields. Variable-width types (strings, arrays,
-# maps, structs, large decimals) append to a variable region whose
-# size the schema cannot bound — those return None (no bound).
-_FIXED_WIDTH_TYPES = (T.BooleanType, T.ByteType, T.ShortType,
-                      T.IntegerType, T.LongType, T.FloatType,
-                      T.DoubleType, T.DateType, T.TimestampType,
-                      T.TimestampNTZType)
-
-
-def _unsafe_row_width(schema: T.StructType) -> int | None:
-    """Exact per-row in-memory (UnsafeRow) size for an all-fixed-width
-    schema, or None when any field is variable-width."""
-    for f in schema.fields:
-        if isinstance(f.dataType, T.DecimalType) and f.dataType.precision <= 18:
-            continue  # compact decimal packs into the 8-byte word
-        if not isinstance(f.dataType, _FIXED_WIDTH_TYPES):
-            return None
-    n = len(schema.fields)
-    return 8 * ((n + 63) // 64) + 8 * n
-
-
 # logical-plan nodes whose full execution costs no more than the scan
-# itself — the only lineages the ambiguous-band row probe may run
-_PROBE_CHEAP_NODES = frozenset(
+# itself: a lineage of only these may be merged narrowly by coalesce(1)
+_SCAN_ONLY_NODES = frozenset(
     {"Project", "Filter", "Relation", "LocalRelation", "Range"})
 
 
-def _probe_cheap_plan(df: DataFrame) -> bool:
+def _is_scan_only(df: DataFrame) -> bool:
     """True when the optimized logical plan is a bare
-    scan/project/filter lineage, so an eager ``count()`` costs one
+    scan/project/filter lineage, so pulling it into one task costs one
     bounded scan and nothing else. Any other node (Join, Aggregate,
-    Generate, Union, ...) makes the probe re-run real compute."""
+    Generate, Union, ...) would move real compute into that task."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:
@@ -71,14 +47,13 @@ def _probe_cheap_plan(df: DataFrame) -> bool:
         if not node:
             continue
         name = node.split(" ", 1)[0].split("[", 1)[0]
-        if name and name not in _PROBE_CHEAP_NODES:
+        if name and name not in _SCAN_ONLY_NODES:
             return False
     return True
 
 
 def range_partitioned_lag(df: DataFrame, order_cols: list[str],
-                          value_col: str, out_col: str,
-                          num_partitions: int | None = None) -> DataFrame:
+                          value_col: str, out_col: str) -> DataFrame:
     """``lag(value_col) OVER (ORDER BY order_cols)`` with global-order
     semantics but no single-partition sort.
 
@@ -86,86 +61,37 @@ def range_partitioned_lag(df: DataFrame, order_cols: list[str],
     (the ``order_cols`` tuple) is unique per row and ``value_col`` is
     non-null. Adds (then drops) helper columns; output schema is the
     input schema plus ``out_col``.
+
+    Width: one partition when Catalyst's size estimate, times a 4x
+    decompression factor, fits ``spark.sql.files.maxPartitionBytes``;
+    otherwise the session's ``spark.sql.shuffle.partitions``. A frame
+    that expands more than 4x over its estimate, such as a highly
+    compressible cached frame, is sized by the same rule.
     """
     spark = df.sparkSession
-    if num_partitions is None:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        # Auto-narrow for small inputs, the same decision AQE's
-        # partition coalescing makes for shuffles: when the input
-        # provably fits one comfortable partition, a 32-way range
-        # exchange is pure overhead — the sampling pass, per-partition
-        # sorts and two boundary broadcasts cost more than the single
-        # sort they avoid. Three tiers, cheapest signal first:
-        # Catalyst rowCount stats (exact semantic size, no job), then
-        # the compressed-byte estimate with a 4x decompression safety
-        # factor (no job), then — only inside the ambiguous band,
-        # whose width caps the job's cost — an exact row-count probe
-        # for fixed-width schemas. At scale the estimate exceeds every
-        # bound and the range path is taken unchanged with zero probe
-        # jobs; an estimate failure falls back to the scale-safe
-        # width, never to the single partition.
-        try:
-            stats = df._jdf.queryExecution().optimizedPlan().stats()
-            est = int(stats.sizeInBytes())
-            bound = max_partition_bytes(spark)
-            if stats.rowCount().isDefined():
-                # rowCount-backed stats (Range, LocalRelation,
-                # materialized cache, CBO): the row count is free. For
-                # a fixed-width schema, rows * UnsafeRow width is the
-                # EXACT sort-buffer size — gate on that, not on
-                # sizeInBytes, which for a materialized cache is the
-                # COMPRESSED columnar size (r5 review finding: an
-                # RLE-friendly cached frame could report 100 MB yet
-                # sort as 500 MB). Var-width schemas keep the 4x
-                # factor for the same reason.
-                rows = int(stats.rowCount().get())
-                w = _unsafe_row_width(df.schema)
-                if w is not None:
-                    if rows * w <= bound:
-                        n = 1
-                elif est * 4 <= bound:
-                    n = 1
-            elif est * 4 <= bound:
-                # 4x decompression safety factor (ADVICE r3): a scan
-                # estimate is COMPRESSED file size, and parquet
-                # commonly decompresses to several times that in row
-                # form — a borderline input must take the scale-safe
-                # range path, not a single-task global sort
-                # (spill/OOM risk).
-                n = 1
-            elif est <= bound:
-                # Ambiguous band: the compressed bytes fit one
-                # partition but 4x-decompressed might not. For an
-                # all-fixed-width schema the in-memory size is EXACTLY
-                # rows * UnsafeRow width — count the rows and gate on
-                # that. The probe is a real (bounded) job, the same
-                # trade AQE makes: its scan cost is capped by the band
-                # itself (compressed input <= maxPartitionBytes), so
-                # it is data-size-independent — at 100 TB the estimate
-                # exceeds the band and the probe never fires.
-                # Var-width schemas (strings) skip the probe: no row
-                # count bounds their decompressed size. So do plans
-                # with compute above the scan (joins, aggregates,
-                # explodes): df.count() would execute that whole
-                # upstream once just to pick a width — only a bare
-                # scan/project/filter lineage is cheap enough to probe
-                # (r5 review finding).
-                w = _unsafe_row_width(df.schema)
-                if (w is not None
-                        and _probe_cheap_plan(df)
-                        and df.count() * w <= bound):
-                    n = 1
-        except Exception:
-            pass
-    else:
-        n = int(num_partitions)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # Auto-narrow for small inputs, the same decision AQE's partition
+    # coalescing makes for shuffles: when the input fits one
+    # comfortable partition, a wide range exchange is pure overhead —
+    # the sampling pass, per-partition sorts and two boundary
+    # broadcasts cost more than the single sort they avoid. The
+    # estimate is COMPRESSED file size, and parquet commonly
+    # decompresses to several times that in row form, hence the 4x
+    # factor. At scale the estimate exceeds the bound and the range
+    # path is taken; an estimate failure also keeps the range path,
+    # never the single partition.
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+        if est * 4 <= max_partition_bytes(spark):
+            n = 1
+    except Exception:
+        pass
     if n == 1:
         # single-partition fast path: one range partition IS the global
         # order — the in-partition lag is already exact, and the
         # boundary machinery (lasts aggregate + two broadcast jobs)
-        # would only fix a first row that has no predecessor. Callers
-        # pass num_partitions=1 for known-small inputs; the default
-        # stays the shuffle width.
+        # would only fix a first row that has no predecessor.
         # coalesce(1), not repartition(1), when the lineage is a bare
         # scan/project/filter: the narrow merge skips the exchange
         # entirely (the window's own sort orders the rows anyway) —
@@ -173,7 +99,7 @@ def range_partitioned_lag(df: DataFrame, order_cols: list[str],
         # For any richer lineage keep repartition(1): coalesce would
         # pull the upstream compute (join/aggregate reduce side) into
         # the single task, which the exchange deliberately avoids.
-        if _probe_cheap_plan(df):
+        if _is_scan_only(df):
             one = (df.coalesce(1)
                    .withColumn("_pid", F.spark_partition_id()))
         else:

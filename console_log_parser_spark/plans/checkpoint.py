@@ -12,10 +12,12 @@ partition overwrite so committed batches' directories are never
 touched. Per-batch row/token counts come from one Observation of
 conditional sums on that same job; after the write each batch commits
 a JSON manifest (tmp-file + atomic rename). On restart, committed
-batches are skipped; partially-written uncommitted batch directories
-are deleted and re-run, making the whole job idempotent. Sink-side
-this mirrors what an Iceberg snapshot commit gives us (SURVEY.md §7
-plan B: parquet + JSON manifest shim).
+batches are skipped; every ``batch=<i>`` directory without a committed
+manifest (a killed call's partial write, or a batch of a killed run cut
+for more batches) is deleted before anything is written or read back,
+and the uncommitted batches re-run, making the whole job idempotent.
+Sink-side this mirrors what an Iceberg snapshot commit gives us
+(SURVEY.md §7 plan B: parquet + JSON manifest shim).
 
 Trade-off of the single write: a kill mid-call loses every batch of
 that call, not just one — none of them has a manifest yet, so a
@@ -39,7 +41,6 @@ skipped batches cost nothing.
 """
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -109,14 +110,19 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
     total_rows = sum(m["rows"] for m in committed.values())
     total_tokens = sum(m["tokens"] for m in committed.values())
 
+    routed_dir = os.path.join(cfg.out_dir, "routed")
+    # what no manifest vouches for, before any write or read-back: batch
+    # dirs without a committed manifest (a wider killed run's
+    # batch >= n_batches included), and the staging dir a killed
+    # dynamic-overwrite write leaves behind
+    if os.path.isdir(routed_dir):
+        for name in os.listdir(routed_dir):
+            if (name.startswith(".spark-staging-")
+                    or (name.startswith("batch=")
+                        and int(name[len("batch="):]) not in skipped)):
+                shutil.rmtree(os.path.join(routed_dir, name))
+
     if todo:
-        routed_dir = os.path.join(cfg.out_dir, "routed")
-        # uncommitted partial writes: batch dirs, and the staging dir a
-        # killed dynamic-overwrite write leaves behind
-        for d in [os.path.join(routed_dir, f"batch={b}") for b in todo] + \
-                glob.glob(os.path.join(routed_dir, ".spark-staging-*")):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
         logs = read_tokens(spark, cfg.tokens_table
                            or f"{cfg.in_dir}/tokenized_logs.parquet")
         routes = spark.read.parquet(f"{cfg.in_dir}/route_metadata.parquet")
@@ -152,6 +158,6 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
               "rows": total_rows, "tokens": total_tokens,
               "complete": len(todo) + len(skipped) == n_batches}
     if result["complete"]:
-        routed_back = spark.read.parquet(f"{cfg.out_dir}/routed")
+        routed_back = spark.read.parquet(routed_dir)
         agg_ops.write_aggregates(routed_back, cfg.out_dir)
     return result

@@ -244,24 +244,29 @@ _C1_FREE_EDGES = [
 ]
 
 
-@pytest.mark.parametrize("pat", [ansi.ANSI_RE, ansi.ANSI_COMPLETE_RE],
-                         ids=["full", "complete"])
+_PAT_SPLITS = pytest.mark.parametrize(
+    "pat,split", [(ansi.ANSI_RE, ansi._ANSI_SPLIT),
+                  (ansi.ANSI_COMPLETE_RE, ansi._ANSI_COMPLETE_SPLIT)],
+    ids=["full", "complete"])
+
+
+@_PAT_SPLITS
 @pytest.mark.parametrize("text", _C1_FREE_EDGES)
-def test_scan_sequences_equals_finditer(pat, text):
+def test_scan_sequences_equals_finditer(pat, split, text):
     assert ansi._C1_ANY_RE.search(text) is None
-    assert ansi._scan_sequences(text, pat) == _finditer_scan(text, pat)
+    assert ansi._scan_sequences(text, split) == _finditer_scan(text, pat)
 
 
-@pytest.mark.parametrize("pat", [ansi.ANSI_RE, ansi.ANSI_COMPLETE_RE],
-                         ids=["full", "complete"])
-def test_scan_sequences_equals_finditer_on_synthetic(pat):
+@_PAT_SPLITS
+def test_scan_sequences_equals_finditer_on_synthetic(pat, split):
     for i in range(200):
         text, _ = datagen.gen_doc(i)
         if ansi._C1_ANY_RE.search(text) is not None:
             continue
-        assert ansi._scan_sequences(text, pat) == _finditer_scan(text, pat)
+        assert ansi._scan_sequences(text, split) == _finditer_scan(text,
+                                                                   pat)
         for line in text.split("\n"):
-            assert (ansi._scan_sequences(line, pat)
+            assert (ansi._scan_sequences(line, split)
                     == _finditer_scan(line, pat))
 
 

@@ -3,8 +3,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import functions as F
-
 from console_log_parser_spark.operators.boilerplate import (
     boilerplate_grams, boilerplate_stats, doc_gram_hashes)
 

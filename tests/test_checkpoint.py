@@ -4,6 +4,7 @@ row)."""
 import importlib.util
 import json
 import os
+import shutil
 import sys
 
 import pyarrow as pa
@@ -166,6 +167,22 @@ def test_resume_with_other_n_batches_is_refused(spark, small_dataset,
     with pytest.raises(ValueError, match="n_batches"):
         run_with_checkpoints(spark, cfg, n_batches=3)
     assert _snapshot(out) == before
+
+
+def test_resume_deletes_batches_without_manifest(spark, small_dataset,
+                                                 tmp_path):
+    """A 16-batch run killed before any manifest was committed leaves
+    routed batch=0..15; a resume cut for 8 batches must not read back
+    batch=8..15."""
+    out = str(tmp_path / "ckpt")
+    cfg = PipelineConfig(in_dir=small_dataset, out_dir=out)
+    run_with_checkpoints(spark, cfg, n_batches=16)
+    shutil.rmtree(f"{out}/_manifests")
+    r = run_with_checkpoints(spark, cfg, n_batches=8)
+    assert r["complete"] and r["rows"] == 300
+    assert spark.read.parquet(f"{out}/routed").count() == 300
+    summ = spark.read.parquet(f"{out}/agg_sink_summary")
+    assert summ.groupBy().sum("n_rows").collect()[0][0] == 300
 
 
 def test_manifest_counts_match_routed_table(spark, small_dataset, tmp_path):

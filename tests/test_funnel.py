@@ -4,7 +4,6 @@ events, repeats), plus the one-exchange plan shape."""
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from console_log_parser_spark.operators.funnel import funnel_times
 

@@ -3,8 +3,6 @@ reference's convert_csi, terminal2html.py:255-355) and the page/index
 sink."""
 from __future__ import annotations
 
-import pytest
-
 from console_log_parser_spark.sinks import html as hs
 
 

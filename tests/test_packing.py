@@ -10,7 +10,13 @@ from pyspark.sql import functions as F
 
 from console_log_parser_spark.operators.packing import (
     global_prefix_sum, pack_sequences)
-from tests.test_windows import _has_unpartitioned_window
+from tests.test_windows import _has_unpartitioned_window, session_conf
+
+
+def _width(spark, n_parts):
+    """The session shuffle width the range primitives read."""
+    return session_conf(spark,
+                        {"spark.sql.shuffle.partitions": str(n_parts)})
 
 
 def _df(spark, vals):
@@ -24,8 +30,9 @@ def test_prefix_sum_matches_naive_window(spark, n_parts):
     rng = random.Random(7)
     vals = [rng.randint(0, 50) for _ in range(300)]
     df = _df(spark, vals)
-    got = {r["doc_id"]: r["cum"] for r in global_prefix_sum(
-        df, ["doc_id"], "n_tok", "cum", n_parts).collect()}
+    with _width(spark, n_parts):
+        got = {r["doc_id"]: r["cum"] for r in global_prefix_sum(
+            df, ["doc_id"], "n_tok", "cum").collect()}
     w = Window.orderBy("doc_id")
     want = {r["doc_id"]: r["cum"] for r in
             df.withColumn("cum", F.sum("n_tok").over(w)).collect()}
@@ -35,8 +42,9 @@ def test_prefix_sum_matches_naive_window(spark, n_parts):
 def test_prefix_sum_zero_and_empty_partitions(spark):
     # zeros everywhere + more partitions than rows (empty partitions)
     df = _df(spark, [0, 0, 5, 0, 3])
-    got = {r["doc_id"]: r["cum"] for r in global_prefix_sum(
-        df, ["doc_id"], "n_tok", "cum", 16).collect()}
+    with _width(spark, 16):
+        got = {r["doc_id"]: r["cum"] for r in global_prefix_sum(
+            df, ["doc_id"], "n_tok", "cum").collect()}
     assert got == {0: 0, 1: 0, 2: 5, 3: 5, 4: 8}
 
 
@@ -46,8 +54,8 @@ def test_pack_sequences_matches_python_recompute(spark):
     vals = [rng.randint(0, 4000) for _ in range(200)]
     df = _df(spark, vals)
     got = {r["doc_id"]: (r["tok_end"], r["first_seq"], r["last_seq"])
-           for r in pack_sequences(df, 1000, "doc_id", "n_tok",
-                                   num_partitions=8).collect()}
+           for r in pack_sequences(df, 1000, "doc_id",
+                                   "n_tok").collect()}
     # independent recompute: same md5 order (hashlib hex == Spark md5)
     order = sorted(range(len(vals)),
                    key=lambda i: (hashlib.md5(str(i).encode())
@@ -64,8 +72,9 @@ def test_pack_sequences_matches_python_recompute(spark):
 
 def test_pack_sequences_no_unpartitioned_window(spark):
     df = _df(spark, [10] * 50)
-    out = pack_sequences(df, 16, "doc_id", "n_tok", num_partitions=4)
-    assert not _has_unpartitioned_window(out)
+    with _width(spark, 4):
+        out = pack_sequences(df, 16, "doc_id", "n_tok")
+        assert not _has_unpartitioned_window(out)
 
 
 def _len_df(spark, vals):
@@ -80,8 +89,9 @@ def test_grouped_rank_matches_naive_window(spark, n_parts):
     rng = random.Random(13)
     rows = [(i, rng.randint(0, 4)) for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id int, g int")
-    got = {(r["g"], r["doc_id"]): r["rn"] for r in grouped_rank(
-        df, "g", ["doc_id"], "rn", n_parts).collect()}
+    with _width(spark, n_parts):
+        got = {(r["g"], r["doc_id"]): r["rn"] for r in grouped_rank(
+            df, "g", ["doc_id"], "rn").collect()}
     w = Window.partitionBy("g").orderBy("doc_id")
     want = {(r["g"], r["doc_id"]): r["rn"] for r in
             df.withColumn("rn", F.row_number().over(w)).collect()}
@@ -95,7 +105,7 @@ def test_grouped_rank_skewed_group_spans_partitions(spark):
                                            for i in range(10)])
     df = spark.createDataFrame(rows, "doc_id int, g int")
     got = sorted(r["rn"] for r in grouped_rank(
-        df, "g", ["doc_id"], "rn", 8).filter("g = 0").collect())
+        df, "g", ["doc_id"], "rn").filter("g = 0").collect())
     assert got == list(range(1, 91))
 
 
@@ -110,7 +120,7 @@ def test_length_bucket_batches_matches_python_recompute(spark):
             r["pad_waste"])
            for r in length_bucket_batches(
                _len_df(spark, vals), bucket_width=64, batch_size=8,
-               n_col="n_chars", num_partitions=8).collect()}
+               n_col="n_chars").collect()}
     buckets = {}
     for i, v in enumerate(vals):
         buckets.setdefault(v // 64, []).append(
@@ -141,10 +151,11 @@ def test_length_batches_only_last_batch_short(spark):
 def test_length_batches_no_unpartitioned_window(spark):
     from console_log_parser_spark.operators.packing import (
         length_bucket_batches)
-    out = length_bucket_batches(_len_df(spark, [10] * 50),
-                                bucket_width=8, batch_size=4,
-                                n_col="n_chars", num_partitions=4)
-    assert not _has_unpartitioned_window(out)
+    with _width(spark, 4):
+        out = length_bucket_batches(_len_df(spark, [10] * 50),
+                                    bucket_width=8, batch_size=4,
+                                    n_col="n_chars")
+        assert not _has_unpartitioned_window(out)
 
 
 def test_grouped_rank_null_group_spanning_partitions(spark):
@@ -154,7 +165,7 @@ def test_grouped_rank_null_group_spanning_partitions(spark):
     from console_log_parser_spark.operators.packing import grouped_rank
     rows = [(i, None if i % 2 == 0 else "g") for i in range(200)]
     df = spark.createDataFrame(rows, "k long, grp string")
-    out = grouped_rank(df, "grp", ["k"], "rnk", num_partitions=8)
+    out = grouped_rank(df, "grp", ["k"], "rnk")
     for pred, n in (("grp IS NULL", 100), ("grp = 'g'", 100)):
         ranks = sorted(r["rnk"] for r in out.filter(pred).collect())
         assert ranks == list(range(1, n + 1)), pred

@@ -5,7 +5,6 @@ from collections import Counter
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from console_log_parser_spark.operators.sketch import (frequent_items,
                                                        mg_merge)

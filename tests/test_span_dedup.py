@@ -2,7 +2,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from console_log_parser_spark.operators.span_dedup import (
     span_dedup_stats, word_chunk_array)

@@ -3,8 +3,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import functions as F
-
 from console_log_parser_spark.operators.vocab import (
     US, bpe_learn, bpe_pair_counts, symbol_words, vocab_oov_stats)
 

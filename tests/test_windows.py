@@ -5,12 +5,36 @@ helper exists to remove)."""
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from console_log_parser_spark.operators.windows import range_partitioned_lag
+
+
+@contextmanager
+def session_conf(spark, conf: dict):
+    """Run the block under the session settings ``conf`` and restore
+    the old values afterwards."""
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def ranged_at(spark, n_parts):
+    """Session settings under which the lag takes the range path at
+    width ``n_parts``: the shuffle width, and a 16-byte
+    ``maxPartitionBytes`` that no input's estimate fits."""
+    return session_conf(spark, {
+        "spark.sql.shuffle.partitions": str(n_parts),
+        "spark.sql.files.maxPartitionBytes": "16"})
 
 
 def _naive_lag(df, order_cols, value_col, out_col):
@@ -33,11 +57,11 @@ def test_matches_global_window(spark, n_rows, n_parts):
           .select((F.col("id") % 10).alias("ts"),
                   F.col("id").alias("k"),
                   (F.col("id") % 3).alias("v")))
-    got = _rows(range_partitioned_lag(df, ["ts", "k"], "v", "prev",
-                                      num_partitions=n_parts),
-                ["ts", "k"], "prev")
-    want = _rows(_naive_lag(df, ["ts", "k"], "v", "prev"),
-                 ["ts", "k"], "prev")
+    with ranged_at(spark, n_parts):
+        got = _rows(range_partitioned_lag(df, ["ts", "k"], "v", "prev"),
+                    ["ts", "k"], "prev")
+        want = _rows(_naive_lag(df, ["ts", "k"], "v", "prev"),
+                     ["ts", "k"], "prev")
     assert got == want
 
 
@@ -46,9 +70,9 @@ def test_string_values_and_gap_partitions(spark):
     # partitions empty; the boundary lag must skip the gaps
     df = spark.createDataFrame(
         [(1, 1, "a"), (5, 2, "b"), (9, 3, "c")], "ts int, k int, v string")
-    got = _rows(range_partitioned_lag(df, ["ts", "k"], "v", "prev",
-                                      num_partitions=16),
-                ["ts", "k"], "prev")
+    with ranged_at(spark, 16):
+        got = _rows(range_partitioned_lag(df, ["ts", "k"], "v", "prev"),
+                    ["ts", "k"], "prev")
     assert got == [(1, 1, None), (5, 2, "a"), (9, 3, "b")]
 
 
@@ -120,75 +144,11 @@ def test_auto_narrows_small_input_to_single_partition(spark):
     assert got == want
 
 
-def _band_parquet(spark, tmp_path, with_string: bool):
-    """A parquet scan whose Catalyst byte estimate lands INSIDE the
-    ambiguous band (est <= bound < 4*est): compressed fits one
-    partition, 4x-decompressed would not. xxhash64 values defeat
-    dictionary/RLE so the file size tracks raw width."""
-    df = (spark.range(5000)
-          .select(F.col("id").alias("ts"),
-                  F.xxhash64("id").alias("k"),
-                  (F.xxhash64("id", F.lit(1)) % 100).alias("v")))
-    if with_string:
-        df = df.withColumn("v", F.concat(F.lit("s"), F.col("v")))
-    path = str(tmp_path / f"band_{int(with_string)}.parquet")
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    scan = spark.read.parquet(path)
-    est = int(scan._jdf.queryExecution().optimizedPlan()
-              .stats().sizeInBytes())
-    # bound: >= est (in band), >= rows * UnsafeRow width 32 (so the
-    # fixed-width probe passes), and < 4*est (still in band)
-    bound = max(est, 5000 * 32) + 1024
-    assert est <= bound < 4 * est, (est, bound)
-    return scan, bound
-
-
-@pytest.mark.parametrize("with_string,expect_range", [(False, False),
-                                                      (True, True)])
-def test_band_probe_gates_on_exact_rows_for_fixed_width(
-        spark, tmp_path, with_string, expect_range):
-    # ambiguous band (est <= bound < 4*est): an all-fixed-width schema
-    # is row-count-probed (rows * UnsafeRow width <= bound -> single
-    # partition); a var-width schema has no such bound and must stay
-    # on the scale-safe range path
-    scan, bound = _band_parquet(spark, tmp_path, with_string)
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(bound))
-    try:
-        out = range_partitioned_lag(scan, ["ts", "k"], "v", "prev")
-        plan = out._jdf.queryExecution().executedPlan().toString().lower()
-        assert ("rangepartitioning" in plan) == expect_range
-        got = _rows(out, ["ts", "k"], "prev")
-        want = _rows(_naive_lag(scan, ["ts", "k"], "v", "prev"),
-                     ["ts", "k"], "prev")
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-
-def test_unsafe_row_width():
-    from console_log_parser_spark.operators.windows import \
-        _unsafe_row_width
-    from pyspark.sql import types as T
-    fixed = T.StructType([T.StructField("a", T.LongType()),
-                          T.StructField("b", T.TimestampType()),
-                          T.StructField("c", T.IntegerType())])
-    assert _unsafe_row_width(fixed) == 8 + 3 * 8
-    var = T.StructType([T.StructField("a", T.LongType()),
-                        T.StructField("s", T.StringType())])
-    assert _unsafe_row_width(var) is None
-    wide = T.StructType([T.StructField(f"c{i}", T.LongType())
-                         for i in range(65)])
-    assert _unsafe_row_width(wide) == 16 + 65 * 8  # 2 bitset words
-
-
 def _auto_lag_is_ranged(spark, bound):
     """Run the auto-width lag over a 200-row input under a session
     maxPartitionBytes of ``bound``; check its rows and return whether
     it took the range path."""
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", bound)
-    try:
+    with session_conf(spark, {"spark.sql.files.maxPartitionBytes": bound}):
         df = (spark.range(200)
               .select((F.col("id") % 10).alias("ts"),
                       F.col("id").alias("k"),
@@ -200,8 +160,6 @@ def _auto_lag_is_ranged(spark, bound):
                      ["ts", "k"], "prev")
         assert got == want
         return "rangepartitioning" in plan
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def test_auto_keeps_range_path_when_estimate_exceeds_bound(spark):
@@ -218,16 +176,15 @@ def test_auto_narrows_under_a_suffixed_bound(spark):
 
 def test_narrow_path_coalesces_bare_scans_but_not_rich_plans(
         spark, tmp_path):
-    # bare scan/project lineage: the n=1 fast path must use the
-    # exchange-free narrow coalesce (r6 optimization) ...
+    # bare scan/project lineage: the single-partition path a small
+    # input takes must use the exchange-free narrow coalesce ...
     p = str(tmp_path / "scan.parquet")
     (spark.range(300)
      .select((F.col("id") % 7).alias("ts"), F.col("id").alias("k"),
              (F.col("id") % 2).alias("v"))
      .write.parquet(p))
     scan = spark.read.parquet(p)
-    out = range_partitioned_lag(scan, ["ts", "k"], "v", "prev",
-                                num_partitions=1)
+    out = range_partitioned_lag(scan, ["ts", "k"], "v", "prev")
     plan = out._jdf.queryExecution().executedPlan().toString().lower()
     # the narrow merge replaces the exchange outright
     assert "coalesce" in plan
@@ -241,8 +198,7 @@ def test_narrow_path_coalesces_bare_scans_but_not_rich_plans(
     # one task
     rich = (scan.groupBy("ts")
             .agg(F.max("k").alias("k"), F.min("v").alias("v")))
-    out2 = range_partitioned_lag(rich, ["ts", "k"], "v", "prev",
-                                 num_partitions=1)
+    out2 = range_partitioned_lag(rich, ["ts", "k"], "v", "prev")
     plan2 = out2._jdf.queryExecution().executedPlan().toString().lower()
     # the reduce side stays behind a single-partition EXCHANGE (AQE
     # plan text may mention coalesced shuffle reads, so assert on the
