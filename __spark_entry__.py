@@ -564,8 +564,7 @@ def doc_pack_sequences(spark, sf_dir):
     pre-tokenized length the documents table carries)."""
     from console_log_parser_spark.operators.packing import pack_sequences
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return (pack_sequences(docs, 2048, id_col="doc_id",
-                           n_tok_col="n_chars")
+    return (pack_sequences(docs, 2048, n_tok_col="n_chars")
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     "tok_end", "first_seq", "last_seq"))
 
@@ -861,7 +860,7 @@ def ann_matmul_top10(spark, sf_dir):
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     query = np.asarray(qrow[0], dtype=np.float64)
     top = similarity.cosine_topk_vectorized(
-        emb.filter(F.col("vec_id") != 0), query, k=10)
+        emb.filter(F.col("vec_id") != 0), query)
     labels = emb.select("vec_id", "label")
     return (top.join(F.broadcast(labels), "vec_id")
             .select("vec_id", "label", "score")
@@ -877,8 +876,7 @@ def embedding_neardup(spark, sf_dir):
     by tests/test_similarity.py at sf0.001 and sf0.01)."""
     from console_log_parser_spark.operators import similarity
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.neardup_lsh_pairs(emb, threshold=0.45,
-                                        l_tables=32, b_bits=4)
+    return similarity.neardup_lsh_pairs(emb)
 
 
 # --------------------------------------------------------------------------
@@ -911,7 +909,7 @@ def media_frame_sample(spark, sf_dir):
     """Video frame sampling (every 2nd frame) — the sampled-frame count
     and index sum have closed forms the oracle verifies."""
     from console_log_parser_spark.operators import multimodal
-    frames = multimodal.frame_sample_stage(_media(spark, sf_dir), every=2)
+    frames = multimodal.frame_sample_stage(_media(spark, sf_dir))
     return frames.agg(F.count("*").alias("n_sampled"),
                       F.sum("frame_idx").alias("sum_idx"),
                       F.countDistinct("doc_id").alias("n_videos"))
@@ -921,7 +919,7 @@ def media_thumbnails(spark, sf_dir):
     """Image thumbnails (4x4 average pool). Pixel math is pinned by
     pytest against a pure recomputation; here the driver checks shape."""
     from console_log_parser_spark.operators import multimodal
-    thumbs = multimodal.thumbnail_stage(_media(spark, sf_dir), grid=4)
+    thumbs = multimodal.thumbnail_stage(_media(spark, sf_dir))
     return (thumbs.select("doc_id", "media_type",
                           F.size("thumb").alias("thumb_cells"))
             .orderBy("doc_id"))
@@ -1094,7 +1092,7 @@ def doc_boilerplate(spark, sf_dir):
     from console_log_parser_spark.operators.boilerplate import (
         boilerplate_stats)
     docs = _t(spark, sf_dir, "documents")
-    return boilerplate_stats(docs, n=5, min_docs=2) \
+    return boilerplate_stats(docs, min_docs=2) \
         .withColumn("doc_id", F.col("doc_id").cast("long"))
 
 
@@ -1611,7 +1609,7 @@ def doc_winnow_sketch(spark, sf_dir):
     from console_log_parser_spark.operators.winnow import (
         winnow_sketch_stats)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (winnow_sketch_stats(docs, k=3, w=4)
+    return (winnow_sketch_stats(docs)
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     "n_words", "n_grams", "sketch_size",
                     "min_fp", "max_fp")
@@ -1645,8 +1643,7 @@ def doc_winnow_pairs(spark, sf_dir):
     from console_log_parser_spark.operators.winnow import (
         winnow_candidate_pairs)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (winnow_candidate_pairs(docs, k=3, w=4, max_df=8,
-                                   min_shared=2)
+    return (winnow_candidate_pairs(docs)
             .select(F.col("doc_a").cast("long").alias("doc_a"),
                     F.col("doc_b").cast("long").alias("doc_b"),
                     "n_shared")
@@ -1727,7 +1724,7 @@ def events_user_trigrams(spark, sf_dir):
     from console_log_parser_spark.operators.transitions import (
         user_trigrams)
     ev = _t(spark, sf_dir, "events")
-    return user_trigrams(ev, k=20)
+    return user_trigrams(ev)
 
 
 def doc_crossdup_minhash(spark, sf_dir):
@@ -1908,8 +1905,12 @@ def _vocab_growth_oracle(cps) -> str:
     """
 
 
-def _kmeans_oracle(k: int = 10, dim: int = 64, pack: int = 16,
-                   n_iters: int = 2, final_sql: str | None = None) -> str:
+# embedding_kmeans' configuration: seeds, embedding width, packed-argmin
+# multiplier (operators/cluster.PACK) and Lloyd iterations
+KMEANS_K, KMEANS_DIM, KMEANS_PACK, KMEANS_ITERS = 10, 64, 16, 2
+
+
+def _kmeans_oracle(final_sql: str | None = None) -> str:
     """DuckDB twin of embedding_kmeans: the same quantize/assign/
     floor-div-update chain as unrolled CTEs (one assign+update pair
     per Lloyd iteration, then the final assignment). ``final_sql``
@@ -1920,8 +1921,8 @@ def _kmeans_oracle(k: int = 10, dim: int = 64, pack: int = 16,
     def assign(ctab):
         return (
             f"SELECT v.vec_id, v.q, min((list_sum(list_transform("
-            f"range(1, {dim + 1}), i -> (v.q[i] - c.c[i]) * "
-            f"(v.q[i] - c.c[i])))) * {pack} + c.cid) AS comb "
+            f"range(1, {KMEANS_DIM + 1}), i -> (v.q[i] - c.c[i]) * "
+            f"(v.q[i] - c.c[i])))) * {KMEANS_PACK} + c.cid) AS comb "
             f"FROM qv v CROSS JOIN {ctab} c GROUP BY v.vec_id, v.q")
 
     parts = [
@@ -1929,25 +1930,25 @@ def _kmeans_oracle(k: int = 10, dim: int = 64, pack: int = 16,
         "x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q "
         "FROM embeddings)",
         f"c0 AS (SELECT vec_id AS cid, q AS c FROM qv "
-        f"WHERE vec_id < {k})",
+        f"WHERE vec_id < {KMEANS_K})",
     ]
-    for it in range(1, n_iters + 1):
+    for it in range(1, KMEANS_ITERS + 1):
         parts.append(f"a{it} AS ({assign(f'c{it - 1}')})")
         parts.append(
-            f"u{it} AS (SELECT comb % {pack} AS cid, t.i AS i, "
+            f"u{it} AS (SELECT comb % {KMEANS_PACK} AS cid, t.i AS i, "
             f"CAST(SUM(q[t.i]) AS BIGINT) AS s, COUNT(*) AS n "
-            f"FROM a{it} CROSS JOIN range(1, {dim + 1}) t(i) "
+            f"FROM a{it} CROSS JOIN range(1, {KMEANS_DIM + 1}) t(i) "
             f"GROUP BY 1, 2)")
         parts.append(
             f"c{it} AS (SELECT cid, list(CASE WHEN s >= 0 THEN s // n "
             f"ELSE -((-s + n - 1) // n) END ORDER BY i) AS c "
             f"FROM u{it} GROUP BY cid)")
-    parts.append(f"af AS ({assign(f'c{n_iters}')})")
+    parts.append(f"af AS ({assign(f'c{KMEANS_ITERS}')})")
     if final_sql is None:
         final_sql = (
-            f" SELECT CAST(comb % {pack} AS BIGINT) AS cluster_id, "
+            f" SELECT CAST(comb % {KMEANS_PACK} AS BIGINT) AS cluster_id, "
             f"COUNT(*)::BIGINT AS n_vecs, "
-            f"CAST(SUM(comb // {pack}) AS BIGINT) AS inertia, "
+            f"CAST(SUM(comb // {KMEANS_PACK}) AS BIGINT) AS inertia, "
             f"MIN(vec_id) AS min_vec_id "
             f"FROM af GROUP BY 1 ORDER BY 1")
     return ", ".join(parts) + final_sql
@@ -1972,7 +1973,7 @@ def doc_bloom_decontaminate(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 25 == 0)
     corpus = docs.filter(F.col("doc_id") % 25 != 0)
-    return (bloom_contamination(corpus, bench, n=3, m_bits=4096)
+    return (bloom_contamination(corpus, bench, m_bits=4096)
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     "n_grams", "n_bloom", "n_exact", "n_false_pos"))
 
@@ -2006,7 +2007,7 @@ def doc_semdedup(spark, sf_dir):
     from console_log_parser_spark.operators.semdedup import (
         semdedup_stats)
     emb = _t(spark, sf_dir, "embeddings")
-    return semdedup_stats(emb, k=10, n_iters=2).select(
+    return semdedup_stats(emb, k=10).select(
         F.col("cluster_id").cast("long").alias("cluster_id"),
         "n_vecs", "n_sim_pairs", "n_dups", "n_kept")
 
@@ -2036,7 +2037,7 @@ def ann_pq_top10(spark, sf_dir):
     only the 50 survivors join back for full vectors."""
     from console_log_parser_spark.operators.pq import ann_pq_topk
     emb = _t(spark, sf_dir, "embeddings")
-    return ann_pq_topk(emb, query_vec_id=0, k=10, shortlist=50)
+    return ann_pq_topk(emb, shortlist=50)
 
 
 def doc_tokenizer_fertility(spark, sf_dir):
@@ -2339,8 +2340,7 @@ def ann_ivfpq_top10(spark, sf_dir):
     from console_log_parser_spark.operators.pq import ann_pq_topk
     emb = _t(spark, sf_dir, "embeddings")
     cands = similarity.ann_ivf_candidates(emb, query_vec_id=0)
-    return ann_pq_topk(emb, query_vec_id=0, k=10, shortlist=50,
-                       candidates=cands)
+    return ann_pq_topk(emb, shortlist=50, candidates=cands)
 
 
 
@@ -2377,7 +2377,7 @@ def embedding_knn_join(spark, sf_dir):
     production raises b_bits ~ log2(n) to keep them O(1)."""
     from console_log_parser_spark.operators.similarity import (
         knn_join_lsh)
-    return knn_join_lsh(_t(spark, sf_dir, "embeddings"), k=3)
+    return knn_join_lsh(_t(spark, sf_dir, "embeddings"))
 
 
 
@@ -2558,7 +2558,7 @@ def doc_ngram_novelty(spark, sf_dir):
     from console_log_parser_spark.operators.dedup import (
         shingle_hash, shingles)
     docs = _t(spark, sf_dir, "documents")
-    ex = (shingles(docs, k=3)
+    ex = (shingles(docs)
           .select("doc_id",
                   shingle_hash(F.col("shingle")).alias("fp")))
     firsts = ex.groupBy("fp").agg(F.min("doc_id").alias("first_doc"))
@@ -2644,10 +2644,9 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             FROM s ORDER BY doc_id
         """,
         # unrolled Lloyd chain, integer throughout; see _kmeans_oracle
-        "embedding_kmeans": _kmeans_oracle(10, 64, 16, 2),
+        "embedding_kmeans": _kmeans_oracle(),
         # same Lloyd chain, final joins documents on doc_id == vec_id
-        "doc_cluster_profile": _kmeans_oracle(
-            10, 64, 16, 2, final_sql=_CLUSTER_PROFILE_FINAL),
+        "doc_cluster_profile": _kmeans_oracle(_CLUSTER_PROFILE_FINAL),
         # integer-cent arithmetic end to end — no float sum reaches
         # the hash gate; DuckDB // == Spark DIV on these non-negatives
         "q14_promo_effect": """
@@ -3552,8 +3551,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
         "pipeline_severity_hist": oracle_pipeline.severity_histogram_sql(sf),
         "pipeline_sink_summary": oracle_pipeline.sink_summary_sql(sf),
         "pipeline_seq_histogram": oracle_pipeline.seq_histogram_sql(sf),
-        "pipeline_top_commands": oracle_pipeline.top_commands_sql(k=5,
-                                                                  sf_dir=sf),
+        "pipeline_top_commands": oracle_pipeline.top_commands_sql(sf),
         # HTML sink aggregates: second independent renderer (kind-tagged
         # span stack over the char-FSM stream, oracle_html.py) ->
         # literal VALUES
@@ -4271,8 +4269,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             GROUP BY doc_id
             ORDER BY dsir_score DESC, doc_id LIMIT 20
         """,
-        "doc_semdedup": _kmeans_oracle(10, 64, 16, 2,
-                                       final_sql=_SEMDEDUP_FINAL),
+        "doc_semdedup": _kmeans_oracle(_SEMDEDUP_FINAL),
         "embedding_pq_codes": """
             WITH qv AS (
                 SELECT vec_id, list_transform(embedding,
@@ -4353,7 +4350,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
         # IVF cand prefix (floor+0.5 quant, similarity.py convention)
         # + PQ/ADC chain (round() quant, cluster.py convention) —
         # each half mirrors its own engine twin exactly
-        "ann_ivfpq_top10": similarity.oracle_ivf_cte_prefix(0) + """,
+        "ann_ivfpq_top10": similarity.oracle_ivf_cte_prefix() + """,
             qv AS (
                 SELECT vec_id, list_transform(embedding,
                     x -> CAST(round(CAST(x AS DOUBLE) * 1000)

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from console_log_parser_spark.operators.decontam import word_ngrams
 
 DEFAULT_M_BITS = 4096  # 128 32-bit words; production ~10 bits/gram
+GRAM_N = 3  # words per n-gram
 
 
 def _pos(gram: Column, offset: int, m_bits: int) -> Column:
@@ -52,9 +53,7 @@ def _pos(gram: Column, offset: int, m_bits: int) -> Column:
             .cast("long") % m_bits)
 
 
-def bloom_build(benchmark: DataFrame, n: int = 3,
-                m_bits: int = DEFAULT_M_BITS,
-                text_col: str = "text",
+def bloom_build(benchmark: DataFrame, m_bits: int = DEFAULT_M_BITS,
                 _grams: DataFrame | None = None) -> DataFrame:
     """(word_idx, bits): the m-bit filter over the benchmark's word
     n-grams as m/32 packed rows (32 bits per BIGINT word — see module
@@ -64,7 +63,7 @@ def bloom_build(benchmark: DataFrame, n: int = 3,
     the grams don't aggregate the benchmark twice."""
     grams = _grams if _grams is not None else (
         benchmark
-        .select(F.explode(word_ngrams(text_col, n)).alias("gram"))
+        .select(F.explode(word_ngrams("text", GRAM_N)).alias("gram"))
         .distinct())
     pos = grams.select(F.explode(F.array(
         _pos(F.col("gram"), 1, m_bits),
@@ -78,28 +77,25 @@ def bloom_build(benchmark: DataFrame, n: int = 3,
 
 
 def bloom_contamination(docs: DataFrame, benchmark: DataFrame,
-                        n: int = 3, m_bits: int = DEFAULT_M_BITS,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+                        m_bits: int = DEFAULT_M_BITS) -> DataFrame:
     """Per document: total n-gram occurrences, Bloom-flagged
     occurrences, exact-flagged occurrences (ground truth via the
     string broadcast), and the false positives the filter admits —
-    ``(id, n_grams, n_bloom, n_exact, n_false_pos)``.
+    ``(doc_id, n_grams, n_bloom, n_exact, n_false_pos)``.
 
     n_bloom >= n_exact always (a Bloom filter has no false negatives:
     every inserted gram's bits are set). The probe is two broadcast
     left joins on word_idx + one broadcast semi-probe for ground
     truth; the only corpus exchange is the per-doc aggregation."""
     bench_grams = (benchmark
-                   .select(F.explode(word_ngrams(text_col, n))
+                   .select(F.explode(word_ngrams("text", GRAM_N))
                            .alias("gram"))
                    .distinct())
-    filt = bloom_build(benchmark, n, m_bits, text_col,
-                       _grams=bench_grams)
+    filt = bloom_build(benchmark, m_bits, _grams=bench_grams)
     bench_grams = bench_grams.withColumn("exact_hit", F.lit(1))
     g = docs.select(
-        F.col(id_col),
-        F.explode(word_ngrams(text_col, n)).alias("gram"))
+        F.col("doc_id"),
+        F.explode(word_ngrams("text", GRAM_N)).alias("gram"))
     g = (g.withColumn("p1", _pos(F.col("gram"), 1, m_bits))
          .withColumn("p2", _pos(F.col("gram"), 16, m_bits)))
     f1 = filt.select(F.col("word_idx").alias("w1"),
@@ -113,7 +109,7 @@ def bloom_contamination(docs: DataFrame, benchmark: DataFrame,
                     F.expr("p2 DIV 32") == F.col("w2"), "left")
               .join(F.broadcast(bench_grams), "gram", "left")
               .select(
-                  id_col,
+                  "doc_id",
                   F.when(
                       (F.expr("b1 & shiftleft(CAST(1 AS BIGINT), "
                               "CAST(p1 % 32 AS INT))") != 0)
@@ -122,7 +118,7 @@ def bloom_contamination(docs: DataFrame, benchmark: DataFrame,
                   .otherwise(0).alias("bloom_hit"),
                   F.coalesce(F.col("exact_hit"), F.lit(0))
                   .alias("exact_hit")))
-    return (probed.groupBy(id_col)
+    return (probed.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_grams"),
                  F.sum("bloom_hit").cast("long").alias("n_bloom"),
                  F.sum("exact_hit").cast("long").alias("n_exact"),

@@ -39,17 +39,18 @@ from console_log_parser_spark.operators.decontam import word_ngrams
 from console_log_parser_spark.operators.dedup import \
     _materialize_and_release
 
+GRAM_N = 5  # words per n-gram
 
-def doc_gram_hashes(docs: DataFrame, n: int, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """``(id, gh, occ)`` — per-document occurrence counts of each
-    md5-hashed word ``n``-gram. The raw gram strings never leave the
+
+def doc_gram_hashes(docs: DataFrame) -> DataFrame:
+    """``(doc_id, gh, occ)`` — per-document occurrence counts of each
+    md5-hashed word GRAM_N-gram. The raw gram strings never leave the
     map side."""
     return (docs
-            .select(id_col,
-                    F.explode(word_ngrams(text_col, n)).alias("gram"))
-            .select(id_col, F.md5("gram").alias("gh"))
-            .groupBy(id_col, "gh")
+            .select("doc_id",
+                    F.explode(word_ngrams("text", GRAM_N)).alias("gram"))
+            .select("doc_id", F.md5("gram").alias("gh"))
+            .groupBy("doc_id", "gh")
             .agg(F.count("*").alias("occ")))
 
 
@@ -65,28 +66,26 @@ def boilerplate_grams(per_doc_gram: DataFrame,
             .filter(F.col("n_docs") >= min_docs))
 
 
-def boilerplate_stats(docs: DataFrame, n: int = 5, min_docs: int = 2,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def boilerplate_stats(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     """Per-document boilerplate profile: total / distinct gram counts,
     boilerplate occurrence / distinct counts, and the boilerplate
     fraction in integer basis points (``10000 * boiler_occ div
     total_occ`` — integer division; both operands are non-negative, so
     Spark's truncating ``div`` and DuckDB's flooring ``//`` agree).
-    Documents with fewer than ``n`` words produce no grams and are
+    Documents with fewer than GRAM_N words produce no grams and are
     absent from the result, matching the oracle."""
-    pdg = doc_gram_hashes(docs, n, id_col, text_col).persist()
+    pdg = doc_gram_hashes(docs).persist()
     boiler = boilerplate_grams(pdg, min_docs)
-    totals = (pdg.groupBy(id_col)
+    totals = (pdg.groupBy("doc_id")
               .agg(F.sum("occ").alias("n_gram_occ"),
                    F.count("*").alias("n_distinct_grams")))
     hits = (pdg.join(boiler.select("gh"), "gh")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("occ").alias("n_boiler_occ"),
                  F.count("*").alias("n_boiler_grams")))
-    out = (totals.join(hits, id_col, "left")
+    out = (totals.join(hits, "doc_id", "left")
            .na.fill({"n_boiler_occ": 0, "n_boiler_grams": 0})
-           .select(F.col(id_col),
+           .select(F.col("doc_id"),
                    F.col("n_gram_occ").cast("long").alias("n_gram_occ"),
                    F.col("n_distinct_grams").cast("long")
                    .alias("n_distinct_grams"),

@@ -40,9 +40,8 @@ from pyspark.sql import functions as F
 
 
 def sliding_windows(docs: DataFrame, win_len: int, stride: int,
-                    id_col: str = "doc_id",
                     n_col: str = "n_tok") -> DataFrame:
-    """``(id, win_id, win_start, win_len)`` — one row per stride-S
+    """``(doc_id, win_id, win_start, win_len)`` — one row per stride-S
     window of each document's ``n_col`` tokens; empty documents
     (n < 1) emit nothing.  Pure map-side (no Exchange in the plan)."""
     if not (1 <= stride <= win_len):
@@ -53,12 +52,12 @@ def sliding_windows(docs: DataFrame, win_len: int, stride: int,
     return (docs
             .filter(F.col(n_col) >= 1)
             .select(
-                id_col,
+                "doc_id",
                 F.col(n_col).alias("_n"),
                 F.explode(F.expr(
                     f"sequence(0, {n_wins} - 1)")).alias("win_id"))
             .selectExpr(
-                id_col,
+                "doc_id",
                 "CAST(win_id AS BIGINT) AS win_id",
                 f"CAST(win_id * {stride} AS BIGINT) AS win_start",
                 f"CAST(least({win_len}, _n - win_id * {stride}) "

@@ -34,11 +34,11 @@ DEFAULT_WEIGHTS = {"bias": -400, "n_chars": 1, "n_words": -2,
 DEFAULT_THRESHOLDS = (250, 600)  # score < t0: low, < t1: mid, else high
 
 
-def quality_features(text_col: str = "text") -> dict[str, Column]:
-    """Integer feature columns for the linear head."""
-    words = F.split(F.col(text_col), " ")
+def quality_features() -> dict[str, Column]:
+    """Integer feature columns of ``text`` for the linear head."""
+    words = F.split(F.col("text"), " ")
     return {
-        "n_chars": F.length(text_col).cast("long"),
+        "n_chars": F.length("text").cast("long"),
         "n_words": F.size(words).cast("long"),
         "n_distinct_words": F.size(F.array_distinct(words)).cast("long"),
         "max_word_len": F.array_max(
@@ -46,15 +46,14 @@ def quality_features(text_col: str = "text") -> dict[str, Column]:
     }
 
 
-def score_quality(df: DataFrame, text_col: str = "text",
-                  weights: dict | None = None,
+def score_quality(df: DataFrame, weights: dict | None = None,
                   thresholds: tuple | None = None) -> DataFrame:
     """Add integer ``q_score`` = bias + sum(w_i * feature_i) and
     ``q_bucket`` in {'low','mid','high'} by threshold. Pure projection:
     weights fold into the plan as literals."""
     w = dict(weights or DEFAULT_WEIGHTS)
     t0, t1 = thresholds or DEFAULT_THRESHOLDS
-    feats = quality_features(text_col)
+    feats = quality_features()
     score = F.lit(int(w.pop("bias", 0))).cast("long")
     for name, coef in w.items():
         score = score + F.lit(int(coef)) * feats[name]

@@ -45,11 +45,11 @@ def _floor_div(s: int, n: int) -> int:
     return s // n
 
 
-def quantized(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, q: array<bigint>) — integer-quantized vectors."""
+def quantized(emb: DataFrame) -> DataFrame:
+    """(vec_id, q: array<bigint>) — integer-quantized embeddings."""
     return emb.select(
         "vec_id",
-        F.expr(f"transform({vec_col}, x -> "
+        F.expr(f"transform(embedding, x -> "
                f"cast(round(cast(x as double) * {SCALE}) as bigint))")
          .alias("q"))
 
@@ -86,8 +86,7 @@ def _iterate_once(q: DataFrame,
 
 
 def kmeans_assign(emb: DataFrame, k: int = 10, n_iters: int = 2,
-                  dim: int = 64,
-                  vec_col: str = "embedding") -> DataFrame:
+                  dim: int = 64) -> DataFrame:
     """Run ``n_iters`` Lloyd updates from the deterministic init
     (centroids = the quantized vectors with vec_id 0..k-1), then
     return the FINAL per-vector assignment as (vec_id, comb) where
@@ -96,7 +95,7 @@ def kmeans_assign(emb: DataFrame, k: int = 10, n_iters: int = 2,
     frame is map-side (literal centroids), so downstream joins and
     aggregations see a plain projection."""
     assert k <= PACK
-    q = quantized(emb, vec_col)
+    q = quantized(emb)
     init = (q.filter(F.col("vec_id") < k)
              .orderBy("vec_id").collect())  # bounded: k rows
     if len(init) < k:
@@ -113,13 +112,12 @@ def kmeans_assign(emb: DataFrame, k: int = 10, n_iters: int = 2,
 
 
 def kmeans_stats(emb: DataFrame, k: int = 10, n_iters: int = 2,
-                 dim: int = 64,
-                 vec_col: str = "embedding") -> DataFrame:
+                 dim: int = 64) -> DataFrame:
     """Per-cluster (cluster_id, n_vecs, inertia, min_vec_id) ordered
     by cluster_id, from the final :func:`kmeans_assign` assignment.
     ``inertia`` is the exact integer sum of squared quantized
     distances of members to their final centroid."""
-    final = kmeans_assign(emb, k, n_iters, dim, vec_col)
+    final = kmeans_assign(emb, k, n_iters, dim)
     return (final
             .groupBy((F.col("comb") % PACK).alias("cluster_id"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_vecs"),

@@ -36,13 +36,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def retention_matrix(events: DataFrame, user_col: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
+def retention_matrix(events: DataFrame) -> DataFrame:
     """``(cohort_day, day_offset, n_users, pct_x100)`` sorted by
     (cohort_day, day_offset); ``pct_x100 = 100 * n_users DIV
-    cohort_size`` where cohort_size is the cohort's day-0 count."""
-    days = events.select(F.col(user_col).alias("u"),
-                         F.to_date(ts_col).alias("day"))
+    cohort_size`` where cohort_size is the cohort's day-0 count of
+    distinct ``user_id``."""
+    days = events.select(F.col("user_id").alias("u"),
+                         F.to_date("ts").alias("day"))
     first = days.groupBy("u").agg(F.min("day").alias("cohort_day"))
     cells = (days.join(first, "u")
              .select("u", "cohort_day",

@@ -39,15 +39,14 @@ def word_ngrams(text_col: str, n: int) -> Column:
 
 
 def contamination_counts(docs: DataFrame, benchmark: DataFrame,
-                         n: int = 8, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
-    """(id, n_contam) for every document sharing >= 1 word n-gram with
+                         n: int = 8, text_col: str = "text") -> DataFrame:
+    """(doc_id, n_contam) for every document sharing >= 1 word n-gram with
     the benchmark; n_contam = number of DISTINCT shared n-grams."""
     bench_grams = (benchmark
                    .select(F.explode(word_ngrams(text_col, n)).alias("gram"))
                    .distinct())
     doc_grams = docs.select(
-        id_col, F.explode(word_ngrams(text_col, n)).alias("gram"))
+        "doc_id", F.explode(word_ngrams(text_col, n)).alias("gram"))
     # Join BEFORE any distinct: the broadcast hash join filters the
     # corpus gram stream map-side, so the only exchanged rows are the
     # HITS (contamination is the exception) — a corpus-side distinct
@@ -56,7 +55,7 @@ def contamination_counts(docs: DataFrame, benchmark: DataFrame,
     # even when a doc repeats one.
     return (doc_grams
             .join(F.broadcast(bench_grams), "gram")
-            .select(id_col, "gram").distinct()
-            .groupBy(id_col)
+            .select("doc_id", "gram").distinct()
+            .groupBy("doc_id")
             .agg(F.count("*").alias("n_contam")))
 

@@ -20,6 +20,12 @@ from pyspark.sql import functions as F
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 
+SHINGLE_K = 3  # words per shingle
+N_PERM = 8  # MinHash signature length
+N_BANDS = 4  # LSH bands of N_PERM // N_BANDS rows each
+# near-duplicate threshold: shingle Jaccard >= JACCARD_NUM / JACCARD_DEN
+JACCARD_NUM, JACCARD_DEN = 1, 2
+
 # fixed permutation constants (generated once from a seeded PRNG;
 # hard-coded so every engine/run agrees)
 PERMS = [
@@ -34,23 +40,23 @@ PERMS = [
 ]
 
 
-def shingles(df: DataFrame, k: int = 3, id_col: str = "doc_id",
-             text_col: str = "text") -> DataFrame:
-    """(id, text) -> (id, shingle) distinct k-word shingles.
+def shingles(df: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, shingle) distinct SHINGLE_K-word
+    shingles.
 
     The text is split ONCE into a materialized array column; the
     shingle transform indexes into it (inlining ``split`` inside each
-    ``element_at`` makes Catalyst re-split the text k times per
+    ``element_at`` makes Catalyst re-split the text SHINGLE_K times per
     shingle — O(words^2) per doc)."""
     expr = (
-        f"array_distinct(CASE WHEN size(ws) >= {k} "
-        f"THEN transform(sequence(1, size(ws) - {k - 1}), "
+        f"array_distinct(CASE WHEN size(ws) >= {SHINGLE_K} "
+        f"THEN transform(sequence(1, size(ws) - {SHINGLE_K - 1}), "
         + "i -> concat_ws(' ', "
-        + ", ".join(f"element_at(ws, i + {j})" for j in range(k))
+        + ", ".join(f"element_at(ws, i + {j})" for j in range(SHINGLE_K))
         + ")) ELSE array() END)"
     )
-    return (df.select(id_col, F.split(F.col(text_col), " ").alias("ws"))
-            .select(id_col, F.explode(F.expr(expr)).alias("shingle")))
+    return (df.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
+            .select("doc_id", F.explode(F.expr(expr)).alias("shingle")))
 
 
 def shingle_hash(col):
@@ -58,106 +64,99 @@ def shingle_hash(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def minhash_signatures(df: DataFrame, k: int = 3, n_perm: int = 8,
-                       id_col: str = "doc_id",
-                       text_col: str = "text",
+def minhash_signatures(df: DataFrame,
                        _shingles: DataFrame | None = None) -> DataFrame:
-    """(id, text) -> (id, sig: array<long>[n_perm]).
+    """(doc_id, text) -> (doc_id, sig: array<long>[N_PERM]).
 
     Signature j = min over shingles of (a_j * h + b_j) mod p, h = the
     portable shingle hash mod p. Computed as one hash-aggregate pass
-    with n_perm min() columns.
+    with N_PERM min() columns.
     """
-    base = _shingles if _shingles is not None \
-        else shingles(df, k, id_col, text_col)
+    base = _shingles if _shingles is not None else shingles(df)
     sh = base.withColumn(
         "h", shingle_hash(F.col("shingle")) % MERSENNE_P)
-    # one hash-aggregate pass with n_perm min() columns — no perm-table
-    # cross join (which multiplies the shuffle by n_perm) and no
+    # one hash-aggregate pass with N_PERM min() columns — no perm-table
+    # cross join (which multiplies the shuffle by N_PERM) and no
     # second-level (id, j) aggregation
-    mins = sh.groupBy(id_col).agg(*[
+    mins = sh.groupBy("doc_id").agg(*[
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE_P)
         .alias(f"m{j}")
-        for j, (a, b) in enumerate(PERMS[:n_perm])])
+        for j, (a, b) in enumerate(PERMS[:N_PERM])])
     return mins.select(
-        id_col, F.array(*[f"m{j}" for j in range(n_perm)]).alias("sig"))
+        "doc_id", F.array(*[f"m{j}" for j in range(N_PERM)]).alias("sig"))
 
 
-def minhash_bands(df: DataFrame, k: int = 3, n_perm: int = 8,
-                  n_bands: int = 4, id_col: str = "doc_id",
-                  text_col: str = "text",
+def minhash_bands(df: DataFrame,
                   _shingles: DataFrame | None = None) -> DataFrame:
-    """(id, bucket) — one row per LSH band bucket per document."""
-    rows_per_band = n_perm // n_bands
-    sigs = minhash_signatures(df, k, n_perm, id_col, text_col, _shingles)
+    """(doc_id, bucket) — one row per LSH band bucket per document."""
+    rows_per_band = N_PERM // N_BANDS
+    sigs = minhash_signatures(df, _shingles)
     return sigs.select(
-        id_col,
+        "doc_id",
         F.explode(F.expr(
-            f"transform(sequence(0, {n_bands - 1}), b -> "
+            f"transform(sequence(0, {N_BANDS - 1}), b -> "
             f"concat_ws(':', b, "
             f"concat_ws('_', slice(sig, b * {rows_per_band} + 1, "
             f"{rows_per_band}))))")).alias("bucket"))
 
 
-def minhash_lsh_candidates(df: DataFrame, k: int = 3, n_perm: int = 8,
-                           n_bands: int = 4, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           _shingles: DataFrame | None = None,
+def minhash_lsh_candidates(df: DataFrame,
                            _bands: DataFrame | None = None) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs
     (doc_a < doc_b, distinct). ``_bands`` injects a precomputed
-    (usually persisted) band frame, same contract as ``_shingles`` —
-    the pairing rule lives HERE only, so every consumer shares it."""
-    bands = _bands if _bands is not None else minhash_bands(
-        df, k, n_perm, n_bands, id_col, text_col, _shingles)
-    a = bands.select(F.col(id_col).alias("doc_a"), "bucket")
-    b = bands.select(F.col(id_col).alias("doc_b"), "bucket")
+    (usually persisted) band frame, as ``_shingles`` does for the
+    signatures — the pairing rule lives HERE only, so every consumer
+    shares it."""
+    bands = _bands if _bands is not None else minhash_bands(df)
+    a = bands.select(F.col("doc_id").alias("doc_a"), "bucket")
+    b = bands.select(F.col("doc_id").alias("doc_b"), "bucket")
     return (a.join(b, "bucket")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
 
 
-def minhash_dedup_pairs(df: DataFrame, k: int = 3, n_perm: int = 8,
-                        n_bands: int = 4, jaccard_num: int = 1,
-                        jaccard_den: int = 2, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
-    """Candidates verified by exact shingle Jaccard >= num/den
-    (integer cross-multiplication — no float boundary)."""
+def _jaccard_verified(cands: DataFrame, left: DataFrame, right: DataFrame,
+                      a_col: str, b_col: str) -> DataFrame:
+    """Candidate pairs ``(a_col, b_col)`` whose shingle sets, taken from
+    the (doc_id, shingle) frames ``left`` and ``right``, have Jaccard
+    >= JACCARD_NUM / JACCARD_DEN (integer cross-multiplication — no
+    float boundary). Returns (a_col, b_col, common, size_a, size_b)."""
+    a = left.select(F.col("doc_id").alias(a_col), "shingle")
+    b = right.select(F.col("doc_id").alias(b_col), "shingle")
+    common = (cands.join(a, a_col).join(b, [b_col, "shingle"])
+              .groupBy(a_col, b_col).agg(F.count("*").alias("common")))
+    size_a = left.groupBy("doc_id").agg(F.count("*").alias("size_a")) \
+        .select(F.col("doc_id").alias(a_col), "size_a")
+    size_b = right.groupBy("doc_id").agg(F.count("*").alias("size_b")) \
+        .select(F.col("doc_id").alias(b_col), "size_b")
+    return (common.join(size_a, a_col).join(size_b, b_col)
+            .filter(F.col("common") * JACCARD_DEN
+                    >= JACCARD_NUM * (F.col("size_a") + F.col("size_b")
+                                      - F.col("common")))
+            .select(a_col, b_col, "common", "size_a", "size_b"))
+
+
+def minhash_dedup_pairs(df: DataFrame) -> DataFrame:
+    """Candidates verified by exact shingle Jaccard >= JACCARD_NUM /
+    JACCARD_DEN (integer cross-multiplication — no float boundary)."""
     # the shingle frame feeds four consumers (signatures, both sides of
     # the common-shingle join, sizes) — persist it so split+md5 run once
-    sh = shingles(df, k, id_col, text_col).persist()
+    sh = shingles(df).persist()
     # the band frame is consumed by BOTH sides of the bucket self-join,
     # and an aliased self-join gets no ReusedExchange — without this
     # persist the signature aggregation + band explode compute twice
     # (the same doubled-subtree shape the r4 simhash fix removed).
-    # ~n_bands small rows/doc:
+    # ~N_BANDS small rows/doc:
     # spillable MEMORY_AND_DISK, released below with the shingles.
-    bands = minhash_bands(df, k, n_perm, n_bands, id_col, text_col,
-                          _shingles=sh).persist()
-    cands = minhash_lsh_candidates(df, k, n_perm, n_bands, id_col,
-                                   text_col, _bands=bands)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (cands.join(a, "doc_a").join(b, ["doc_b", "shingle"])
-              .groupBy("doc_a", "doc_b").agg(F.count("*").alias("common")))
-    sa = sizes.select(F.col(id_col).alias("doc_a"),
-                      F.col("n_sh").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"),
-                      F.col("n_sh").alias("size_b"))
-    out = (common.join(sa, "doc_a").join(sb, "doc_b")
-           .filter(F.col("common") * jaccard_den
-                   >= jaccard_num * (F.col("size_a") + F.col("size_b")
-                                     - F.col("common")))
-           .select("doc_a", "doc_b", "common", "size_a", "size_b"))
+    bands = minhash_bands(df, _shingles=sh).persist()
+    cands = minhash_lsh_candidates(df, _bands=bands)
+    out = _jaccard_verified(cands, sh, sh, "doc_a", "doc_b")
     return _materialize_and_release(out, sh, bands)
 
 
-def ngram_jaccard_pairs_prefix(df: DataFrame, k: int = 3,
-                               jaccard_num: int = 1, jaccard_den: int = 2,
-                               id_col: str = "doc_id",
-                               text_col: str = "text") -> DataFrame:
-    """EXACT n-gram Jaccard similarity join (J >= num/den) with
+def ngram_jaccard_pairs_prefix(df: DataFrame) -> DataFrame:
+    """EXACT n-gram Jaccard similarity join (J >= JACCARD_NUM /
+    JACCARD_DEN) with
     prefix-filter candidate generation — the guaranteed-recall,
     subquadratic alternative to the naive shingle self-join (whose one
     hot shingle shared by millions of docs makes a quadratic bucket).
@@ -178,37 +177,25 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, k: int = 3,
     # the shingle frame feeds four consumers (dfreq, ranked, both full-
     # set join sides) — persist it so split+md5 run once, released via
     # the same lifecycle the MinHash path uses
-    sh = shingles(df, k, id_col, text_col).persist()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    sh = shingles(df).persist()
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("dfreq"))
     from pyspark.sql import Window
-    order = Window.partitionBy(id_col).orderBy("dfreq", "shingle")
+    order = Window.partitionBy("doc_id").orderBy("dfreq", "shingle")
     ranked = (sh.join(dfreq, "shingle")
               .withColumn("rn", F.row_number().over(order)))
     # prefix length n - ceil(t*n) + 1, all-integer: ceil(num*n/den)
-    plen = F.expr(f"n_sh - (({jaccard_num} * n_sh + {jaccard_den - 1}) "
-                  f"div {jaccard_den}) + 1")
-    prefix = (ranked.join(sizes, id_col)
+    plen = F.expr(f"n_sh - (({JACCARD_NUM} * n_sh + {JACCARD_DEN - 1}) "
+                  f"div {JACCARD_DEN}) + 1")
+    prefix = (ranked.join(sizes, "doc_id")
               .filter(F.col("rn") <= plen)
-              .select(id_col, "shingle"))
-    a = prefix.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = prefix.select(F.col(id_col).alias("doc_b"), "shingle")
+              .select("doc_id", "shingle"))
+    a = prefix.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = prefix.select(F.col("doc_id").alias("doc_b"), "shingle")
     cand = (a.join(b, "shingle")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
-    fa = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    fb = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (cand.join(fa, "doc_a").join(fb, ["doc_b", "shingle"])
-              .groupBy("doc_a", "doc_b").agg(F.count("*").alias("common")))
-    sa = sizes.select(F.col(id_col).alias("doc_a"),
-                      F.col("n_sh").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"),
-                      F.col("n_sh").alias("size_b"))
-    out = (common.join(sa, "doc_a").join(sb, "doc_b")
-           .filter(F.col("common") * jaccard_den
-                   >= jaccard_num * (F.col("size_a") + F.col("size_b")
-                                     - F.col("common")))
-           .select("doc_a", "doc_b", "common", "size_a", "size_b"))
+    out = _jaccard_verified(cand, sh, sh, "doc_a", "doc_b")
     return _materialize_and_release(out, sh)
 
 
@@ -226,25 +213,24 @@ def _materialize_and_release(result: DataFrame, *intermediates):
     return result
 
 
-def dedup_keep_first(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def dedup_keep_first(df: DataFrame) -> DataFrame:
     """Exact dedup with canonical survivor: keep the smallest id per
     md5(text) group. One window pass over the hash — the shuffle key is
     the 128-bit digest, uniformly distributed, skew-free at any scale."""
     from pyspark.sql import Window
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
+    w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
     return (df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-duplicate pairs: every doc gets
     the minimum doc_id reachable through the pair graph as its cluster
     label (the canonical survivor of its duplicate cluster).
 
     Iterative min-label propagation — each round is one shuffle
     (groupBy node) over the edge list; rounds needed = graph diameter
-    (tiny for dup clusters), bounded by ``max_iters`` with a driver-side
+    (tiny for dup clusters), bounded by 20 rounds with a driver-side
     convergence check (sum of labels is monotonically decreasing, so
     equal sums == converged). Deterministic, resume-safe.
 
@@ -261,7 +247,7 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
                                   F.col("v").alias("label")))
               .groupBy("node").agg(F.min("label").alias("label"))
               .persist())
-    for _ in range(max_iters):
+    for _ in range(20):
         # candidate label for each node: min over (own, neighbors')
         prev = labels
         nbr = (edges.join(prev, edges.v == prev.node)
@@ -288,9 +274,8 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     return labels.select(F.col("node").alias("doc_id"), "label")
 
 
-def simhash(df: DataFrame, bits: int = 64, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
-    """(id, text) -> (id, simhash: long).
+def simhash(df: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, simhash: long).
 
     Word-level 64-bit SimHash: each distinct word hashes to a portable
     60-bit value spread to 64 bits; bit i of the result is 1 when the
@@ -302,14 +287,14 @@ def simhash(df: DataFrame, bits: int = 64, id_col: str = "doc_id",
     # Column-chain construction — 64 conditional sums plus a 64-deep
     # bitwiseOR fold — cost ~1.7 s of pure driver-side py4j traffic
     # PER CALL (measured), dwarfing the executed query at bench scale.
-    words = df.selectExpr(id_col, f"explode(split({text_col}, ' ')) AS w")
+    words = df.selectExpr("doc_id", "explode(split(text, ' ')) AS w")
     # two md5 halves -> one 63-bit value (portable; hi is masked to 59
     # bits before the shift so no engine can overflow a signed 64-bit)
     h_expr = (
         "CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT) ^ "
         "shiftleft(CAST(conv(substring(md5(w), 16, 15), 16, 10) AS "
         f"BIGINT) & {(1 << 59) - 1}, 4)")
-    hashed = words.selectExpr(id_col, f"({h_expr}) AS h")
+    hashed = words.selectExpr("doc_id", f"({h_expr}) AS h")
     # 64 conditional-sum aggregate columns in ONE hash-agg pass (with
     # map-side partial combine) instead of collecting a 64-long array
     # per word and folding arrays per doc — same result, ~5x cheaper.
@@ -330,8 +315,8 @@ def simhash(df: DataFrame, bits: int = 64, id_col: str = "doc_id",
     # the unpacked form while the aggregate runs 32 columns + count
     # instead of 64 — half the agg buffers and half the expression
     # parses.
-    half = bits // 2
-    sums = hashed.groupBy(id_col).agg(
+    half = 32
+    sums = hashed.groupBy("doc_id").agg(
         F.expr("count(*)").alias("n_w"), *[
             F.expr(f"sum(((h >> {i}) & 1) + (((h >> {i + half}) & 1) "
                    f"<< 31))").alias(f"p{i}")
@@ -346,12 +331,10 @@ def simhash(df: DataFrame, bits: int = 64, id_col: str = "doc_id",
         f"THEN shiftleft(CAST(1 AS BIGINT), {i + half}) "
         f"ELSE CAST(0 AS BIGINT) END)"
         for i in range(half))
-    return sums.selectExpr(id_col, f"({fold}) AS simhash")
+    return sums.selectExpr("doc_id", f"({fold}) AS simhash")
 
 
-def simhash_pairs(df: DataFrame, max_hamming: int = 3,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming,
     using 4x16-bit block LSH (a pair within distance 3 must agree on
     at least one of 4 blocks) to avoid the O(n^2) comparison."""
@@ -360,19 +343,19 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3,
     # cache the whole explode+md5+32-column aggregation pipeline runs
     # TWICE — the plan shows 2x Generate+HashAggregate and no
     # ReusedExchange. Released via the shared lifecycle helper.
-    sh = simhash(df, 64, id_col, text_col).persist()
+    sh = simhash(df).persist()
     # bucket id = block*2^16 + block value, one LONG — integer join
     # keys hash/compare cheaper than "b:12345" strings and shuffle as
     # 8 fixed bytes; same bucketing semantics (share >=1 block value)
     blocks = sh.select(
-        id_col, "simhash",
+        "doc_id", "simhash",
         F.posexplode(F.expr(
             "transform(sequence(0, 3), b -> "
             "bigint(b) * 65536 + ((simhash >> (b * 16)) & 65535))"))
         .alias("block", "bucket"))
-    a = blocks.select(F.col(id_col).alias("doc_a"),
+    a = blocks.select(F.col("doc_id").alias("doc_a"),
                       F.col("simhash").alias("sh_a"), "bucket")
-    b = blocks.select(F.col(id_col).alias("doc_b"),
+    b = blocks.select(F.col("doc_id").alias("doc_b"),
                       F.col("simhash").alias("sh_b"), "bucket")
     # Hamming filter BEFORE the dedup exchange: a pair that matched in
     # k blocks would otherwise cross the distinct shuffle k times
@@ -391,13 +374,12 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3,
     return _materialize_and_release(out, sh)
 
 
-def incremental_dedup_audit(new_docs: DataFrame, existing: DataFrame,
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
+def incremental_dedup_audit(new_docs: DataFrame,
+                            existing: DataFrame) -> DataFrame:
     """Dedup a NEW ingest batch against an EXISTING corpus — the
     production incremental-ingest shape (a crawl snapshot lands
     against a deduplicated corpus; nothing re-deduplicates the
-    corpus itself). Returns a per-new-doc audit ``(id, status)``:
+    corpus itself). Returns a per-new-doc audit ``(doc_id, status)``:
 
     * ``dup_in_corpus`` — exact text match already in the corpus;
     * ``dup_in_batch``  — no corpus match, but a smaller-id doc in
@@ -418,8 +400,8 @@ def incremental_dedup_audit(new_docs: DataFrame, existing: DataFrame,
     is exchanged once. Spark broadcasts the smaller side per AQE
     stats, which at production scale is the BATCH, never the corpus.
     """
-    dg = F.md5(F.col(text_col))
-    batch = new_docs.select(F.col(id_col).alias("_id"),
+    dg = F.md5(F.col("text"))
+    batch = new_docs.select(F.col("doc_id").alias("_id"),
                             dg.alias("_dg"))
     corpus_dg = (existing.select(dg.alias("_dg")).distinct()
                  .withColumn("_in_corpus", F.lit(1)))
@@ -427,7 +409,7 @@ def incremental_dedup_audit(new_docs: DataFrame, existing: DataFrame,
     return (batch
             .join(corpus_dg, "_dg", "left")
             .join(batch_min, "_dg")
-            .select(F.col("_id").alias(id_col),
+            .select(F.col("_id").alias("doc_id"),
                     F.when(F.col("_in_corpus").isNotNull(),
                            F.lit("dup_in_corpus"))
                     .when(F.col("_id") != F.col("_first"),
@@ -435,15 +417,12 @@ def incremental_dedup_audit(new_docs: DataFrame, existing: DataFrame,
                     .otherwise(F.lit("kept")).alias("status")))
 
 
-def crossdup_minhash_pairs(new_docs: DataFrame, existing: DataFrame,
-                           k: int = 3, n_perm: int = 8,
-                           n_bands: int = 4, jaccard_num: int = 1,
-                           jaccard_den: int = 2,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def crossdup_minhash_pairs(new_docs: DataFrame,
+                           existing: DataFrame) -> DataFrame:
     """NEAR-dup counterpart of :func:`incremental_dedup_audit`: LSH
     candidates between a NEW ingest batch and the EXISTING corpus,
-    verified by exact cross-side shingle Jaccard >= num/den. Returns
+    verified by exact cross-side shingle Jaccard >= JACCARD_NUM /
+    JACCARD_DEN. Returns
     (batch_id, corpus_id, common, size_a, size_b) — one row per
     verified near-dup pair; a batch doc with any row should not land.
 
@@ -455,30 +434,13 @@ def crossdup_minhash_pairs(new_docs: DataFrame, existing: DataFrame,
     per side with the explicit lifecycle (split+md5 run once); the
     verification exchanges only candidate ids + shingle hashes.
     """
-    sh_new = shingles(new_docs, k, id_col, text_col).persist()
-    sh_old = shingles(existing, k, id_col, text_col).persist()
-    bands_new = minhash_bands(new_docs, k, n_perm, n_bands, id_col,
-                              text_col, _shingles=sh_new)
-    bands_old = minhash_bands(existing, k, n_perm, n_bands, id_col,
-                              text_col, _shingles=sh_old)
-    cands = (bands_new.select(F.col(id_col).alias("batch_id"), "bucket")
-             .join(bands_old.select(F.col(id_col).alias("corpus_id"),
+    sh_new = shingles(new_docs).persist()
+    sh_old = shingles(existing).persist()
+    bands_new = minhash_bands(new_docs, _shingles=sh_new)
+    bands_old = minhash_bands(existing, _shingles=sh_old)
+    cands = (bands_new.select(F.col("doc_id").alias("batch_id"), "bucket")
+             .join(bands_old.select(F.col("doc_id").alias("corpus_id"),
                                     "bucket"), "bucket")
              .select("batch_id", "corpus_id").distinct())
-    size_a = sh_new.groupBy(id_col).agg(F.count("*").alias("size_a")) \
-        .select(F.col(id_col).alias("batch_id"), "size_a")
-    size_b = sh_old.groupBy(id_col).agg(F.count("*").alias("size_b")) \
-        .select(F.col(id_col).alias("corpus_id"), "size_b")
-    a = sh_new.select(F.col(id_col).alias("batch_id"), "shingle")
-    b = sh_old.select(F.col(id_col).alias("corpus_id"), "shingle")
-    common = (cands.join(a, "batch_id")
-              .join(b, ["corpus_id", "shingle"])
-              .groupBy("batch_id", "corpus_id")
-              .agg(F.count("*").alias("common")))
-    out = (common.join(size_a, "batch_id").join(size_b, "corpus_id")
-           .filter(F.col("common") * jaccard_den
-                   >= jaccard_num * (F.col("size_a") + F.col("size_b")
-                                     - F.col("common")))
-           .select("batch_id", "corpus_id", "common",
-                   "size_a", "size_b"))
+    out = _jaccard_verified(cands, sh_new, sh_old, "batch_id", "corpus_id")
     return _materialize_and_release(out, sh_new, sh_old)

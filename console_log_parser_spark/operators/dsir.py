@@ -41,10 +41,10 @@ def _bucket(word: Column, n_buckets: int) -> Column:
             .cast("long") % n_buckets)
 
 
-def _words(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _words(docs: DataFrame) -> DataFrame:
     return (docs.select(
-        id_col,
-        F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        "doc_id",
+        F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != ""))
 
 
@@ -54,14 +54,12 @@ def _bits(c: Column) -> Column:
 
 
 def dsir_scores(raw: DataFrame, target: DataFrame,
-                n_buckets: int = DEFAULT_BUCKETS,
-                id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """``(id, n_words, dsir_score)`` for every raw document with at
+                n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """``(doc_id, n_words, dsir_score)`` for every raw document with at
     least one word; higher score = more target-like."""
-    rw = _words(raw, id_col, text_col).withColumn(
+    rw = _words(raw).withColumn(
         "bkt", _bucket(F.col("word"), n_buckets))
-    tw = _words(target, id_col, text_col).withColumn(
+    tw = _words(target).withColumn(
         "bkt", _bucket(F.col("word"), n_buckets))
     r_cnt = rw.groupBy("bkt").agg(F.count(F.lit(1)).alias("r"))
     t_cnt = tw.groupBy("bkt").agg(F.count(F.lit(1)).alias("t"))
@@ -71,6 +69,6 @@ def dsir_scores(raw: DataFrame, target: DataFrame,
                      (_bits(F.coalesce(F.col("t"), F.lit(0)) + 1)
                       - _bits(F.col("r") + 1)).alias("s")))
     return (rw.join(F.broadcast(score), "bkt")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_words"),
                  F.sum("s").cast("long").alias("dsir_score")))

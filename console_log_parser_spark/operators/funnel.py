@@ -34,26 +34,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def funnel_times(df: DataFrame, stages: Sequence[str],
-                 user_col: str = "user_id", ts_col: str = "ts",
-                 type_col: str = "event_type") -> DataFrame:
-    """One row per user who emitted any funnel-stage event, with
+def funnel_times(df: DataFrame, stages: Sequence[str]) -> DataFrame:
+    """One row per ``user_id`` who emitted any funnel-stage event, with
     ``t1..tk`` stage timestamps (null once the chain breaks)."""
     if len(stages) < 2:
         raise ValueError("a funnel needs at least two stages")
-    ev = (df.filter(F.col(type_col).isin(list(stages)))
-            .select(user_col, ts_col, type_col))
-    w = Window.partitionBy(user_col)
+    ev = (df.filter(F.col("event_type").isin(list(stages)))
+            .select("user_id", "ts", "event_type"))
+    w = Window.partitionBy("user_id")
     prev = None
     for i, stage in enumerate(stages, start=1):
-        cond = F.col(type_col) == stage
+        cond = F.col("event_type") == stage
         if prev is not None:
-            cond = cond & (F.col(ts_col) > F.col(prev))
+            cond = cond & (F.col("ts") > F.col(prev))
         ev = ev.withColumn(f"t{i}",
-                           F.min(F.when(cond, F.col(ts_col))).over(w))
+                           F.min(F.when(cond, F.col("ts"))).over(w))
         prev = f"t{i}"
     tcols = [f"t{i}" for i in range(1, len(stages) + 1)]
     # every row of a user carries identical t1..tk after the windows;
     # the reduce runs on the window's partitioning — no new exchange
-    return (ev.groupBy(user_col)
+    return (ev.groupBy("user_id")
               .agg(*[F.max(c).alias(c) for c in tcols]))

@@ -30,27 +30,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _term_stream(df: DataFrame, text_col: str,
-                 doc_col: str) -> DataFrame:
-    """(term, doc) pairs, one per DISTINCT term per document."""
-    return (df.select(doc_col,
+def _term_stream(df: DataFrame) -> DataFrame:
+    """(doc_id, term) pairs, one per DISTINCT term per document."""
+    return (df.select("doc_id",
                       F.explode(F.array_distinct(
-                          F.split(F.col(text_col), " ")))
+                          F.split(F.col("text"), " ")))
                       .alias("term"))
               .filter(F.col("term") != ""))
 
 
-def document_frequencies(df: DataFrame, text_col: str = "text",
-                         doc_col: str = "doc_id") -> DataFrame:
+def document_frequencies(df: DataFrame) -> DataFrame:
     """(term, df_docs): pass 1, counts only — nothing skew-sized."""
-    return (_term_stream(df, text_col, doc_col)
+    return (_term_stream(df)
             .groupBy("term")
             .agg(F.count("*").alias("df_docs")))
 
 
-def rare_terms_per_doc(df: DataFrame, k: int,
-                       text_col: str = "text",
-                       doc_col: str = "doc_id") -> DataFrame:
+def rare_terms_per_doc(df: DataFrame, k: int) -> DataFrame:
     """Keyword extraction as the INTEGER analog of TF-IDF: each
     document's ``k`` globally-rarest distinct terms, ranked by
     ``(document frequency, term)`` — a total order, so the result is
@@ -63,32 +59,30 @@ def rare_terms_per_doc(df: DataFrame, k: int,
     shuffle join at web-corpus vocabulary sizes), then ONE exchange
     by document for the per-doc top-k window; per-doc state is
     bounded by document length. Returns
-    ``(doc, keywords array<struct<df_docs, term>>, rarest_df)`` with
+    ``(doc_id, keywords array<struct<df_docs, term>>, rarest_df)`` with
     the array sorted rarest-first."""
-    freqs = document_frequencies(df, text_col, doc_col)
-    stream = _term_stream(df, text_col, doc_col)
-    w = Window.partitionBy(doc_col).orderBy("df_docs", "term")
+    freqs = document_frequencies(df)
+    stream = _term_stream(df)
+    w = Window.partitionBy("doc_id").orderBy("df_docs", "term")
     return (stream.join(freqs, "term")
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= k)
-            .groupBy(doc_col)
+            .groupBy("doc_id")
             .agg(F.sort_array(F.collect_list(
                      F.struct("df_docs", "term"))).alias("keywords"),
                  F.min("df_docs").alias("rarest_df")))
 
 
-def build_postings(df: DataFrame, max_df: int,
-                   text_col: str = "text",
-                   doc_col: str = "doc_id") -> tuple[DataFrame,
-                                                     DataFrame]:
+def build_postings(df: DataFrame,
+                   max_df: int) -> tuple[DataFrame, DataFrame]:
     """Returns ``(postings, hot_terms)``: postings has
     ``(term, df_docs, postings)`` with the sorted doc list, every
     list bounded by ``max_df``; hot_terms has ``(term, df_docs)``
     for the excluded head of the distribution."""
-    freqs = document_frequencies(df, text_col, doc_col)
+    freqs = document_frequencies(df)
     hot = freqs.filter(F.col("df_docs") > max_df)
     cold = freqs.filter(F.col("df_docs") <= max_df)
-    stream = _term_stream(df, text_col, doc_col)
+    stream = _term_stream(df)
     # the HOT set is the broadcast side (module contract): it is
     # bounded by |corpus postings| / max_df by construction, while
     # the cold set is ~the whole vocabulary tail — force-broadcasting
@@ -103,6 +97,6 @@ def build_postings(df: DataFrame, max_df: int,
                 .join(cold, "term")
                 .groupBy("term")
                 .agg(F.max("df_docs").alias("df_docs"),
-                     F.sort_array(F.collect_list(doc_col))
+                     F.sort_array(F.collect_list("doc_id"))
                      .alias("postings")))
     return postings, hot

@@ -51,18 +51,17 @@ from pyspark.sql import functions as F
 DEFAULT_HOT_DF = 50
 
 
-def bigram_stream(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """(id, bigram) pairs, one per bigram OCCURRENCE (repetition kept:
+def bigram_stream(docs: DataFrame) -> DataFrame:
+    """(doc_id, bigram) pairs, one per bigram OCCURRENCE (repetition kept:
     an LM counts every transition), words = single-space split with
     empties dropped (same tokenization as ``operators/index.py`` and
     its DuckDB twin).  Map-side only — the CASE guard matters because
     Spark's ``sequence(1, 0)`` DESCENDS instead of returning empty
     (same trap as ``decontam.word_ngrams``)."""
-    wl = F.expr(f"filter(split({text_col}, ' '), x -> x <> '')")
+    wl = F.expr("filter(split(text, ' '), x -> x <> '')")
     return (docs
-            .select(id_col, wl.alias("_wl"))
-            .select(id_col, F.explode(F.expr(
+            .select("doc_id", wl.alias("_wl"))
+            .select("doc_id", F.explode(F.expr(
                 "CASE WHEN size(_wl) >= 2 THEN "
                 "transform(sequence(1, size(_wl) - 1), "
                 "i -> concat(element_at(_wl, i), ' ', "
@@ -70,22 +69,17 @@ def bigram_stream(docs: DataFrame, id_col: str = "doc_id",
                 "ELSE array() END")).alias("bigram")))
 
 
-def bigram_counts(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  _stream: DataFrame | None = None) -> DataFrame:
-    """(bigram, c): corpus-wide occurrence counts — partial+final hash
-    aggregation, nothing skew-sized shuffles. ``_stream`` lets a
-    caller share an already-built (persisted) bigram stream."""
-    base = _stream if _stream is not None \
-        else bigram_stream(docs, id_col, text_col)
-    return base.groupBy("bigram").agg(F.count("*").alias("c"))
+def bigram_counts(stream: DataFrame) -> DataFrame:
+    """(bigram, c): corpus-wide occurrence counts of a
+    :func:`bigram_stream` — partial+final hash aggregation, nothing
+    skew-sized shuffles."""
+    return stream.groupBy("bigram").agg(F.count("*").alias("c"))
 
 
-def lm_bits_per_doc(docs: DataFrame, hot_df: int = DEFAULT_HOT_DF,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def lm_bits_per_doc(docs: DataFrame,
+                    hot_df: int = DEFAULT_HOT_DF) -> DataFrame:
     """Per-document integer LM score:
-    ``(id, n_bigrams, sum_bits, avg_bits_x100)``, one row per document
+    ``(doc_id, n_bigrams, sum_bits, avg_bits_x100)``, one row per document
     with >= 1 bigram (a <2-word doc has no transitions to score — same
     inner-join semantics in the oracle).
 
@@ -96,8 +90,8 @@ def lm_bits_per_doc(docs: DataFrame, hot_df: int = DEFAULT_HOT_DF,
     # probe, the cold probe) — persist it so the corpus-wide explode
     # runs once, with the simhash/minhash lifecycle (materialize the
     # bounded per-doc output, then release)
-    stream = bigram_stream(docs, id_col, text_col).persist()
-    freqs = bigram_counts(docs, id_col, text_col, _stream=stream)
+    stream = bigram_stream(docs).persist()
+    freqs = bigram_counts(stream)
     hot = freqs.filter(F.col("c") > hot_df)
     cold = freqs.filter(F.col("c") <= hot_df)
     # Zipf head map-side (broadcast, bounded by total/hot_df); only the
@@ -109,7 +103,7 @@ def lm_bits_per_doc(docs: DataFrame, hot_df: int = DEFAULT_HOT_DF,
                    .join(cold, "bigram"))
     scored = scored_hot.unionByName(scored_cold)
     bits = F.expr("length(bin(c)) - 1")
-    out = (scored.groupBy(id_col)
+    out = (scored.groupBy("doc_id")
            .agg(F.count("*").alias("n_bigrams"),
                 F.sum(bits).alias("sum_bits"))
            .withColumn("avg_bits_x100",
@@ -119,12 +113,10 @@ def lm_bits_per_doc(docs: DataFrame, hot_df: int = DEFAULT_HOT_DF,
     return _materialize_and_release(out, stream)
 
 
-def quality_buckets(scored: DataFrame,
-                    score_col: str = "avg_bits_x100",
-                    cuts: tuple[int, int] = (33, 66)) -> DataFrame:
+def quality_buckets(scored: DataFrame) -> DataFrame:
     """CCNet's final step — split the scored corpus into head /
     middle / tail quality tertiles by exact nearest-rank percentile
-    cutoffs of ``score_col`` (CCNet §4.4: the head is the most
+    cutoffs (33rd and 66th) of ``avg_bits_x100`` (CCNet §4.4: the head is the most
     corpus-typical third). Returns one row per bucket:
     ``(bucket, n_docs, min_score, max_score, sum_bits)``.
 
@@ -139,8 +131,7 @@ def quality_buckets(scored: DataFrame,
     corpus size. Boundary rule: score <= p_lo -> tail, <= p_hi ->
     middle, else head; ties sit with the lower bucket in both engines
     because the cutoff IS a score value."""
-    lo, hi = cuts
-    hist = (scored.groupBy(F.col(score_col).cast("long").alias("v"))
+    hist = (scored.groupBy(F.col("avg_bits_x100").cast("long").alias("v"))
             .agg(F.count(F.lit(1)).alias("cnt")))
     x, y = hist.alias("x"), hist.alias("y")
     cum = (x.join(F.broadcast(y), F.col("y.v") <= F.col("x.v"))
@@ -149,20 +140,20 @@ def quality_buckets(scored: DataFrame,
     total = hist.agg(F.sum("cnt").alias("n"))
     cutrow = (cum.crossJoin(F.broadcast(total))
               .agg(F.min(F.when(
-                  F.expr(f"cum >= ({lo} * n + 99) div 100"),
+                  F.expr("cum >= (33 * n + 99) div 100"),
                   F.col("v"))).alias("_lo"),
                   F.min(F.when(
-                      F.expr(f"cum >= ({hi} * n + 99) div 100"),
+                      F.expr("cum >= (66 * n + 99) div 100"),
                       F.col("v"))).alias("_hi")))
     return (scored.crossJoin(F.broadcast(cutrow))
             .withColumn("bucket",
-                        F.when(F.col(score_col) <= F.col("_lo"),
+                        F.when(F.col("avg_bits_x100") <= F.col("_lo"),
                                F.lit("tail"))
-                        .when(F.col(score_col) <= F.col("_hi"),
+                        .when(F.col("avg_bits_x100") <= F.col("_hi"),
                               F.lit("middle"))
                         .otherwise(F.lit("head")))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.min(score_col).cast("long").alias("min_score"),
-                 F.max(score_col).cast("long").alias("max_score"),
+                 F.min("avg_bits_x100").cast("long").alias("min_score"),
+                 F.max("avg_bits_x100").cast("long").alias("max_score"),
                  F.sum("sum_bits").cast("long").alias("sum_bits")))

@@ -116,6 +116,7 @@ DECODED_SCHEMA_DDL = (
 )
 
 THUMB_SCHEMA_DDL = "doc_id long, media_type string, thumb array<double>"
+THUMB_GRID = 4  # thumbnails are THUMB_GRID x THUMB_GRID pooled cells
 
 FRAME_SCHEMA_DDL = (
     "doc_id long, frame_idx int, frame_mean double"
@@ -190,9 +191,10 @@ def decode_stage(media: DataFrame) -> DataFrame:
     return media.mapInArrow(dec, DECODED_SCHEMA_DDL)
 
 
-def thumbnail_stage(media: DataFrame, grid: int = 4) -> DataFrame:
+def thumbnail_stage(media: DataFrame) -> DataFrame:
     """Image resize analog: average-pool the (grayscale-averaged) image
-    to a grid x grid thumbnail -> array<double> of grid*grid values."""
+    to a THUMB_GRID x THUMB_GRID thumbnail -> array<double> of
+    THUMB_GRID**2 values."""
 
     def thumb(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -207,11 +209,12 @@ def thumbnail_stage(media: DataFrame, grid: int = 4) -> DataFrame:
                 w, h, c = hd["width"], hd["height"], hd["channels"]
                 img = np.frombuffer(blob[16:], dtype=np.uint8).reshape(
                     h, w, c).astype(np.float64).mean(axis=2)
-                ys = np.linspace(0, h, grid + 1).astype(int)
-                xs = np.linspace(0, w, grid + 1).astype(int)
+                ys = np.linspace(0, h, THUMB_GRID + 1).astype(int)
+                xs = np.linspace(0, w, THUMB_GRID + 1).astype(int)
                 t = [round(float(img[ys[r]:ys[r + 1],
                                      xs[q]:xs[q + 1]].mean()), 4)
-                     for r in range(grid) for q in range(grid)]
+                     for r in range(THUMB_GRID)
+                     for q in range(THUMB_GRID)]
                 out_ids.append(did)
                 out_types.append(mtype)
                 out_thumbs.append(t)
@@ -224,10 +227,10 @@ def thumbnail_stage(media: DataFrame, grid: int = 4) -> DataFrame:
     return media.mapInArrow(thumb, THUMB_SCHEMA_DDL)
 
 
-def frame_sample_stage(media: DataFrame, every: int = 2) -> DataFrame:
-    """Video frame sampling: keep every ``every``-th frame, emit one row
-    per sampled frame with its mean level (explodes the video axis —
-    the rows-per-doc amplification is bounded by n_frames/every)."""
+def frame_sample_stage(media: DataFrame) -> DataFrame:
+    """Video frame sampling: keep every 2nd frame, emit one row per
+    sampled frame with its mean level (explodes the video axis — the
+    rows-per-doc amplification is bounded by n_frames/2)."""
 
     def frames(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -241,7 +244,7 @@ def frame_sample_stage(media: DataFrame, every: int = 2) -> DataFrame:
                 w, h, nf = hd["width"], hd["height"], hd["n_frames"]
                 vid = np.frombuffer(blob[16:], dtype=np.uint8).reshape(
                     nf, h, w).astype(np.float64)
-                for fi in range(0, nf, every):
+                for fi in range(0, nf, 2):
                     o_ids.append(did)
                     o_idx.append(fi)
                     o_mean.append(round(float(vid[fi].mean()), 4))

@@ -70,24 +70,23 @@ def global_prefix_sum(df: DataFrame, order_cols: list[str],
 
 
 def pack_sequences(docs: DataFrame, seq_len: int,
-                   id_col: str = "doc_id",
                    n_tok_col: str = "n_tok") -> DataFrame:
-    """Per-document packing coordinates under concat-then-chunk:
+    """Per-``doc_id`` packing coordinates under concat-then-chunk:
     ``tok_end`` (exclusive global token offset), ``first_seq`` /
     ``last_seq`` (the fixed ``seq_len``-token windows the document's
     tokens land in; a doc spanning a cut has last_seq > first_seq;
     an empty doc occupies no window and gets first_seq > last_seq).
     All-integer arithmetic, so the DuckDB oracle agrees exactly."""
     keyed = docs.withColumn(
-        "_okey", F.md5(F.col(id_col).cast("string")))
-    cum = global_prefix_sum(keyed, ["_okey", id_col], n_tok_col,
+        "_okey", F.md5(F.col("doc_id").cast("string")))
+    cum = global_prefix_sum(keyed, ["_okey", "doc_id"], n_tok_col,
                             "tok_end")
     # all-INTEGER division (DIV), never float floor(); the one negative
     # operand case — an empty doc at global offset 0, where Spark's DIV
     # truncates toward zero but DuckDB's // floors — is pinned by the
     # explicit CASE, identical in the oracle SQL.
     return cum.selectExpr(
-        id_col,
+        "doc_id",
         "CAST(tok_end AS BIGINT) AS tok_end",
         f"CAST((tok_end - {n_tok_col}) DIV {seq_len} AS BIGINT) "
         "AS first_seq",
@@ -154,13 +153,13 @@ def grouped_rank(df: DataFrame, group_col: str, order_cols: list[str],
 
 
 def length_bucket_batches(docs: DataFrame, bucket_width: int = 64,
-                          batch_size: int = 32, id_col: str = "doc_id",
+                          batch_size: int = 32,
                           n_col: str = "n_tok") -> DataFrame:
     """Length-bucketed training batches with padding-waste telemetry —
     the dynamic-batching layout that pads each batch only to ITS OWN
     longest member instead of the corpus maximum. Documents are
     bucketed by ``n_col DIV bucket_width``, ordered within the bucket
-    by the content-independent md5 key (deterministic under
+    by the content-independent md5 key of ``doc_id`` (deterministic under
     retry/resume, same contract as packing), cut into
     ``batch_size``-doc batches, and summarized per batch:
 
@@ -172,10 +171,10 @@ def length_bucket_batches(docs: DataFrame, bucket_width: int = 64,
     exactly; the per-bucket rank is :func:`grouped_rank` — no
     single-task-per-bucket window at any scale."""
     keyed = (docs
-             .withColumn("_okey", F.md5(F.col(id_col).cast("string")))
+             .withColumn("_okey", F.md5(F.col("doc_id").cast("string")))
              .withColumn("bucket", F.expr(
                  f"CAST({n_col} DIV {bucket_width} AS BIGINT)")))
-    ranked = grouped_rank(keyed, "bucket", ["_okey", id_col], "_rn")
+    ranked = grouped_rank(keyed, "bucket", ["_okey", "doc_id"], "_rn")
     return (ranked
             .withColumn("batch_id", F.expr(
                 f"CAST((_rn - 1) DIV {batch_size} AS BIGINT)"))

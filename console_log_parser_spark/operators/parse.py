@@ -333,32 +333,32 @@ _SYNTH_SCHEMA = pa.schema([
 ])
 
 
-def synth_batch(batch: pa.RecordBatch, seed: int = 42) -> pa.RecordBatch:
+def synth_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     """(doc_id_num bigint) batch -> tokenized_logs batch (datagen.gen_doc
-    per id)."""
+    per id, datagen's default seed)."""
     from .. import datagen
 
     ids = batch.column("doc_id_num").to_pylist()
-    texts = [datagen.gen_doc(i, seed)[0] for i in ids]
+    texts = [datagen.gen_doc(i)[0] for i in ids]
     return pa.RecordBatch.from_arrays(
         [_string_array([f"doc_{i:08d}" for i in ids]),
          encode_string_lists(texts),
          _int32_array(np.fromiter(map(len, texts), np.int32, len(texts))),
-         _string_array([datagen.doc_source(i, seed) for i in ids])],
+         _string_array([datagen.doc_source(i) for i in ids])],
         schema=_SYNTH_SCHEMA)
 
 
-def synth_tokens_stage(df: DataFrame, seed: int = 42) -> DataFrame:
+def synth_tokens_stage(df: DataFrame) -> DataFrame:
     """(doc_id_num bigint) -> tokenized_logs rows, synthesizing each
     transcript deterministically from its numeric id (datagen.gen_doc).
 
     Lets the driver-provided `documents` table define cardinality and ids
-    while the transcript content stays a pure function of (id, seed) —
+    while the transcript content stays a pure function of the id —
     no external data, reproducible at any scale.
     """
     def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            yield synth_batch(batch, seed)
+            yield synth_batch(batch)
 
     return df.mapInArrow(
         gen, "doc_id string, tokens array<int>, n_tok int, source string")

@@ -36,17 +36,16 @@ PII_PATTERNS = [
 ]
 
 
-def redact_pii(df: DataFrame, text_col: str = "text",
-               out_col: str = "text_redacted") -> DataFrame:
-    """Add ``out_col`` (text with every PII hit replaced by its typed
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Add ``text_redacted`` (text with every PII hit replaced by its typed
     placeholder) and one ``n_<class>`` long column per pattern class
     counting hits on the raw text. Pure map-side built-ins."""
     out = df
     for cls, pat, _ in PII_PATTERNS:
         out = out.withColumn(
             f"n_{cls}",
-            F.regexp_count(F.col(text_col), F.lit(pat)).cast("long"))
-    red = F.col(text_col)
+            F.regexp_count(F.col("text"), F.lit(pat)).cast("long"))
+    red = F.col("text")
     for _, pat, tok in PII_PATTERNS:
         red = F.regexp_replace(red, pat, tok)
-    return out.withColumn(out_col, red)
+    return out.withColumn("text_redacted", red)

@@ -31,27 +31,25 @@ def bucket_bp(col, salt: str = "mix42"):
                    16, 10).cast("long") % BP)
 
 
-def deterministic_sample(df: DataFrame, rate_bp: int,
-                         key_col: str = "doc_id",
-                         salt: str = "mix42") -> DataFrame:
-    """Keep rows whose bucket falls below ``rate_bp`` (exact expected
-    rate rate_bp/10000, deterministic in (salt, key))."""
-    return df.filter(bucket_bp(F.col(key_col), salt) < rate_bp)
+def deterministic_sample(df: DataFrame, rate_bp: int) -> DataFrame:
+    """Keep rows whose ``doc_id`` bucket falls below ``rate_bp`` (exact
+    expected rate rate_bp/10000, deterministic in (salt, key))."""
+    return df.filter(bucket_bp(F.col("doc_id")) < rate_bp)
 
 
-def epoch_key(epoch: int, col, salt: str = "shuf42"):
+def epoch_key(epoch: int, col):
     """Deterministic per-epoch shuffle key: md5 over (salt, epoch, key).
     Changing ``epoch`` re-permutes the whole corpus; the same
     (salt, epoch, key) maps to the same position on any engine and any
     retry — the training-order analog of ``bucket_bp``."""
-    return F.md5(F.concat(F.lit(f"{salt}:{epoch}:"), col.cast("string")))
+    return F.md5(F.concat(F.lit(f"shuf42:{epoch}:"), col.cast("string")))
 
 
-def temperature_rates(df: DataFrame, strat_col: str = "source",
-                      scale: int = 1_000_000) -> DataFrame:
+def temperature_rates(df: DataFrame, strat_col: str = "source"
+                      ) -> DataFrame:
     """Per-stratum keep rates for temperature-2 dataset mixing
     (the Gopher / LLaMA up-/down-weighting shape): stratum weights
-    ``w_i = floor(sqrt(n_i) * scale)`` — i.e. ``n_i^(1/tau)`` with
+    ``w_i = floor(sqrt(n_i) * 10**6)`` — i.e. ``n_i^(1/tau)`` with
     tau = 2 — and per-row keep rates chosen so the expected kept count
     per stratum is proportional to ``w_i`` while the rarest stratum is
     kept whole (the binding constraint: for tau > 1 the rate
@@ -69,14 +67,14 @@ def temperature_rates(df: DataFrame, strat_col: str = "source",
     most — so the counts frame is tiny and the rates dimension
     broadcast-joins; the corpus itself is touched by one column-pruned
     count pass + the map-side filter. The int64 product
-    ``10000 * w_i * n_ref`` bounds deployment scale: with
-    ``scale = 10**6`` it overflows past ~10^8 docs per stratum — shrink
-    ``scale`` (rate precision is 1 bp regardless) or widen to
+    ``10000 * w_i * n_ref`` bounds deployment scale: with the 10**6
+    weight scale it overflows past ~10^8 docs per stratum — shrink
+    that scale (rate precision is 1 bp regardless) or widen to
     decimal(38) for a 10^12-row corpus."""
     counts = df.groupBy(strat_col).agg(F.count("*").alias("n_docs"))
     w = counts.withColumn(
         "weight",
-        F.floor(F.sqrt(F.col("n_docs")) * F.lit(scale)).cast("long"))
+        F.floor(F.sqrt(F.col("n_docs")) * F.lit(1_000_000)).cast("long"))
     ref = (w.orderBy("n_docs", strat_col).limit(1)
            .select(F.col("n_docs").alias("ref_n"),
                    F.col("weight").alias("ref_w")))
@@ -89,10 +87,9 @@ def temperature_rates(df: DataFrame, strat_col: str = "source",
 
 def split_assign(df: DataFrame,
                  fractions_bp: dict[str, int] | None = None,
-                 key_col: str = "doc_id",
                  salt: str = "split42") -> DataFrame:
     """Deterministic train/val/test assignment: add a ``split`` column
-    from cumulative basis-point thresholds over the md5 bucket —
+    from cumulative basis-point thresholds over the ``doc_id`` md5 bucket —
     EXHAUSTIVE and DISJOINT by construction (every bucket value falls
     in exactly one half-open interval). A pure map-side projection:
     no shuffle, no state.
@@ -113,7 +110,7 @@ def split_assign(df: DataFrame,
     fr = fractions_bp or {"train": 9800, "val": 100, "test": 100}
     if sum(fr.values()) != BP:
         raise ValueError(f"fractions_bp must sum to {BP}: {fr}")
-    b = bucket_bp(F.col(key_col), salt)
+    b = bucket_bp(F.col("doc_id"), salt)
     expr = None
     hi = 0
     *head, (last, _) = fr.items()

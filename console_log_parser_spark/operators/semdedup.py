@@ -17,8 +17,8 @@ decision in exact integer arithmetic on the quantized vectors:
     similar(a, b)  <=>  dot(a,b) > 0  AND
                         dot(a,b)^2 * den^2 >= num^2 * |a|^2 * |b|^2
 
-which is cos(a,b) >= num/den without a single float (num=9, den=10 by
-default; magnitudes bound the products safely inside BIGINT: |dot| <=
+which is cos(a,b) >= num/den without a single float (num=9, den=10;
+magnitudes bound the products safely inside BIGINT: |dot| <=
 64e6, dot^2*100 <= 4.1e17). A vector is a DUPLICATE when a
 same-cluster vector with a SMALLER vec_id is similar — the
 deterministic keep-lowest-id survivor rule used across the dedup
@@ -40,29 +40,29 @@ _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
 
 
-def semdedup_members(emb: DataFrame, k: int = 10, n_iters: int = 2,
-                     dim: int = 64,
-                     vec_col: str = "embedding") -> DataFrame:
-    """(cluster_id, vec_id, q, n2): final k-means membership with the
-    quantized vector and its squared norm (computed once, map-side)."""
-    assign = kmeans_assign(emb, k, n_iters, dim, vec_col)
-    return (assign.join(quantized(emb, vec_col), "vec_id")
+def semdedup_members(emb: DataFrame, k: int = 10,
+                     dim: int = 64) -> DataFrame:
+    """(cluster_id, vec_id, q, n2): final k-means membership (2 Lloyd
+    iterations) with the quantized vector and its squared norm
+    (computed once, map-side)."""
+    assign = kmeans_assign(emb, k, 2, dim)
+    return (assign.join(quantized(emb), "vec_id")
             .select((F.col("comb") % PACK).alias("cluster_id"),
                     "vec_id", "q",
                     F.expr(_DOT.format(a="q", b="q")).alias("n2")))
 
 
-def semdedup_stats(emb: DataFrame, k: int = 10, n_iters: int = 2,
-                   dim: int = 64, tau_num: int = 9, tau_den: int = 10,
-                   vec_col: str = "embedding") -> DataFrame:
+def semdedup_stats(emb: DataFrame, k: int = 10,
+                   dim: int = 64) -> DataFrame:
     """Per-cluster SemDeDup summary, ordered by cluster_id:
     ``(cluster_id, n_vecs, n_sim_pairs, n_dups, n_kept)`` where a dup
-    is a member with a similar smaller-id member in the same cell."""
+    is a member with a similar smaller-id member in the same cell
+    (cosine >= 9/10)."""
     # the member frame feeds both self-join sides AND the size
     # aggregate; an aliased self-join gets no ReusedExchange, so
     # without a persist the assignment scan + dot products run three
     # times (the simhash doubled-subtree lesson, r5 review finding)
-    m = semdedup_members(emb, k, n_iters, dim, vec_col).persist()
+    m = semdedup_members(emb, k, dim).persist()
     a = m.select("cluster_id", F.col("vec_id").alias("va"),
                  F.col("q").alias("qa"), F.col("n2").alias("na"))
     b = m.select("cluster_id", F.col("vec_id").alias("vb"),
@@ -72,10 +72,8 @@ def semdedup_stats(emb: DataFrame, k: int = 10, n_iters: int = 2,
            .filter(F.col("va") < F.col("vb"))
            .withColumn("dot", dot)
            .filter((F.col("dot") > 0)
-                   & (F.col("dot") * F.col("dot")
-                      * (tau_den * tau_den)
-                      >= (tau_num * tau_num)
-                      * F.col("na") * F.col("nb"))))
+                   & (F.col("dot") * F.col("dot") * 100
+                      >= 81 * F.col("na") * F.col("nb"))))
     # ONE aggregation over the (expensive) pair frame computes both
     # counts — countDistinct(vb) IS the dup count, so the in-cell
     # self-join executes exactly once

@@ -33,9 +33,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+DIM = 64  # embedding width
 L_TABLES = 4
 B_BITS = 8
 QUANT = 1000.0
+TOP_K = 10  # ANN result size
+NPROBE = 2  # IVF cells probed per query
+# near-dup config: the (L, B) sizing note on neardup_lsh_pairs
+NEARDUP_THRESHOLD = 0.45
+NEARDUP_L_TABLES = 32
+NEARDUP_B_BITS = 4
 _M31 = 2_147_483_648  # 2^31
 
 
@@ -81,11 +88,10 @@ def _signatures_np(mat: np.ndarray, h: np.ndarray,
     return codes + table
 
 
-def lsh_buckets(df: DataFrame, vec_col: str = "embedding",
-                dim: int = 64, l_tables: int = L_TABLES,
+def lsh_buckets(df: DataFrame, l_tables: int = L_TABLES,
                 b_bits: int = B_BITS) -> DataFrame:
     """Add ``buckets: array<long>`` (one id per LSH table) to each row."""
-    h = hyperplanes(dim, l_tables, b_bits)
+    h = hyperplanes(DIM, l_tables, b_bits)
 
     @F.pandas_udf(ArrayType(LongType()))
     def bucket_udf(vecs: pd.Series) -> pd.Series:
@@ -95,16 +101,15 @@ def lsh_buckets(df: DataFrame, vec_col: str = "embedding",
         sigs = _signatures_np(mat, h, l_tables, b_bits)
         return pd.Series(list(sigs))
 
-    return df.withColumn("buckets", bucket_udf(F.col(vec_col)))
+    return df.withColumn("buckets", bucket_udf(F.col("embedding")))
 
 
-def ann_lsh_candidates(emb: DataFrame, query_vec_id: int,
-                       dim: int = 64) -> DataFrame:
+def ann_lsh_candidates(emb: DataFrame, query_vec_id: int) -> DataFrame:
     """Candidate vec_ids sharing >=1 LSH bucket with the query vector.
 
     The query's L bucket rows are broadcast; the corpus side is an
     equi-join on bucket id (uniform hash keys — no skew at scale)."""
-    with_b = lsh_buckets(emb, dim=dim)
+    with_b = lsh_buckets(emb)
     exploded = with_b.select("vec_id", F.explode("buckets").alias("bucket"))
     qb = (exploded.filter(F.col("vec_id") == query_vec_id)
           .select(F.col("bucket").alias("qbucket")).distinct())
@@ -126,9 +131,7 @@ def cosine_expr(a, b):
 
 
 def lsh_candidate_pairs(emb: DataFrame, l_tables: int = L_TABLES,
-                        b_bits: int = B_BITS, dim: int = 64,
-                        vec_col: str = "embedding",
-                        directed: bool = False):
+                        b_bits: int = B_BITS, directed: bool = False):
     """Distinct candidate pairs sharing >= 1 LSH bucket — the ONE
     pair-generation rule for the near-dup and kNN-join operators
     (r5 review: two hand-maintained copies of the bucket self-join
@@ -139,7 +142,7 @@ def lsh_candidate_pairs(emb: DataFrame, l_tables: int = L_TABLES,
     of the pandas-UDF signature stage (an aliased self-join gets no
     ReusedExchange), and the CALLER releases it after materializing
     its result (the _materialize_and_release lifecycle)."""
-    ex = (lsh_buckets(emb, vec_col, dim, l_tables, b_bits)
+    ex = (lsh_buckets(emb, l_tables, b_bits)
           .select("vec_id", F.explode("buckets").alias("bucket"))
           .persist())
     a, b = ex.alias("a"), ex.alias("b")
@@ -153,10 +156,8 @@ def lsh_candidate_pairs(emb: DataFrame, l_tables: int = L_TABLES,
     return pairs, ex
 
 
-def neardup_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
-                      l_tables: int = 32, b_bits: int = 4,
-                      dim: int = 64) -> DataFrame:
-    """Embedding near-duplicate pairs (cosine >= threshold) via
+def neardup_lsh_pairs(emb: DataFrame) -> DataFrame:
+    """Embedding near-duplicate pairs (cosine >= NEARDUP_THRESHOLD) via
     hyperplane-LSH candidate generation + exact-cosine verification —
     the candidate join is an equi-join on uniform bucket ids
     (shuffle-partitionable, AQE-splittable), never an O(n^2) cross
@@ -169,7 +170,8 @@ def neardup_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
     (B=4) and many tables (L=32) for total recall —
     tests/test_similarity.py asserts the LSH output equals the exact
     all-pairs result at sf0.001 and sf0.01. At production thresholds
-    (>= 0.9, p >= 0.86) the same operator runs with B=16..24 where
+    (>= 0.9, p >= 0.86) the same operator runs with B=16..24 (set
+    NEARDUP_THRESHOLD, NEARDUP_B_BITS and NEARDUP_L_TABLES) where
     buckets are tiny and the join is genuinely subquadratic.
 
     The operator is PROBABILISTIC in general: exact-all-pairs equality
@@ -180,19 +182,20 @@ def neardup_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
     import logging
     import math
 
-    p_thr = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    recall_at_thr = 1.0 - (1.0 - p_thr ** b_bits) ** l_tables
+    p_thr = 1.0 - math.acos(NEARDUP_THRESHOLD) / math.pi
+    recall_at_thr = (1.0 - (1.0 - p_thr ** NEARDUP_B_BITS)
+                     ** NEARDUP_L_TABLES)
     logging.getLogger(__name__).info(
         "neardup_lsh_pairs(threshold=%.3f, L=%d, B=%d): analytic recall "
         "for a pair exactly at threshold = %.6f (rises toward 1 above "
         "it); pairs below threshold are filtered by exact verification",
-        threshold, l_tables, b_bits, recall_at_thr)
+        NEARDUP_THRESHOLD, NEARDUP_L_TABLES, NEARDUP_B_BITS, recall_at_thr)
     from console_log_parser_spark.operators.dedup import (
         _materialize_and_release)
     vecs = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"))
-    cand, ex = lsh_candidate_pairs(emb, l_tables, b_bits, dim)
+    cand, ex = lsh_candidate_pairs(emb, NEARDUP_L_TABLES, NEARDUP_B_BITS)
     va = vecs.select(F.col("vec_id").alias("vec_a"),
                      F.col("v").alias("va"))
     vb = vecs.select(F.col("vec_id").alias("vec_b"),
@@ -201,13 +204,12 @@ def neardup_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
            .select("vec_a", "vec_b",
                    F.round(cosine_expr(F.col("va"), F.col("vb")), 4)
                    .alias("score"))
-           .filter(F.col("score") >= threshold))
+           .filter(F.col("score") >= NEARDUP_THRESHOLD))
     return _materialize_and_release(out, ex)
 
 
-def cosine_topk_vectorized(emb: DataFrame, query: np.ndarray, k: int = 10,
-                           vec_col: str = "embedding") -> DataFrame:
-    """Exact brute-force top-k as one matmul per Arrow batch with
+def cosine_topk_vectorized(emb: DataFrame, query: np.ndarray) -> DataFrame:
+    """Exact brute-force top-TOP_K as one matmul per Arrow batch with
     per-partition partial top-k; only ~num_partitions*k rows reach the
     final (driver-side-sized) sort."""
     import pyarrow as pa
@@ -219,7 +221,7 @@ def cosine_topk_vectorized(emb: DataFrame, query: np.ndarray, k: int = 10,
             if not batch.num_rows:
                 continue
             vec_ids = batch.column("vec_id").to_numpy()
-            col = batch.column(vec_col)
+            col = batch.column("embedding")
             if isinstance(col, pa.ChunkedArray):
                 col = col.combine_chunks()
             offs = col.offsets.to_numpy(zero_copy_only=False)
@@ -227,15 +229,15 @@ def cosine_topk_vectorized(emb: DataFrame, query: np.ndarray, k: int = 10,
             mat = vals.reshape(len(vec_ids), -1).astype(np.float64)
             norms = np.linalg.norm(mat, axis=1)
             scores = (mat @ q) / (norms * qn)
-            top = np.argsort(-scores, kind="stable")[:k]
+            top = np.argsort(-scores, kind="stable")[:TOP_K]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(vec_ids[top], pa.int64()),
                  pa.array(np.round(scores[top], 4), pa.float64())],
                 names=["vec_id", "score"])
 
-    scored = emb.select("vec_id", vec_col).mapInArrow(
+    scored = emb.select("vec_id", "embedding").mapInArrow(
         score_batches, "vec_id long, score double")
-    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
+    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(TOP_K)
 
 
 def ivf_centroid_mod(n: int) -> int:
@@ -258,8 +260,7 @@ def ivf_centroid_mod(n: int) -> int:
 IVF_MAX_CODEBOOK_ROWS = 1_000_000
 
 
-def ivf_assign(emb: DataFrame, centroid_mod: int | None = None,
-               vec_col: str = "embedding", dim: int = 64) -> DataFrame:
+def ivf_assign(emb: DataFrame, centroid_mod: int) -> DataFrame:
     """IVF coarse quantizer with a deterministic codebook: centroids
     are the corpus vectors whose ``vec_id % centroid_mod == 1`` (no
     k-means iterations — reproducible, engine-portable); every vector
@@ -267,7 +268,7 @@ def ivf_assign(emb: DataFrame, centroid_mod: int | None = None,
     squared L2 distance (exact arithmetic, ties broken by centroid id,
     so Spark and the SQL oracle can never disagree on a cell).
 
-    ``centroid_mod`` defaults to ``ivf_centroid_mod(count)`` so the
+    ``ann_ivf_candidates`` passes ``ivf_centroid_mod(count)`` so the
     codebook is K ~ sqrt(n) rows — the ``collect()`` below is bounded
     (10^6 small rows even at n = 10^12; round-4 verdict: the old fixed
     mod=43 collected n/43 rows, unbounded). The bound is enforced with
@@ -280,21 +281,19 @@ def ivf_assign(emb: DataFrame, centroid_mod: int | None = None,
     import pandas as pd
     from pyspark.sql.types import LongType
 
-    if centroid_mod is None:
-        centroid_mod = ivf_centroid_mod(emb.count())
     cent_frame = (emb.filter(F.col("vec_id") % centroid_mod == 1)
-                  .select("vec_id", vec_col))
+                  .select("vec_id", "embedding"))
     n_cent = cent_frame.count()
     if n_cent > IVF_MAX_CODEBOOK_ROWS:
         raise ValueError(
             f"IVF codebook would be {n_cent} rows with "
             f"mod={centroid_mod} (cap {IVF_MAX_CODEBOOK_ROWS}, the "
             "sqrt of the 10^12-vector design corpus): refusing the "
-            "unbounded driver collect — pass a larger centroid_mod "
-            "or let it default to ivf_centroid_mod(n)")
+            "unbounded driver collect — pass a larger centroid_mod, "
+            "such as ivf_centroid_mod(n)")
     cent_rows = cent_frame.collect()
     cent_ids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    cent_mat = quantize(np.array([r[vec_col] for r in cent_rows]))
+    cent_mat = quantize(np.array([r["embedding"] for r in cent_rows]))
     order = np.argsort(cent_ids)
     cent_ids, cent_mat = cent_ids[order], cent_mat[order]
     cent_sq = (cent_mat * cent_mat).sum(axis=1)
@@ -309,48 +308,41 @@ def ivf_assign(emb: DataFrame, centroid_mod: int | None = None,
         d = cent_sq[None, :] - 2 * (w @ cent_mat.T)
         return pd.Series(cent_ids[np.argmin(d, axis=1)])
 
-    return emb.withColumn("cell", assign_udf(F.col(vec_col)))
+    return emb.withColumn("cell", assign_udf(F.col("embedding")))
 
 
-def ann_ivf_candidates(emb: DataFrame, query_vec_id: int,
-                       centroid_mod: int | None = None, nprobe: int = 2,
-                       vec_col: str = "embedding") -> DataFrame:
-    """IVF search: probe the ``nprobe`` cells nearest the query vector
+def ann_ivf_candidates(emb: DataFrame, query_vec_id: int) -> DataFrame:
+    """IVF search: probe the NPROBE cells nearest the query vector
     (by the same integer metric) and return their members."""
-    if centroid_mod is None:
-        centroid_mod = ivf_centroid_mod(emb.count())
-    assigned = ivf_assign(emb, centroid_mod, vec_col)
+    centroid_mod = ivf_centroid_mod(emb.count())
+    assigned = ivf_assign(emb, centroid_mod)
     cent = assigned.filter(F.col("vec_id") % centroid_mod == 1)
     qv = emb.filter(F.col("vec_id") == query_vec_id).select(
-        F.col(vec_col).alias("qv"))
-    # integer distance query->centroid, smallest nprobe cells
+        F.col("embedding").alias("qv"))
+    # integer distance query->centroid, smallest NPROBE cells
     wq = F.transform("qv", lambda x: F.floor(
         x.cast("double") * QUANT + F.lit(0.5)).cast("long"))
-    wc = F.transform(vec_col, lambda x: F.floor(
+    wc = F.transform("embedding", lambda x: F.floor(
         x.cast("double") * QUANT + F.lit(0.5)).cast("long"))
     dist = F.aggregate(
         F.zip_with(wc, F.col("qw"), lambda c, q: (c - q) * (c - q)),
         F.lit(0).cast("long"), lambda acc, x: acc + x)
     probed = (cent.crossJoin(F.broadcast(qv.select(wq.alias("qw"))))
               .select("vec_id", dist.alias("d"))
-              .orderBy("d", "vec_id").limit(nprobe)
+              .orderBy("d", "vec_id").limit(NPROBE)
               .select(F.col("vec_id").alias("cell")))
     return (assigned.join(F.broadcast(probed), "cell")
             .filter(F.col("vec_id") != query_vec_id)
             .select("vec_id"))
 
 
-def oracle_ivf_cte_prefix(query_vec_id: int = 0,
-                          centroid_mod: int | None = None,
-                          nprobe: int = 2, dim: int = 64) -> str:
-    """The shared IVF CTE chain (through the ``cand`` candidate set):
-    identical assign -> probe in DuckDB, ONE copy for oracle_ivf_sql
-    and the IVF x PQ composition oracle. The codebook stride mirrors
-    ivf_centroid_mod(): m = greatest(2, n // floor(sqrt(n))) derived
-    from the same count, so both engines pick the identical
-    ~sqrt(n)-sized codebook."""
-    mod_sql = (str(centroid_mod) if centroid_mod is not None else
-               "(SELECT m FROM cm)")
+def oracle_ivf_cte_prefix() -> str:
+    """The shared IVF CTE chain (through the ``cand`` candidate set of
+    query vector 0): identical assign -> probe in DuckDB, ONE copy for
+    oracle_ivf_sql and the IVF x PQ composition oracle. The codebook
+    stride mirrors ivf_centroid_mod(): m = greatest(2, n //
+    floor(sqrt(n))) derived from the same count, so both engines pick
+    the identical ~sqrt(n)-sized codebook."""
     return f"""
         WITH e AS (SELECT vec_id, label,
                           CAST(embedding AS DOUBLE[]) AS v
@@ -361,9 +353,9 @@ def oracle_ivf_cte_prefix(query_vec_id: int = 0,
                FROM e),
         w AS (SELECT vec_id, i,
                      CAST(floor(v[i] * {QUANT:.0f} + 0.5) AS BIGINT) AS wv
-              FROM e CROSS JOIN range(1, {dim + 1}) t(i)),
+              FROM e CROSS JOIN range(1, {DIM + 1}) t(i)),
         cw AS (SELECT vec_id AS cid, i, wv AS cv FROM w
-               WHERE vec_id % {mod_sql} = 1),
+               WHERE vec_id % (SELECT m FROM cm) = 1),
         dists AS (SELECT w.vec_id, cw.cid,
                          sum((w.wv - cw.cv) * (w.wv - cw.cv)) AS d
                   FROM w JOIN cw ON w.i = cw.i
@@ -374,31 +366,27 @@ def oracle_ivf_cte_prefix(query_vec_id: int = 0,
                                   ORDER BY d, cid) AS rn
                        FROM dists) WHERE rn = 1),
         probe AS (SELECT cid FROM dists
-                  WHERE vec_id = {query_vec_id}
-                  ORDER BY d, cid LIMIT {nprobe}),
+                  WHERE vec_id = 0
+                  ORDER BY d, cid LIMIT {NPROBE}),
         cand AS (SELECT a.vec_id FROM assign a
                  JOIN probe p ON a.cid = p.cid
-                 WHERE a.vec_id <> {query_vec_id})"""
+                 WHERE a.vec_id <> 0)"""
 
 
-def oracle_ivf_sql(query_vec_id: int = 0, k: int = 10,
-                   centroid_mod: int | None = None, nprobe: int = 2,
-                   dim: int = 64) -> str:
+def oracle_ivf_sql() -> str:
     """DuckDB: identical IVF assign -> probe -> exact-cosine re-rank
     (the shared CTE prefix + the cosine top-k tail)."""
-    return oracle_ivf_cte_prefix(
-        query_vec_id, centroid_mod, nprobe, dim) + f"""
+    return oracle_ivf_cte_prefix() + f"""
         SELECT e.vec_id, e.label,
                round(list_cosine_similarity(e.v, q.v), 4) AS score
         FROM cand JOIN e ON e.vec_id = cand.vec_id
-        CROSS JOIN (SELECT v FROM e WHERE vec_id = {query_vec_id}) q
+        CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) q
         ORDER BY score DESC, e.vec_id ASC
-        LIMIT {k}
+        LIMIT {TOP_K}
     """
 
 
-def oracle_lsh_cte_prefix(dim: int = 64, l_tables: int = L_TABLES,
-                          b_bits: int = B_BITS) -> str:
+def oracle_lsh_cte_prefix() -> str:
     """The shared LSH CTE chain through ``sigs`` (per-vector bucket
     ids from the identical LCG hyperplanes) — ONE copy for the
     single-query oracle and the kNN-join oracle."""
@@ -408,7 +396,7 @@ def oracle_lsh_cte_prefix(dim: int = 64, l_tables: int = L_TABLES,
                    FROM embeddings),
         w AS (SELECT vec_id, i,
                      CAST(floor(v[i] * {QUANT:.0f} + 0.5) AS BIGINT) AS wv
-              FROM e CROSS JOIN range(1, {dim + 1}) t(i)),
+              FROM e CROSS JOIN range(1, {DIM + 1}) t(i)),
         planes AS (
             SELECT tb, j, i,
                    CASE WHEN (((x2 // 512) + (x2 // 262144)
@@ -417,14 +405,14 @@ def oracle_lsh_cte_prefix(dim: int = 64, l_tables: int = L_TABLES,
             FROM (SELECT tb, j, i,
                          ((x1 * 1103515245 + 12345) % {_M31}) AS x2
                   FROM (SELECT t.tb, jj.j, ii.i,
-                               (((t.tb * {b_bits} + jj.j + 1)
+                               (((t.tb * {B_BITS} + jj.j + 1)
                                  * 1103515245
                                  + i * 12345
-                                 + (t.tb * {b_bits} + jj.j + 1)
+                                 + (t.tb * {B_BITS} + jj.j + 1)
                                    * i * 2654435761) % {_M31}) AS x1
-                        FROM range({l_tables}) t(tb)
-                        CROSS JOIN range({b_bits}) jj(j)
-                        CROSS JOIN range(1, {dim + 1}) ii(i)))),
+                        FROM range({L_TABLES}) t(tb)
+                        CROSS JOIN range({B_BITS}) jj(j)
+                        CROSS JOIN range(1, {DIM + 1}) ii(i)))),
         bits AS (SELECT w.vec_id, p.tb, p.j,
                         CASE WHEN sum(p.sgn * w.wv) >= 0
                              THEN 1 ELSE 0 END AS bit
@@ -435,27 +423,25 @@ def oracle_lsh_cte_prefix(dim: int = 64, l_tables: int = L_TABLES,
                  FROM bits GROUP BY vec_id, tb)"""
 
 
-def knn_join_lsh(emb: DataFrame, k: int = 3, dim: int = 64,
-                 vec_col: str = "embedding") -> DataFrame:
-    """Bucketed kNN JOIN — top-``k`` LSH-candidate neighbors for EVERY
+def knn_join_lsh(emb: DataFrame) -> DataFrame:
+    """Bucketed kNN JOIN — top-3 LSH-candidate neighbors for EVERY
     vector at once (the hard-negative-mining / contrastive-pairs
     primitive): explode each vector's L bucket ids, self-join on the
     bucket (uniform hash keys, skew-free), rank candidates per query
     by exact cosine (rounded to 4dp, ties -> lowest neighbor id — the
     ann_* convention). Per-query candidate volume is bounded by the
-    bucket sizes; production raises b_bits ~ log2(n) so buckets stay
+    bucket sizes; production raises B_BITS ~ log2(n) so buckets stay
     O(1) as the corpus grows. The exploded bucket frame is persisted —
     both self-join sides read one computation of the pandas-UDF
     signature stage (the aliased-self-join lesson) — and released
     after the (tiny) result materializes."""
     from console_log_parser_spark.operators.dedup import (
         _materialize_and_release)
-    pairs, ex = lsh_candidate_pairs(emb, dim=dim, vec_col=vec_col,
-                                    directed=True)
+    pairs, ex = lsh_candidate_pairs(emb, directed=True)
     ea = emb.select(F.col("vec_id").alias("qid"),
-                    F.col(vec_col).cast("array<double>").alias("va"))
+                    F.col("embedding").cast("array<double>").alias("va"))
     eb = emb.select(F.col("vec_id").alias("nid"),
-                    F.col(vec_col).cast("array<double>").alias("vb"))
+                    F.col("embedding").cast("array<double>").alias("vb"))
     scored = (pairs.join(ea, "qid").join(eb, "nid")
               .select("qid", "nid",
                       F.round(cosine_expr(F.col("va"), F.col("vb")), 4)
@@ -465,7 +451,7 @@ def knn_join_lsh(emb: DataFrame, k: int = 3, dim: int = 64,
         "nn_rank", F.row_number().over(
             Window.partitionBy("qid")
             .orderBy(F.desc("score"), F.asc("nid"))))
-    out = (ranked.filter(F.col("nn_rank") <= k)
+    out = (ranked.filter(F.col("nn_rank") <= 3)
            .select(F.col("qid").cast("long").alias("qid"),
                    F.col("nn_rank").cast("long").alias("nn_rank"),
                    F.col("nid").cast("long").alias("nid"), "score")
@@ -473,22 +459,21 @@ def knn_join_lsh(emb: DataFrame, k: int = 3, dim: int = 64,
     return _materialize_and_release(out, ex)
 
 
-def oracle_lsh_sql(query_vec_id: int = 0, k: int = 10,
-                   dim: int = 64, l_tables: int = L_TABLES,
-                   b_bits: int = B_BITS) -> str:
-    """DuckDB SQL computing the identical LSH candidates + exact-cosine
-    re-rank (same integer quantization and hyperplane LCG)."""
-    return oracle_lsh_cte_prefix(dim, l_tables, b_bits) + f""",
+def oracle_lsh_sql() -> str:
+    """DuckDB SQL computing the identical LSH candidates of query vector
+    0 + exact-cosine re-rank (same integer quantization and hyperplane
+    LCG)."""
+    return oracle_lsh_cte_prefix() + f""",
         qb AS (SELECT DISTINCT bucket FROM sigs
-               WHERE vec_id = {query_vec_id}),
+               WHERE vec_id = 0),
         cand AS (SELECT DISTINCT s.vec_id
                  FROM sigs s JOIN qb ON s.bucket = qb.bucket
-                 WHERE s.vec_id <> {query_vec_id})
+                 WHERE s.vec_id <> 0)
         SELECT e.vec_id, e.label,
                round(list_cosine_similarity(e.v, q.v), 4) AS score
         FROM cand
         JOIN e ON e.vec_id = cand.vec_id
-        CROSS JOIN (SELECT v FROM e WHERE vec_id = {query_vec_id}) q
+        CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) q
         ORDER BY score DESC, e.vec_id ASC
-        LIMIT {k}
+        LIMIT {TOP_K}
     """

@@ -58,28 +58,27 @@ def word_chunk_array(text_col: str, w: int) -> Column:
         f"i -> array_join(slice({words}, i * {w} + 1, {w}), ' '))")
 
 
-def span_dedup_stats(docs: DataFrame, w: int = 5, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """(id, n_chunks, n_dropped, kept_text) for every document, where
+def span_dedup_stats(docs: DataFrame, w: int = 5) -> DataFrame:
+    """(doc_id, n_chunks, n_dropped, kept_text) for every document, where
     a chunk occurrence is dropped iff a smaller ``(doc_id, cidx)``
     occurrence of the same chunk text exists anywhere in the corpus."""
     chunks = (docs
-              .select(id_col,
-                      F.posexplode(word_chunk_array(text_col, w))
+              .select("doc_id",
+                      F.posexplode(word_chunk_array("text", w))
                       .alias("cidx", "chunk"))
               .withColumn("ckey", F.md5("chunk")))
     chunks.persist()
     owners = (chunks
               .groupBy("ckey")
-              .agg(F.min(F.struct(id_col, "cidx")).alias("owner")))
+              .agg(F.min(F.struct("doc_id", "cidx")).alias("owner")))
     flagged = (chunks
                .join(owners, "ckey")
                .withColumn(
                    "kept",
-                   (F.col("owner")[id_col] == F.col(id_col))
+                   (F.col("owner")["doc_id"] == F.col("doc_id"))
                    & (F.col("owner")["cidx"] == F.col("cidx"))))
     out = (flagged
-           .groupBy(id_col)
+           .groupBy("doc_id")
            .agg(F.count(F.lit(1)).cast("long").alias("n_chunks"),
                 F.sum(F.when(F.col("kept"), 0).otherwise(1))
                 .cast("long").alias("n_dropped"),

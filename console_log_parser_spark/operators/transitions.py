@@ -26,44 +26,36 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def transition_counts(events: DataFrame,
-                      user_col: str = "user_id",
-                      type_col: str = "event_type",
-                      order_cols: tuple[str, ...] = ("ts", "event_id"),
-                      ) -> DataFrame:
+def transition_counts(events: DataFrame) -> DataFrame:
     """(prev_type, next_type, n_trans, n_users), one row per observed
     transition pair."""
-    w = Window.partitionBy(user_col).orderBy(*order_cols)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = (events
-              .select(user_col, type_col, *order_cols)
-              .withColumn("prev_type", F.lag(type_col).over(w))
+              .select("user_id", "event_type", "ts", "event_id")
+              .withColumn("prev_type", F.lag("event_type").over(w))
               .filter(F.col("prev_type").isNotNull()))
     return (lagged
-            .groupBy("prev_type", F.col(type_col).alias("next_type"))
+            .groupBy("prev_type", F.col("event_type").alias("next_type"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_trans"),
-                 F.countDistinct(user_col).cast("long")
+                 F.countDistinct("user_id").cast("long")
                  .alias("n_users")))
 
 
-def user_trigrams(events: DataFrame, k: int = 20,
-                  user_col: str = "user_id",
-                  type_col: str = "event_type",
-                  order_cols: tuple[str, ...] = ("ts", "event_id"),
-                  ) -> DataFrame:
-    """Top-``k`` event-type trigrams across users: both lags ride the
+def user_trigrams(events: DataFrame) -> DataFrame:
+    """Top-20 event-type trigrams across users: both lags ride the
     SAME user-partitioned window, so the whole pattern-mining pass
     costs ONE hash exchange on the user key plus the
     |types|^3-bounded count agg; the top-k is a TakeOrderedAndProject
     (per-partition partial top-k, never a global sort). Total order
     (n desc, t1, t2, t3) makes the cut deterministic."""
-    w = Window.partitionBy(user_col).orderBy(*order_cols)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = (events
-              .select(user_col, type_col, *order_cols)
-              .withColumn("t2", F.lag(type_col, 1).over(w))
-              .withColumn("t1", F.lag(type_col, 2).over(w))
+              .select("user_id", "event_type", "ts", "event_id")
+              .withColumn("t2", F.lag("event_type", 1).over(w))
+              .withColumn("t1", F.lag("event_type", 2).over(w))
               .filter(F.col("t1").isNotNull()))
     return (lagged
-            .groupBy("t1", "t2", F.col(type_col).alias("t3"))
+            .groupBy("t1", "t2", F.col("event_type").alias("t3"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .orderBy(F.desc("n"), "t1", "t2", "t3")
-            .limit(k))
+            .limit(20))

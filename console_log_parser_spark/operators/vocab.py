@@ -55,16 +55,15 @@ from pyspark.sql.types import (LongType, StringType, StructField,
 US = "\x1f"  # symbol separator; sorts below every printable char
 
 
-def _words(docs: DataFrame, text_col: str) -> DataFrame:
+def _words(docs: DataFrame) -> DataFrame:
     """Non-empty single-space-split words (matches the DuckDB oracle's
     ``string_split(text, ' ')``)."""
     return (docs
-            .select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
+            .select(F.explode(F.split(F.col("text"), " ")).alias("w"))
             .filter(F.col("w") != ""))
 
 
-def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
-                    top_k: int = 20) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """Top-``top_k`` adjacent character pairs within words — the
     candidate set for the FIRST BPE merge: (rank, pair, cnt), ranked
     by (cnt DESC, pair ASC).
@@ -73,7 +72,7 @@ def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
     array — ``sequence`` is guarded because Spark's sequence(1, 0)
     DESCENDS), one partial+final count exchange over a domain bounded
     by |charset|^2, then a tiny post-limit window for the rank."""
-    pairs = (_words(docs, text_col)
+    pairs = (_words(docs)
              .filter(F.char_length("w") >= 2)
              .select(F.explode(F.expr(
                  "transform(sequence(1, char_length(w) - 1), "
@@ -91,11 +90,11 @@ def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
         "pair", "cnt")
 
 
-def symbol_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def symbol_words(docs: DataFrame) -> DataFrame:
     """Distinct-word weighted symbol frame: (s, wc) where ``s`` is the
     word in the wrapped representation (module docstring: ``US c1 USUS
     c2 ... US``) and ``wc`` its corpus count."""
-    return (_words(docs, text_col)
+    return (_words(docs)
             .groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("wc"))
             .select(F.concat(
                 F.lit(US),
@@ -122,8 +121,7 @@ def _pair_counts(frame: DataFrame) -> DataFrame:
             .agg(F.sum("wc").alias("cnt")))
 
 
-def bpe_learn(docs: DataFrame, n_merges: int = 6,
-              text_col: str = "text") -> DataFrame:
+def bpe_learn(docs: DataFrame, n_merges: int = 6) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns the merge table
     (step, left, right, merged, cnt) in learning order.
 
@@ -134,7 +132,7 @@ def bpe_learn(docs: DataFrame, n_merges: int = 6,
     greedy BPE semantics).  The evolving frame is re-persisted per
     iteration and the predecessor released, so lineage stays O(1)."""
     spark = docs.sparkSession
-    frame = symbol_words(docs, text_col).persist()
+    frame = symbol_words(docs).persist()
     merges = []
     try:
         for step in range(1, n_merges + 1):
@@ -164,12 +162,10 @@ def bpe_learn(docs: DataFrame, n_merges: int = 6,
 
 
 def bpe_encode_stats(docs: DataFrame,
-                     merges: list[tuple[str, str]],
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+                     merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned BPE merge table to every document — the
     learn->APPLY half of the tokenizer loop — and report the per-doc
-    encoding telemetry ``(id, n_words, n_tokens, n_saved)`` where
+    encoding telemetry ``(doc_id, n_words, n_tokens, n_saved)`` where
     ``n_tokens`` is the symbol count after all merges and ``n_saved``
     the character-symbols merged away (= sum(char_length) - n_tokens).
 
@@ -199,25 +195,23 @@ def bpe_encode_stats(docs: DataFrame,
     # splitting the wrapped form on the DOUBLE separator yields one
     # element per symbol (the single outer sentinels never pair up)
     per_word = (docs
-                .select(id_col,
-                        F.explode(F.split(F.col(text_col), " "))
+                .select("doc_id",
+                        F.explode(F.split(F.col("text"), " "))
                         .alias("w"))
                 .filter(F.col("w") != "")
-                .select(id_col,
+                .select("doc_id",
                         F.char_length("w").alias("n_chars"),
                         F.size(F.split(sym, US + US)).alias("n_tok")))
-    return (per_word.groupBy(id_col)
+    return (per_word.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_words"),
                  F.sum("n_tok").cast("long").alias("n_tokens"),
                  (F.sum("n_chars") - F.sum("n_tok")).cast("long")
                  .alias("n_saved")))
 
 
-def vocab_oov_stats(docs: DataFrame, vocab_k: int = 20,
-                    text_col: str = "text",
-                    group_col: str = "source") -> DataFrame:
-    """Per-``group_col`` out-of-vocabulary rate against the corpus's
-    own top-``vocab_k`` word vocabulary: (group, n_tokens, n_oov,
+def vocab_oov_stats(docs: DataFrame, vocab_k: int = 20) -> DataFrame:
+    """Per-``source`` out-of-vocabulary rate against the corpus's
+    own top-``vocab_k`` word vocabulary: (source, n_tokens, n_oov,
     oov_bp) with oov_bp in integer basis points (10000 * oov DIV
     total — Spark DIV == DuckDB // on non-negative operands).
 
@@ -225,35 +219,34 @@ def vocab_oov_stats(docs: DataFrame, vocab_k: int = 20,
     a map-side explode + broadcast left join, so the only exchanges
     are the vocabulary build and the per-group partial+final agg."""
     toks = (docs
-            .select(group_col,
-                    F.explode(F.split(F.col(text_col), " ")).alias("w"))
+            .select("source",
+                    F.explode(F.split(F.col("text"), " ")).alias("w"))
             .filter(F.col("w") != ""))
     vocab = (toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
              .orderBy(F.desc("c"), "w").limit(vocab_k)
              .select(F.col("w").alias("vw")))
     return (toks
             .join(F.broadcast(vocab), toks["w"] == vocab["vw"], "left")
-            .groupBy(group_col)
+            .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_tokens"),
                  F.sum(F.when(F.col("vw").isNull(), 1).otherwise(0))
                  .alias("n_oov"))
-            .select(group_col,
+            .select("source",
                     F.col("n_tokens").cast("long").alias("n_tokens"),
                     F.col("n_oov").cast("long").alias("n_oov"),
                     F.expr("CAST(10000 * n_oov DIV n_tokens AS BIGINT)")
                     .alias("oov_bp"))
-            .orderBy(group_col))
+            .orderBy("source"))
 
 
 def vocab_growth(docs: DataFrame,
                  checkpoints: tuple[int, ...] = (4, 8, 16, 32, 64, 96,
-                                                 128, 256, 1024, 32768),
-                 id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+                                                 128, 256, 1024, 32768)
+                 ) -> DataFrame:
     """Heaps-law vocabulary-growth curve: for each checkpoint N,
     the number of DISTINCT words whose first occurrence lies within
     the first N tokens of the corpus stream (docs concatenated in
-    ``id_col`` order, words in document order). Returns
+    ``doc_id`` order, words in document order). Returns
     (checkpoint, tokens_seen, vocab_size) with tokens_seen =
     min(N, corpus total) — the saturation witness.
 
@@ -272,13 +265,13 @@ def vocab_growth(docs: DataFrame,
     # checkpoint offsets past real tokens (r5 ADVICE fix — offsets and
     # first-occurrence indices now both count only real tokens)
     sized = docs.select(
-        id_col,
-        F.filter(F.split(F.col(text_col), " "),
+        "doc_id",
+        F.filter(F.split(F.col("text"), " "),
                  lambda w: w != "").alias("ws")
-    ).select(id_col, "ws", F.size("ws").cast("long").alias("n_w"))
+    ).select("doc_id", "ws", F.size("ws").cast("long").alias("n_w"))
     from console_log_parser_spark.operators.packing import \
         global_prefix_sum
-    cum = global_prefix_sum(sized, [id_col], "n_w", "w_end")
+    cum = global_prefix_sum(sized, ["doc_id"], "n_w", "w_end")
     toks = (cum
             .select((F.col("w_end") - F.col("n_w")).alias("off"),
                     F.posexplode("ws").alias("pos", "w"))
@@ -309,8 +302,7 @@ def vocab_growth(docs: DataFrame,
             .orderBy("checkpoint"))
 
 
-def word_freq_spectrum(docs: DataFrame,
-                       text_col: str = "text") -> DataFrame:
+def word_freq_spectrum(docs: DataFrame) -> DataFrame:
     """Good-Turing frequency-of-frequencies: (freq, n_words) — how
     many distinct words occur exactly ``freq`` times in the corpus.
     The counts-of-counts table is the input to Good-Turing / Katz
@@ -321,7 +313,7 @@ def word_freq_spectrum(docs: DataFrame,
     agg over the DISTINCT-WORD frame keyed by the count value — whose
     domain is bounded by the corpus's maximum word frequency, so the
     second exchange is trivially small at any scale."""
-    counts = (_words(docs, text_col)
+    counts = (_words(docs)
               .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
     return (counts.groupBy("freq")
             .agg(F.count(F.lit(1)).cast("long").alias("n_words"))

@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 
 POS_BITS = 13          # packed positions 0..8191
 POS_MOD = 1 << POS_BITS
+WINNOW_K = 3           # words per gram
+WINNOW_W = 4           # grams per window
 
 
 def packed_gram_keys(ws_col: str, k: int) -> Column:
@@ -72,43 +74,39 @@ def packed_gram_keys(ws_col: str, k: int) -> Column:
         "ELSE cast(array() as array<bigint>) END")
 
 
-def winnow_fingerprint_arrays(docs: DataFrame, k: int = 3, w: int = 4,
-                              id_col: str = "doc_id",
-                              text_col: str = "text") -> DataFrame:
-    """(id, n_words, n_grams, fps: array<long>) — the distinct
-    winnowing fingerprints per document, still one map-side
-    projection (the shared core of the stats and pair operators)."""
+def winnow_fingerprint_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_words, n_grams, fps: array<long>) — the distinct
+    winnowing fingerprints per document (WINNOW_K-word grams,
+    WINNOW_W-gram windows), still one map-side projection (the shared
+    core of the stats and pair operators)."""
     df = (docs
-          .select(id_col, F.split(F.col(text_col), " ").alias("ws"))
-          .select(id_col,
+          .select("doc_id", F.split(F.col("text"), " ").alias("ws"))
+          .select("doc_id",
                   F.size("ws").cast("long").alias("n_words"),
-                  packed_gram_keys("ws", k).alias("gk")))
-    n_win = f"greatest(size(gk) - {w - 1}, 1)"
+                  packed_gram_keys("ws", WINNOW_K).alias("gk")))
+    n_win = f"greatest(size(gk) - {WINNOW_W - 1}, 1)"
     sel = (f"array_distinct(transform(sequence(1, {n_win}), "
-           f"i -> array_min(slice(gk, i, {w})) div {POS_MOD}))")
+           f"i -> array_min(slice(gk, i, {WINNOW_W})) div {POS_MOD}))")
     return df.select(
-        id_col, "n_words",
+        "doc_id", "n_words",
         F.size("gk").cast("long").alias("n_grams"),
         F.expr(f"CASE WHEN size(gk) = 0 THEN "
                f"cast(array() as array<bigint>) "
                f"ELSE {sel} END").alias("fps"))
 
 
-def winnow_candidate_pairs(docs: DataFrame, k: int = 3, w: int = 4,
-                           max_df: int = 8, min_shared: int = 2,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def winnow_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidate pairs from the winnowing sketches:
-    (doc_a, doc_b, n_shared) for every pair sharing at least
-    ``min_shared`` fingerprints, doc_a < doc_b.
+    (doc_a, doc_b, n_shared) for every pair sharing at least 2
+    fingerprints, doc_a < doc_b.
 
     Scale design — ONE fingerprint-keyed exchange, no self-join: the
     exploded (doc, fp) rows group into per-fingerprint doc buckets; a
-    fingerprint held by more than ``max_df`` documents is dropped as
+    fingerprint held by more than 8 documents is dropped as
     boilerplate (a gram shared by hundreds of documents is template
     text, not a copy signal — the same hot-key prune as the PPJoin
     hot-shingle rule in dedup.py), so every surviving bucket expands
-    to at most max_df*(max_df-1)/2 pairs map-side. The pair
+    to at most 8*7/2 pairs map-side. The pair
     aggregation exchanges two longs per candidate.
 
     Eager: the call runs one count job and returns the pair frame
@@ -125,12 +123,12 @@ def winnow_candidate_pairs(docs: DataFrame, k: int = 3, w: int = 4,
     # Same bounded lifecycle as the MinHash band frame: ~20 longs/doc,
     # released by the caller path when the pair frame materializes.
     from .dedup import _materialize_and_release
-    arrays = (winnow_fingerprint_arrays(docs, k, w, id_col, text_col)
-              .select(id_col, "fps").persist())
-    fps = arrays.select(id_col, F.explode("fps").alias("fp"))
+    arrays = (winnow_fingerprint_arrays(docs)
+              .select("doc_id", "fps").persist())
+    fps = arrays.select("doc_id", F.explode("fps").alias("fp"))
     buckets = (fps.groupBy("fp")
-               .agg(F.array_sort(F.collect_list(id_col)).alias("ds"))
-               .filter((F.size("ds") >= 2) & (F.size("ds") <= max_df)))
+               .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+               .filter((F.size("ds") >= 2) & (F.size("ds") <= 8)))
     pairs = buckets.select(F.explode(F.expr(
         "flatten(transform(sequence(1, size(ds) - 1), i -> "
         "transform(sequence(i + 1, size(ds)), j -> "
@@ -140,14 +138,12 @@ def winnow_candidate_pairs(docs: DataFrame, k: int = 3, w: int = 4,
            .groupBy(F.col("p.a").alias("doc_a"),
                     F.col("p.b").alias("doc_b"))
            .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-           .filter(F.col("n_shared") >= min_shared))
+           .filter(F.col("n_shared") >= 2))
     return _materialize_and_release(out, arrays)
 
 
-def winnow_sketch_stats(docs: DataFrame, k: int = 3, w: int = 4,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
-    """(id, n_words, n_grams, sketch_size, min_fp, max_fp) per doc.
+def winnow_sketch_stats(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_words, n_grams, sketch_size, min_fp, max_fp) per doc.
 
     ``sketch_size`` is the number of DISTINCT fingerprints winnowing
     selects with window ``w`` over the k-gram hash stream;
@@ -157,8 +153,8 @@ def winnow_sketch_stats(docs: DataFrame, k: int = 3, w: int = 4,
     non-empty stream shorter than ``w`` is treated as one window (the
     natural boundary convention for short inputs); with no k-gram at
     all the sketch is empty and the fp columns are NULL."""
-    return (winnow_fingerprint_arrays(docs, k, w, id_col, text_col)
-            .select(id_col, "n_words", "n_grams",
+    return (winnow_fingerprint_arrays(docs)
+            .select("doc_id", "n_words", "n_grams",
                     F.size("fps").cast("long").alias("sketch_size"),
                     F.expr("CASE WHEN size(fps) = 0 THEN NULL "
                            "ELSE array_min(fps) END").alias("min_fp"),

@@ -253,8 +253,10 @@ def chapters_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
         ["sink", "n_cmds", "n_headed", "n_distinct_headings"], rows)
 
 
-def top_commands_sql(k: int = 5,
+def top_commands_sql(
                      sf_dir: str = "/root/testdata/sf0.01") -> str:
+    """Each sink's five most frequent routed command lines, ranked by
+    (count desc, command)."""
     counts: Counter = Counter()
     for r in routed_rows(sf_dir):
         for c in r["cmd_lines_routed"]:
@@ -265,6 +267,6 @@ def top_commands_sql(k: int = 5,
     rows = []
     for sink in sorted(by_sink):
         ranked = sorted(by_sink[sink], key=lambda cn: (-cn[1], cn[0]))
-        for rank, (cmd, n) in enumerate(ranked[:k], start=1):
+        for rank, (cmd, n) in enumerate(ranked[:5], start=1):
             rows.append((sink, cmd, n, rank))
     return _values_sql(["sink", "cmd", "n", "rank"], rows)

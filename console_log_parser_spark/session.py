@@ -142,13 +142,16 @@ def driver_mem() -> str:
     return f"{min(24 << 10, int(kb * 0.4) >> 10)}m"
 
 
-def get_spark(app: str = "console_log_parser_spark",
-              master: str | None = None,
-              extra_conf: dict | None = None) -> SparkSession:
-    """``RUNTIME_CONF`` on the launch settings, ``extra_conf`` last."""
-    _tune_allocator_env()
+def launch_settings(master: str | None = None) -> tuple[str, dict]:
+    """The master and the launch settings a session starts with:
+    ``get_spark`` builds its session on them and
+    ``tools/submit_pipeline.sh`` hands them to spark-submit.
+
+    ``master`` defaults to ``SPARK_GRAFT_MASTER``, else ``local[N]``
+    over the N cores this process may run on (CPU affinity, unlike
+    ``os.cpu_count()``). The heap is ``driver_mem()``, pre-touched."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}]"
+        f"local[{len(os.sched_getaffinity(0))}]"
     # local[N] pins task maxFailures to 1 (spark.task.maxFailures is
     # IGNORED in local mode; only the local[N,F] master form sets it),
     # so a single python-worker death — e.g. an OOM during a
@@ -161,21 +164,31 @@ def get_spark(app: str = "console_log_parser_spark",
     if m:
         master = f"local[{m.group(1)},2]"
     mem = driver_mem()
-    spark = (
-        SparkSession.builder.master(master).appName(app)
-        .config("spark.driver.memory", mem)
+    return master, {
+        "spark.driver.memory": mem,
         # Xms=Xmx + pre-touch: a fixed, pre-faulted heap. Without it
         # the heap grows/uncommits under the bursty parse allocation
         # pattern and the commit/zero churn shows up as kernel time
         # stalling the Arrow feed (same pathology as the malloc
         # tuning above, JVM side). Standard long-running-executor
         # practice on real clusters.
-        .config("spark.driver.extraJavaOptions",
-                f"-Xms{mem} -XX:+AlwaysPreTouch")
-        .config("spark.ui.enabled", "false")
+        "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+AlwaysPreTouch",
+        "spark.ui.enabled": "false",
         # ship the package to python workers (spark-submit --py-files
         # equivalent) so jobs run regardless of the driver's cwd
-        .config("spark.submit.pyFiles", package_zip())
+        "spark.submit.pyFiles": package_zip(),
+    }
+
+
+def get_spark(app: str = "console_log_parser_spark",
+              master: str | None = None,
+              extra_conf: dict | None = None) -> SparkSession:
+    """``RUNTIME_CONF`` on the launch settings, ``extra_conf`` last."""
+    _tune_allocator_env()
+    master, launch = launch_settings(master)
+    spark = (
+        SparkSession.builder.master(master).appName(app)
+        .config(map=launch)
         .config(map=RUNTIME_CONF)
         .config(map=extra_conf or {})
         .getOrCreate()

@@ -34,11 +34,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def shard_of(col, n_shards: int, salt: str = "shard42") -> Column:
+def shard_of(col, n_shards: int) -> Column:
     """Deterministic shard id [0, n_shards) for a key column; portable
     across engines (md5 of the same bytes)."""
     return (F.conv(F.substring(
-        F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 8),
+        F.md5(F.concat(F.lit("shard42"), col.cast("string"))), 1, 8),
         16, 10).cast("long") % n_shards)
 
 
@@ -49,25 +49,23 @@ def content_key(text_col) -> Column:
         .cast("long")
 
 
-def assign_shards(df: DataFrame, n_shards: int, id_col: str = "doc_id",
-                  salt: str = "shard42") -> DataFrame:
-    """The input plus a ``shard`` column (pure map, no shuffle)."""
-    return df.withColumn("shard", shard_of(F.col(id_col), n_shards, salt))
+def assign_shards(df: DataFrame, n_shards: int) -> DataFrame:
+    """The input plus a ``shard`` column of its ``doc_id`` (pure map,
+    no shuffle)."""
+    return df.withColumn("shard", shard_of(F.col("doc_id"), n_shards))
 
 
-def shard_manifest(df: DataFrame, n_shards: int, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   salt: str = "shard42") -> DataFrame:
+def shard_manifest(df: DataFrame, n_shards: int) -> DataFrame:
     """(shard, n_docs, n_words, content_xor) for the corpus as it
     would be sharded — recomputable from the written files (or by the
     DuckDB oracle) because every term is a pure function of row
     bytes."""
-    return (assign_shards(df, n_shards, id_col, salt)
+    return (assign_shards(df, n_shards)
             .groupBy("shard")
             .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum(F.size(F.split(F.col(text_col), " ")))
+                 F.sum(F.size(F.split(F.col("text"), " ")))
                  .cast("long").alias("n_words"),
-                 F.bit_xor(content_key(F.col(text_col)))
+                 F.bit_xor(content_key(F.col("text")))
                  .cast("long").alias("content_xor"))
             .orderBy("shard"))
 

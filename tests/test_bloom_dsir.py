@@ -58,7 +58,7 @@ def test_bloom_matches_pure_python(spark, m_bits):
     corpus = df.filter("doc_id % 3 <> 0")
     got = {r["doc_id"]: (r["n_grams"], r["n_bloom"], r["n_exact"],
                          r["n_false_pos"])
-           for r in bloom_contamination(corpus, bench, n=3,
+           for r in bloom_contamination(corpus, bench,
                                         m_bits=m_bits).collect()}
     want = _py_bloom([(i, t) for i, t in enumerate(texts) if i % 3 != 0],
                      [t for i, t in enumerate(texts) if i % 3 == 0],
@@ -75,7 +75,7 @@ def test_bloom_filter_word_layout(spark):
     texts = ["alpha beta gamma delta epsilon"]
     df = _docs(spark, texts)
     rows = {r["word_idx"]: r["bits"]
-            for r in bloom_build(df, n=3, m_bits=4096).collect()}
+            for r in bloom_build(df, m_bits=4096).collect()}
     want_bits = set()
     for g in set(_grams(texts[0], 3)):
         want_bits.add(_md5pos(g, 1, 4096))

@@ -42,7 +42,7 @@ def test_known_tiny_case(spark):
         "too short",          # < 5 words -> absent
     ]
     got = {r["doc_id"]: r for r in
-           boilerplate_stats(_frame(spark, rows), n=5, min_docs=2)
+           boilerplate_stats(_frame(spark, rows), min_docs=2)
            .collect()}
     assert set(got) == {0, 1, 2}
     assert (got[0]["n_gram_occ"], got[0]["n_boiler_occ"],
@@ -57,7 +57,7 @@ def test_repeated_gram_counts_every_occurrence(spark):
     # occurrence counting must include the within-doc repeat
     rows = ["x y z w v x y z w v", "x y z w v q"]
     got = {r["doc_id"]: r for r in
-           boilerplate_stats(_frame(spark, rows), n=5, min_docs=2)
+           boilerplate_stats(_frame(spark, rows), min_docs=2)
            .collect()}
     c0 = Counter(" ".join(rows[0].split()[i:i + 5]) for i in range(6))
     assert got[0]["n_gram_occ"] == 6
@@ -74,7 +74,7 @@ def test_matches_bruteforce(spark):
     got = {r["doc_id"]: (r["n_gram_occ"], r["n_distinct_grams"],
                          r["n_boiler_occ"], r["n_boiler_grams"],
                          r["boiler_bp"])
-           for r in boilerplate_stats(_frame(spark, rows), n=5,
+           for r in boilerplate_stats(_frame(spark, rows),
                                       min_docs=3).collect()}
     assert got == want
 
@@ -82,19 +82,19 @@ def test_matches_bruteforce(spark):
 def test_frequency_is_distinct_documents(spark):
     # a gram repeated 10x inside ONE doc must not cross min_docs=2
     rows = ["r s t u v " * 10, "unrelated words only here now"]
-    pdg = doc_gram_hashes(_frame(spark, rows), 5)
+    pdg = doc_gram_hashes(_frame(spark, rows))
     assert boilerplate_grams(pdg, 2).count() == 0
 
 
 def test_plan_hashes_before_exchange_and_no_python(spark):
     df = _frame(spark, ["a b c d e f g"] * 3)
-    plan = (doc_gram_hashes(df, 5)
+    plan = (doc_gram_hashes(df)
             ._jdf.queryExecution().executedPlan().toString())
     # the gram string is md5'd map-side; the exchange keys are
     # (doc_id, gh) — raw grams never cross an exchange
     assert "md5" in plan
     assert "hashpartitioning(doc_id" in plan
     assert "BatchEvalPython" not in plan
-    full = (boilerplate_stats(df, n=5, min_docs=2)
+    full = (boilerplate_stats(df, min_docs=2)
             ._jdf.queryExecution().executedPlan().toString())
     assert "BatchEvalPython" not in full

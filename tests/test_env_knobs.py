@@ -9,7 +9,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCANNED = ["console_log_parser_spark", "jobs", "tools", "bench.py",
            "__spark_entry__.py"]
 KNOB = re.compile(r"SPARK_GRAFT_[A-Z_]+")
-MAX_KNOBS = 5
+MAX_KNOBS = 4
 
 
 def _files():

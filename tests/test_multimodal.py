@@ -64,7 +64,7 @@ def test_decode_stage_matches_pure_python(spark, media_df):
 
 def test_thumbnail_pooling(spark, media_df):
     thumbs = {r["doc_id"]: r["thumb"]
-              for r in mm.thumbnail_stage(media_df, grid=4).collect()}
+              for r in mm.thumbnail_stage(media_df).collect()}
     # only images, all 16 cells
     assert set(thumbs) == {i for i in range(60) if i % 3 == 0}
     doc_id = 6
@@ -79,7 +79,7 @@ def test_thumbnail_pooling(spark, media_df):
 
 
 def test_frame_sampling(spark, media_df):
-    frames = mm.frame_sample_stage(media_df, every=2).collect()
+    frames = mm.frame_sample_stage(media_df).collect()
     by_doc: dict[int, list[int]] = {}
     for r in frames:
         by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])

@@ -54,8 +54,7 @@ def test_pack_sequences_matches_python_recompute(spark):
     vals = [rng.randint(0, 4000) for _ in range(200)]
     df = _df(spark, vals)
     got = {r["doc_id"]: (r["tok_end"], r["first_seq"], r["last_seq"])
-           for r in pack_sequences(df, 1000, "doc_id",
-                                   "n_tok").collect()}
+           for r in pack_sequences(df, 1000, "n_tok").collect()}
     # independent recompute: same md5 order (hashlib hex == Spark md5)
     order = sorted(range(len(vals)),
                    key=lambda i: (hashlib.md5(str(i).encode())
@@ -73,7 +72,7 @@ def test_pack_sequences_matches_python_recompute(spark):
 def test_pack_sequences_no_unpartitioned_window(spark):
     df = _df(spark, [10] * 50)
     with _width(spark, 4):
-        out = pack_sequences(df, 16, "doc_id", "n_tok")
+        out = pack_sequences(df, 16, "n_tok")
         assert not _has_unpartitioned_window(out)
 
 

@@ -45,10 +45,10 @@ def test_semdedup_pair_logic_matches_bruteforce(spark):
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows,
                                "vec_id long, embedding array<float>")
-    members = semdedup_members(df, k=2, n_iters=2, dim=8).collect()
+    members = semdedup_members(df, k=2, dim=8).collect()
     got = {r["cluster_id"]: (r["n_vecs"], r["n_sim_pairs"], r["n_dups"],
                              r["n_kept"])
-          for r in semdedup_stats(df, k=2, n_iters=2, dim=8).collect()}
+          for r in semdedup_stats(df, k=2, dim=8).collect()}
     by_cluster: dict = {}
     for r in members:
         by_cluster.setdefault(r["cluster_id"], []).append(
@@ -79,8 +79,8 @@ def test_semdedup_no_cross_cluster_pairs(spark, emb):
     # invisible — that is SemDeDup's documented trade, pinned here
     from console_log_parser_spark.operators.semdedup import (
         semdedup_members, semdedup_stats)
-    stats = semdedup_stats(emb, k=10, n_iters=2).collect()
-    members = semdedup_members(emb, k=10, n_iters=2).collect()
+    stats = semdedup_stats(emb, k=10).collect()
+    members = semdedup_members(emb, k=10).collect()
     sizes = {r["cluster_id"]: 0 for r in members}
     for r in members:
         sizes[r["cluster_id"]] += 1
@@ -115,7 +115,7 @@ def test_pq_codes_match_pure_python(spark, emb):
 
 def test_ann_pq_query_is_own_nearest(spark, emb):
     from console_log_parser_spark.operators.pq import ann_pq_topk
-    out = ann_pq_topk(emb, query_vec_id=0, k=10).collect()
+    out = ann_pq_topk(emb).collect()
     assert len(out) == 10
     assert out[0]["vec_id"] == 0 and out[0]["exact_dist"] == 0
     # exact_dist ascending with vec_id tiebreak, all non-negative
@@ -133,8 +133,7 @@ def test_ann_pq_shortlist_recall_vs_bruteforce(spark, emb):
     qv = q[0]
     true = sorted((sum((a - b) * (a - b) for a, b in zip(v, qv)), vid)
                   for vid, v in q.items())[:10]
-    got = ann_pq_topk(emb, query_vec_id=0, k=10,
-                      shortlist=len(rows)).collect()
+    got = ann_pq_topk(emb, shortlist=len(rows)).collect()
     assert [(r["exact_dist"], r["vec_id"]) for r in got] == true
 
 def test_ann_ivfpq_candidates_restrict_and_rerank_exact(spark, emb):
@@ -147,8 +146,7 @@ def test_ann_ivfpq_candidates_restrict_and_rerank_exact(spark, emb):
     cand_ids = {r["vec_id"]
                 for r in ann_ivf_candidates(emb, 0).collect()}
     assert cand_ids and 0 not in cand_ids
-    got = ann_pq_topk(emb, query_vec_id=0, k=10,
-                      shortlist=len(cand_ids) + 1,
+    got = ann_pq_topk(emb, shortlist=len(cand_ids) + 1,
                       candidates=ann_ivf_candidates(emb, 0)).collect()
     ids = [r["vec_id"] for r in got]
     assert set(ids) <= cand_ids

@@ -116,7 +116,8 @@ def test_ivf_assign_matches_pure_python(emb):
     cents = sorted((r["vec_id"], sim.quantize(np.asarray(r["embedding"])))
                    for r in rows if r["vec_id"] % mod == 1)
     got = {r["vec_id"]: r["cell"]
-           for r in sim.ivf_assign(emb).select("vec_id", "cell").collect()}
+           for r in sim.ivf_assign(emb, mod).select("vec_id", "cell")
+           .collect()}
     for r in rows:
         w = sim.quantize(np.asarray(r["embedding"]))
         best = min((int(((w - cv) ** 2).sum()), cid) for cid, cv in cents)
@@ -132,7 +133,7 @@ def test_ivf_candidates_prune_and_contain_query_cell(emb):
     n = emb.count()
     assert 0 < len(cand) < n - 1
     # the query's own cell members must all be candidates (nprobe>=1)
-    assigned = sim.ivf_assign(emb)
+    assigned = sim.ivf_assign(emb, sim.ivf_centroid_mod(n))
     qcell = assigned.filter(F.col("vec_id") == 0).first()["cell"]
     members = {r["vec_id"] for r in
                assigned.filter((F.col("cell") == qcell)
@@ -163,8 +164,7 @@ def test_neardup_lsh_total_recall_vs_exact(spark, sf_dir):
     from console_log_parser_spark.operators import similarity as sim
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     got = {(r["vec_a"], r["vec_b"]): r["score"]
-           for r in sim.neardup_lsh_pairs(emb, threshold=0.45,
-                                          l_tables=32, b_bits=4).collect()}
+           for r in sim.neardup_lsh_pairs(emb).collect()}
     t = pq.read_table(f"{sf_dir}/embeddings.parquet")
     ids = t.column("vec_id").to_numpy()
     mat = np.stack(t.column("embedding").to_pylist()).astype(np.float64)
@@ -210,7 +210,7 @@ def test_knn_join_matches_pure_python(emb):
                               sim.L_TABLES, sim.B_BITS)
     buckets = {vid: set(sigs[i]) for i, vid in enumerate(ids)}
     got = {}
-    for r in sim.knn_join_lsh(emb, k=3).collect():
+    for r in sim.knn_join_lsh(emb).collect():
         got.setdefault(r["qid"], []).append((r["nn_rank"], r["nid"],
                                              r["score"]))
     vecs = {vid: mat[i] for i, vid in enumerate(ids)}

@@ -73,5 +73,5 @@ def test_user_trigrams_match_reference(spark):
             tri[tuple(ets[i:i + 3])] += 1
     want = sorted(tri.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
     got = [((r["t1"], r["t2"], r["t3"]), r["n"])
-           for r in user_trigrams(ev, k=20).collect()]
+           for r in user_trigrams(ev).collect()]
     assert got == want

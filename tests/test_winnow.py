@@ -38,7 +38,7 @@ def _rows_for(spark, texts):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     return {r["doc_id"]: r.asDict()
-            for r in winnow_sketch_stats(df, k=3, w=4).collect()}
+            for r in winnow_sketch_stats(df).collect()}
 
 
 def test_boundary_docs_match_reference(spark):
@@ -70,7 +70,7 @@ def test_corpus_docs_match_reference(spark):
             .select("doc_id", "text").limit(40))
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
     got = {r["doc_id"]: r.asDict()
-           for r in winnow_sketch_stats(docs, k=3, w=4).collect()}
+           for r in winnow_sketch_stats(docs).collect()}
     assert len(got) == len(texts)
     for did, t in texts.items():
         ref = _ref_winnow(t)
